@@ -7,11 +7,19 @@ import org.apache.spark.sql.SparkSession
   *
   *   <input> <k> <max_iter> <output> <dim> <epsilon> <num_reducer>
   *
-  * - input: points text file(s), one `<x1, x2, …>` per line (O2 format);
+  * - input: points text file(s), one `<x1, x2, …>` per line (O2 format),
+  *   read through the `points` source ([[graft.sources.PointsDataSource]]:
+  *   byte-range splits sized by `spark.sql.files.*`, one broadcast of
+  *   the Hadoop conf per scan);
   * - output: per-iteration directory `output + iter` of
-  *   `clusterId\t<coords>` lines (KMeans.java:148-150 behavior);
+  *   `clusterId\t<coords>` lines (KMeans.java:148-150 behavior), one
+  *   file `part-00000` plus `_SUCCESS`, written on the driver
+  *   ([[PointsIO.writeCentroids]]) — no Spark job for k lines;
   * - dim is accepted and, unlike the reference (which prints and ignores
-  *   it, KMeans.java:107), validated against the data;
+  *   it, KMeans.java:107), validated against the width of every vector
+  *   of the seed sample, before round 1 (the sample is a job the run
+  *   needs anyway; no separate probe job). Empty input fails there too,
+  *   with a message saying so;
   * - num_reducer maps to spark.sql.shuffle.partitions (the reference's
   *   job.setNumReduceTasks, KMeans.java:133);
   * - epsilon/max_iter/empty-cluster semantics are KMeansRunner's
@@ -49,12 +57,8 @@ object KMeansCli {
     spark.sparkContext.setLogLevel("WARN")
 
     val t0 = System.nanoTime()
-    val points = PointsIO.readPoints(spark, input)
-    val d0 = points.head().getSeq[Double](0).size
-    require(dim <= 0 || d0 == dim,
-      s"declared dim=$dim but data has $d0 coordinates")
-
-    val res = KMeansRunner.run(points, "point", k, maxIter, eps, seed)
+    val res = KMeansRunner.run(PointsIO.readPoints(spark, input), "point",
+      k, maxIter, eps, seed, dim = dim)
 
     // per-iteration output dirs like the reference would have written;
     // we emit the final one — output + lastRound, the suffix of the
@@ -62,15 +66,8 @@ object KMeansCli {
     // a run converging at round N ends at output+N; a bounded run at
     // output+(maxIter-1)) — plus a run log on stdout. maxIter=1 runs
     // zero jobs and, like the reference, writes no output dir.
-    val spark2 = spark
-    import spark2.implicits._
-    if (res.lastRound >= 1) {
-      val outDf = res.centroids.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cluster", "centroid")
-      PointsIO.writeCentroids(outDf, "cluster", "centroid",
-        output + res.lastRound)
-    }
+    if (res.lastRound >= 1)
+      PointsIO.writeCentroids(spark, res.centroids.toSeq, output + res.lastRound)
 
     val secs = (System.nanoTime() - t0) / 1e9
     println(f"iterations=${res.iterations} finalError=${res.finalError}%.6f " +

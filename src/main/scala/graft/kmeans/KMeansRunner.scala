@@ -49,14 +49,16 @@ final case class KMeansResult(
   */
 object KMeansRunner {
 
+  /** `dim` > 0 declares the vector width: every vector of the seed
+    * sample must have it, checked before round 1. */
   def run(points: DataFrame, vecCol: String, k: Int, maxIter: Int,
           eps: Double, seed: Long,
-          cache: Boolean = true): KMeansResult = {
+          cache: Boolean = true, dim: Int = 0): KMeansResult = {
     // maxIter = 1 is legal and runs ZERO rounds, like the reference's
     // `while (1 < 1)` (KMeans.java:130): result = the seeded sample.
     require(k > 0 && maxIter >= 1)
     runLoop(points, vecCol, k, maxIter, eps, seed,
-      sampleCentroids(points, vecCol, k, _), identity, cache)
+      sampleCentroids(points, vecCol, k, _), identity, cache, dim)
   }
 
   /** ORACLE-REPLAYABLE variant of [[run]]: identical loop semantics,
@@ -77,7 +79,7 @@ object KMeansRunner {
     require(k > 0 && maxIter >= 1)
     runLoop(points, vecCol, k, maxIter, eps, seed,
       idHashSampleCentroids(points, vecCol, idCol, k, _),
-      _.map(_.map(roundHalfUp(_, roundDp))), cache)
+      _.map(_.map(roundHalfUp(_, roundDp))), cache, dim = 0)
   }
 
   /** Spark-`round`-compatible decimal rounding (BigDecimal over the
@@ -132,14 +134,20 @@ object KMeansRunner {
     * vector RDD (replacing the former DataFrame persist: caching both
     * would hold the corpus twice). The seed/re-init samples still read
     * `pts` directly — one extra source scan per sample, paid once
-    * (plus once per rare empty-cluster re-init). */
+    * (plus once per rare empty-cluster re-init). The seed sample is
+    * also where an empty input and a `dim` mismatch are caught, before
+    * any round runs. */
   private def runLoop(pts: DataFrame, vecCol: String, k: Int, maxIter: Int,
                       eps: Double, seed: Long,
                       sample: Long => Array[Array[Double]],
                       post: Array[Array[Double]] => Array[Array[Double]],
-                      cache: Boolean)
+                      cache: Boolean, dim: Int)
       : KMeansResult = {
     var centroids = sample(seed)
+    require(centroids.nonEmpty,
+      "k-means input is empty: no points to sample initial centroids from")
+    centroids.foreach(c => require(dim <= 0 || c.length == dim,
+      s"declared dim=$dim but data has ${c.length} coordinates"))
     var iter = 1 // KMeans.java:113 — starts at 1 ⇒ at most maxIter−1 rounds
     var error = Double.NaN
     var reinits = 0

@@ -9,23 +9,27 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.Text
 import org.apache.hadoop.util.LineReader
 
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 table for the reference's point text format — one
   * `<x1, x2, …, xd>` vector per line (parser contract of
   * `KMeans.parsePoint`, /root/reference/kmeans/.../KMeans.java:261-274:
   * strip angle brackets, split on comma+whitespace, parse double;
-  * malformed numbers are fatal).
+  * malformed numbers are fatal). The reader tokenizes the line bytes
+  * directly with exactly those semantics ([[PointsLineParser]]).
   *
   * `spark.read.format("points").load(path)` yields
   * `DataFrame[point: array<double>]` as a FIRST-CLASS source: the scan
@@ -33,8 +37,25 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * text-split contract), so a big file parallelizes across executors
   * exactly like the built-in text source, and column pruning reaches
   * the reader — a `count(*)` never parses a double
-  * (SupportsPushDownRequiredColumns). Options:
-  * `splitSizeBytes` (default 128 MiB) controls range size.
+  * (SupportsPushDownRequiredColumns).
+  *
+  * Ranges are sized by the built-in file sources' rule,
+  * `FilePartition.maxSplitBytes`: min(`spark.sql.files.maxPartitionBytes`,
+  * max(`spark.sql.files.openCostInBytes`, bytes per core)), bytes per
+  * core being (Σ file length + open cost per file) over
+  * `spark.sql.files.minPartitionNum` or the session's leaf parallelism.
+  * A lone file up to one open cost (4 MiB by default) stays one range;
+  * a larger one gets about one range per core, each at most
+  * maxPartitionBytes. The option `splitSizeBytes` overrides the rule.
+  * Values are bit-stable for a given split plan; a consumer that sums
+  * per range (Lloyd) may move in the last ulps when the plan changes
+  * with the core count, as over the built-in sources.
+  *
+  * The session's Hadoop conf is captured when the query is planned and
+  * reaches the tasks as ONE broadcast per scan or write (the pattern of
+  * Spark's own file scans): the reader and writer factories, which sit
+  * in every task binary — and in the lineage of any RDD cached from the
+  * scan — carry only the broadcast handle.
   *
   * `df.write.format("points").mode("overwrite"|"append").save(path)`
   * is the matching SINK (see [[PointsWriteBuilder]]): task-atomic
@@ -55,38 +76,16 @@ class PointsDataSource extends TableProvider with DataSourceRegister {
     val path = Option(properties.get("path")).getOrElse(
       throw new IllegalArgumentException(
         "points source requires a single `path` (spark.read.format(\"points\").load(path))"))
-    val splitSize = Option(properties.get("splitSizeBytes"))
-      .map(_.toLong).getOrElse(PointsTable.DefaultSplitSize)
-    new PointsTable(path, splitSize)
+    new PointsTable(path, Option(properties.get("splitSizeBytes")).map(_.toLong))
   }
 }
 
 object PointsTable {
   val Schema: StructType =
     StructType(Seq(StructField("point", ArrayType(DoubleType, false), false)))
-  val DefaultSplitSize: Long = 128L * 1024 * 1024
 }
 
-/** Hadoop Configuration is not java.io.Serializable; ship the SESSION
-  * conf (spark.hadoop.* — fs.defaultFS, object-store credentials) to
-  * executors via Hadoop's own write/readFields, so task-side
-  * FileSystem.get resolves the SAME filesystem the driver planned
-  * against. A bare `new Configuration()` on the executor silently
-  * drops every session setting. */
-final class SerializableHadoopConf(@transient var value: Configuration)
-  extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
-
-class PointsTable(path: String, splitSize: Long)
+class PointsTable(path: String, splitSize: Option[Long])
   extends Table with SupportsRead with SupportsWrite {
 
   override def name(): String = s"points($path)"
@@ -95,22 +94,26 @@ class PointsTable(path: String, splitSize: Long)
     Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE).asJava
 
-  // the Hadoop conf is captured HERE — newScanBuilder/newWriteBuilder
-  // run on the thread of the session that issued the query, so a
-  // multi-session application resolves fs settings/credentials from
-  // the CORRECT session instead of whatever SparkSession.active holds
-  // at job-commit time
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new PointsScanBuilder(path, splitSize, new SerializableHadoopConf(
-      SparkSession.active.sessionState.newHadoopConf()))
+  // the session and its Hadoop conf are captured HERE —
+  // newScanBuilder/newWriteBuilder run on the thread of the session
+  // that plans the query, so a multi-session application resolves fs
+  // settings/credentials (spark.hadoop.*) from the CORRECT session
+  // instead of whatever SparkSession.active holds at job-commit time
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val session = SparkSession.active
+    new PointsScanBuilder(path, splitSize, session,
+      session.sessionState.newHadoopConf())
+  }
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new PointsWriteBuilder(path, info.schema(), new SerializableHadoopConf(
-      SparkSession.active.sessionState.newHadoopConf()))
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    val session = SparkSession.active
+    new PointsWriteBuilder(path, info.schema(), session.sparkContext,
+      session.sessionState.newHadoopConf())
+  }
 }
 
-class PointsScanBuilder(path: String, splitSize: Long,
-                        conf: SerializableHadoopConf)
+class PointsScanBuilder(path: String, splitSize: Option[Long],
+                        session: SparkSession, conf: Configuration)
   extends ScanBuilder with SupportsPushDownRequiredColumns {
 
   private var required: StructType = PointsTable.Schema
@@ -118,17 +121,19 @@ class PointsScanBuilder(path: String, splitSize: Long,
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def build(): Scan = new PointsScan(path, splitSize, required, conf)
+  override def build(): Scan =
+    new PointsScan(path, splitSize, required, session, conf)
 }
 
-class PointsScan(path: String, splitSize: Long, required: StructType,
-                 conf: SerializableHadoopConf)
+class PointsScan(path: String, splitSize: Option[Long], required: StructType,
+                 session: SparkSession, conf: Configuration)
   extends Scan with Batch {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"PointsScan path=$path splitSize=$splitSize cols=${required.fieldNames.mkString(",")}"
+    s"PointsScan path=$path splitSize=${splitSize.getOrElse("auto")} " +
+      s"cols=${required.fieldNames.mkString(",")}"
 
   /** Driver-side listing: glob/dir expansion, then byte-range splits.
     * Line alignment is resolved at READ time by the Hadoop text-split
@@ -136,7 +141,7 @@ class PointsScan(path: String, splitSize: Long, required: StructType,
     * file contents — O(#files) driver work, like the built-in sources. */
   override def planInputPartitions(): Array[InputPartition] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf.value)
+    val fs = p.getFileSystem(conf)
     val matched: Array[FileStatus] =
       Option(fs.globStatus(p)).getOrElse(Array.empty)
     val files = matched.flatMap { st =>
@@ -146,29 +151,31 @@ class PointsScan(path: String, splitSize: Long, required: StructType,
       val n = st.getPath.getName
       st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
     }
+    val size = splitSize.getOrElse(FilePartition.maxSplitBytes(session,
+      Seq(PartitionDirectory(InternalRow.empty, files))))
     files.flatMap { st =>
       val len = st.getLen
       val uri = st.getPath.toUri.toString
-      (0L until len by splitSize).map { start =>
-        PointsInputPartition(uri, start, math.min(splitSize, len - start))
+      (0L until len by size).map { start =>
+        PointsInputPartition(uri, start, math.min(size, len - start))
       }
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     PointsReaderFactory(parsePoint = required.fieldNames.contains("point"),
-      conf = conf)
+      conf = session.sparkContext.broadcast(new SerializableConfiguration(conf)))
 }
 
 final case class PointsInputPartition(path: String, start: Long, length: Long)
   extends InputPartition
 
 final case class PointsReaderFactory(parsePoint: Boolean,
-                                     conf: SerializableHadoopConf)
+                                     conf: Broadcast[SerializableConfiguration])
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new PointsPartitionReader(
-      partition.asInstanceOf[PointsInputPartition], parsePoint, conf)
+      partition.asInstanceOf[PointsInputPartition], parsePoint, conf.value.value)
 }
 
 /** Range reader with the Hadoop text-split ownership contract: a split
@@ -178,16 +185,17 @@ final case class PointsReaderFactory(parsePoint: Boolean,
   * which reads past its own end to finish it); it then emits lines
   * while their start offset is < end. */
 class PointsPartitionReader(split: PointsInputPartition, parsePoint: Boolean,
-                            conf: SerializableHadoopConf)
+                            conf: Configuration)
   extends PartitionReader[InternalRow] {
 
   private val end = split.start + split.length
   private val text = new Text()
+  private val parser = new PointsLineParser
   private var row: InternalRow = _
 
   private val stream = {
     val p = new Path(split.path)
-    p.getFileSystem(conf.value).open(p)
+    p.getFileSystem(conf).open(p)
   }
   private var pos: Long = split.start
   // ONE LineReader for skip + reads: it buffers ahead, so a second
@@ -208,13 +216,10 @@ class PointsPartitionReader(split: PointsInputPartition, parsePoint: Boolean,
       val consumed = lines.readLine(text)
       if (consumed == 0) return false
       pos += consumed
-      val s = text.toString.trim
-      if (s.nonEmpty) {
-        row = if (parsePoint) {
-          val body = s.replaceAll("[<>]", "")
-          val vals = body.split(",\\s*").map(java.lang.Double.parseDouble)
-          new GenericInternalRow(Array[Any](new GenericArrayData(vals)))
-        } else new GenericInternalRow(0) // count(*): no parse
+      if (!PointsLineParser.isBlank(text.getBytes, text.getLength)) {
+        row = if (parsePoint) new GenericInternalRow(
+          Array[Any](parser.parse(text.getBytes, text.getLength)))
+        else new GenericInternalRow(0) // count(*): no parse
         return true
       }
     }
@@ -239,26 +244,28 @@ class PointsPartitionReader(split: PointsInputPartition, parsePoint: Boolean,
 // ---------------------------------------------------------------------
 
 class PointsWriteBuilder(path: String, schema: StructType,
-                         conf: SerializableHadoopConf)
+                         sc: SparkContext, conf: Configuration)
   extends WriteBuilder with SupportsTruncate {
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new PointsWrite(path, schema, doTruncate, conf)
+  override def build(): Write =
+    new PointsWrite(path, schema, doTruncate, sc, conf)
 }
 
 class PointsWrite(path: String, schema: StructType, truncate: Boolean,
-                  conf: SerializableHadoopConf)
+                  sc: SparkContext, conf: Configuration)
   extends Write {
   require(schema.fields.length == 1 && (schema.fields(0).dataType match {
     case ArrayType(DoubleType, _) => true
     case _ => false
   }), s"points sink expects a single array<double> column, got: $schema")
 
-  override def toBatch: BatchWrite = new PointsBatchWrite(path, truncate, conf)
+  override def toBatch: BatchWrite =
+    new PointsBatchWrite(path, truncate, sc, conf)
 }
 
 class PointsBatchWrite(path: String, truncate: Boolean,
-                       conf: SerializableHadoopConf) extends BatchWrite {
+                       sc: SparkContext, conf: Configuration) extends BatchWrite {
 
   /** Per-JOB id baked into every file name: taskId/partitionId are only
     * unique within one Spark application, so an append from a LATER
@@ -271,10 +278,11 @@ class PointsBatchWrite(path: String, truncate: Boolean,
   /** Driver-side: clear on truncate, ensure the directory exists. */
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf.value)
+    val fs = p.getFileSystem(conf)
     if (truncate && fs.exists(p)) fs.delete(p, true)
     fs.mkdirs(p)
-    PointsWriterFactory(path, jobId, conf)
+    PointsWriterFactory(path, jobId,
+      sc.broadcast(new SerializableConfiguration(conf)))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -282,7 +290,7 @@ class PointsBatchWrite(path: String, truncate: Boolean,
     // (fs.defaultFS, object-store credentials) must resolve the marker
     // on the SAME filesystem as the data files
     val p = new Path(path, "_SUCCESS")
-    val fs = p.getFileSystem(conf.value)
+    val fs = p.getFileSystem(conf)
     fs.create(p, true).close()
   }
 
@@ -292,23 +300,23 @@ class PointsBatchWrite(path: String, truncate: Boolean,
 }
 
 final case class PointsWriterFactory(path: String, jobId: String,
-                                     conf: SerializableHadoopConf)
+                                     conf: Broadcast[SerializableConfiguration])
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new PointsDataWriter(path, jobId, partitionId, taskId, conf)
+    new PointsDataWriter(path, jobId, partitionId, taskId, conf.value.value)
 }
 
 final case class PointsCommit(file: String) extends WriterCommitMessage
 
 class PointsDataWriter(dir: String, jobId: String, partitionId: Int,
-                       taskId: Long, conf: SerializableHadoopConf)
+                       taskId: Long, conf: Configuration)
   extends DataWriter[InternalRow] {
 
   private val finalPath =
     new Path(dir, f"part-$partitionId%05d-$taskId-$jobId")
   private val tmpPath =
     new Path(dir, f".part-$partitionId%05d-$taskId-$jobId.inprogress")
-  private val fs = tmpPath.getFileSystem(conf.value)
+  private val fs = tmpPath.getFileSystem(conf)
   private val writer = new java.io.BufferedWriter(
     new java.io.OutputStreamWriter(fs.create(tmpPath, true),
       java.nio.charset.StandardCharsets.UTF_8))

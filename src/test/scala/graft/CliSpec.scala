@@ -1,5 +1,14 @@
 package graft
 
+import java.io.File
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 import graft.kmeans.{KMeansCli, PointsIO}
 
 /** End-to-end drive of the reference CLI contract: text points in,
@@ -9,26 +18,70 @@ class CliSpec extends SparkSessionSpec {
   import org.apache.spark.sql.functions._
   import spark.implicits._
 
+  private def writeLines(dir: File, lines: Seq[String]): String = {
+    val input = new File(dir, "points.txt").getAbsolutePath
+    val w = new java.io.PrintWriter(input)
+    lines.foreach(w.println); w.close()
+    input
+  }
+
+  /** Concatenated text of a directory's part files, in name order. */
+  private def partText(dir: File): String =
+    dir.listFiles().filter(_.getName.startsWith("part-")).sortBy(_.getName)
+      .map(f => new String(Files.readAllBytes(f.toPath), UTF_8)).mkString
+
+  /** The DataFrame text write the CLI used before its centroid write
+    * moved to the driver, kept as the oracle of the bytes. */
+  private def dataFrameWrite(centroids: Seq[Array[Double]], dir: File): String = {
+    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
+      .toDF("cluster", "centroid")
+      .select(concat_ws("\t", col("cluster").cast("string"),
+        concat(lit("<"),
+          array_join(transform(col("centroid"), _.cast("string")), ", "),
+          lit(">"))).as("value"))
+      .write.mode("overwrite").text(dir.getAbsolutePath)
+    partText(dir)
+  }
+
+  /** Short call sites of the jobs `body` starts (listener events are
+    * drained by a marker job before reading). */
+  private def jobSites(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val sites = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.stageInfos.foreach(s => sites.add(s.name))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.parallelize(Seq(1), 1).map(identity).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!sites.asScala.exists(_.contains("CliSpec.scala")) &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+    } finally sc.removeSparkListener(listener)
+    sites.asScala.toSeq
+  }
+
   test("KMeansCli runs the 7-arg contract end-to-end on reference-format text") {
     spark.sparkContext // shared session up first (CLI must not stop it)
-    val dir = java.nio.file.Files.createTempDirectory("cli_e2e").toFile
-    val input = new java.io.File(dir, "points.txt").getAbsolutePath
-    val outPrefix = new java.io.File(dir, "out").getAbsolutePath
+    val dir = Files.createTempDirectory("cli_e2e").toFile
+    val outPrefix = new File(dir, "out").getAbsolutePath
 
     // two tight blobs at (0,0) and (50,50)
     val rnd = new scala.util.Random(33)
-    val lines = (0 until 200).map { i =>
+    val input = writeLines(dir, (0 until 200).map { i =>
       val c = if (i % 2 == 0) 0.0 else 50.0
       s"<${c + rnd.nextGaussian() * 0.1}, ${c + rnd.nextGaussian() * 0.1}>"
-    }
-    val w = new java.io.PrintWriter(input)
-    lines.foreach(w.println); w.close()
+    })
 
     KMeansCli.main(Array(input, "2", "15", outPrefix, "2", "0.0001", "4"))
 
-    // the CLI writes exactly one dir: outPrefix + lastRound
+    // the CLI writes exactly one dir: outPrefix + lastRound, one part file
     val outDirs = dir.listFiles().filter(_.getName.startsWith("out"))
     assert(outDirs.length == 1, outDirs.map(_.getName).toSeq)
+    val names = outDirs.head.list().toSet
+    assert(names.filter(!_.startsWith(".")) == Set("part-00000", "_SUCCESS"), names)
     val centroids = PointsIO.readCentroids(spark,
       outDirs.head.getAbsolutePath)
       .orderBy(col("cluster"))
@@ -39,7 +92,57 @@ class CliSpec extends SparkSessionSpec {
       assert(centroids.exists { case (_, v) =>
         math.hypot(v(0) - c, v(1) - c) < 0.5 })
     }
+    // the text is what the DataFrame writer made of the same values
+    assert(partText(outDirs.head) ==
+      dataFrameWrite(centroids.map(_._2.toArray).toSeq, new File(dir, "oracle")))
     // session survived the CLI (ownership guard)
     assert(!spark.sparkContext.isStopped)
+  }
+
+  test("driver-side centroid write is byte-identical to the DataFrame text write") {
+    val dir = Files.createTempDirectory("cli_write").toFile
+    val centroids = Seq(
+      Array(1.0e-5, -0.0, 1.0e7, 0.30000000000000004),
+      Array(1.2345678901234567e-8, 123456.78901234567, 0.001, 9999999.999),
+      Array(Double.MinPositiveValue, Double.MaxValue, -1.0e21, 1.0e-3 / 3),
+      Array(0.0, -1.5, 2.0e-300, 4.0019444906464745))
+    val out = new File(dir, "driver")
+    PointsIO.writeCentroids(spark, centroids, out.getAbsolutePath)
+    assert(partText(out) == dataFrameWrite(centroids, new File(dir, "oracle")))
+    assert(new File(out, "_SUCCESS").exists())
+    assert(!out.list().exists(_.endsWith(".inprogress")))
+    // overwrite replaces the directory's content
+    PointsIO.writeCentroids(spark, centroids.take(1), out.getAbsolutePath)
+    assert(partText(out) == dataFrameWrite(centroids.take(1), new File(dir, "oracle")))
+  }
+
+  test("a dim mismatch fails before any round runs, with the reference message") {
+    spark.sparkContext
+    val dir = Files.createTempDirectory("cli_dim").toFile
+    val input = writeLines(dir, (0 until 50).map(i => s"<$i.5, ${i * 2}.25>"))
+    var error: Option[Throwable] = None
+    val sites = jobSites {
+      error = Some(intercept[IllegalArgumentException] {
+        KMeansCli.main(Array(input, "2", "5", new File(dir, "out").getAbsolutePath,
+          "3", "0.0001", "4"))
+      })
+    }
+    assert(error.get.getMessage ==
+      "requirement failed: declared dim=3 but data has 2 coordinates")
+    assert(sites.nonEmpty && !sites.exists(_.contains("LloydKernel")), sites)
+    assert(!dir.list().exists(_.startsWith("out")))
+  }
+
+  test("empty input fails with a message saying the input is empty") {
+    spark.sparkContext
+    Seq(Seq.empty[String], Seq("", "   ", "\t")).foreach { lines =>
+      val dir = Files.createTempDirectory("cli_empty").toFile
+      val input = writeLines(dir, lines)
+      val e = intercept[IllegalArgumentException] {
+        KMeansCli.main(Array(input, "2", "5", new File(dir, "out").getAbsolutePath,
+          "2", "0.0001", "4"))
+      }
+      assert(e.getMessage.contains("input is empty"), e.getMessage)
+    }
   }
 }

@@ -346,8 +346,7 @@ class KMeansSpec extends SparkSessionSpec {
     val tmp = java.nio.file.Files.createTempDirectory("pio").toString
     val data = Seq((0, Seq(0.41410840, 1.48714702)),
       (1, Seq(4.0019444906464745, 4.546128116278345)))
-    PointsIO.writeCentroids(data.toDF("cluster", "centroid"),
-      "cluster", "centroid", s"$tmp/cents")
+    PointsIO.writeCentroids(spark, data.map(_._2.toArray), s"$tmp/cents")
     val back = PointsIO.readCentroids(spark, s"$tmp/cents")
       .orderBy("cluster").as[(Int, Seq[Double])].collect().toSeq
     assert(back == data)

@@ -416,6 +416,88 @@ class PropertySpec extends SparkSessionSpec {
     }
   }
 
+  /** The String parse the points reader used before it tokenized
+    * bytes (the reference's `parsePoint`), kept as the oracle: None for
+    * a blank line, else the values' bits or the NumberFormatException
+    * message. */
+  private def stringParse(line: Array[Byte]): Option[Either[String, Seq[Long]]] = {
+    val s = new org.apache.hadoop.io.Text(line).toString.trim
+    if (s.isEmpty) None
+    else Some(try Right(s.replaceAll("[<>]", "").split(",\\s*")
+      .map(java.lang.Double.parseDouble)
+      .map(java.lang.Double.doubleToRawLongBits).toSeq)
+    catch { case e: NumberFormatException => Left(e.getMessage) })
+  }
+
+  test("byte tokenizer == String parse: same bits, same failures, on generated lines") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import graft.sources.PointsLineParser
+    def digits(lo: Int, hi: Int) =
+      Gen.choose(lo, hi).flatMap(Gen.listOfN(_, Gen.numChar).map(_.mkString))
+    def decimal(intMax: Int, fracMax: Int) = for {
+      sign <- Gen.oneOf("", "", "-", "+")
+      int <- digits(0, intMax)
+      dot <- Gen.oneOf("", ".", ".", ".")
+      frac <- digits(0, fracMax)
+    } yield sign + int + dot + frac
+    val tiny = for { // fraction lengths either side of 22
+      zeros <- Gen.chooseNum(0, 24)
+      tail <- digits(1, 4)
+    } yield "0." + "0" * zeros + tail
+    val printed = Gen.choose(Long.MinValue, Long.MaxValue)
+      .map(b => java.lang.Double.longBitsToDouble(b).toString)
+    val special = Gen.oneOf("NaN", "-NaN", "Infinity", "-Infinity", "+Infinity",
+      "-0.0", "0", "-0", ".5", "5.", "+.5", "-.", ".", "+", "-", "", "1e5",
+      "1E-5", "-2.5e+3", "0x1p3", "1.0d", "2f", "1_0", "1..2", "--1", "+-1",
+      "1 2", "\u0663", "\u00e9", "4.9E-324", "1.7976931348623157E308",
+      "0.30000000000000004", "123456789012345", "1234567890123456")
+    val token = Gen.frequency(12 -> decimal(4, 10), 3 -> decimal(18, 25),
+      2 -> tiny, 2 -> printed, 1 -> special)
+    val sep = Gen.oneOf(",", ",", ", ", ", ", ",\t", ", \t  ", " ,", " , ",
+      ",\u000b", ",\f", ",\r", ",<", ",> ", ",\u0001", ",,", ", ,")
+    val noise = Gen.frequency(30 -> Array.empty[Byte], 2 -> "<".getBytes,
+      2 -> ">".getBytes, 1 -> Array(0xc3, 0xa9).map(_.toByte),
+      1 -> Array(0xff.toByte), 1 -> Array(0xc2, 0xa0).map(_.toByte),
+      1 -> Array(0xe2, 0x80, 0xa8).map(_.toByte), 1 -> " ".getBytes,
+      1 -> Array(1.toByte), 1 -> "<>".getBytes)
+    val pointLine = for {
+      n <- Gen.frequency(1 -> Gen.const(0), 8 -> Gen.choose(1, 6))
+      toks <- Gen.listOfN(n, token)
+      seps <- Gen.listOfN(n, sep)
+      open <- Gen.oneOf("", "<", "<", " <", "<<", "\t< ", "<>", "\u0001<")
+      close <- Gen.oneOf("", ">", ">", "> ", ">>", " > ", "\u0001")
+      trail <- Gen.oneOf("", "", "", ",", ", ", " ,", ",\u0001", ",\u000b", ",\f")
+      bits <- Gen.listOfN(2, Gen.zip(noise, Gen.chooseNum(0, 400)))
+    } yield {
+      val body = toks.indices.map(i => toks(i) + (if (i < n - 1) seps(i) else "")).mkString
+      bits.foldLeft((open + body + trail + close).getBytes(UTF_8)) {
+        case (b, (extra, at)) => b.patch(at % (b.length + 1), extra, 0)
+      }
+    }
+    val blank = Gen.oneOf("", " ", "\t \t", "\u0001\u0002 ", "  \u000b", "\r")
+      .map(_.getBytes(UTF_8))
+    val lines = samples(Gen.frequency(12 -> pointLine, 1 -> blank), 4000)
+    val parser = new PointsLineParser
+    val outcomes = lines.map { line =>
+      // trailing garbage past `len`, as in a reused Text buffer
+      val buf = line ++ "9,<9>".getBytes(UTF_8)
+      val viaBytes =
+        if (PointsLineParser.isBlank(buf, line.length)) None
+        else Some(try Right(parser.parse(buf, line.length).toDoubleArray.toSeq
+          .map(java.lang.Double.doubleToRawLongBits))
+        catch { case e: NumberFormatException => Left(e.getMessage) })
+      val expected = stringParse(line)
+      assert(viaBytes == expected,
+        s"line bytes ${line.map(b => f"${b & 0xff}%02x").mkString(" ")} " +
+          s"(${new String(line, UTF_8)})")
+      expected
+    }
+    // the generator reaches every outcome, often
+    val (blanks, failures) = (outcomes.count(_.isEmpty), outcomes.count(_.exists(_.isLeft)))
+    val points = outcomes.count(_.exists(_.exists(_.nonEmpty)))
+    assert(blanks > 100 && failures > 500 && points > 1000, (blanks, failures, points))
+  }
+
   test("vecScale(vecScale(v, n), 1/n) is identity (Point.scale inverse)") {
     val cases = samples(Gen.zip(pointGen, Gen.chooseNum(1, 1000)), 20)
     cases.foreach { case (p, n) =>

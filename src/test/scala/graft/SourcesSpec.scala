@@ -43,6 +43,55 @@ class SourcesSpec extends SparkSessionSpec {
     assert(sortedVecs(df) == sortedVecs(PointsIO.readPointsText(spark, path)))
   }
 
+  test("split plan follows spark.sql.files.*; splitSizeBytes still overrides it") {
+    val expected = sortedVecs(PointsIO.readPointsText(spark, path))
+    // one open cost (4 MiB) outweighs the 20 KB file: a single range
+    assert(spark.read.format("points").load(path).rdd.getNumPartitions == 1)
+    val key = "spark.sql.files.openCostInBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try {
+      // bytes per core now rule: one range per core or so, no option set
+      val df = spark.read.format("points").load(path)
+      assert(df.rdd.getNumPartitions > 1, "expected the rule to split the file")
+      assert(sortedVecs(df) == expected)
+      val whole = spark.read.format("points")
+        .option("splitSizeBytes", (1L << 30).toString).load(path)
+      assert(whole.rdd.getNumPartitions == 1)
+      assert(sortedVecs(whole) == expected)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("reader and writer factories carry the Hadoop conf by broadcast: < 4 KB each") {
+    import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import graft.sources.PointsTable
+    spark.sparkContext // the tables capture the active session
+    def serializedBytes(o: AnyRef): Int = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(o)
+      out.close()
+      bytes.size()
+    }
+    val readers = new PointsTable(path, None)
+      .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
+      .toBatch.createReaderFactory()
+    val dst = java.nio.file.Files.createTempDirectory("points_factory").toString
+    val writers = new PointsTable(dst, None)
+      .newWriteBuilder(new LogicalWriteInfo {
+        override def options(): CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty()
+        override def queryId(): String = "factory-size"
+        override def schema(): org.apache.spark.sql.types.StructType = PointsTable.Schema
+      }).build().toBatch
+      .createBatchWriterFactory(new PhysicalWriteInfo {
+        override def numPartitions(): Int = 1
+      })
+    // the serialized Hadoop Configuration alone is ~120 KB
+    assert(serializedBytes(readers) < 4096, s"reader factory: ${serializedBytes(readers)} B")
+    assert(serializedBytes(writers) < 4096, s"writer factory: ${serializedBytes(writers)} B")
+  }
+
   test("count(*) prunes the parse and still counts every line") {
     assert(spark.read.format("points").load(path).count() == 500)
     assert(spark.read.format("points").option("splitSizeBytes", "64")
