@@ -17,9 +17,10 @@ import org.apache.spark.sql.SparkSession
   *   ([[PointsIO.writeCentroids]]) — no Spark job for k lines;
   * - dim is accepted and, unlike the reference (which prints and ignores
   *   it, KMeans.java:107), validated against the width of every vector
-  *   of the seed sample, before round 1 (the sample is a job the run
-  *   needs anyway; no separate probe job). Empty input fails there too,
-  *   with a message saying so;
+  *   before round 1, by [[KMeansRunner.run]]'s seed draw: the run's
+  *   first job, which parses and caches the file and visits every
+  *   vector anyway (no separate probe job). Empty input fails there
+  *   too, with a message saying so;
   * - num_reducer maps to spark.sql.shuffle.partitions (the reference's
   *   job.setNumReduceTasks, KMeans.java:133);
   * - epsilon/max_iter/empty-cluster semantics are KMeansRunner's
@@ -28,8 +29,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Improvements over the reference, documented in SURVEY.md §2 quirks
   * (not semantics): seeded init (reproducible; seed via
-  * GRAFT_SEED env, default 42), no k≤10 id-parse limit, input cached
-  * once instead of re-read per iteration.
+  * GRAFT_SEED env, default 42), no k≤10 id-parse limit, input parsed
+  * and cached once instead of re-read per iteration.
   */
 object KMeansCli {
   def main(args: Array[String]): Unit = {

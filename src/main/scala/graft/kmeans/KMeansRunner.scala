@@ -1,7 +1,11 @@
 package graft.kmeans
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, UnsafeArrayData, XxHash64Function}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 
 /** Result of a full k-means run. `iterations` is the reference driver's
   * final `iter` value: on convergence the reference breaks BEFORE the
@@ -32,25 +36,26 @@ final case class KMeansResult(
   *  - init = k-point sample without replacement (KMeans.java:276-312),
   *    but SEEDED for reproducibility (the reference's unseeded
   *    `new Random()` at KMeans.java:284 is a documented quirk we fix) and
-  *    computed distributedly (orderBy(rand)·limit k) instead of the
-  *    reference's O(n) driver-memory read (KMeans.java:292-298 — the
-  *    anti-pattern that would OOM at 100 TB);
+  *    computed distributedly (a seeded content-hash draw, one job)
+  *    instead of the reference's O(n) driver-memory read
+  *    (KMeans.java:292-298 — the anti-pattern that would OOM at 100 TB);
   *  - empty cluster ⇒ discard the round, re-initialize ALL k centroids
   *    from a fresh sample, skip the error check, still count the
   *    iteration (KMeans.java:167-171; Doc CC pdf §2.0.1);
   *  - stop when Σ‖Δcᵢ‖ < eps (KMeans.java:174-179).
   *
-  * Scale posture vs the reference: the input is cached once and each
-  * round is ONE job (narrow assign → partial agg → k-row shuffle → final
-  * agg → collect of k·(d+1) values). The reference re-reads the input
-  * from HDFS and launches a fresh MR job every round (~22 s fixed
+  * Scale posture vs the reference: the input is read and cached once
+  * (by the seed draw) and each round is ONE single-stage job over the
+  * cached vectors (assign + per-partition partial sums, k·(d+1) values
+  * per partition merged on the driver). The reference re-reads the
+  * input from HDFS and launches a fresh MR job every round (~22 s fixed
   * overhead per its own §3 evaluation); on a 1000-executor cluster this
-  * loop's per-round cost is one shuffle of k·d·#partitions doubles.
+  * loop's per-round cost is k·(d+1)·#partitions doubles to the driver.
   */
 object KMeansRunner {
 
-  /** `dim` > 0 declares the vector width: every vector of the seed
-    * sample must have it, checked before round 1. */
+  /** `dim` > 0 declares the vector width: every vector must have it,
+    * checked by the seed draw, before round 1. */
   def run(points: DataFrame, vecCol: String, k: Int, maxIter: Int,
           eps: Double, seed: Long,
           cache: Boolean = true, dim: Int = 0): KMeansResult = {
@@ -58,7 +63,7 @@ object KMeansRunner {
     // `while (1 < 1)` (KMeans.java:130): result = the seeded sample.
     require(k > 0 && maxIter >= 1)
     runLoop(points, vecCol, k, maxIter, eps, seed,
-      sampleCentroids(points, vecCol, k, _), identity, cache, dim)
+      (kernel, s) => draw(kernel, k, s, dim), identity, cache)
   }
 
   /** ORACLE-REPLAYABLE variant of [[run]]: identical loop semantics,
@@ -78,8 +83,8 @@ object KMeansRunner {
                     cache: Boolean = true): KMeansResult = {
     require(k > 0 && maxIter >= 1)
     runLoop(points, vecCol, k, maxIter, eps, seed,
-      idHashSampleCentroids(points, vecCol, idCol, k, _),
-      _.map(_.map(roundHalfUp(_, roundDp))), cache, dim = 0)
+      (_, s) => idHashSampleCentroids(points, vecCol, idCol, k, s),
+      _.map(_.map(roundHalfUp(_, roundDp))), cache)
   }
 
   /** Spark-`round`-compatible decimal rounding (BigDecimal over the
@@ -91,8 +96,7 @@ object KMeansRunner {
   /** Seeded k-sample keyed on a multiplicative hash of an integer id:
     * `(id · 2654435761 + seed · 40503) mod (2³¹−1)`, ties on id — the
     * Knuth-style scramble every SQL engine can reproduce exactly in
-    * 64-bit integer arithmetic. Same one-pass TakeOrderedAndProject
-    * shape as [[sampleCentroids]]. */
+    * 64-bit integer arithmetic. One pass: TakeOrderedAndProject. */
   def idHashSampleCentroids(points: DataFrame, vecCol: String,
                             idCol: String, k: Int,
                             seed: Long): Array[Array[Double]] =
@@ -102,25 +106,37 @@ object KMeansRunner {
       .limit(k)
       .select(col(vecCol))
       .collect()
-      .map(rowVec)
+      .map(_.getSeq[Double](0).toArray)
 
   /** Seeded k-sample without replacement, O(k) driver memory.
     * Ordered by a seeded content hash rather than `rand(seed)`: rand is
     * seeded PER PARTITION, so its sample changes with the partition
     * layout — a content hash gives the same k vectors on any cluster
     * size / split plan, which the oracle-reproducibility story
-    * (SURVEY.md §7.4) requires. TakeOrderedAndProject keeps it one pass,
-    * no full sort. */
+    * (SURVEY.md §7.4) requires. The same draw as [[run]]'s, over an
+    * uncached kernel. */
   def sampleCentroids(points: DataFrame, vecCol: String, k: Int,
                       seed: Long): Array[Array[Double]] =
-    points.select(col(vecCol))
-      .orderBy(xxhash64(col(vecCol), lit(seed)), col(vecCol))
-      .limit(k)
-      .collect()
-      .map(rowVec)
+    draw(new LloydKernel(points, vecCol, cache = false), k, seed, dim = 0)
 
-  private def rowVec(r: Row): Array[Double] =
-    r.getSeq[Double](0).toArray
+  /** The k vectors first in `(xxhash64(v, seed), v)` order — the rows
+    * `orderBy(xxhash64(v, lit(seed)), v).limit(k)` returns — drawn by
+    * one job over the kernel's vectors: each task keeps its
+    * partition's k first ([[SeedDraw]]), the driver merges them in
+    * partition order. Over a cached kernel the first draw is the job
+    * that fills the cache, so the points are extracted once per run.
+    * The same job counts the vectors whose width is not `dim` (when
+    * `dim` > 0) and fails if there are any. */
+  private def draw(kernel: LloydKernel, k: Int, seed: Long,
+                   dim: Int): Array[Array[Double]] = {
+    val vs = kernel.vectors
+    val parts = vs.sparkContext.runJob(vs, SeedDraw.task(k, seed, dim))
+    val misfits = parts.map(_.misfits).sum
+    require(misfits == 0L, s"declared dim=$dim but data has " +
+      s"${parts.find(_.misfits > 0L).get.width} coordinates " +
+      s"(vectors not $dim wide: $misfits)")
+    SeedDraw.merge(parts, k)
+  }
 
   /** Loop body shared by [[run]] and [[runReplayable]]: `sample` draws
     * the (re-)init centroid set for a given seed; `post` is applied to
@@ -132,29 +148,28 @@ object KMeansRunner {
     * per-round Catalyst replanning was the loop's measured floor, not
     * the k-row aggregate). `cache` persists the kernel's primitive
     * vector RDD (replacing the former DataFrame persist: caching both
-    * would hold the corpus twice). The seed/re-init samples still read
-    * `pts` directly — one extra source scan per sample, paid once
-    * (plus once per rare empty-cluster re-init). The seed sample is
-    * also where an empty input and a `dim` mismatch are caught, before
-    * any round runs. */
+    * would hold the corpus twice). The kernel is built before the
+    * first sample, which [[run]] draws from the kernel's vectors: that
+    * draw fills the cache, so the source is read once and round 1 is a
+    * cached round. The seed sample is also where an empty input and a
+    * `dim` mismatch are caught, before any round runs — inside the
+    * `try`, so a failed draw leaves nothing persisted. */
   private def runLoop(pts: DataFrame, vecCol: String, k: Int, maxIter: Int,
                       eps: Double, seed: Long,
-                      sample: Long => Array[Array[Double]],
+                      sample: (LloydKernel, Long) => Array[Array[Double]],
                       post: Array[Array[Double]] => Array[Array[Double]],
-                      cache: Boolean, dim: Int)
+                      cache: Boolean)
       : KMeansResult = {
-    var centroids = sample(seed)
+    val kernel = new LloydKernel(pts, vecCol, cache)
+    try {
+    var centroids = sample(kernel, seed)
     require(centroids.nonEmpty,
       "k-means input is empty: no points to sample initial centroids from")
-    centroids.foreach(c => require(dim <= 0 || c.length == dim,
-      s"declared dim=$dim but data has ${c.length} coordinates"))
     var iter = 1 // KMeans.java:113 — starts at 1 ⇒ at most maxIter−1 rounds
     var error = Double.NaN
     var reinits = 0
     val log = Seq.newBuilder[Double]
     var converged = false
-    val kernel = new LloydKernel(pts, vecCol, cache)
-    try {
     while (iter < maxIter && !converged) {
       val rows = kernel.round(centroids)
       // Spark's groupBy emits no row for an unseen key, unlike the
@@ -164,7 +179,7 @@ object KMeansRunner {
         // empty-cluster policy: full re-init, skip error check,
         // iteration still counts (KMeans.java:167-171).
         reinits += 1
-        centroids = sample(seed + iter)
+        centroids = sample(kernel, seed + iter)
       } else {
         val newCentroids = post(Array.tabulate(k)(byId(_)))
         error = KMeansOps.shift(centroids, newCentroids)
@@ -179,4 +194,54 @@ object KMeansRunner {
     KMeansResult(centroids, iter, error, log.result(), reinits, converged)
     } finally kernel.unpersist()
   }
+}
+
+/** The per-task half of [[KMeansRunner]]'s seed draw: a partition's k
+  * first vectors in `(xxhash64(v, seed), v)` order, with Spark's own
+  * hash (`XxHash64` folds its children from seed 42: the array, then
+  * the long seed) and Spark's interpreted ascending ordering of
+  * `(bigint, array<double>)` rows — so it picks what the DataFrame
+  * `orderBy(xxhash64(v, lit(seed)), v).limit(k)` picks. A small object
+  * of its own so the closure cleaner has little bytecode to read. */
+private[kmeans] object SeedDraw {
+
+  /** A task's picks (ascending `(hash, vector)` rows), how many of its
+    * vectors are not `dim` wide, and the width of the first of them. */
+  final case class Part(picks: Array[InternalRow], misfits: Long, width: Int)
+
+  private val VecType = ArrayType(DoubleType, containsNull = false)
+
+  private def order = InterpretedOrdering.forSchema(Seq(LongType, VecType))
+
+  def task(k: Int, seed: Long, dim: Int)
+      : (TaskContext, Iterator[(Long, Array[Double])]) => Part =
+    (_, it) => {
+      val ord = order
+      // max-heap of the k first rows seen so far
+      val heap = new java.util.PriorityQueue[InternalRow](ord.reverse)
+      var misfits = 0L
+      var width = -1
+      while (it.hasNext) {
+        val v = it.next()._2
+        if (dim > 0 && v.length != dim) {
+          if (misfits == 0L) width = v.length
+          misfits += 1
+        }
+        val a = UnsafeArrayData.fromPrimitiveArray(v)
+        val h = XxHash64Function.hash(seed, LongType,
+          XxHash64Function.hash(a, VecType, 42L))
+        val row = InternalRow(h, a)
+        if (heap.size < k) heap.add(row)
+        else if (k > 0 && ord.compare(row, heap.peek()) < 0) {
+          heap.poll(); heap.add(row)
+        }
+      }
+      Part(heap.toArray(Array.empty[InternalRow]).sorted(ord), misfits, width)
+    }
+
+  /** The k first of all tasks' picks; a stable sort over the picks in
+    * partition order. */
+  def merge(parts: Array[Part], k: Int): Array[Array[Double]] =
+    parts.flatMap(_.picks).sorted(order).take(k)
+      .map(_.getArray(1).toDoubleArray())
 }

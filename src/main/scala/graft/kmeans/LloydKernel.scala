@@ -1,5 +1,6 @@
 package graft.kmeans
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions.col
@@ -21,15 +22,17 @@ import org.apache.spark.storage.StorageLevel
   * The kernel plans ONCE: the vector column is extracted through the
   * physical plan (`queryExecution.toRdd` — one Catalyst pass) into an
   * RDD of primitive `double[]` (optionally persisted), and each
-  * [[round]] is then a single-stage job closed over the round's
-  * centroid matrix (k·d doubles in the task binary — the same
-  * "centroids ride with the task" posture as the literal plan). No
-  * Catalyst work per round, no shuffle at all: each task accumulates
-  * its partition's per-cluster (sum, count) partials exactly like
-  * HashAggregateExec's partial mode (row order, left-to-right per
-  * dimension), and the driver merges the k·(d+1)-sized partials in
-  * PARTITION-INDEX order — a deterministic merge where the exchange's
-  * was arrival-ordered.
+  * [[round]] is then one `runJob` straight on those vectors, closed
+  * over the round's centroid matrix (k·d doubles in the task binary —
+  * the same "centroids ride with the task" posture as the literal
+  * plan). No Catalyst work and no new RDD per round (so no call-site
+  * walk and no closure-cleaning of RDD's own lambdas), no shuffle at
+  * all: each task accumulates its partition's per-cluster (sum, count)
+  * partials exactly like HashAggregateExec's partial mode (row order,
+  * left-to-right per dimension), and the driver merges the
+  * k·(d+1)-sized partials in PARTITION-INDEX order (`runJob` returns
+  * them so) — a deterministic merge where the exchange's was
+  * arrival-ordered.
   *
   * Value contract: identical to `lloydRound(...).collect()` —
   * assignment is the [[graft.expressions.NearestCentroid]] loop
@@ -52,7 +55,8 @@ final class LloydKernel(points: DataFrame, vecCol: String,
                         idCol: Option[String] = None) {
 
   /** One pass through the source plan; optionally persisted so every
-    * round after the first reads primitive vectors with zero
+    * job after the first (in [[KMeansRunner]] the first is the seed
+    * draw, so every round) reads primitive vectors with zero
     * re-extraction cost. (`toDoubleArray` copies out of the
     * possibly-reused InternalRow buffer, so the cached arrays are
     * stable.) With cache=false each round re-executes the extraction
@@ -69,7 +73,9 @@ final class LloydKernel(points: DataFrame, vecCol: String,
     }
   }
 
-  private val cached: RDD[(Long, Array[Double])] =
+  /** The vectors every job of this kernel runs over: its rounds and
+    * [[KMeansRunner]]'s seed draws. */
+  private[kmeans] val vectors: RDD[(Long, Array[Double])] =
     if (cache) vecs.persist(StorageLevel.MEMORY_AND_DISK)
       .setName(s"LloydKernel($vecCol)")
     else vecs
@@ -97,7 +103,44 @@ final class LloydKernel(points: DataFrame, vecCol: String,
       : Array[(Int, Array[Double], Long)] = {
     val k = centroids.length
     val d = centroids.head.length
-    val partials = cached.mapPartitionsWithIndex { (pid, it) =>
+    // one partial per partition, in partition-index order
+    val partials = vectors.sparkContext.runJob(vectors,
+      LloydKernel.roundFn(centroids, member))
+
+    val totS = Array.ofDim[Double](k, d)
+    val totN = new Array[Long](k)
+    partials.foreach { case (s, n) =>
+      var i = 0
+      while (i < k) {
+        val si = s(i)
+        val ti = totS(i)
+        var j = 0
+        while (j < d) { ti(j) += si(j); j += 1 }
+        totN(i) += n(i)
+        i += 1
+      }
+    }
+    Array.range(0, k).withFilter(totN(_) > 0L).map { i =>
+      (i, totS(i), totN(i))
+    }
+  }
+
+  /** Drop the persisted vectors (no-op when built with cache=false). */
+  def unpersist(): Unit =
+    if (cache) { vectors.unpersist(blocking = false); () }
+}
+
+private[kmeans] object LloydKernel {
+
+  /** A round's task: its partition's per-cluster (vector sums, counts).
+    * Built here rather than in the class so the closure cleaner, which
+    * runs on every job, inspects this small object's bytecode. */
+  def roundFn(centroids: Array[Array[Double]], member: Long => Boolean)
+      : (TaskContext, Iterator[(Long, Array[Double])]) =>
+        (Array[Array[Double]], Array[Long]) = {
+    val k = centroids.length
+    val d = centroids.head.length
+    (_, it) => {
       val sums = Array.ofDim[Double](k, d)
       val counts = new Array[Long](k)
       while (it.hasNext) {
@@ -129,28 +172,7 @@ final class LloydKernel(points: DataFrame, vecCol: String,
           }
         }
       }
-      Iterator.single((pid, sums, counts))
-    }.collect()
-
-    val totS = Array.ofDim[Double](k, d)
-    val totN = new Array[Long](k)
-    partials.sortBy(_._1).foreach { case (_, s, n) =>
-      var i = 0
-      while (i < k) {
-        val si = s(i)
-        val ti = totS(i)
-        var j = 0
-        while (j < d) { ti(j) += si(j); j += 1 }
-        totN(i) += n(i)
-        i += 1
-      }
-    }
-    Array.range(0, k).withFilter(totN(_) > 0L).map { i =>
-      (i, totS(i), totN(i))
+      (sums, counts)
     }
   }
-
-  /** Drop the persisted vectors (no-op when built with cache=false). */
-  def unpersist(): Unit =
-    if (cache) { cached.unpersist(blocking = false); () }
 }

@@ -3,13 +3,10 @@ package graft
 import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.SparkListenerJobStart
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
-import graft.kmeans.{KMeansCli, PointsIO}
+import graft.kmeans.{KMeansCli, KMeansRunner, PointsIO}
 
 /** End-to-end drive of the reference CLI contract: text points in,
   * per-iteration output dir of `id\t<coords>` lines out, reference
@@ -43,24 +40,22 @@ class CliSpec extends SparkSessionSpec {
     partText(dir)
   }
 
-  /** Short call sites of the jobs `body` starts (listener events are
-    * drained by a marker job before reading). */
-  private def jobSites(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val sites = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        e.stageInfos.foreach(s => sites.add(s.name))
+  /** Short call sites of the jobs `body` starts. */
+  private def jobSites(body: => Unit): Seq[String] =
+    sparkEvents { case e: SparkListenerJobStart => e.stageInfos.map(_.name) }(body)
+      .flatten
+
+  /** The message `KMeansCli` fails with on `input` when told dim = 3,
+    * and the call sites of the jobs it started. */
+  private def dimFailure(dir: File, input: String): (String, Seq[String]) = {
+    var error: Option[Throwable] = None
+    val sites = jobSites {
+      error = Some(intercept[IllegalArgumentException] {
+        KMeansCli.main(Array(input, "2", "5", new File(dir, "out").getAbsolutePath,
+          "3", "0.0001", "4"))
+      })
     }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.parallelize(Seq(1), 1).map(identity).count()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!sites.asScala.exists(_.contains("CliSpec.scala")) &&
-        System.nanoTime() < deadline) Thread.sleep(10)
-    } finally sc.removeSparkListener(listener)
-    sites.asScala.toSeq
+    (error.get.getMessage, sites)
   }
 
   test("KMeansCli runs the 7-arg contract end-to-end on reference-format text") {
@@ -120,15 +115,25 @@ class CliSpec extends SparkSessionSpec {
     spark.sparkContext
     val dir = Files.createTempDirectory("cli_dim").toFile
     val input = writeLines(dir, (0 until 50).map(i => s"<$i.5, ${i * 2}.25>"))
-    var error: Option[Throwable] = None
-    val sites = jobSites {
-      error = Some(intercept[IllegalArgumentException] {
-        KMeansCli.main(Array(input, "2", "5", new File(dir, "out").getAbsolutePath,
-          "3", "0.0001", "4"))
-      })
-    }
-    assert(error.get.getMessage ==
-      "requirement failed: declared dim=3 but data has 2 coordinates")
+    val (message, sites) = dimFailure(dir, input)
+    assert(message == "requirement failed: declared dim=3 " +
+      "but data has 2 coordinates (vectors not 3 wide: 50)")
+    assert(sites.nonEmpty && !sites.exists(_.contains("LloydKernel")), sites)
+    assert(!dir.list().exists(_.startsWith("out")))
+  }
+
+  test("a short line the seed sample does not pick still fails the dim check") {
+    spark.sparkContext
+    val dir = Files.createTempDirectory("cli_dim_one").toFile
+    val input = writeLines(dir, (0 until 100).map { i =>
+      if (i == 57) "<57.5, 114.25>" else s"<$i.5, ${i * 2}.25, ${i % 9}.0>"
+    })
+    val seed = sys.env.getOrElse("GRAFT_SEED", "42").toLong
+    assert(KMeansRunner.sampleCentroids(PointsIO.readPoints(spark, input),
+      "point", 2, seed).forall(_.length == 3), "the seed sample holds the short line")
+    val (message, sites) = dimFailure(dir, input)
+    assert(message == "requirement failed: declared dim=3 " +
+      "but data has 2 coordinates (vectors not 3 wide: 1)")
     assert(sites.nonEmpty && !sites.exists(_.contains("LloydKernel")), sites)
     assert(!dir.list().exists(_.startsWith("out")))
   }

@@ -106,6 +106,50 @@ class KMeansSpec extends SparkSessionSpec {
     assert(tieRows.map(_._1).toSeq == Seq(0))
   }
 
+  test("a run extracts each point once: its seed draw fills the kernel's cache") {
+    val n = 300
+    val extracted = spark.sparkContext.longAccumulator("extracted")
+    val tap = udf { (v: Seq[Double]) => extracted.add(1L); v }
+    val rnd = new scala.util.Random(21)
+    val pts = df((0 until n).map(_ => Seq(rnd.nextDouble(), rnd.nextDouble())))
+      .repartition(3).select(tap(col("v")).as("v"))
+    val res = KMeansRunner.run(pts, "v", k = 3, maxIter = 4, eps = 0.0, seed = 8L)
+    assert(res.errorLog.size + res.reinitCount == 3)
+    assert(extracted.value == n)
+  }
+
+  test("every round is one job over the same persisted vectors: no RDD per round") {
+    import org.apache.spark.scheduler.SparkListenerStageSubmitted
+    val kernel = new graft.kmeans.LloydKernel(
+      df((1 to 40).map(i => Seq(i.toDouble, (i % 7).toDouble))), "v")
+    val rounds = try sparkEvents {
+      case e: SparkListenerStageSubmitted
+          if e.stageInfo.name.contains("LloydKernel.scala") =>
+        e.stageInfo.rddInfos.map(_.id).toSet
+    } {
+      Seq(0.0, 5.0, 9.0).foreach(x =>
+        kernel.round(Array(Array(x, 0.0), Array(x + 20.0, 3.0))))
+    } finally kernel.unpersist()
+    assert(rounds.size == 3 && rounds.distinct.size == 1, rounds)
+  }
+
+  test("a run that fails in its seed draw leaves no kernel persisted") {
+    def kernels = spark.sparkContext.getPersistentRDDs.collect {
+      case (id, r) if Option(r.name).exists(_.startsWith("LloydKernel(")) => id
+    }.toSet
+    val before = kernels
+    val empty = intercept[IllegalArgumentException] {
+      KMeansRunner.run(df(Seq.empty), "v", k = 2, maxIter = 5, eps = 0.0, seed = 1L)
+    }
+    assert(empty.getMessage.contains("input is empty"), empty.getMessage)
+    val narrow = intercept[IllegalArgumentException] {
+      KMeansRunner.run(df(Seq(Seq(1.0, 2.0), Seq(3.0, 4.0))), "v", k = 2,
+        maxIter = 5, eps = 0.0, seed = 1L, dim = 3)
+    }
+    assert(narrow.getMessage.contains("declared dim=3"), narrow.getMessage)
+    assert(kernels == before)
+  }
+
   test("mbMember equals the in-plan md5 batch draw (20-bit prefix, mod MbMod)") {
     import graft.operators.KMeansQueries
     val ids = spark.range(0, 4000).toDF("vec_id")

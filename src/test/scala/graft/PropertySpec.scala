@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -496,6 +497,62 @@ class PropertySpec extends SparkSessionSpec {
     val (blanks, failures) = (outcomes.count(_.isEmpty), outcomes.count(_.exists(_.isLeft)))
     val points = outcomes.count(_.exists(_.exists(_.nonEmpty)))
     assert(blanks > 100 && failures > 500 && points > 1000, (blanks, failures, points))
+  }
+
+  /** The seed draw as the DataFrame query `sampleCentroids` ran before
+    * it became one job over the kernel's vectors, kept as the oracle of
+    * that draw: the vectors' raw bits, in draw order. */
+  private def dataFrameDraw(pts: DataFrame, k: Int, seed: Long): Seq[Seq[Long]] =
+    pts.select(col("v"))
+      .orderBy(xxhash64(col("v"), lit(seed)), col("v"))
+      .limit(k)
+      .as[Seq[Double]].collect()
+      .map(_.map(java.lang.Double.doubleToRawLongBits)).toSeq
+
+  test("seed draw == the orderBy(xxhash64)·limit DataFrame draw, bit for bit") {
+    import graft.kmeans.KMeansRunner
+    val coord = Gen.frequency(
+      6 -> Gen.chooseNum(-3, 3).map(_.toDouble), // few values: hash and order ties
+      4 -> Gen.chooseNum(-1e6, 1e6),
+      2 -> Gen.oneOf(0.0, -0.0, Double.NaN, Double.PositiveInfinity,
+        Double.NegativeInfinity, Double.MinPositiveValue))
+    // two vectors equal under SQL ordering tie in both draws; when their
+    // bits differ (0.0 vs -0.0 in one slot) the DataFrame draw breaks
+    // the tie by task completion order, so the pool keeps one vector per
+    // SQL-equal class (exact duplicates stay: their bits cannot differ)
+    def sqlKey(v: List[Double]) =
+      v.map(x => java.lang.Double.doubleToLongBits(if (x == 0.0) 0.0 else x))
+    val caseGen = for {
+      n <- Gen.frequency(1 -> Gen.const(0), 12 -> Gen.chooseNum(1, 60))
+      d <- Gen.chooseNum(1, 4)
+      width = Gen.frequency(8 -> Gen.const(d), 1 -> Gen.chooseNum(0, d + 2))
+      pool <- Gen.chooseNum(1, math.max(1, n)).flatMap(m =>
+        Gen.listOfN(m, width.flatMap(Gen.listOfN(_, coord))))
+      distinct = pool.distinctBy(sqlKey)
+      rows <- Gen.listOfN(n, Gen.chooseNum(0, distinct.size - 1).map(distinct))
+      k <- Gen.chooseNum(1, n + 3)
+      parts <- Gen.chooseNum(1, 13)
+      seed <- Gen.oneOf(Gen.const(42L), Gen.chooseNum(-5L, 5L),
+        Gen.choose(Long.MinValue, Long.MaxValue))
+    } yield (rows, k, parts, seed)
+    val cases = samples(caseGen, 48)
+    cases.foreach { case (rows, k, parts, seed) =>
+      val pts = rows.toDF("v").repartition(parts)
+      val want = dataFrameDraw(pts, k, seed)
+      val got = KMeansRunner.sampleCentroids(pts, "v", k, seed)
+        .map(_.toSeq.map(java.lang.Double.doubleToRawLongBits)).toSeq
+      assert(got == want, s"n=${rows.size} k=$k parts=$parts seed=$seed")
+    }
+    // the generator reaches the edges it is for
+    def some(p: ((List[List[Double]], Int, Int, Long)) => Boolean) =
+      assert(cases.count(p) >= 3)
+    some(c => c._2 > c._1.size)
+    some(c => c._1.distinct.size < c._1.size)
+    some(c => c._1.map(_.size).distinct.size > 1)
+    some(c => c._1.exists(_.exists(_.isNaN)))
+    some(c => c._1.exists(_.exists(_.isInfinite)))
+    some(c => c._1.exists(_.exists(x => x == 0.0 && 1 / x < 0)))
+    some(c => c._3 >= 10)
   }
 
   test("vecScale(vecScale(v, n), 1/n) is identity (Point.scale inverse)") {

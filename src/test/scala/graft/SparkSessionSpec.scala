@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.SparkFirehoseListener
+import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,4 +23,30 @@ trait SparkSessionSpec extends AnyFunSuite {
     .getOrCreate()
 
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** What `pick` makes of the listener events of the jobs `body` starts.
+    * A marker job started from here after `body` drains the listener
+    * bus: once its start is seen, every earlier event has been. */
+  def sparkEvents[A](pick: PartialFunction[SparkListenerEvent, A])
+                    (body: => Unit): Seq[A] = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[A]()
+    @volatile var drained = false
+    val listener = new SparkFirehoseListener {
+      override def onEvent(e: SparkListenerEvent): Unit = e match {
+        case j: SparkListenerJobStart
+            if j.stageInfos.exists(_.name.contains("SparkSessionSpec.scala")) =>
+          drained = true
+        case _ => pick.lift(e).foreach(seen.add)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.parallelize(Seq(1), 1).map(identity).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally sc.removeSparkListener(listener)
+    seen.asScala.toSeq
+  }
 }
