@@ -217,25 +217,7 @@ object BenchLadder {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // NOTE: a wider AQE initialPartitionNum (8×cpus) was tried for
-      // the x100 rungs and MEASURED NET-NEGATIVE on this box —
-      // graph_triangles x10 13.8→25.8 s, dedup_prefix_join x10
-      // 60→99 s (extra task waves on already-large exchanges), with
-      // no x100 gain (261→278 s). Exchanges stay at cpus; operators
-      // whose fan-out outgrows that pin their own data-proportional
-      // repartition (the qTriangles wedgeParts rule).
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.get()
 
     val sfDirs = Seq("sf0.001", "sf0.01", "sf0.1")
       .map(s => s -> s"/root/testdata/$s")

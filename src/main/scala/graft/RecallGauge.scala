@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.sum
 
 /** Dev tool: print the graph-ANN tier's aggregate recall@k at one or
@@ -12,18 +11,7 @@ object RecallGauge {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
                else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.get()
     for (dir <- dirs) {
       val t0 = System.nanoTime()
       val agg = operators.Similarity.annRecallGraph(spark, dir)

@@ -22,7 +22,9 @@ import org.apache.spark.sql.SparkSession
   *   vector anyway (no separate probe job). Empty input fails there
   *   too, with a message saying so;
   * - num_reducer maps to spark.sql.shuffle.partitions (the reference's
-  *   job.setNumReduceTasks, KMeans.java:133);
+  *   job.setNumReduceTasks, KMeans.java:133) of the [[graft.Session]]
+  *   the job runs on (master `SPARK_MASTER`, else
+  *   `local[${Session.cpus}]`);
   * - epsilon/max_iter/empty-cluster semantics are KMeansRunner's
   *   faithful reproduction; a run summary in the reference's
   *   outputsLog.txt spirit goes to stdout.
@@ -48,14 +50,7 @@ object KMeansCli {
     // tests, notebooks — keep theirs)
     val ownsSession = SparkSession.getActiveSession.isEmpty &&
       SparkSession.getDefaultSession.isEmpty
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-kmeans")
-      .config("spark.sql.shuffle.partitions", nRed.max(1))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.get(shufflePartitions = nRed.max(1))
 
     val t0 = System.nanoTime()
     val res = KMeansRunner.run(PointsIO.readPoints(spark, input), "point",

@@ -26,22 +26,6 @@ import graft.functions.VectorFunctions._
   * constant-folds them into straight-line codegen arithmetic; at 1000
   * executors this broadcasts with the task binary, costing nothing.
   */
-/** Which lowering the assignment step uses; all three are semantically
-  * identical (same accumulation order, same strict-< tie-break).
-  *  - Unrolled: k·d literals spliced into codegen — fastest steady
-  *    state for tiny k·d, but recompiles on every centroid change.
-  *  - Dyn: centroids as one typedLit reference — cache-stable,
-  *    higher-order-function loop.
-  *  - Native: custom Catalyst expression (graft.expressions.
-  *    NearestCentroid) — cache-stable AND allocation-free; default.
-  */
-sealed trait AssignMode
-object AssignMode {
-  case object Unrolled extends AssignMode
-  case object Dyn extends AssignMode
-  case object Native extends AssignMode
-}
-
 object KMeansOps {
 
   /** Distances from `vec` to each centroid, as one array column.
@@ -129,19 +113,15 @@ object KMeansOps {
     points.withColumn("cluster",
       graft.expressions.NearestCentroid(col(vecCol), centroids))
 
-  /** One full Lloyd round as a DataFrame: assign + summarize + mean.
+  /** One full Lloyd round as a DataFrame: [[assignNative]] + summarize +
+    * mean.
     * Output: (cluster, centroid: array<double>, n). Absent (empty)
     * clusters yield no row — no Double.MAX_VALUE sentinel
     * (ClusteringFeature.java:64-67); see KMeansRunner for the policy. */
   def lloydRound(points: DataFrame, vecCol: String,
-                 centroids: Array[Array[Double]],
-                 mode: AssignMode = AssignMode.Native): DataFrame = {
+                 centroids: Array[Array[Double]]): DataFrame = {
     val dim = centroids.head.length
-    val assigned = mode match {
-      case AssignMode.Unrolled => assign(points, vecCol, centroids)
-      case AssignMode.Dyn      => assignDyn(points, vecCol, centroids)
-      case AssignMode.Native   => assignNative(points, vecCol, centroids)
-    }
+    val assigned = assignNative(points, vecCol, centroids)
     val summarized =
       if (dim > MaxUnrolledDim) summarizeTyped(assigned, vecCol)
       else summarize(assigned, vecCol, dim)

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards the DRIVER CONTRACT SURFACE itself (VERDICT r16 item 7): the
@@ -89,5 +91,23 @@ class ContractSurfaceSpec extends AnyFunSuite {
     assert(SparkEntry.queries.size >= 248,
       s"only ${SparkEntry.queries.size} queries registered — the " +
         "contract surface shrank below the round-16 board")
+  }
+
+  test("only graft.Session builds a SparkSession or reads SPARK_GRAFT_CPUS") {
+    // every main gets its settings from one place; a second builder is
+    // how their configs drifted apart before
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"no $root under the test cwd")
+    val sources = scala.util.Using.resource(Files.walk(root)) {
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }
+    val factory = root.resolve("graft/Session.scala")
+    val strays = for {
+      f <- sources if f != factory
+      pat <- Seq("SparkSession.builder", "SPARK_GRAFT_CPUS")
+      if Files.readString(f).contains(pat)
+    } yield s"$f: $pat"
+    assert(Files.exists(factory), s"$factory is missing")
+    assert(strays.isEmpty, strays.mkString("\n"))
   }
 }

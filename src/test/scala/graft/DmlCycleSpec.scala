@@ -17,53 +17,40 @@ class DmlCycleSpec extends SparkSessionSpec {
 
   // the cycle issues catalog SQL DML, which resolves through the
   // injected ResolveSnapshotSql rule — needs a GraftExtensions session
-  // (the SnapshotSqlSpec s2 pattern; the driver's Verify/Bench
-  // sessions carry the extension the same way)
-  private lazy val s2: org.apache.spark.sql.SparkSession = {
-    spark.sparkContext
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .getOrCreate()
-  }
-
+  // (the driver's Verify/Bench sessions carry the extension the same way)
   private def root: String = {
-    val n = graft.Tables.cachedCount(s2, sf0001, "documents")
+    val n = graft.Tables.cachedCount(extSpark, sf0001, "documents")
     val key = sf0001.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.sources.Artifacts.root(s2)}/dmlcyc_${key}_n$n/raw/docs"
+    s"${graft.sources.Artifacts.root(extSpark)}/dmlcyc_${key}_n$n/raw/docs"
   }
 
   test("DML cycle: MOR statements carry v1 files, compact rewrites them") {
-    operators.Pipeline.pipelineSnapshotDmlCycle(s2, sf0001).collect()
-    assert(SnapshotTable.latestVersion(s2, root).contains(4),
+    operators.Pipeline.pipelineSnapshotDmlCycle(extSpark, sf0001).collect()
+    assert(SnapshotTable.latestVersion(extSpark, root).contains(4),
       "cycle must land exactly 4 versions (commit, delete, update, compact)")
-    val v1Files = SnapshotTable.read(s2, root, 1).inputFiles.toSet
+    val v1Files = SnapshotTable.read(extSpark, root, 1).inputFiles.toSet
     // MOR proofs: both DML versions still reference v1's data files
     assert(v1Files.subsetOf(
-      SnapshotTable.read(s2, root, 2).inputFiles.toSet),
+      SnapshotTable.read(extSpark, root, 2).inputFiles.toSet),
       "single-column DELETE must commit a vector, not rewrite data")
     assert(v1Files.subsetOf(
-      SnapshotTable.read(s2, root, 3).inputFiles.toSet),
+      SnapshotTable.read(extSpark, root, 3).inputFiles.toSet),
       "tuple-keyed UPDATE must commit a vector + insert image, not " +
         "rewrite data")
     // compact proof: version 4 is a fresh single file set — none of
     // v1's files survive in its read
-    val v4Files = SnapshotTable.read(s2, root, 4).inputFiles.toSet
+    val v4Files = SnapshotTable.read(extSpark, root, 4).inputFiles.toSet
     assert(v4Files.nonEmpty && v4Files.intersect(v1Files).isEmpty,
       "compact must publish a rewritten file set")
   }
 
   test("DML cycle has no build-once gate: a repeat run rebuilds") {
-    operators.Pipeline.pipelineSnapshotDmlCycle(s2, sf0001).collect()
-    val v1FilesA = SnapshotTable.read(s2, root, 1).inputFiles.toSet
-    operators.Pipeline.pipelineSnapshotDmlCycle(s2, sf0001).collect()
-    assert(SnapshotTable.latestVersion(s2, root).contains(4),
+    operators.Pipeline.pipelineSnapshotDmlCycle(extSpark, sf0001).collect()
+    val v1FilesA = SnapshotTable.read(extSpark, root, 1).inputFiles.toSet
+    operators.Pipeline.pipelineSnapshotDmlCycle(extSpark, sf0001).collect()
+    assert(SnapshotTable.latestVersion(extSpark, root).contains(4),
       "repeat run must land the same 4-version history")
-    val v1FilesB = SnapshotTable.read(s2, root, 1).inputFiles.toSet
+    val v1FilesB = SnapshotTable.read(extSpark, root, 1).inputFiles.toSet
     assert(v1FilesA.intersect(v1FilesB).isEmpty,
       "repeat run must write fresh files (attempt-unique sets), not " +
         "reuse the previous table")

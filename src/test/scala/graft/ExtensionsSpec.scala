@@ -1,49 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** GraftExtensions must expose the native expressions to pure-SQL users
-  * of a session built with `spark.sql.extensions`. A fresh session is
-  * created over the suite's SparkContext (default session cleared and
-  * restored) because extensions only apply at session build. */
+  * of a session built with `spark.sql.extensions` ([[SparkSessionSpec.extSpark]]:
+  * extensions only apply at session build). */
 class ExtensionsSpec extends SparkSessionSpec {
 
   test("graft_dot and nearest_centroid are callable from spark.sql") {
-    spark.sparkContext // force the shared session/context up first
-    val prev = SparkSession.getDefaultSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    // withExtensions: the spark.sql.extensions STATIC conf only applies
-    // when the SparkContext itself is built with it; withExtensions
-    // covers the existing-context case (same registration path)
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .getOrCreate()
-    try {
-      assert(s2.sql("SELECT graft_dot(array(1d,2d,3d), array(4d,5d,6d)) AS d")
-        .head().getDouble(0) == 32.0)
-      // length mismatch → NULL, matching the built-in composition
-      assert(s2.sql("SELECT graft_dot(array(1d,2d), array(1d)) AS d")
-        .head().isNullAt(0))
-      val cluster = s2.sql(
-        """SELECT nearest_centroid(array(9d, 9d),
-          |  array(array(0d, 0d), array(10d, 10d))) AS c""".stripMargin)
-        .head().getInt(0)
-      assert(cluster == 1)
-      // tie → lowest index (the reference's strict-< scan)
-      val tie = s2.sql(
-        """SELECT nearest_centroid(array(5d),
-          |  array(array(4d), array(6d))) AS c""".stripMargin)
-        .head().getInt(0)
-      assert(tie == 0)
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prev.foreach { p =>
-        SparkSession.setDefaultSession(p)
-        SparkSession.setActiveSession(p)
-      }
-    }
+    assert(extSpark.sql("SELECT graft_dot(array(1d,2d,3d), array(4d,5d,6d)) AS d")
+      .head().getDouble(0) == 32.0)
+    // length mismatch → NULL, matching the built-in composition
+    assert(extSpark.sql("SELECT graft_dot(array(1d,2d), array(1d)) AS d")
+      .head().isNullAt(0))
+    val cluster = extSpark.sql(
+      """SELECT nearest_centroid(array(9d, 9d),
+        |  array(array(0d, 0d), array(10d, 10d))) AS c""".stripMargin)
+      .head().getInt(0)
+    assert(cluster == 1)
+    // tie → lowest index (the reference's strict-< scan)
+    val tie = extSpark.sql(
+      """SELECT nearest_centroid(array(5d),
+        |  array(array(4d), array(6d))) AS c""".stripMargin)
+      .head().getInt(0)
+    assert(tie == 0)
   }
 }

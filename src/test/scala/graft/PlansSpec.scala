@@ -262,20 +262,10 @@ class PlansSpec extends SparkSessionSpec {
     }.nonEmpty
 
     // lint the plans PRODUCTION builds: every entry point registers
-    // GraftExtensions (Verify/Bench/CLI/BenchLadder), and the SQL
-    // catalog queries cannot even resolve without its rules — so the
-    // sweep runs on an extensions-enabled session over the suite's
-    // SparkContext (the ExtensionsSpec pattern), restored after.
-    val prev = org.apache.spark.sql.SparkSession.getDefaultSession
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    val sx = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .getOrCreate()
-    try {
+    // GraftExtensions (graft.Session), and the SQL catalog queries
+    // cannot even resolve without its rules — so the sweep runs on the
+    // suite's extensions session.
+    val sx = extSpark
     val violations = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         val plan = fn(sx, sf0001).queryExecution.sparkPlan
@@ -292,11 +282,6 @@ class PlansSpec extends SparkSessionSpec {
         }
     }
     assert(violations.isEmpty, violations.mkString("\n"))
-    } finally {
-      org.apache.spark.sql.SparkSession.clearActiveSession()
-      org.apache.spark.sql.SparkSession.clearDefaultSession()
-      prev.foreach(org.apache.spark.sql.SparkSession.setDefaultSession)
-    }
 
     // negative control: the exact round-4 pattern must trip the detector
     val bad = spark.range(100).toDF("id")

@@ -16,23 +16,8 @@ class PushAggThroughJoinSpec extends SparkSessionSpec {
   // RewriteDistinctAggregates has already expanded count(DISTINCT …),
   // hiding the shape. The engine registers the rule in the operator-
   // optimization batch (injectOptimizerRule), so the spec tests through
-  // an extensions-enabled session over the suite's context — the same
-  // registration path Verify/Bench sessions use.
-  private lazy val extSpark: org.apache.spark.sql.SparkSession = {
-    import org.apache.spark.sql.SparkSession
-    spark.sparkContext // force the shared context up first
-    val prev = SparkSession.getDefaultSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    try SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .getOrCreate()
-    finally {
-      prev.foreach(SparkSession.setDefaultSession)
-      prev.foreach(SparkSession.setActiveSession)
-    }
-  }
+  // the suite's extensions session (`extSpark`) — the same registration
+  // path every main's session uses.
 
   private def withRule[T](body: => T): T = {
     spark.experimental.extraOptimizations =
@@ -72,6 +57,9 @@ class PushAggThroughJoinSpec extends SparkSessionSpec {
   }
 
   test("fires on null-safe join-then-aggregate; values identical") {
+    // the baseline must run without the rule, or the comparison below
+    // compares the rewrite with itself
+    assert(!aggBelowJoin(nullSafeShape(spark)), "baseline was rewritten")
     val naive = nullSafeShape(spark).collect().map(_.toSeq).toSet
     val df = nullSafeShape(extSpark)
     assert(aggBelowJoin(df), "rule did not push the aggregate below the join")

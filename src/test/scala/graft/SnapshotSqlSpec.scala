@@ -10,25 +10,16 @@ import graft.sources.SnapshotTable
   * engine paths the programmatic API runs — catalog resolution, time
   * travel by version and timestamp, MERGE upsert (stats-scoped COW),
   * MERGE delete (MOR delete vectors), and CALL maintenance procedures.
-  * A fresh extensions-enabled session per suite, like ExtensionsSpec:
+  * Runs on the suite's extensions session ([[SparkSessionSpec.extSpark]]):
   * the resolution rule only exists in sessions built with
   * GraftExtensions. */
 class SnapshotSqlSpec extends SparkSessionSpec {
 
   private lazy val s2: SparkSession = {
-    spark.sparkContext // force the shared context up first
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .getOrCreate()
     val wh = java.nio.file.Files.createTempDirectory("graft_sqlwh").toString
-    s.conf.set("spark.sql.catalog.lakecat", "graft.sources.SnapshotCatalog")
-    s.conf.set("spark.sql.catalog.lakecat.warehouse", wh)
-    s
+    extSpark.conf.set("spark.sql.catalog.lakecat", "graft.sources.SnapshotCatalog")
+    extSpark.conf.set("spark.sql.catalog.lakecat.warehouse", wh)
+    extSpark
   }
   private def wh = s2.conf.get("spark.sql.catalog.lakecat.warehouse")
 
