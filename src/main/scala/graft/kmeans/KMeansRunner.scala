@@ -1,9 +1,11 @@
 package graft.kmeans
 
+import scala.util.DynamicVariable
+
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, UnsafeArrayData, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 
@@ -45,12 +47,21 @@ final case class KMeansResult(
   *  - stop when Σ‖Δcᵢ‖ < eps (KMeans.java:174-179).
   *
   * Scale posture vs the reference: the input is read and cached once
-  * (by the seed draw) and each round is ONE single-stage job over the
-  * cached vectors (assign + per-partition partial sums, k·(d+1) values
-  * per partition merged on the driver). The reference re-reads the
-  * input from HDFS and launches a fresh MR job every round (~22 s fixed
-  * overhead per its own §3 evaluation); on a 1000-executor cluster this
-  * loop's per-round cost is k·(d+1)·#partitions doubles to the driver.
+  * (by the seed draw). Round 1 is ONE single-stage job over the cached
+  * vectors (assign + per-partition partial sums, k·(d+1) values per
+  * partition merged on the driver). The reference re-reads the input
+  * from HDFS and launches a fresh MR job every round (~22 s fixed
+  * overhead per its own §3 evaluation). Where round 1's tasks computed
+  * for less time than the job took, that fixed cost is most of a round,
+  * and the remaining rounds run in loop jobs: one task runs round after
+  * round over every cached partition (see [[runLoop]]). Otherwise —
+  * large k, many partitions, the 100 TB posture — every round stays one
+  * job, whose cost on a 1000-executor cluster is k·(d+1)·#partitions
+  * doubles to the driver.
+  *
+  * Input contract of [[run]]: every coordinate is finite (a NaN or
+  * infinite coordinate fails the run before round 1, with the count of
+  * such vectors) and, with `dim` > 0, every vector is `dim` wide.
   */
 object KMeansRunner {
 
@@ -63,7 +74,7 @@ object KMeansRunner {
     // `while (1 < 1)` (KMeans.java:130): result = the seeded sample.
     require(k > 0 && maxIter >= 1)
     runLoop(points, vecCol, k, maxIter, eps, seed,
-      (kernel, s) => draw(kernel, k, s, dim), identity, cache)
+      (kernel, s) => draw(kernel, k, s, dim, finite = true), identity, cache)
   }
 
   /** ORACLE-REPLAYABLE variant of [[run]]: identical loop semantics,
@@ -117,7 +128,8 @@ object KMeansRunner {
     * uncached kernel. */
   def sampleCentroids(points: DataFrame, vecCol: String, k: Int,
                       seed: Long): Array[Array[Double]] =
-    draw(new LloydKernel(points, vecCol, cache = false), k, seed, dim = 0)
+    draw(new LloydKernel(points, vecCol, cache = false), k, seed, dim = 0,
+      finite = false)
 
   /** The k vectors first in `(xxhash64(v, seed), v)` order — the rows
     * `orderBy(xxhash64(v, lit(seed)), v).limit(k)` returns — drawn by
@@ -126,17 +138,38 @@ object KMeansRunner {
     * partition order. Over a cached kernel the first draw is the job
     * that fills the cache, so the points are extracted once per run.
     * The same job counts the vectors whose width is not `dim` (when
-    * `dim` > 0) and fails if there are any. */
-  private def draw(kernel: LloydKernel, k: Int, seed: Long,
-                   dim: Int): Array[Array[Double]] = {
+    * `dim` > 0) and fails if there are any; with `finite` it also fails
+    * on vectors with a NaN or infinite coordinate, which no centroid is
+    * nearer to than `Double.MaxValue`, so a round would drop them. */
+  private def draw(kernel: LloydKernel, k: Int, seed: Long, dim: Int,
+                   finite: Boolean): Array[Array[Double]] = {
     val vs = kernel.vectors
     val parts = vs.sparkContext.runJob(vs, SeedDraw.task(k, seed, dim))
     val misfits = parts.map(_.misfits).sum
     require(misfits == 0L, s"declared dim=$dim but data has " +
       s"${parts.find(_.misfits > 0L).get.width} coordinates " +
       s"(vectors not $dim wide: $misfits)")
+    val nonFinite = parts.map(_.nonFinite).sum
+    require(!finite || nonFinite == 0L, "k-means input has a NaN or " +
+      s"infinite coordinate in $nonFinite vectors")
     SeedDraw.merge(parts, k)
   }
+
+  /** Where the rounds run: `None` (the default) lets round 1 decide
+    * ([[loopPays]]); `Some(true)` runs every round in loop jobs,
+    * `Some(false)` one job per round. A seam for tests, which pin that
+    * both placements give the same result. */
+  private[kmeans] val forceLoop = new DynamicVariable[Option[Boolean]](None)
+
+  /** Whether the rounds after round 1 run in loop jobs
+    * ([[LloydKernel.loopJob]]): when round 1's tasks computed, summed,
+    * for less time than the round took on the driver. One task then
+    * does the work of a round in less time than a job's fixed cost, so
+    * rounds in one task beat a job per round; where rounds are real
+    * work (large k, many partitions) the tasks' sum exceeds the wall
+    * time and the rounds keep their parallel jobs. */
+  private[kmeans] def loopPays(taskNs: Long, roundWallNs: Long): Boolean =
+    taskNs < roundWallNs
 
   /** Loop body shared by [[run]] and [[runReplayable]]: `sample` draws
     * the (re-)init centroid set for a given seed; `post` is applied to
@@ -144,16 +177,23 @@ object KMeansRunner {
     * the plain run, decimal quantization for the replayable one).
     *
     * The rounds run on a [[LloydKernel]] — the plan is built once and
-    * each round is a single planning-free job (guide §1.2 step 1: the
-    * per-round Catalyst replanning was the loop's measured floor, not
-    * the k-row aggregate). `cache` persists the kernel's primitive
+    * no round plans anything (guide §1.2 step 1: the per-round Catalyst
+    * replanning was the loop's measured floor, not the k-row
+    * aggregate). Round 1 is one job, a task per partition; its tasks'
+    * summed compute time against its wall time picks where the rest
+    * run ([[loopPays]]): in loop jobs, one task running round after
+    * round, or one job per round. Both placements step through the
+    * same [[LloydRule]], so the result is the same bits either way. A
+    * loop job returns at an empty cluster, and the re-draw (a job over
+    * the kernel) runs here. `cache` persists the kernel's primitive
     * vector RDD (replacing the former DataFrame persist: caching both
     * would hold the corpus twice). The kernel is built before the
     * first sample, which [[run]] draws from the kernel's vectors: that
     * draw fills the cache, so the source is read once and round 1 is a
-    * cached round. The seed sample is also where an empty input and a
-    * `dim` mismatch are caught, before any round runs — inside the
-    * `try`, so a failed draw leaves nothing persisted. */
+    * cached round. The seed sample is also where an empty input, a
+    * `dim` mismatch and non-finite coordinates are caught, before any
+    * round runs — inside the `try`, so a failed draw leaves nothing
+    * persisted. */
   private def runLoop(pts: DataFrame, vecCol: String, k: Int, maxIter: Int,
                       eps: Double, seed: Long,
                       sample: (LloydKernel, Long) => Array[Array[Double]],
@@ -162,37 +202,78 @@ object KMeansRunner {
       : KMeansResult = {
     val kernel = new LloydKernel(pts, vecCol, cache)
     try {
-    var centroids = sample(kernel, seed)
-    require(centroids.nonEmpty,
-      "k-means input is empty: no points to sample initial centroids from")
-    var iter = 1 // KMeans.java:113 — starts at 1 ⇒ at most maxIter−1 rounds
-    var error = Double.NaN
-    var reinits = 0
-    val log = Seq.newBuilder[Double]
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val rows = kernel.round(centroids)
-      // Spark's groupBy emits no row for an unseen key, unlike the
-      // reference's always-k emission (KMeans.java:64-67): left-fill.
-      val byId = rows.map(r => r._1 -> r._2).toMap
-      if (byId.size < k) {
-        // empty-cluster policy: full re-init, skip error check,
-        // iteration still counts (KMeans.java:167-171).
-        reinits += 1
-        centroids = sample(kernel, seed + iter)
-      } else {
-        val newCentroids = post(Array.tabulate(k)(byId(_)))
-        error = KMeansOps.shift(centroids, newCentroids)
-        log += error
-        centroids = newCentroids
-        if (error < eps) converged = true
+      val init = sample(kernel, seed)
+      require(init.nonEmpty,
+        "k-means input is empty: no points to sample initial centroids from")
+      val rule = LloydRule(k, maxIter, eps, post)
+      var s = LloydState(init)
+      var reinits = 0
+      var loop = forceLoop.value
+      while (s.iter < maxIter && !s.converged) {
+        s = loop match {
+          case Some(true) => kernel.loopJob(s, rule)
+          case Some(false) => kernel.stepJob(s, rule)._1
+          case None =>
+            val t0 = System.nanoTime()
+            val (next, taskNs) = kernel.stepJob(s, rule)
+            loop = Some(loopPays(taskNs, System.nanoTime() - t0))
+            next
+        }
+        if (s.empty) {
+          // empty-cluster policy: full re-init, skip error check,
+          // iteration still counts (KMeans.java:167-171).
+          reinits += 1
+          s = s.copy(centroids = sample(kernel, seed + s.iter),
+            iter = s.iter + 1, empty = false)
+        }
       }
-      // the reference breaks BEFORE iter++ on convergence
-      // (KMeans.java:176-183): the converged round keeps its own index
-      if (!converged) iter += 1
-    }
-    KMeansResult(centroids, iter, error, log.result(), reinits, converged)
+      KMeansResult(s.centroids, s.iter, s.error, s.log, reinits, s.converged)
     } finally kernel.unpersist()
+  }
+}
+
+/** Where a Lloyd loop stands between rounds: the centroids the next
+  * round starts from, the reference driver's `iter` (from 1), the last
+  * shift and every shift so far, and whether the loop converged or the
+  * last round left a cluster empty (the driver then re-draws). */
+private[kmeans] final case class LloydState(
+    centroids: Array[Array[Double]], iter: Int = 1,
+    error: Double = Double.NaN, log: Vector[Double] = Vector.empty,
+    converged: Boolean = false, empty: Boolean = false)
+
+/** The reference driver's loop rule (KMeans.java:130-183), the one body
+  * both round placements step through. */
+private[kmeans] final case class LloydRule(
+    k: Int, maxIter: Int, eps: Double,
+    post: Array[Array[Double]] => Array[Array[Double]]) {
+
+  /** Another round runs: `iter < maxIter` (at most maxIter−1 rounds,
+    * KMeans.java:113,130), not converged, no cluster left empty. */
+  def continues(s: LloydState): Boolean =
+    s.iter < maxIter && !s.converged && !s.empty
+
+  /** The state after a round whose merged per-cluster (sums, counts)
+    * are `merged`. Fewer than k clusters with a point (a cluster left
+    * empty, or a seed sample of fewer than k vectors) marks the state
+    * empty and changes nothing else (Spark's groupBy emits no row for an
+    * unseen key, unlike the reference's always-k emission,
+    * KMeans.java:64-67).
+    * Otherwise the means, through `post`, become the centroids, and the
+    * shift is logged; the loop converges when it is below `eps`
+    * (KMeans.java:174-179), and the reference breaks BEFORE iter++ on
+    * convergence (KMeans.java:176-183): the converged round keeps its
+    * own index. */
+  def step(s: LloydState, merged: LloydKernel.Partial): LloydState = {
+    val (sums, counts) = merged
+    if (counts.count(_ > 0L) < k) s.copy(empty = true)
+    else {
+      val next = post(Array.tabulate(sums.length)(i =>
+        LloydKernel.mean(sums(i), counts(i))))
+      val error = KMeansOps.shift(s.centroids, next)
+      val converged = error < eps
+      LloydState(next, if (converged) s.iter else s.iter + 1, error,
+        s.log :+ error, converged)
+    }
   }
 }
 
@@ -206,8 +287,10 @@ object KMeansRunner {
 private[kmeans] object SeedDraw {
 
   /** A task's picks (ascending `(hash, vector)` rows), how many of its
-    * vectors are not `dim` wide, and the width of the first of them. */
-  final case class Part(picks: Array[InternalRow], misfits: Long, width: Int)
+    * vectors are not `dim` wide, the width of the first of them, and how
+    * many of its vectors have a NaN or infinite coordinate. */
+  final case class Part(picks: Array[InternalRow], misfits: Long, width: Int,
+                        nonFinite: Long)
 
   private val VecType = ArrayType(DoubleType, containsNull = false)
 
@@ -221,22 +304,37 @@ private[kmeans] object SeedDraw {
       val heap = new java.util.PriorityQueue[InternalRow](ord.reverse)
       var misfits = 0L
       var width = -1
+      var nonFinite = 0L
       while (it.hasNext) {
         val v = it.next()._2
         if (dim > 0 && v.length != dim) {
           if (misfits == 0L) width = v.length
           misfits += 1
         }
-        val a = UnsafeArrayData.fromPrimitiveArray(v)
-        val h = XxHash64Function.hash(seed, LongType,
-          XxHash64Function.hash(a, VecType, 42L))
-        val row = InternalRow(h, a)
-        if (heap.size < k) heap.add(row)
-        else if (k > 0 && ord.compare(row, heap.peek()) < 0) {
-          heap.poll(); heap.add(row)
+        // xxhash64(v, seed) as Spark computes it, unboxed: each coordinate
+        // as a long (−0.0 as 0, NaN canonical), then the long seed
+        var h = 42L
+        var finite = true
+        var j = 0
+        while (j < v.length) {
+          val x = v(j)
+          h = XXH64.hashLong(if (x == 0.0) 0L else java.lang.Double.doubleToLongBits(x), h)
+          if (!java.lang.Double.isFinite(x)) finite = false
+          j += 1
+        }
+        h = XXH64.hashLong(seed, h)
+        if (!finite) nonFinite += 1
+        // a row is built only for a vector that can enter the heap
+        if (heap.size < k || (k > 0 && h <= heap.peek().getLong(0))) {
+          val row = InternalRow(h, UnsafeArrayData.fromPrimitiveArray(v))
+          if (heap.size < k) heap.add(row)
+          else if (ord.compare(row, heap.peek()) < 0) {
+            heap.poll(); heap.add(row)
+          }
         }
       }
-      Part(heap.toArray(Array.empty[InternalRow]).sorted(ord), misfits, width)
+      Part(heap.toArray(Array.empty[InternalRow]).sorted(ord), misfits, width,
+        nonFinite)
     }
 
   /** The k first of all tasks' picks; a stable sort over the picks in

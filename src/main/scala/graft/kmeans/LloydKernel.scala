@@ -1,6 +1,8 @@
 package graft.kmeans
 
-import org.apache.spark.TaskContext
+import scala.reflect.ClassTag
+
+import org.apache.spark.{NarrowDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions.col
@@ -49,6 +51,14 @@ import org.apache.spark.storage.StorageLevel
   * a consumer can run MEMBERSHIP-FILTERED rounds ([[roundRaw]]'s
   * `member` predicate — the mini-batch per-round hash draw) without
   * re-planning the filter each round.
+  *
+  * For [[KMeansRunner]] the kernel runs rounds in two placements that
+  * give the same bits: [[stepJob]], one job per round as above, and
+  * [[loopJob]], ONE task that runs round after round over every cached
+  * partition, merging each round's partials in the same partition-index
+  * order. A job's fixed cost (~8 ms in local mode) is several times the
+  * compute of a round over 10k points, so a small input's rounds cost
+  * the job, not the data; the loop job pays that cost once per run.
   */
 final class LloydKernel(points: DataFrame, vecCol: String,
                         cache: Boolean = true,
@@ -80,18 +90,16 @@ final class LloydKernel(points: DataFrame, vecCol: String,
       .setName(s"LloydKernel($vecCol)")
     else vecs
 
+  /** The loop job's one-partition view of [[vectors]]. */
+  private lazy val allInOne = new OneTaskRDD(vectors)
+
   /** One Lloyd round: (cluster, mean, count) for every NON-EMPTY
     * cluster, same values as `KMeansOps.lloydRound(...).collect()`. */
   def round(centroids: Array[Array[Double]])
-      : Array[(Int, Array[Double], Long)] = {
-    val d = centroids.head.length
+      : Array[(Int, Array[Double], Long)] =
     roundRaw(centroids).map { case (i, sums, n) =>
-      val mean = new Array[Double](d)
-      var j = 0
-      while (j < d) { mean(j) = sums(j) / n; j += 1 }
-      (i, mean, n)
+      (i, LloydKernel.mean(sums, n), n)
     }
-  }
 
   /** One assignment + per-cluster (vector sum, count) pass over the
     * rows whose id passes `member` — the raw ClusteringFeature
@@ -101,12 +109,52 @@ final class LloydKernel(points: DataFrame, vecCol: String,
   def roundRaw(centroids: Array[Array[Double]],
                member: Long => Boolean = _ => true)
       : Array[(Int, Array[Double], Long)] = {
-    val k = centroids.length
-    val d = centroids.head.length
     // one partial per partition, in partition-index order
     val partials = vectors.sparkContext.runJob(vectors,
       LloydKernel.roundFn(centroids, member))
+    val (sums, counts) = LloydKernel.merge(partials.iterator, centroids)
+    Array.range(0, centroids.length).withFilter(counts(_) > 0L).map { i =>
+      (i, sums(i), counts(i))
+    }
+  }
 
+  /** The round from `s` as one job, a task per partition, stepped by
+    * `rule` on the driver; also the tasks' summed compute time (ns). */
+  private[kmeans] def stepJob(s: LloydState, rule: LloydRule)
+      : (LloydState, Long) = {
+    val parts = vectors.sparkContext.runJob(vectors,
+      LloydKernel.timedRoundFn(s.centroids))
+    (rule.step(s, LloydKernel.merge(parts.iterator.map(_._1), s.centroids)),
+      parts.map(_._2).sum)
+  }
+
+  /** The rounds from `s` while `rule` lets them continue, all in ONE
+    * task ([[OneTaskRDD]]): each round runs [[LloydKernel.roundFn]] over
+    * every partition in index order and steps from the merged partials,
+    * as [[stepJob]] does on the driver, so both give the same bits. The
+    * job ends at the iteration bound, at convergence, or at an empty
+    * cluster, which the driver re-draws. */
+  private[kmeans] def loopJob(s: LloydState, rule: LloydRule): LloydState =
+    vectors.sparkContext.runJob(allInOne, LloydKernel.loopFn(s, rule)).head
+
+  /** Drop the persisted vectors (no-op when built with cache=false). */
+  def unpersist(): Unit =
+    if (cache) { vectors.unpersist(blocking = false); () }
+}
+
+private[kmeans] object LloydKernel {
+
+  /** A partition's per-cluster (vector sums, counts). */
+  type Partial = (Array[Array[Double]], Array[Long])
+
+  private val Every: Long => Boolean = _ => true
+
+  /** The partials summed in the order given — partition-index order in
+    * every placement — into k totals as wide as the first centroid. */
+  def merge(partials: Iterator[Partial], centroids: Array[Array[Double]])
+      : Partial = {
+    val k = centroids.length
+    val d = centroids.head.length
     val totS = Array.ofDim[Double](k, d)
     val totN = new Array[Long](k)
     partials.foreach { case (s, n) =>
@@ -120,24 +168,43 @@ final class LloydKernel(points: DataFrame, vecCol: String,
         i += 1
       }
     }
-    Array.range(0, k).withFilter(totN(_) > 0L).map { i =>
-      (i, totS(i), totN(i))
+    (totS, totN)
+  }
+
+  /** A cluster's mean from its vector sum and count. */
+  def mean(sums: Array[Double], n: Long): Array[Double] = sums.map(_ / n)
+
+  /** [[roundFn]] over every row, also returning the task's compute time
+    * (ns) — what the runner weighs against the round's wall time. */
+  def timedRoundFn(centroids: Array[Array[Double]])
+      : (TaskContext, Iterator[(Long, Array[Double])]) => (Partial, Long) = {
+    val round = roundFn(centroids, Every)
+    (ctx, it) => {
+      val t0 = System.nanoTime()
+      val p = round(ctx, it)
+      (p, System.nanoTime() - t0)
     }
   }
 
-  /** Drop the persisted vectors (no-op when built with cache=false). */
-  def unpersist(): Unit =
-    if (cache) { vectors.unpersist(blocking = false); () }
-}
-
-private[kmeans] object LloydKernel {
+  /** The loop job's task: rounds from `s0` while `rule` continues. */
+  def loopFn(s0: LloydState, rule: LloydRule)
+      : (TaskContext, Iterator[OneTaskRDD.Passes[(Long, Array[Double])]]) =>
+        LloydState =
+    (ctx, it) => {
+      val partitions = it.next()
+      var s = s0
+      while (rule.continues(s)) {
+        val round = roundFn(s.centroids, Every)
+        s = rule.step(s, merge(partitions().map(round(ctx, _)), s.centroids))
+      }
+      s
+    }
 
   /** A round's task: its partition's per-cluster (vector sums, counts).
     * Built here rather than in the class so the closure cleaner, which
     * runs on every job, inspects this small object's bytecode. */
   def roundFn(centroids: Array[Array[Double]], member: Long => Boolean)
-      : (TaskContext, Iterator[(Long, Array[Double])]) =>
-        (Array[Array[Double]], Array[Long]) = {
+      : (TaskContext, Iterator[(Long, Array[Double])]) => Partial = {
     val k = centroids.length
     val d = centroids.head.length
     (_, it) => {
@@ -174,5 +241,39 @@ private[kmeans] object LloydKernel {
       }
       (sums, counts)
     }
+  }
+}
+
+/** The loop job's RDD: ONE partition over every partition of `prev`.
+  * Its one element reads `prev`'s partitions again, in index order, each
+  * time it is called — one call per round, over the cached blocks when
+  * `prev` is persisted. The partition carries `prev`'s `Partition`
+  * objects, as `CoalescedRDDPartition` does: a task cannot ask
+  * `prev.partitions` for them, because the plan RDDs under a kernel
+  * (`SQLExecutionRDD`) can list their partitions on the driver only. */
+private[kmeans] final class OneTaskRDD[T: ClassTag](prev: RDD[T])
+    extends RDD[OneTaskRDD.Passes[T]](prev.context,
+      Seq(new NarrowDependency(prev) {
+        override def getParents(partitionId: Int): Seq[Int] =
+          rdd.partitions.indices
+      })) {
+
+  override protected def getPartitions: Array[Partition] =
+    Array(new OneTaskRDD.AllOf(firstParent[T].partitions))
+
+  override def compute(split: Partition, context: TaskContext)
+      : Iterator[OneTaskRDD.Passes[T]] = {
+    val parents = split.asInstanceOf[OneTaskRDD.AllOf].parents
+    val parent = firstParent[T]
+    Iterator.single(() => parents.iterator.map(parent.iterator(_, context)))
+  }
+}
+
+private[kmeans] object OneTaskRDD {
+  /** A pass over every parent partition: one iterator each, in order. */
+  type Passes[T] = () => Iterator[Iterator[T]]
+
+  final class AllOf(val parents: Array[Partition]) extends Partition {
+    override def index: Int = 0
   }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -215,16 +215,28 @@ class PointsPartitionReader(split: PointsInputPartition, parsePoint: Boolean,
     while (pos < end) {
       val consumed = lines.readLine(text)
       if (consumed == 0) return false
+      val lineStart = pos
       pos += consumed
       if (!PointsLineParser.isBlank(text.getBytes, text.getLength)) {
-        row = if (parsePoint) new GenericInternalRow(
-          Array[Any](parser.parse(text.getBytes, text.getLength)))
+        row = if (parsePoint) new GenericInternalRow(Array[Any](parse(lineStart)))
         else new GenericInternalRow(0) // count(*): no parse
         return true
       }
     }
     false
   }
+
+  /** The point on the line read last, which starts at byte `lineStart`;
+    * a malformed number fails naming the file and that offset. */
+  private def parse(lineStart: Long): UnsafeArrayData =
+    try parser.parse(text.getBytes, text.getLength)
+    catch {
+      case e: NumberFormatException =>
+        val named = new NumberFormatException(
+          s"${split.path}: malformed point in the line at byte $lineStart: ${e.getMessage}")
+        named.initCause(e)
+        throw named
+    }
 
   override def get(): InternalRow = row
   override def close(): Unit = stream.close()

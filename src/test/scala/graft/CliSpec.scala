@@ -138,6 +138,25 @@ class CliSpec extends SparkSessionSpec {
     assert(!dir.list().exists(_.startsWith("out")))
   }
 
+  test("a NaN or infinite coordinate fails before any round runs, with the count") {
+    spark.sparkContext
+    val dir = Files.createTempDirectory("cli_nonfinite").toFile
+    val input = writeLines(dir, (0 until 60).map { i =>
+      if (i == 17) "<NaN, 1.0>" else if (i == 41) "<2.0, Infinity>" else s"<$i.5, ${i % 5}.0>"
+    })
+    var error: Option[Throwable] = None
+    val sites = jobSites {
+      error = Some(intercept[IllegalArgumentException] {
+        KMeansCli.main(Array(input, "2", "5", new File(dir, "out").getAbsolutePath,
+          "2", "0.0001", "4"))
+      })
+    }
+    assert(error.get.getMessage == "requirement failed: k-means input has a NaN " +
+      "or infinite coordinate in 2 vectors", error.get.getMessage)
+    assert(sites.nonEmpty && !sites.exists(_.contains("LloydKernel")), sites)
+    assert(!dir.list().exists(_.startsWith("out")))
+  }
+
   test("empty input fails with a message saying the input is empty") {
     spark.sparkContext
     Seq(Seq.empty[String], Seq("", "   ", "\t")).foreach { lines =>

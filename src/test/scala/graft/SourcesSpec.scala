@@ -92,6 +92,19 @@ class SourcesSpec extends SparkSessionSpec {
     assert(serializedBytes(writers) < 4096, s"writer factory: ${serializedBytes(writers)} B")
   }
 
+  test("a malformed line fails naming the file and the line's byte offset") {
+    val bad = writeTemp(Seq("<1.0, 2.0>", "", "<3.0, , 4.0>", "<5.0, 6.0>"))
+    val e = intercept[Exception] {
+      spark.read.format("points").load(bad).collect()
+    }
+    // "<1.0, 2.0>\n\n": the bad line starts at byte 12
+    val named = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case n: NumberFormatException => n }
+    assert(named.exists(_.getMessage.endsWith(
+      s"$bad: malformed point in the line at byte 12: empty String")), e)
+    assert(named.get.getCause.getMessage == "empty String")
+  }
+
   test("count(*) prunes the parse and still counts every line") {
     assert(spark.read.format("points").load(path).count() == 500)
     assert(spark.read.format("points").option("splitSizeBytes", "64")
