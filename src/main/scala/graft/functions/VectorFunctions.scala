@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
   *
   * Semantics mirror the reference's `Point` math
   * (`/root/reference/kmeans/src/main/java/it/unipi/hadoop/Point.java`):
-  * `distance` = Point.java:47-55, element-wise sum = Point.java:42-45,
-  * scalar divide = Point.java:73-76.
+  * `distance` = Point.java:47-55, scalar divide = Point.java:73-76.
   */
 object VectorFunctions {
 
@@ -45,15 +44,8 @@ object VectorFunctions {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (l2Norm(a) * l2Norm(b))
 
-  /** Element-wise a+b. */
-  def vecAdd(a: Column, b: Column): Column = zip_with(a, b, (x, y) => x + y)
-
   /** a / s for scalar column s (the reference's Point.scale). */
   def vecScale(a: Column, s: Column): Column = transform(a, x => x / s)
-
-  /** Round every element to `d` decimals — used to make float results
-    * comparable between Spark and the DuckDB oracle. */
-  def vecRound(a: Column, d: Int): Column = transform(a, x => round(x, d))
 
   /** Cast an array<float> (parquet `list<float>`) to array<double>; the
     * reference computes in double throughout (Point.java:12). */

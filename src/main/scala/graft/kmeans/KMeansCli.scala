@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   * - input: points text file(s), one `<x1, x2, …>` per line (O2 format),
   *   read through the `points` source ([[graft.sources.PointsDataSource]]:
   *   byte-range splits sized by `spark.sql.files.*`, one broadcast of
-  *   the Hadoop conf per scan);
+  *   the Hadoop conf per scan). The frame is a bare scan, so
+  *   [[LloydKernel]] reads its byte ranges straight into its cached
+  *   blocks, with no query planned for the run;
   * - output: per-iteration directory `output + iter` of
   *   `clusterId\t<coords>` lines (KMeans.java:148-150 behavior), one
   *   file `part-00000` plus `_SUCCESS`, written on the driver

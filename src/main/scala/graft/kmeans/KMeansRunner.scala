@@ -47,7 +47,10 @@ final case class KMeansResult(
   *  - stop when Σ‖Δcᵢ‖ < eps (KMeans.java:174-179).
   *
   * Scale posture vs the reference: the input is read and cached once
-  * (by the seed draw). Round 1 is ONE single-stage job over the cached
+  * (by the seed draw), one block per partition; a bare `points` scan —
+  * what [[KMeansCli]] passes — is read with no query plan at all, the
+  * way the reference's text splits go straight to its mappers (see
+  * [[LloydKernel]]). Round 1 is ONE single-stage job over the cached
   * vectors (assign + per-partition partial sums, k·(d+1) values per
   * partition merged on the driver). The reference re-reads the input
   * from HDFS and launches a fresh MR job every round (~22 s fixed
@@ -176,23 +179,24 @@ object KMeansRunner {
     * each round's new centroids before the shift test (identity for
     * the plain run, decimal quantization for the replayable one).
     *
-    * The rounds run on a [[LloydKernel]] — the plan is built once and
-    * no round plans anything (guide §1.2 step 1: the per-round Catalyst
-    * replanning was the loop's measured floor, not the k-row
-    * aggregate). Round 1 is one job, a task per partition; its tasks'
-    * summed compute time against its wall time picks where the rest
-    * run ([[loopPays]]): in loop jobs, one task running round after
-    * round, or one job per round. Both placements step through the
-    * same [[LloydRule]], so the result is the same bits either way. A
-    * loop job returns at an empty cluster, and the re-draw (a job over
-    * the kernel) runs here. `cache` persists the kernel's primitive
-    * vector RDD (replacing the former DataFrame persist: caching both
-    * would hold the corpus twice). The kernel is built before the
-    * first sample, which [[run]] draws from the kernel's vectors: that
-    * draw fills the cache, so the source is read once and round 1 is a
-    * cached round. The seed sample is also where an empty input, a
-    * `dim` mismatch and non-finite coordinates are caught, before any
-    * round runs — inside the `try`, so a failed draw leaves nothing
+    * The rounds run on a [[LloydKernel]] — its input is built once
+    * (through the plan, or straight from a bare `points` scan's byte
+    * ranges) and no round plans anything (guide §1.2 step 1: the
+    * per-round Catalyst replanning was the loop's measured floor, not
+    * the k-row aggregate). Round 1 is one job, a task per partition;
+    * its tasks' summed compute time against its wall time picks where
+    * the rest run ([[loopPays]]): in loop jobs, one task running round
+    * after round, or one job per round. Both placements step through
+    * the same [[LloydRule]], so the result is the same bits either way.
+    * A loop job returns at an empty cluster, and the re-draw (a job
+    * over the kernel) runs here. `cache` persists the kernel's blocks,
+    * one object of primitive vectors per partition (replacing the
+    * former DataFrame persist: caching both would hold the corpus
+    * twice). The kernel is built before the first sample, which [[run]]
+    * draws from the kernel's vectors: that draw fills the cache, so the
+    * source is read once and round 1 is a cached round. The seed sample
+    * is also where an empty input, a `dim` mismatch and non-finite
+    * coordinates are caught, before any round runs — inside the `try`, so a failed draw leaves nothing
     * persisted. */
   private def runLoop(pts: DataFrame, vecCol: String, k: Int, maxIter: Int,
                       eps: Double, seed: Long,
@@ -297,7 +301,7 @@ private[kmeans] object SeedDraw {
   private def order = InterpretedOrdering.forSchema(Seq(LongType, VecType))
 
   def task(k: Int, seed: Long, dim: Int)
-      : (TaskContext, Iterator[(Long, Array[Double])]) => Part =
+      : (TaskContext, Iterator[VecBlock]) => Part =
     (_, it) => {
       val ord = order
       // max-heap of the k first rows seen so far
@@ -306,31 +310,36 @@ private[kmeans] object SeedDraw {
       var width = -1
       var nonFinite = 0L
       while (it.hasNext) {
-        val v = it.next()._2
-        if (dim > 0 && v.length != dim) {
-          if (misfits == 0L) width = v.length
-          misfits += 1
-        }
-        // xxhash64(v, seed) as Spark computes it, unboxed: each coordinate
-        // as a long (−0.0 as 0, NaN canonical), then the long seed
-        var h = 42L
-        var finite = true
-        var j = 0
-        while (j < v.length) {
-          val x = v(j)
-          h = XXH64.hashLong(if (x == 0.0) 0L else java.lang.Double.doubleToLongBits(x), h)
-          if (!java.lang.Double.isFinite(x)) finite = false
-          j += 1
-        }
-        h = XXH64.hashLong(seed, h)
-        if (!finite) nonFinite += 1
-        // a row is built only for a vector that can enter the heap
-        if (heap.size < k || (k > 0 && h <= heap.peek().getLong(0))) {
-          val row = InternalRow(h, UnsafeArrayData.fromPrimitiveArray(v))
-          if (heap.size < k) heap.add(row)
-          else if (ord.compare(row, heap.peek()) < 0) {
-            heap.poll(); heap.add(row)
+        val rows = it.next().rows
+        var r = 0
+        while (r < rows.length) {
+          val v = rows(r)
+          if (dim > 0 && v.length != dim) {
+            if (misfits == 0L) width = v.length
+            misfits += 1
           }
+          // xxhash64(v, seed) as Spark computes it, unboxed: each coordinate
+          // as a long (−0.0 as 0, NaN canonical), then the long seed
+          var h = 42L
+          var finite = true
+          var j = 0
+          while (j < v.length) {
+            val x = v(j)
+            h = XXH64.hashLong(if (x == 0.0) 0L else java.lang.Double.doubleToLongBits(x), h)
+            if (!java.lang.Double.isFinite(x)) finite = false
+            j += 1
+          }
+          h = XXH64.hashLong(seed, h)
+          if (!finite) nonFinite += 1
+          // a row is built only for a vector that can enter the heap
+          if (heap.size < k || (k > 0 && h <= heap.peek().getLong(0))) {
+            val row = InternalRow(h, UnsafeArrayData.fromPrimitiveArray(v))
+            if (heap.size < k) heap.add(row)
+            else if (ord.compare(row, heap.peek()) < 0) {
+              heap.poll(); heap.add(row)
+            }
+          }
+          r += 1
         }
       }
       Part(heap.toArray(Array.empty[InternalRow]).sorted(ord), misfits, width,

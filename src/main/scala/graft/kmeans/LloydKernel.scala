@@ -5,8 +5,12 @@ import scala.reflect.ClassTag
 import org.apache.spark.{NarrowDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
+
+import graft.sources.PointsTable
 
 /** Reusable physical kernel for ITERATIVE Lloyd loops.
   *
@@ -21,13 +25,22 @@ import org.apache.spark.storage.StorageLevel
   * AQE two-job choreography, not data. Same story for kmeans_full at
   * sf0.1 (~170 ms/round on 2000 cached rows).
   *
-  * The kernel plans ONCE: the vector column is extracted through the
-  * physical plan (`queryExecution.toRdd` — one Catalyst pass) into an
-  * RDD of primitive `double[]` (optionally persisted), and each
-  * [[round]] is then one `runJob` straight on those vectors, closed
-  * over the round's centroid matrix (k·d doubles in the task binary —
-  * the same "centroids ride with the task" posture as the literal
-  * plan). No Catalyst work and no new RDD per round (so no call-site
+  * The kernel builds its input ONCE, as an RDD of [[VecBlock]]s — one
+  * object per partition holding the partition's primitive `double[]`
+  * rows (optionally persisted, so the cache sizes one object per
+  * partition, not one per row) — and each [[round]] is then one
+  * `runJob` straight on those blocks, closed over the round's centroid
+  * matrix (k·d doubles in the task binary — the same "centroids ride
+  * with the task" posture as the literal plan). The input has two
+  * sources, which fill the same blocks in the same row order:
+  *  - a bare `points` scan (`spark.read.format("points").load(p)` with
+  *    vector column `point`, no id column, not cached) is read without
+  *    the planner: the scan's own split plan and conf broadcast, and
+  *    each task runs the source's line loop straight into its block
+  *    ([[PointsBlockRDD]]) — the Hadoop job's text splits into mappers;
+  *  - any other DataFrame goes through its physical plan
+  *    (`queryExecution.toRdd` — one Catalyst pass).
+  * No Catalyst work and no new RDD per round (so no call-site
   * walk and no closure-cleaning of RDD's own lambdas), no shuffle at
   * all: each task accumulates its partition's per-cluster (sum, count)
   * partials exactly like HashAggregateExec's partial mode (row order,
@@ -64,31 +77,20 @@ final class LloydKernel(points: DataFrame, vecCol: String,
                         cache: Boolean = true,
                         idCol: Option[String] = None) {
 
-  /** One pass through the source plan; optionally persisted so every
-    * job after the first (in [[KMeansRunner]] the first is the seed
-    * draw, so every round) reads primitive vectors with zero
-    * re-extraction cost. (`toDoubleArray` copies out of the
-    * possibly-reused InternalRow buffer, so the cached arrays are
-    * stable.) With cache=false each round re-executes the extraction
-    * RDD — still zero Catalyst work per round (the physical RDD is
-    * fixed); the right mode when the source is already a persisted
-    * relation. */
-  private val vecs: RDD[(Long, Array[Double])] = {
-    val cols = idCol.toSeq.map(col) :+ col(vecCol)
-    val rdd = GraftSqlBridge.internalRdd(points.select(cols: _*))
-    val hasId = idCol.isDefined
-    rdd.map { r =>
-      if (hasId) (r.getLong(0), r.getArray(1).toDoubleArray())
-      else (-1L, r.getArray(0).toDoubleArray())
-    }
-  }
-
-  /** The vectors every job of this kernel runs over: its rounds and
-    * [[KMeansRunner]]'s seed draws. */
-  private[kmeans] val vectors: RDD[(Long, Array[Double])] =
-    if (cache) vecs.persist(StorageLevel.MEMORY_AND_DISK)
+  /** One read of the input, a [[VecBlock]] per partition; optionally
+    * persisted so every job after the first (in [[KMeansRunner]] the
+    * first is the seed draw, so every round) reads primitive vectors
+    * with zero re-extraction cost. With cache=false each round re-reads
+    * the input into blocks — still zero Catalyst work per round (the
+    * RDD is fixed); the right mode when the source is already a
+    * persisted relation. */
+  private[kmeans] val vectors: RDD[VecBlock] = {
+    val blocks = LloydKernel.pointsFile(points, vecCol, idCol)
+      .getOrElse(LloydKernel.viaPlan(points, vecCol, idCol))
+    if (cache) blocks.persist(StorageLevel.MEMORY_AND_DISK)
       .setName(s"LloydKernel($vecCol)")
-    else vecs
+    else blocks
+  }
 
   /** The loop job's one-partition view of [[vectors]]. */
   private lazy val allInOne = new OneTaskRDD(vectors)
@@ -149,6 +151,43 @@ private[kmeans] object LloydKernel {
 
   private val Every: Long => Boolean = _ => true
 
+  /** The blocks of a bare `points` scan, read without the planner
+    * ([[PointsBlockRDD]]); None for any other plan. "Bare" is the shape
+    * of the analyzed plan — a `DataSourceV2Relation` over a
+    * [[PointsTable]] — read for its `point` column with no id column,
+    * and not served by the session's cache (a cached frame keeps its
+    * cached relation). */
+  def pointsFile(points: DataFrame, vecCol: String, idCol: Option[String])
+      : Option[RDD[VecBlock]] =
+    GraftSqlBridge.logicalPlan(points) match {
+      case r: DataSourceV2Relation
+          if vecCol == "point" && idCol.isEmpty && !GraftSqlBridge.isCached(points) =>
+        r.table match {
+          case t: PointsTable => Some(PointsBlockRDD(points.sparkSession, t))
+          case _ => None
+        }
+      case _ => None
+    }
+
+  /** The blocks of any DataFrame, through its physical plan. */
+  def viaPlan(points: DataFrame, vecCol: String, idCol: Option[String])
+      : RDD[VecBlock] = {
+    val cols = idCol.toSeq.map(col) :+ col(vecCol)
+    GraftSqlBridge.internalRdd(points.select(cols: _*))
+      .mapPartitions(blockOf(idCol.isDefined))
+  }
+
+  /** A partition's plan rows in one block. `toDoubleArray` copies out
+    * of the possibly-reused InternalRow buffer, so the arrays are
+    * stable. */
+  private def blockOf(hasId: Boolean): Iterator[InternalRow] => Iterator[VecBlock] =
+    rows => {
+      val block = new VecBlock.Builder(hasId)
+      if (hasId) rows.foreach(r => block.add(r.getLong(0), r.getArray(1).toDoubleArray()))
+      else rows.foreach(r => block.add(r.getArray(0).toDoubleArray()))
+      Iterator.single(block.result())
+    }
+
   /** The partials summed in the order given — partition-index order in
     * every placement — into k totals as wide as the first centroid. */
   def merge(partials: Iterator[Partial], centroids: Array[Array[Double]])
@@ -177,7 +216,7 @@ private[kmeans] object LloydKernel {
   /** [[roundFn]] over every row, also returning the task's compute time
     * (ns) — what the runner weighs against the round's wall time. */
   def timedRoundFn(centroids: Array[Array[Double]])
-      : (TaskContext, Iterator[(Long, Array[Double])]) => (Partial, Long) = {
+      : (TaskContext, Iterator[VecBlock]) => (Partial, Long) = {
     val round = roundFn(centroids, Every)
     (ctx, it) => {
       val t0 = System.nanoTime()
@@ -188,7 +227,7 @@ private[kmeans] object LloydKernel {
 
   /** The loop job's task: rounds from `s0` while `rule` continues. */
   def loopFn(s0: LloydState, rule: LloydRule)
-      : (TaskContext, Iterator[OneTaskRDD.Passes[(Long, Array[Double])]]) =>
+      : (TaskContext, Iterator[OneTaskRDD.Passes[VecBlock]]) =>
         LloydState =
     (ctx, it) => {
       val partitions = it.next()
@@ -200,47 +239,81 @@ private[kmeans] object LloydKernel {
       s
     }
 
-  /** A round's task: its partition's per-cluster (vector sums, counts).
-    * Built here rather than in the class so the closure cleaner, which
-    * runs on every job, inspects this small object's bytecode. */
+  /** A round's task: its partition's per-cluster (vector sums, counts),
+    * over its block's rows in order. Built here rather than in the class
+    * so the closure cleaner, which runs on every job, inspects this
+    * small object's bytecode. */
   def roundFn(centroids: Array[Array[Double]], member: Long => Boolean)
-      : (TaskContext, Iterator[(Long, Array[Double])]) => Partial = {
+      : (TaskContext, Iterator[VecBlock]) => Partial = {
     val k = centroids.length
     val d = centroids.head.length
     (_, it) => {
       val sums = Array.ofDim[Double](k, d)
       val counts = new Array[Long](k)
       while (it.hasNext) {
-        val (id, v) = it.next()
-        if (member(id)) {
-          // NearestCentroid.nullSafeEval verbatim: strict <, first wins
-          var best = -1
-          var bestD = Double.MaxValue
-          var i = 0
-          while (i < k) {
-            val c = centroids(i)
-            val m = math.min(v.length, c.length)
-            var dd = 0.0
-            var j = 0
-            while (j < m) {
-              val diff = v(j) - c(j)
-              dd += diff * diff
-              j += 1
+        val block = it.next()
+        val rows = block.rows
+        val ids = block.ids
+        var r = 0
+        while (r < rows.length) {
+          val v = rows(r)
+          if (member(if (ids == null) -1L else ids(r))) {
+            // NearestCentroid.nullSafeEval verbatim: strict <, first wins
+            var best = -1
+            var bestD = Double.MaxValue
+            var i = 0
+            while (i < k) {
+              val c = centroids(i)
+              val m = math.min(v.length, c.length)
+              var dd = 0.0
+              var j = 0
+              while (j < m) {
+                val diff = v(j) - c(j)
+                dd += diff * diff
+                j += 1
+              }
+              if (dd < bestD) { bestD = dd; best = i }
+              i += 1
             }
-            if (dd < bestD) { bestD = dd; best = i }
-            i += 1
+            if (best >= 0) {
+              val s = sums(best)
+              val m = math.min(v.length, d)
+              var j = 0
+              while (j < m) { s(j) += v(j); j += 1 }
+              counts(best) += 1
+            }
           }
-          if (best >= 0) {
-            val s = sums(best)
-            val m = math.min(v.length, d)
-            var j = 0
-            while (j < m) { s(j) += v(j); j += 1 }
-            counts(best) += 1
-          }
+          r += 1
         }
       }
       (sums, counts)
     }
+  }
+}
+
+/** A partition's rows as ONE object — what the kernel caches, so the
+  * block manager sizes and stores one object per partition instead of
+  * one tuple per row. `rows(r)` is row r's vector; `ids(r)` its id when
+  * the kernel has an id column, else `ids` is null. Each row keeps its
+  * own `double[]`: a flat row-major array per partition, indexed
+  * `data(o + j)`, measured slower in the round's inner loop than
+  * `v(j)` over a row array. */
+private[kmeans] final class VecBlock(val rows: Array[Array[Double]],
+                                     val ids: Array[Long]) extends Serializable
+
+private[kmeans] object VecBlock {
+
+  /** A partition's rows, in arrival order, into one block. */
+  final class Builder(withIds: Boolean) {
+    private val rows = Array.newBuilder[Array[Double]]
+    private val ids = if (withIds) Array.newBuilder[Long] else null
+
+    def add(v: Array[Double]): Unit = rows += v
+
+    def add(id: Long, v: Array[Double]): Unit = { ids += id; rows += v }
+
+    def result(): VecBlock =
+      new VecBlock(rows.result(), if (ids == null) null else ids.result())
   }
 }
 
@@ -249,8 +322,9 @@ private[kmeans] object LloydKernel {
   * time it is called — one call per round, over the cached blocks when
   * `prev` is persisted. The partition carries `prev`'s `Partition`
   * objects, as `CoalescedRDDPartition` does: a task cannot ask
-  * `prev.partitions` for them, because the plan RDDs under a kernel
-  * (`SQLExecutionRDD`) can list their partitions on the driver only. */
+  * `prev.partitions` for them, because the RDDs under a kernel
+  * (`SQLExecutionRDD`, [[PointsBlockRDD]]) can list their partitions on
+  * the driver only. */
 private[kmeans] final class OneTaskRDD[T: ClassTag](prev: RDD[T])
     extends RDD[OneTaskRDD.Passes[T]](prev.context,
       Seq(new NarrowDependency(prev) {

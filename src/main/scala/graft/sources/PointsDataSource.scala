@@ -13,7 +13,7 @@ import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -85,7 +85,9 @@ object PointsTable {
     StructType(Seq(StructField("point", ArrayType(DoubleType, false), false)))
 }
 
-class PointsTable(path: String, splitSize: Option[Long])
+/** `path` and `splitSize` are public for readers that skip the planner
+  * (`LloydKernel`'s source for a bare `points` scan). */
+class PointsTable(val path: String, val splitSize: Option[Long])
   extends Table with SupportsRead with SupportsWrite {
 
   override def name(): String = s"points($path)"
@@ -183,7 +185,11 @@ final case class PointsReaderFactory(parsePoint: Boolean,
   * reader seeks to start−1 and discards one line (the line crossing —
   * or ending exactly at — the boundary, owned by the previous split,
   * which reads past its own end to finish it); it then emits lines
-  * while their start offset is < end. */
+  * while their start offset is < end.
+  *
+  * [[nextLine]] is that line loop; [[next]] turns each line into a row,
+  * and [[point]] into a plain `double[]` for readers that build their
+  * own objects. */
 class PointsPartitionReader(split: PointsInputPartition, parsePoint: Boolean,
                             conf: Configuration)
   extends PartitionReader[InternalRow] {
@@ -192,6 +198,7 @@ class PointsPartitionReader(split: PointsInputPartition, parsePoint: Boolean,
   private val text = new Text()
   private val parser = new PointsLineParser
   private var row: InternalRow = _
+  private var lineStart: Long = -1L
 
   private val stream = {
     val p = new Path(split.path)
@@ -202,34 +209,48 @@ class PointsPartitionReader(split: PointsInputPartition, parsePoint: Boolean,
   // reader over the same stream would lose buffered bytes. Byte
   // positions are tracked via readLine's consumed-byte return, never
   // stream.getPos (which reflects the buffer, not the lines consumed).
-  private val lines: LineReader = {
+  // Lazy: the seek and the line skip read bytes, and a scan's input
+  // metrics count only what is read after the reader is built.
+  private lazy val lines: LineReader = {
     if (split.start > 0) stream.seek(split.start - 1)
     val r = new LineReader(stream)
     if (split.start > 0) pos = split.start - 1 + r.readLine(text)
     r
   }
 
-  override def next(): Boolean = {
+  /** Moves to the split's next non-blank line; false past its end. */
+  def nextLine(): Boolean = {
+    val r = lines // skips the boundary line on the first call
     // loop (not recurse) over blank lines: a pathological all-blank
     // range must not grow the stack
     while (pos < end) {
-      val consumed = lines.readLine(text)
+      val consumed = r.readLine(text)
       if (consumed == 0) return false
-      val lineStart = pos
+      lineStart = pos
       pos += consumed
-      if (!PointsLineParser.isBlank(text.getBytes, text.getLength)) {
-        row = if (parsePoint) new GenericInternalRow(Array[Any](parse(lineStart)))
-        else new GenericInternalRow(0) // count(*): no parse
-        return true
-      }
+      if (!PointsLineParser.isBlank(text.getBytes, text.getLength)) return true
     }
     false
   }
 
-  /** The point on the line read last, which starts at byte `lineStart`;
-    * a malformed number fails naming the file and that offset. */
-  private def parse(lineStart: Long): UnsafeArrayData =
-    try parser.parse(text.getBytes, text.getLength)
+  override def next(): Boolean = nextLine() && {
+    row = if (parsePoint) {
+      tokenize()
+      new GenericInternalRow(Array[Any](parser.array))
+    } else new GenericInternalRow(0) // count(*): no parse
+    true
+  }
+
+  /** The point on the current line as a new `double[]`. */
+  def point(): Array[Double] = {
+    tokenize()
+    java.util.Arrays.copyOf(parser.values, parser.size)
+  }
+
+  /** Parses the current line; a malformed number fails naming the file
+    * and the byte offset where the line starts. */
+  private def tokenize(): Unit =
+    try parser.tokenize(text.getBytes, text.getLength)
     catch {
       case e: NumberFormatException =>
         val named = new NumberFormatException(

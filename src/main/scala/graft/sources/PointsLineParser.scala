@@ -33,15 +33,35 @@ import org.apache.spark.unsafe.Platform
   * NumberFormatException.
   *
   * One instance per reader: the value buffer is reused across lines.
+  * [[tokenize]] fills it; [[parse]] returns it as a Spark array, and a
+  * reader that wants a plain `double[]` copies [[values]]' first
+  * [[size]] entries instead.
   */
 final class PointsLineParser {
   import PointsLineParser._
 
-  private var values = new Array[Double](16)
+  private var buf = new Array[Double](16)
   private var n = 0
+
+  /** The value buffer: its first [[size]] entries are the point on the
+    * line tokenized last. The next line reuses it. */
+  def values: Array[Double] = buf
+
+  /** How many values the line tokenized last has. */
+  def size: Int = n
 
   /** The point on a non-blank line (see [[PointsLineParser.isBlank]]). */
   def parse(b: Array[Byte], len: Int): UnsafeArrayData = {
+    tokenize(b, len)
+    array
+  }
+
+  /** The point on the line tokenized last, as a Spark array (a copy). */
+  def array: UnsafeArrayData =
+    UnsafeArrayData.fromPrimitiveArray(buf, Platform.DOUBLE_ARRAY_OFFSET, n, 8)
+
+  /** Parses a non-blank line into the value buffer. */
+  def tokenize(b: Array[Byte], len: Int): Unit = {
     var lo = 0
     var hi = len
     while (lo < hi && (b(lo) & 0xff) <= ' ') lo += 1
@@ -69,12 +89,11 @@ final class PointsLineParser {
         while (start < hi && isSeparatorSpace(b(start))) start += 1
       } else more = false
     }
-    UnsafeArrayData.fromPrimitiveArray(values, Platform.DOUBLE_ARRAY_OFFSET, n, 8)
   }
 
   private def append(v: Double): Unit = {
-    if (n == values.length) values = java.util.Arrays.copyOf(values, n * 2)
-    values(n) = v
+    if (n == buf.length) buf = java.util.Arrays.copyOf(buf, n * 2)
+    buf(n) = v
     n += 1
   }
 }

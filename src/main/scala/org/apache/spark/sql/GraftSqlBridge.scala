@@ -1,5 +1,7 @@
 package org.apache.spark.sql
 
+import org.apache.spark.TaskContext
+import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -7,8 +9,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * (`org.apache.spark.sql.classic.ExpressionUtils` is private[sql] in
   * Spark 4.x). This is the standard extension-library pattern for
   * exposing custom Catalyst expressions through the public Column API —
-  * the only file that lives inside Spark's namespace, and it contains
-  * no logic. */
+  * the only file that lives inside Spark's namespace, and it holds no
+  * logic beyond reaching those members. */
 object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -39,6 +41,25 @@ object GraftSqlBridge {
   def internalRdd(df: Dataset[_])
       : org.apache.spark.rdd.RDD[catalyst.InternalRow] =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.toRdd
+
+  /** A task's input metrics for a file read outside `DataSourceRDD`,
+    * kept as that RDD keeps them (`incRecordsRead`/`setBytesRead` and
+    * Hadoop's per-thread byte counters are private[spark]): one record
+    * per row, and the bytes this thread has read through Hadoop
+    * `FileSystem`s since the tracker was made, folded in every
+    * `UPDATE_INPUT_METRICS_INTERVAL_RECORDS` records and at [[done]]. */
+  final class ScanMetrics(ctx: TaskContext) {
+    private val in = ctx.taskMetrics().inputMetrics
+    private val before = in.bytesRead
+    private val bytesRead = SparkHadoopUtil.get.getFSBytesReadOnThreadCallback()
+
+    def record(): Unit = {
+      in.incRecordsRead(1L)
+      if (in.recordsRead % SparkHadoopUtil.UPDATE_INPUT_METRICS_INTERVAL_RECORDS == 0) done()
+    }
+
+    def done(): Unit = in.setBytesRead(before + bytesRead())
+  }
 
   /** Stable per-session identifier (`sessionUUID` is private[sql] on
     * the classic session) — memo keys must never collide across live

@@ -18,16 +18,7 @@ import graft.SparkSessionSpec
   * two centroid writers of [[PointsIO]]. */
 class LloydLoopSpec extends SparkSessionSpec {
   import spark.implicits._
-
-  private def samples[A](gen: Gen[A], n: Int): Seq[A] =
-    (0 until n).flatMap(i => gen.apply(Gen.Parameters.default, Seed(11L + i)))
-
-  /** Everything a run reports, doubles as raw bits. */
-  private def bits(r: KMeansResult) = (
-    r.centroids.map(_.map(doubleToRawLongBits).toSeq).toSeq,
-    r.iterations, doubleToRawLongBits(r.finalError),
-    r.errorLog.map(doubleToRawLongBits), r.reinitCount, r.converged,
-    r.lastRound)
+  import LloydLoopSpec._
 
   private final case class Case(rows: List[List[Double]], distinct: Int,
                                 k: Int, parts: Int, maxIter: Int,
@@ -145,4 +136,18 @@ class LloydLoopSpec extends SparkSessionSpec {
     assert(out.toFile.list().toSet == Set("part-00000", "_SUCCESS"))
     assert(new String(Files.readAllBytes(out.resolve("part-00000")), UTF_8) == "0\t<5.0, 6.0>\n")
   }
+}
+
+object LloydLoopSpec {
+
+  /** `n` generated values, one fixed seed each. */
+  def samples[A](gen: Gen[A], n: Int): Seq[A] =
+    (0 until n).flatMap(i => gen.apply(Gen.Parameters.default, Seed(11L + i)))
+
+  /** Everything a run reports, doubles as raw bits. */
+  def bits(r: KMeansResult) = (
+    r.centroids.map(_.map(doubleToRawLongBits).toSeq).toSeq,
+    r.iterations, doubleToRawLongBits(r.finalError),
+    r.errorLog.map(doubleToRawLongBits), r.reinitCount, r.converged,
+    r.lastRound)
 }
