@@ -11,9 +11,11 @@ kept, contended or not, and its full stdout and stderr are written to
 DIR/pairNN_<side>.out and .err (DIR defaults to a new temporary
 directory). For each end-to-end metric of the change's BENCHMARK.json the
 script then prints each side's median and quartiles and the number of
-pairs the change won (strictly better in the metric's direction), and it
-prints the steal_pct and the exit code of every run. Run from anywhere;
-each checkout builds itself on its first run. Exits 1 if any run failed.
+pairs the change won (strictly better in the metric's direction) and a
+verdict (see `verdict`), and it prints the steal_pct and the exit code of
+every run. Run from anywhere; each checkout builds itself on its first
+run. Exits 1 if any run failed. `scripts/test_bench_pairs.py` tests the
+verdicts on canned numbers, with no JVM.
 """
 import argparse
 import json
@@ -50,6 +52,38 @@ def quartiles(xs):
         return (xs[0], xs[0]) if xs else (float("nan"), float("nan"))
     q = statistics.quantiles(xs, n=4)
     return q[0], q[2]
+
+
+def verdict(parent, change, won, pairs, lower, bound):
+    """One metric's verdict over `pairs` alternating pairs, of which the
+    change won `won`; `parent` and `change` are each side's values and
+    `bound` the metric's BENCHMARK.json bound, a fraction of the parent's
+    median.
+
+    - "gain": the change won at least nine tenths of the pairs, and its
+      median is better than the parent's by more than the parent's IQR;
+    - "worse": the change's median is worse than the parent's by more
+      than the bound;
+    - "unresolved": either side's IQR is wider than the bound (as a
+      fraction of its median), unless every change run beats every
+      parent run;
+    - "no worse" otherwise.
+    """
+    if not parent or not change:
+        return "unresolved"
+    pm, cm = statistics.median(parent), statistics.median(change)
+    better = (pm - cm) if lower else (cm - pm)
+    lo, hi = quartiles(parent)
+    if won >= 0.9 * pairs and better > hi - lo:
+        return "gain"
+    if -better > bound * abs(pm):
+        return "worse"
+    every = (max(change) < min(parent)) if lower else (min(change) > max(parent))
+    spread = max((q[1] - q[0]) / abs(m) if m else float("inf")
+                 for q, m in ((quartiles(parent), pm), (quartiles(change), cm)))
+    if spread > bound and not every:
+        return "unresolved"
+    return "no worse"
 
 
 def main():
@@ -90,8 +124,10 @@ def main():
     for m in e2e:
         name, lower = m["name"], m["better"] == "lower"
         cols = []
+        values = {}
         for side in SIDES:
             xs = [p[side]["metrics"][name] for _, _, _, p in runs if name in p[side]["metrics"]]
+            values[side] = xs
             med = statistics.median(xs) if xs else float("nan")
             lo, hi = quartiles(xs)
             cols.append(f"{side} median {med:.4f} (IQR {lo:.4f}-{hi:.4f}, n={len(xs)})")
@@ -99,8 +135,9 @@ def main():
                   if name in p["parent"]["metrics"] and name in p["change"]["metrics"]
                   and ((p["change"]["metrics"][name] < p["parent"]["metrics"][name]) if lower
                        else (p["change"]["metrics"][name] > p["parent"]["metrics"][name])))
+        v = verdict(values["parent"], values["change"], won, len(runs), lower, m["bound"])
         print(f"{name} ({m['better']} is better): " + "; ".join(cols)
-              + f"; change won {won}/{len(runs)} pairs")
+              + f"; change won {won}/{len(runs)} pairs; verdict: {v}")
     print("steal_pct per run (pair seed first: parent change):")
     for i, seed, first, p in runs:
         print(f"  {i} {seed} {first}: {p['parent']['steal_pct']} {p['change']['steal_pct']}"

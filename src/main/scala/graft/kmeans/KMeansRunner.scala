@@ -50,17 +50,19 @@ final case class KMeansResult(
   * (by the seed draw), one block per partition; a bare `points` scan —
   * what [[KMeansCli]] passes — is read with no query plan at all, the
   * way the reference's text splits go straight to its mappers (see
-  * [[LloydKernel]]). Round 1 is ONE single-stage job over the cached
+  * [[LloydKernel]]). A round is ONE single-stage job over the cached
   * vectors (assign + per-partition partial sums, k·(d+1) values per
   * partition merged on the driver). The reference re-reads the input
   * from HDFS and launches a fresh MR job every round (~22 s fixed
-  * overhead per its own §3 evaluation). Where round 1's tasks computed
-  * for less time than the job took, that fixed cost is most of a round,
-  * and the remaining rounds run in loop jobs: one task runs round after
-  * round over every cached partition (see [[runLoop]]). Otherwise —
-  * large k, many partitions, the 100 TB posture — every round stays one
-  * job, whose cost on a 1000-executor cluster is k·(d+1)·#partitions
-  * doubles to the driver.
+  * overhead per its own §3 evaluation). The seed draw, a job with a task
+  * per partition, also times a round's work in each task; where a
+  * round's tasks would compute, summed, for less time than the round's
+  * job would take, that fixed cost is most of a round, and every round
+  * runs in loop jobs instead: one task runs round after round over every
+  * cached partition (see [[runLoop]]), so a small run is two jobs, the
+  * draw and one loop job. Otherwise — large k, many partitions, the
+  * 100 TB posture — every round stays one job, whose cost on a
+  * 1000-executor cluster is k·(d+1)·#partitions doubles to the driver.
   *
   * Input contract of [[run]]: every coordinate is finite (a NaN or
   * infinite coordinate fails the run before round 1, with the count of
@@ -77,7 +79,8 @@ object KMeansRunner {
     // `while (1 < 1)` (KMeans.java:130): result = the seeded sample.
     require(k > 0 && maxIter >= 1)
     runLoop(points, vecCol, k, maxIter, eps, seed,
-      (kernel, s) => draw(kernel, k, s, dim, finite = true), identity, cache)
+      (kernel, s, timed) => draw(kernel, k, s, dim, finite = true, timed),
+      identity, cache)
   }
 
   /** ORACLE-REPLAYABLE variant of [[run]]: identical loop semantics,
@@ -97,7 +100,7 @@ object KMeansRunner {
                     cache: Boolean = true): KMeansResult = {
     require(k > 0 && maxIter >= 1)
     runLoop(points, vecCol, k, maxIter, eps, seed,
-      (_, s) => idHashSampleCentroids(points, vecCol, idCol, k, s),
+      (_, s, _) => Sample(idHashSampleCentroids(points, vecCol, idCol, k, s), None),
       _.map(_.map(roundHalfUp(_, roundDp))), cache)
   }
 
@@ -132,7 +135,12 @@ object KMeansRunner {
   def sampleCentroids(points: DataFrame, vecCol: String, k: Int,
                       seed: Long): Array[Array[Double]] =
     draw(new LloydKernel(points, vecCol, cache = false), k, seed, dim = 0,
-      finite = false)
+      finite = false, timed = false).centroids
+
+  /** A seed sample, and from a timed draw whether the rounds run in loop
+    * jobs ([[loopPaysFrom]]); `None` leaves that to round 1. */
+  private final case class Sample(centroids: Array[Array[Double]],
+                                  loopPays: Option[Boolean])
 
   /** The k vectors first in `(xxhash64(v, seed), v)` order — the rows
     * `orderBy(xxhash64(v, lit(seed)), v).limit(k)` returns — drawn by
@@ -143,11 +151,16 @@ object KMeansRunner {
     * The same job counts the vectors whose width is not `dim` (when
     * `dim` > 0) and fails if there are any; with `finite` it also fails
     * on vectors with a NaN or infinite coordinate, which no centroid is
-    * nearer to than `Double.MaxValue`, so a round would drop them. */
+    * nearer to than `Double.MaxValue`, so a round would drop them.
+    * A `timed` draw also times its job, and each task estimates a round
+    * over its partition from the picks ([[SeedDraw.task]]): the verdict
+    * of [[loopPaysFrom]] on those figures comes with the sample. */
   private def draw(kernel: LloydKernel, k: Int, seed: Long, dim: Int,
-                   finite: Boolean): Array[Array[Double]] = {
+                   finite: Boolean, timed: Boolean): Sample = {
     val vs = kernel.vectors
-    val parts = vs.sparkContext.runJob(vs, SeedDraw.task(k, seed, dim))
+    val t0 = System.nanoTime()
+    val parts = vs.sparkContext.runJob(vs, SeedDraw.task(k, seed, dim, timed))
+    val wallNs = System.nanoTime() - t0
     val misfits = parts.map(_.misfits).sum
     require(misfits == 0L, s"declared dim=$dim but data has " +
       s"${parts.find(_.misfits > 0L).get.width} coordinates " +
@@ -155,39 +168,59 @@ object KMeansRunner {
     val nonFinite = parts.map(_.nonFinite).sum
     require(!finite || nonFinite == 0L, "k-means input has a NaN or " +
       s"infinite coordinate in $nonFinite vectors")
-    SeedDraw.merge(parts, k)
+    Sample(SeedDraw.merge(parts, k),
+      if (timed) Some(loopPaysFrom(parts.map(p => (p.taskNs, p.roundNs)), wallNs))
+      else None)
   }
 
-  /** Where the rounds run: `None` (the default) lets round 1 decide
-    * ([[loopPays]]); `Some(true)` runs every round in loop jobs,
-    * `Some(false)` one job per round. A seam for tests, which pin that
-    * both placements give the same result. */
+  /** Where the rounds run: `None` (the default) lets the measurement
+    * decide ([[loopPaysFrom]]); `Some(true)` runs every round in loop
+    * jobs, `Some(false)` one job per round. A seam for tests, which pin
+    * that both placements give the same result. */
   private[kmeans] val forceLoop = new DynamicVariable[Option[Boolean]](None)
 
-  /** Whether the rounds after round 1 run in loop jobs
-    * ([[LloydKernel.loopJob]]): when round 1's tasks computed, summed,
-    * for less time than the round took on the driver. One task then
-    * does the work of a round in less time than a job's fixed cost, so
-    * rounds in one task beat a job per round; where rounds are real
-    * work (large k, many partitions) the tasks' sum exceeds the wall
-    * time and the rounds keep their parallel jobs. */
+  /** Whether rounds run in loop jobs ([[LloydKernel.loopJob]]): when a
+    * round's tasks compute, summed, for less time than the round takes
+    * as one job on the driver. One task then does the work of a round
+    * in less time than a job's fixed cost, so rounds in one task beat a
+    * job per round; where rounds are real work (large k, many
+    * partitions) the tasks' sum exceeds the wall time and the rounds
+    * keep their parallel jobs. */
   private[kmeans] def loopPays(taskNs: Long, roundWallNs: Long): Boolean =
     taskNs < roundWallNs
 
+  /** [[loopPays]] from a job with a task per partition: each task's
+    * (compute ns, round ns), its round ns being what a round over its
+    * partition computes for, and the job's wall time. A round as one
+    * job is predicted to take the job's fixed cost — its wall time less
+    * its longest task — plus the longest round. From the seed draw, a
+    * task's round ns is its estimate ([[SeedDraw.task]]); from round 1
+    * itself it is the task's own ns, and the prediction is the round's
+    * wall time. A job with no task (an empty input) gives `false`. */
+  private[kmeans] def loopPaysFrom(tasks: Seq[(Long, Long)], wallNs: Long): Boolean =
+    tasks.nonEmpty && loopPays(tasks.map(_._2).sum,
+      wallNs - tasks.map(_._1).max + tasks.map(_._2).max)
+
   /** Loop body shared by [[run]] and [[runReplayable]]: `sample` draws
-    * the (re-)init centroid set for a given seed; `post` is applied to
-    * each round's new centroids before the shift test (identity for
-    * the plain run, decimal quantization for the replayable one).
+    * the (re-)init centroid set for a given seed, timed when its flag is
+    * set; `post` is applied to each round's new centroids before the
+    * shift test (identity for the plain run, decimal quantization for
+    * the replayable one).
     *
     * The rounds run on a [[LloydKernel]] — its input is built once
     * (through the plan, or straight from a bare `points` scan's byte
     * ranges) and no round plans anything (guide §1.2 step 1: the
     * per-round Catalyst replanning was the loop's measured floor, not
-    * the k-row aggregate). Round 1 is one job, a task per partition;
-    * its tasks' summed compute time against its wall time picks where
-    * the rest run ([[loopPays]]): in loop jobs, one task running round
-    * after round, or one job per round. Both placements step through
-    * the same [[LloydRule]], so the result is the same bits either way.
+    * the k-row aggregate). The rounds run in loop jobs, one task running
+    * round after round, or one job per round, a task per partition.
+    * The first sample decides ([[loopPaysFrom]]): [[run]]'s draw is a
+    * job with a task per partition, timed, whose tasks estimate a round.
+    * Re-init draws are not timed. [[runReplayable]] samples through a
+    * DataFrame, so its round 1 runs as one job and decides for the rest
+    * from its own tasks' time. With `cache` off every round is one job:
+    * a loop job over an unpersisted kernel would re-read the input every
+    * round, in one task. Both placements step through the same
+    * [[LloydRule]], so the result is the same bits either way.
     * A loop job returns at an empty cluster, and the re-draw (a job
     * over the kernel) runs here. `cache` persists the kernel's blocks,
     * one object of primitive vectors per partition (replacing the
@@ -200,19 +233,19 @@ object KMeansRunner {
     * persisted. */
   private def runLoop(pts: DataFrame, vecCol: String, k: Int, maxIter: Int,
                       eps: Double, seed: Long,
-                      sample: (LloydKernel, Long) => Array[Array[Double]],
+                      sample: (LloydKernel, Long, Boolean) => Sample,
                       post: Array[Array[Double]] => Array[Array[Double]],
                       cache: Boolean)
       : KMeansResult = {
     val kernel = new LloydKernel(pts, vecCol, cache)
     try {
-      val init = sample(kernel, seed)
-      require(init.nonEmpty,
+      val first = sample(kernel, seed, cache && forceLoop.value.isEmpty)
+      require(first.centroids.nonEmpty,
         "k-means input is empty: no points to sample initial centroids from")
       val rule = LloydRule(k, maxIter, eps, post)
-      var s = LloydState(init)
+      var s = LloydState(first.centroids)
       var reinits = 0
-      var loop = forceLoop.value
+      var loop = forceLoop.value.orElse(if (cache) first.loopPays else Some(false))
       while (s.iter < maxIter && !s.converged) {
         s = loop match {
           case Some(true) => kernel.loopJob(s, rule)
@@ -220,14 +253,14 @@ object KMeansRunner {
           case None =>
             val t0 = System.nanoTime()
             val (next, taskNs) = kernel.stepJob(s, rule)
-            loop = Some(loopPays(taskNs, System.nanoTime() - t0))
+            loop = Some(loopPaysFrom(taskNs.map(t => (t, t)), System.nanoTime() - t0))
             next
         }
         if (s.empty) {
           // empty-cluster policy: full re-init, skip error check,
           // iteration still counts (KMeans.java:167-171).
           reinits += 1
-          s = s.copy(centroids = sample(kernel, seed + s.iter),
+          s = s.copy(centroids = sample(kernel, seed + s.iter, false).centroids,
             iter = s.iter + 1, empty = false)
         }
       }
@@ -291,29 +324,45 @@ private[kmeans] final case class LloydRule(
 private[kmeans] object SeedDraw {
 
   /** A task's picks (ascending `(hash, vector)` rows), how many of its
-    * vectors are not `dim` wide, the width of the first of them, and how
-    * many of its vectors have a NaN or infinite coordinate. */
+    * vectors are not `dim` wide, the width of the first of them, how
+    * many of its vectors have a NaN or infinite coordinate, its compute
+    * time, and its estimate of a round over its partition (ns; 0 when
+    * not timed). */
   final case class Part(picks: Array[InternalRow], misfits: Long, width: Int,
-                        nonFinite: Long)
+                        nonFinite: Long, taskNs: Long, roundNs: Long)
+
+  /** Rows a timed draw runs its sample round over. */
+  val PrefixRows = 256
 
   private val VecType = ArrayType(DoubleType, containsNull = false)
 
   private def order = InterpretedOrdering.forSchema(Seq(LongType, VecType))
 
-  def task(k: Int, seed: Long, dim: Int)
+  /** The draw over a partition. `timed`, it keeps the partition's first
+    * [[PrefixRows]] rows and, once its picks are settled, runs
+    * [[LloydKernel.roundFn]] over them against the picks — the work of
+    * a round from those centroids — and scales that time to the
+    * partition's row count, and by k / picks when it has fewer than k
+    * picks. The round's result is dropped. */
+  def task(k: Int, seed: Long, dim: Int, timed: Boolean)
       : (TaskContext, Iterator[VecBlock]) => Part =
-    (_, it) => {
+    (ctx, it) => {
+      val t0 = System.nanoTime()
       val ord = order
       // max-heap of the k first rows seen so far
       val heap = new java.util.PriorityQueue[InternalRow](ord.reverse)
       var misfits = 0L
       var width = -1
       var nonFinite = 0L
+      val prefix = if (timed) new Array[Array[Double]](PrefixRows) else null
+      var n = 0L
       while (it.hasNext) {
         val rows = it.next().rows
         var r = 0
         while (r < rows.length) {
           val v = rows(r)
+          if (prefix != null && n < PrefixRows) prefix(n.toInt) = v
+          n += 1
           if (dim > 0 && v.length != dim) {
             if (misfits == 0L) width = v.length
             misfits += 1
@@ -342,8 +391,16 @@ private[kmeans] object SeedDraw {
           r += 1
         }
       }
-      Part(heap.toArray(Array.empty[InternalRow]).sorted(ord), misfits, width,
-        nonFinite)
+      val picks = heap.toArray(Array.empty[InternalRow]).sorted(ord)
+      val roundNs = if (prefix == null || n == 0L) 0L else {
+        val rows = java.util.Arrays.copyOf(prefix, math.min(n, PrefixRows.toLong).toInt)
+        val centroids = picks.map(_.getArray(1).toDoubleArray())
+        val round = LloydKernel.roundFn(centroids, LloydKernel.Every)
+        val r0 = System.nanoTime()
+        round(ctx, Iterator.single(new VecBlock(rows, null)))
+        ((System.nanoTime() - r0).toDouble * n / rows.length * k / centroids.length).toLong
+      }
+      Part(picks, misfits, width, nonFinite, System.nanoTime() - t0, roundNs)
     }
 
   /** The k first of all tasks' picks; a stable sort over the picks in

@@ -71,7 +71,11 @@ import graft.sources.PointsTable
   * partition, merging each round's partials in the same partition-index
   * order. A job's fixed cost (~8 ms in local mode) is several times the
   * compute of a round over 10k points, so a small input's rounds cost
-  * the job, not the data; the loop job pays that cost once per run.
+  * the job, not the data; the loop job pays that cost once per run. The
+  * runner picks the placement from its seed draw, whose tasks time
+  * [[LloydKernel.roundFn]] over a prefix of their rows; with
+  * `cache = false` it keeps one job per round, since a loop job would
+  * re-read the input every round in one task.
   */
 final class LloydKernel(points: DataFrame, vecCol: String,
                         cache: Boolean = true,
@@ -121,13 +125,13 @@ final class LloydKernel(points: DataFrame, vecCol: String,
   }
 
   /** The round from `s` as one job, a task per partition, stepped by
-    * `rule` on the driver; also the tasks' summed compute time (ns). */
+    * `rule` on the driver; also each task's compute time (ns). */
   private[kmeans] def stepJob(s: LloydState, rule: LloydRule)
-      : (LloydState, Long) = {
+      : (LloydState, Array[Long]) = {
     val parts = vectors.sparkContext.runJob(vectors,
       LloydKernel.timedRoundFn(s.centroids))
     (rule.step(s, LloydKernel.merge(parts.iterator.map(_._1), s.centroids)),
-      parts.map(_._2).sum)
+      parts.map(_._2))
   }
 
   /** The rounds from `s` while `rule` lets them continue, all in ONE
@@ -149,7 +153,8 @@ private[kmeans] object LloydKernel {
   /** A partition's per-cluster (vector sums, counts). */
   type Partial = (Array[Array[Double]], Array[Long])
 
-  private val Every: Long => Boolean = _ => true
+  /** Every row is a member. */
+  val Every: Long => Boolean = _ => true
 
   /** The blocks of a bare `points` scan, read without the planner
     * ([[PointsBlockRDD]]); None for any other plan. "Bare" is the shape

@@ -17,8 +17,9 @@ import graft.sources.{PointsPartitionReader, PointsScan, PointsTable}
   * ownership, blank lines and the malformed-line message stay there —
   * and copies each line's values straight into one [[VecBlock]]. It
   * reports the task's input metrics (bytes and records read) as
-  * `DataSourceRDD` does. Building it lists the input files and
-  * broadcasts the conf: no plan, no codegen, no closure to clean. */
+  * `DataSourceRDD` does. Building it lists the input files and takes
+  * the session's conf broadcast (a new one only when the conf changed):
+  * no plan, no codegen, no closure to clean. */
 private[kmeans] final class PointsBlockRDD(
     sc: SparkContext,
     @transient private val inputs: Array[InputPartition],

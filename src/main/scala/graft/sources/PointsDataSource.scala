@@ -52,10 +52,11 @@ import org.apache.spark.util.SerializableConfiguration
   * with the core count, as over the built-in sources.
   *
   * The session's Hadoop conf is captured when the query is planned and
-  * reaches the tasks as ONE broadcast per scan or write (the pattern of
-  * Spark's own file scans): the reader and writer factories, which sit
-  * in every task binary — and in the lineage of any RDD cached from the
-  * scan — carry only the broadcast handle.
+  * reaches the tasks as ONE broadcast per session and conf
+  * ([[ConfBroadcast]]): scans and writes planned while the conf is
+  * unchanged share one broadcast. The reader and writer factories, which
+  * sit in every task binary — and in the lineage of any RDD cached from
+  * the scan — carry only the broadcast handle.
   *
   * `df.write.format("points").mode("overwrite"|"append").save(path)`
   * is the matching SINK (see [[PointsWriteBuilder]]): task-atomic
@@ -166,7 +167,38 @@ class PointsScan(path: String, splitSize: Option[Long], required: StructType,
 
   override def createReaderFactory(): PartitionReaderFactory =
     PointsReaderFactory(parsePoint = required.fieldNames.contains("point"),
-      conf = session.sparkContext.broadcast(new SerializableConfiguration(conf)))
+      conf = ConfBroadcast(session.sparkContext, conf))
+}
+
+/** The broadcast of a Hadoop conf that scans and writes of the `points`
+  * source share: the last one made, kept while its `SparkContext` runs
+  * and every (key, value) pair of the conf asked for equals those of
+  * the conf it was made from. The conf holds every SQL conf of the
+  * session (`newHadoopConf` copies them in), so a change to any of them
+  * makes a new broadcast, which replaces the kept one. Broadcasting
+  * serializes and size-estimates the whole conf, about a thousand
+  * entries, on every call; comparing the entries costs a small part of
+  * that. A replaced broadcast is left to Spark's `ContextCleaner`, never
+  * destroyed here: an RDD cached from an earlier scan may still need it
+  * to recompute a lost partition. */
+object ConfBroadcast {
+
+  private final case class Kept(sc: SparkContext, entries: Map[String, String],
+                                conf: Broadcast[SerializableConfiguration])
+
+  private var kept: Option[Kept] = None
+
+  def apply(sc: SparkContext, conf: Configuration)
+      : Broadcast[SerializableConfiguration] = synchronized {
+    val entries = conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    kept match {
+      case Some(m) if (m.sc eq sc) && !sc.isStopped && m.entries == entries => m.conf
+      case _ =>
+        val b = sc.broadcast(new SerializableConfiguration(conf))
+        kept = Some(Kept(sc, entries, b))
+        b
+    }
+  }
 }
 
 final case class PointsInputPartition(path: String, start: Long, length: Long)
@@ -314,8 +346,7 @@ class PointsBatchWrite(path: String, truncate: Boolean,
     val fs = p.getFileSystem(conf)
     if (truncate && fs.exists(p)) fs.delete(p, true)
     fs.mkdirs(p)
-    PointsWriterFactory(path, jobId,
-      sc.broadcast(new SerializableConfiguration(conf)))
+    PointsWriterFactory(path, jobId, ConfBroadcast(sc, conf))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {

@@ -157,6 +157,37 @@ class CliSpec extends SparkSessionSpec {
     assert(!dir.list().exists(_.startsWith("out")))
   }
 
+  test("bad arguments fail with a message naming the argument and the usage line") {
+    val ok = Array("in", "4", "10", "out", "30", "0.001", "2")
+    assert(KMeansCli.parseArgs(ok) == KMeansCli.Args("in", 4, 10, "out", 30, 0.001, 2))
+    assert(KMeansCli.parseArgs(ok.updated(4, "0")).dim == 0)
+    def failure(args: Array[String]): String =
+      intercept[IllegalArgumentException](KMeansCli.parseArgs(args)).getMessage
+    for ((i, v, msg) <- Seq(
+        (1, "x", "k: not an integer: x"),
+        (1, "0", "k: must be >= 1, got 0"),
+        (2, "2.5", "max_iter: not an integer: 2.5"),
+        (2, "0", "max_iter: must be >= 1, got 0"),
+        (4, "-1", "dim: must be >= 0, got -1"),
+        (5, "1e-3x", "epsilon: not a number: 1e-3x"),
+        (6, "0", "num_reducer: must be >= 1, got 0"),
+        (6, "-3", "num_reducer: must be >= 1, got -3"))) {
+      assert(failure(ok.updated(i, v)) == s"$msg\n${KMeansCli.Usage}")
+    }
+    assert(failure(ok.take(6)) == s"expected 7 arguments, got 6\n${KMeansCli.Usage}")
+  }
+
+  test("Session.get leaves an existing session's log level alone") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    spark.sparkContext
+    val before = LogManager.getRootLogger.getLevel
+    try {
+      spark.sparkContext.setLogLevel("ERROR")
+      Session.get(shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      assert(LogManager.getRootLogger.getLevel == Level.ERROR)
+    } finally spark.sparkContext.setLogLevel(before.toString)
+  }
+
   test("empty input fails with a message saying the input is empty") {
     spark.sparkContext
     Seq(Seq.empty[String], Seq("", "   ", "\t")).foreach { lines =>

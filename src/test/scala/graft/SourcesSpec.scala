@@ -62,11 +62,34 @@ class SourcesSpec extends SparkSessionSpec {
     } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  test("reader and writer factories carry the Hadoop conf by broadcast: < 4 KB each") {
+  /** The reader factory of a scan of `p`, planned in the shared session. */
+  private def readerFactory(p: String): graft.sources.PointsReaderFactory = {
+    spark.sparkContext // the tables capture the active session
+    new graft.sources.PointsTable(p, None)
+      .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()).build()
+      .toBatch.createReaderFactory().asInstanceOf[graft.sources.PointsReaderFactory]
+  }
+
+  /** The writer factory of a write to a new directory, planned in the
+    * shared session. */
+  private def writerFactory(): graft.sources.PointsWriterFactory = {
     import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo}
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    import graft.sources.PointsTable
-    spark.sparkContext // the tables capture the active session
+    spark.sparkContext
+    val dst = java.nio.file.Files.createTempDirectory("points_factory").toString
+    new graft.sources.PointsTable(dst, None)
+      .newWriteBuilder(new LogicalWriteInfo {
+        override def options(): CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty()
+        override def queryId(): String = "factory-size"
+        override def schema(): org.apache.spark.sql.types.StructType =
+          graft.sources.PointsTable.Schema
+      }).build().toBatch
+      .createBatchWriterFactory(new PhysicalWriteInfo {
+        override def numPartitions(): Int = 1
+      }).asInstanceOf[graft.sources.PointsWriterFactory]
+  }
+
+  test("reader and writer factories carry the Hadoop conf by broadcast: < 4 KB each") {
     def serializedBytes(o: AnyRef): Int = {
       val bytes = new java.io.ByteArrayOutputStream()
       val out = new java.io.ObjectOutputStream(bytes)
@@ -74,22 +97,31 @@ class SourcesSpec extends SparkSessionSpec {
       out.close()
       bytes.size()
     }
-    val readers = new PointsTable(path, None)
-      .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
-      .toBatch.createReaderFactory()
-    val dst = java.nio.file.Files.createTempDirectory("points_factory").toString
-    val writers = new PointsTable(dst, None)
-      .newWriteBuilder(new LogicalWriteInfo {
-        override def options(): CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty()
-        override def queryId(): String = "factory-size"
-        override def schema(): org.apache.spark.sql.types.StructType = PointsTable.Schema
-      }).build().toBatch
-      .createBatchWriterFactory(new PhysicalWriteInfo {
-        override def numPartitions(): Int = 1
-      })
+    val readers = readerFactory(path)
+    val writers = writerFactory()
     // the serialized Hadoop Configuration alone is ~120 KB
     assert(serializedBytes(readers) < 4096, s"reader factory: ${serializedBytes(readers)} B")
     assert(serializedBytes(writers) < 4096, s"writer factory: ${serializedBytes(writers)} B")
+  }
+
+  test("scans and writes share one conf broadcast until the session's conf changes") {
+    val first = readerFactory(path).conf
+    assert(readerFactory(path).conf.id == first.id)
+    assert(writerFactory().conf.id == first.id)
+    // newHadoopConf copies every SQL conf in under its own name
+    val key = "spark.hadoop.graft.test.conf_memo"
+    try {
+      spark.conf.set(key, "changed")
+      val changed = readerFactory(path).conf
+      assert(changed.id != first.id)
+      assert(writerFactory().conf.id == changed.id)
+      // what a reader's task gets from the new broadcast
+      val seen = spark.sparkContext.parallelize(Seq(0), 1)
+        .map(_ => changed.value.value.get(key)).collect().toSeq
+      assert(seen == Seq("changed"))
+      assert(PointsIO.readPoints(spark, path).count() == pts.size)
+    } finally spark.conf.unset(key)
+    assert(readerFactory(path).conf.value.value.get(key) == null)
   }
 
   test("a malformed line fails naming the file and the line's byte offset") {

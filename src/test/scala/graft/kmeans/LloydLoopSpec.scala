@@ -84,7 +84,8 @@ class LloydLoopSpec extends SparkSessionSpec {
     some { case (c, r) => c.parts >= 3 && c.k > 1 && r.errorLog.size >= 2 && !c.replay }
   }
 
-  test("a 3-round run on a one-file input runs the draw, round 1 and one loop job") {
+  /** A one-file input of 400 points in three blobs. */
+  private lazy val smallFile: String = {
     val dir = Files.createTempDirectory("loop_jobs").toFile
     val input = new File(dir, "points.txt")
     val rnd = new scala.util.Random(5)
@@ -92,17 +93,32 @@ class LloydLoopSpec extends SparkSessionSpec {
       val c = (i % 3) * 40.0
       s"<${c + rnd.nextGaussian()}, ${c - rnd.nextGaussian()}>\n"
     }.mkString.getBytes(UTF_8))
+    input.getPath
+  }
+
+  /** The call sites of the jobs a 3-round run on [[smallFile]] starts. */
+  private def threeRoundSites(cache: Boolean): Seq[String] = {
     var res: KMeansResult = null
     val sites = sparkEvents {
       case e: SparkListenerJobStart => e.stageInfos.maxBy(_.stageId).name
     } {
-      res = KMeansRunner.run(PointsIO.readPoints(spark, input.getPath), "point",
-        k = 3, maxIter = 4, eps = 0.0, seed = 42L)
+      res = KMeansRunner.run(PointsIO.readPoints(spark, smallFile), "point",
+        k = 3, maxIter = 4, eps = 0.0, seed = 42L, cache = cache)
     }
     assert(res.errorLog.size == 3 && res.reinitCount == 0, res)
-    assert(sites.size == 3, sites)
     assert(sites.head.contains("KMeansRunner.scala"), sites)
     assert(sites.tail.forall(_.contains("LloydKernel.scala")), sites)
+    sites
+  }
+
+  test("a 3-round run on a one-file input runs the draw and one loop job") {
+    val sites = threeRoundSites(cache = true)
+    assert(sites.size == 2, sites)
+  }
+
+  test("with cache = false a 3-round run on a one-file input runs one job per round") {
+    val sites = threeRoundSites(cache = false)
+    assert(sites.size == 4, sites)
   }
 
   test("rounds move into one task only when round 1's tasks computed for less than its wall time") {
@@ -110,6 +126,25 @@ class LloydLoopSpec extends SparkSessionSpec {
     assert(KMeansRunner.loopPays(taskNs = 0L, roundWallNs = 1L))
     assert(!KMeansRunner.loopPays(taskNs = 8000000L, roundWallNs = 8000000L))
     assert(!KMeansRunner.loopPays(taskNs = 900000000L, roundWallNs = 300000000L))
+  }
+
+  test("the seed draw predicts round 1's wall time as its fixed cost plus its longest round") {
+    val ms = 1000000L
+    // one task: the rounds' sum is the longest round, below any wall time
+    assert(KMeansRunner.loopPaysFrom(Seq(50 * ms -> 40 * ms), wallNs = 52 * ms))
+    // four tasks: fixed cost 10 − 6 = 4 ms, round 1 predicted at 5 ms
+    assert(KMeansRunner.loopPaysFrom(Seq.fill(4)(6 * ms -> 1 * ms), wallNs = 10 * ms))
+    assert(!KMeansRunner.loopPaysFrom(Seq.fill(4)(6 * ms -> 2 * ms), wallNs = 10 * ms))
+    // the longest task and the longest round may be different tasks:
+    // 12 − 10 + 3 = 5 ms against a sum of 4 ms
+    assert(KMeansRunner.loopPaysFrom(Seq(10 * ms -> 1 * ms, 4 * ms -> 3 * ms), wallNs = 12 * ms))
+    // large k: rounds are real work, each task's exceeds the fixed cost
+    assert(!KMeansRunner.loopPaysFrom(Seq.fill(4)(400 * ms -> 300 * ms), wallNs = 420 * ms))
+    // from round 1 itself (round ns = task ns) it is loopPays on the round
+    assert(KMeansRunner.loopPaysFrom(Seq(2 * ms -> 2 * ms, 3 * ms -> 3 * ms), wallNs = 8 * ms))
+    assert(!KMeansRunner.loopPaysFrom(Seq(2 * ms -> 2 * ms, 3 * ms -> 3 * ms), wallNs = 5 * ms))
+    // an empty input's draw has no task
+    assert(!KMeansRunner.loopPaysFrom(Seq.empty, wallNs = 5 * ms))
   }
 
   test("the java.nio and the Hadoop centroid writes make the same files") {

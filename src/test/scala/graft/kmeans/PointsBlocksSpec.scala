@@ -163,7 +163,7 @@ class PointsBlocksSpec extends SparkSessionSpec {
       assert(lineage(rdd).exists(_.isInstanceOf[PointsBlockRDD]))
       assert(rdd.getNumPartitions >= 60)
       val ser = SparkEnv.get.closureSerializer.newInstance()
-      val binary = ser.serialize((rdd, SeedDraw.task(3, 42L, 0))).limit()
+      val binary = ser.serialize((rdd, SeedDraw.task(3, 42L, 0, timed = true))).limit()
       val partition = ser.serialize(rdd.partitions(0)).limit()
       // the serialized Hadoop Configuration alone is ~120 KB
       assert(binary + partition < 4096, s"task binary $binary B, partition $partition B")
