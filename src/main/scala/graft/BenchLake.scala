@@ -6,23 +6,23 @@ import org.apache.spark.sql.functions._
 import graft.operators.AnnIndex
 import graft.sources.SnapshotTable
 
-/** Write-path scale ladder for the lakehouse and the streaming index
-  * ingest — the measurements behind the two architectural claims the
-  * batch ladder cannot test (its families grow the INPUT; these hold
-  * the batch fixed and grow the TABLE underneath):
+/** Write-path scale ladder for the lakehouse and the incremental
+  * index ingest — the measurements behind the two architectural
+  * claims the batch ladder cannot test (its families grow the INPUT;
+  * these hold the batch fixed and grow the TABLE underneath):
   *
   *  - `lake_merge_fixed`: a constant 1 000-key MERGE into a snapshot
   *    table of x1/x10/x100 documents committed as constant-size file
   *    sets (the 100 TB shape: set COUNT scales, set size doesn't).
   *    Claim: the stats-scoped COW merge costs the TOUCHED sets plus an
   *    O(#sets) driver-side manifest pass — never the table.
-  *  - `lake_append_fixed`: a constant 1 000-row `commitBatch` append
-  *    (the streaming snapshot sink's exactly-once primitive) against
-  *    the same growing table. Claim: an append writes its batch and
-  *    republishes the manifest — no data-proportional work.
+  *  - `lake_append_fixed`: a constant 1 000-row exactly-once
+  *    `commitBatch` append against the same growing table. Claim:
+  *    an append writes its batch and republishes the manifest — no
+  *    data-proportional work.
   *  - `ann_ingest_fixed`: a constant 1 000-vector micro-batch encoded
   *    with an x-scaled index's frozen quantizers and written in the
-  *    bucketed cell layout (the streaming ANN ingest body). Corpus
+  *    bucketed cell layout (an incremental ANN ingest). Corpus
   *    size enters only through the coarse cell count k(n) inside the
   *    per-row argmin — the measurement bounds that term at the rungs.
   *
@@ -117,8 +117,8 @@ object BenchLake {
       }
 
       // --- ann_ingest_fixed: constant 1k-vector micro-batch encode +
-      // bucketed write with the x-index's frozen quantizers (the
-      // streaming sink body); scratch output keeps artifacts pristine
+      // bucketed write with the x-index's frozen quantizers; scratch
+      // output keeps artifacts pristine
       val idxPath = AnnIndex.ensureIndex(spark, xDir)
       val cents = AnnIndex.readCents(spark, idxPath)
       val cb = AnnIndex.readCodebook(spark, idxPath)

@@ -32,8 +32,9 @@ package graft.kmeans
   *   faithful reproduction; a run summary in the reference's
   *   outputsLog.txt spirit goes to stdout;
   * - a bad argument ([[parseArgs]]: a number that does not parse,
-  *   k < 1, max_iter < 1, dim < 0, num_reducer < 1) exits 2 with a
-  *   message naming it and the usage line, before any session is
+  *   k < 1, max_iter < 1, dim < 0, a NaN epsilon, num_reducer < 1) or
+  *   a GRAFT_SEED that is not an integer ([[parseSeed]]) exits 2 with
+  *   a message naming it and the usage line, before any session is
   *   built.
   *
   * Improvements over the reference, documented in SURVEY.md §2 quirks
@@ -49,13 +50,16 @@ object KMeansCli {
   final case class Args(input: String, k: Int, maxIter: Int, output: String,
                         dim: Int, eps: Double, numReducer: Int)
 
+  private def bad(msg: String): Nothing =
+    throw new IllegalArgumentException(s"$msg\n$Usage")
+
   /** The arguments, or an IllegalArgumentException that names the bad
     * argument and carries [[Usage]]: a number that does not parse,
-    * k < 1, max_iter < 1, dim < 0 (0 skips the width check) or
-    * num_reducer < 1. */
+    * k < 1, max_iter < 1, dim < 0 (0 skips the width check), a NaN
+    * epsilon (no error is ever below it, so the run could never
+    * converge) or num_reducer < 1. A negative or infinite epsilon
+    * keeps the reference's meaning. */
   def parseArgs(args: Array[String]): Args = {
-    def bad(msg: String): Nothing =
-      throw new IllegalArgumentException(s"$msg\n$Usage")
     if (args.length != 7) bad(s"expected 7 arguments, got ${args.length}")
     def int(name: String, s: String, min: Int): Int = {
       val v = s.toIntOption.getOrElse(bad(s"$name: not an integer: $s"))
@@ -64,17 +68,23 @@ object KMeansCli {
     }
     Args(args(0), int("k", args(1), 1), int("max_iter", args(2), 1), args(3),
       int("dim", args(4), 0),
-      args(5).toDoubleOption.getOrElse(bad(s"epsilon: not a number: ${args(5)}")),
+      args(5).toDoubleOption.filterNot(_.isNaN)
+        .getOrElse(bad(s"epsilon: not a number: ${args(5)}")),
       int("num_reducer", args(6), 1))
   }
 
+  /** The init seed: the `GRAFT_SEED` value, default 42, or an
+    * IllegalArgumentException like [[parseArgs]]'s when it is not an
+    * integer. */
+  def parseSeed(env: Option[String]): Long =
+    env.fold(42L)(s => s.toLongOption.getOrElse(bad(s"GRAFT_SEED: not an integer: $s")))
+
   def main(args: Array[String]): Unit = {
-    val a =
-      try parseArgs(args)
+    val (a, seed) =
+      try (parseArgs(args), parseSeed(sys.env.get("GRAFT_SEED")))
       catch { case e: IllegalArgumentException =>
         System.err.println(e.getMessage); sys.exit(2)
       }
-    val seed = sys.env.getOrElse("GRAFT_SEED", "42").toLong
 
     // only stop the session if this main created it (embedded callers —
     // tests, notebooks — keep theirs)

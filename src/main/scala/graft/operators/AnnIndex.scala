@@ -203,20 +203,6 @@ object AnnIndex {
     * path. */
   private[graft] def ensureDelta(spark: SparkSession, dir: String): String = {
     val path = ensureIndex(spark, dir)
-    // writer rule: finish any crashed compaction BEFORE creating a new
-    // delta — writing into (or next to) flagged debris and then
-    // clearing the flag would resurrect the dead rows
-    recoverCompaction(spark, path)
-    // refuse to clobber a STREAM-PRODUCED delta: the batch re-encode
-    // below overwrites the segment root, which would silently discard
-    // every streamed micro-batch (the round-7 advice's asymmetry). A
-    // mixed segment is never valid — compact the index or point
-    // spark.graft.artifacts.dir at a fresh root.
-    if (streamProduced(spark, path, "codes_delta"))
-      throw new IllegalStateException(
-        s"codes_delta under $path was written by annIngestStream " +
-          "(batch_id=* layout); a batch append would overwrite the " +
-          "streamed rows — compact first or use a fresh artifacts root")
     val cents = readCents(spark, path)
     val cb = readCodebook(spark, path)
     val encoded = encode(deltaCorpus(spark, dir), cents, cb)
@@ -250,12 +236,10 @@ object AnnIndex {
     * physically. */
   private def ensureDeletes(spark: SparkSession, dir: String): String = {
     val path = ensureDeltaOnce(spark, dir)
-    recoverCompaction(spark, path) // writer rule, as in ensureDelta
-    // gate on EITHER layout: a stream-produced tombstone set is
-    // already a valid deletes segment and is kept as-is — the batch
-    // overwrite would silently resurrect every annDeleteStream delete
-    // (before round 8 this check keyed on the root _SUCCESS marker
-    // only, which the streamed batch_id=* layout does not have)
+    // gate on EITHER layout: a per-batch tombstone set
+    // ([[appendDeleteBatch]]) is already a valid deletes segment and
+    // is kept as-is — the overwrite would silently resurrect its
+    // deletes (it has no root _SUCCESS marker)
     if (!segmentAvailable(spark, path, "deletes"))
       committedSegments(spark, path)
         .where(col("vec_id") % DeleteMod === DeleteRes)
@@ -320,106 +304,6 @@ object AnnIndex {
         sum(col("packed")).as("sum_packed"))
   }
 
-  /** DESTRUCTIVE segment merge — the Lucene merge semantic the gated
-    * [[annIndexCompact]] report deliberately avoids (that query must
-    * leave the lifecycle state intact for the queries after it): fold
-    * base ∪ delta minus tombstones into a NEW base segment, then drop
-    * the delta and tombstone artifacts. This is how a STREAM-grown
-    * index (batch_id=* delta/deletes from
-    * [[graft.streaming.StreamingOps.annIngestStream]] /
-    * `annDeleteStream`) returns to a state the batch append/delete
-    * paths accept — [[ensureDelta]]/[[ensureDeletes]] refuse to touch
-    * streamed segments precisely because overwriting them loses rows;
-    * compaction is the sanctioned exit. Crash posture: the merged
-    * segment writes to a sibling tmp dir FIRST (reading the old
-    * segments), with the [[CompactedFlag]] inside it, then the swap
-    * runs as rename-aside → rename-in → deletes. The atomic rename-in
-    * publishes the merged data and its "delta is folded in" flag
-    * TOGETHER, so a crash after the swap but before the trailing
-    * deletes cannot double-count: readers see the flag and ignore the
-    * leftover `codes_delta`/`deletes` debris ([[segmentAvailable]]);
-    * the next writer finishes the cleanup ([[recoverCompaction]]).
-    * Every rename's return value is CHECKED — a silently failed
-    * rename aborting before the destructive deletes is the difference
-    * between a retryable error and data loss. At every intermediate
-    * point the full pre- or post-compaction data exists on disk under
-    * a discoverable name (renames are atomic per-dir on HDFS/local
-    * FS); the one window with no `codes` dir (between the two
-    * renames) is healed by [[recoverCompaction]] publishing the
-    * flagged tmp segment. */
-  def compactInPlace(spark: SparkSession, path: String): Unit = {
-    recoverCompaction(spark, path) // debris from an earlier crash
-    val merged = minusDeletes(spark, path, committedSegments(spark, path))
-    ParquetSink.writeCellBucketed(merged, s"$path/codes_merge_tmp",
-      sortCols = Seq("vec_id"))
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"$path/$s")
-    def renameOrAbort(src: String, dst: String): Unit =
-      if (!fs.rename(p(src), p(dst)))
-        throw new java.io.IOException(
-          s"compaction swap aborted: rename $src -> $dst failed under " +
-            s"$path; the index is unchanged and the merge can be retried")
-    // the flag rides the tmp dir so the rename-in below publishes
-    // data + flag in one atomic step ("_"-prefixed: parquet readers
-    // skip it)
-    fs.create(p(s"codes_merge_tmp/$CompactedFlag"), true).close()
-    fs.delete(p("codes_old"), true)
-    renameOrAbort("codes", "codes_old")
-    renameOrAbort("codes_merge_tmp", "codes")
-    Seq("codes_old", "codes_delta", "deletes", "codes_compacted")
-      .foreach(s => fs.delete(p(s), true))
-    fs.delete(p(s"codes/$CompactedFlag"), false)
-    ()
-  }
-
-  /** Flag file living INSIDE the base segment while a
-    * [[compactInPlace]] swap's trailing deletes are incomplete: its
-    * presence means the base ALREADY contains the folded
-    * delta/tombstones, so any `codes_delta`/`deletes` still on disk
-    * are dead debris — a reader honoring them would double-count
-    * every delta row and resurrect every tombstone. */
-  private[graft] val CompactedFlag = "_COMPACTED"
-
-  /** A compaction swap committed but its debris deletes did not all
-    * finish (crash window between rename-in and the trailing
-    * deletes). */
-  private[graft] def compactionPending(spark: SparkSession,
-                                       path: String): Boolean = {
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$path/codes/$CompactedFlag")
-    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(marker)
-  }
-
-  /** Finish a crashed [[compactInPlace]]: publish the flagged merged
-    * segment if the crash hit the no-`codes` window, then physically
-    * drop the dead delta/tombstone debris the flag neutralizes, then
-    * the flag itself — in that order, because clearing the flag while
-    * debris is still present would resurrect it. Writers call this
-    * before creating a NEW delta/tombstone segment; pure readers
-    * don't need to (the flag check in [[segmentAvailable]] already
-    * excludes the debris from every read). */
-  private[graft] def recoverCompaction(spark: SparkSession,
-                                       path: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"$path/$s")
-    val fs = p("codes").getFileSystem(conf)
-    if (!fs.exists(p("codes")) &&
-        fs.exists(p(s"codes_merge_tmp/$CompactedFlag")) &&
-        !fs.rename(p("codes_merge_tmp"), p("codes")))
-      throw new java.io.IOException(
-        s"compaction recovery failed: cannot publish codes_merge_tmp " +
-          s"under $path")
-    if (compactionPending(spark, path)) {
-      Seq("codes_old", "codes_delta", "deletes", "codes_compacted")
-        .foreach(s => fs.delete(p(s), true))
-      fs.delete(p(s"codes/$CompactedFlag"), false)
-      ()
-    }
-  }
-
   /** Every COMMITTED code segment at `path`: the base segment plus the
     * `codes_delta` segment when its `_SUCCESS` marker exists — the
     * Lucene/FAISS segment rule that a reader sees base ∪ deltas, never
@@ -431,9 +315,7 @@ object AnnIndex {
     * whole directories skipped before any IO), then the cell equality
     * itself, which parquet row-group min/max stats resolve inside the
     * surviving files because every file is sorted by cell
-    * ([[ParquetSink.writeCellBucketed]]). Segments in other layouts
-    * (a streamed delta hive-partitioned by `cluster`) get the same
-    * cell filter as plain partition pruning. */
+    * ([[ParquetSink.writeCellBucketed]]). */
   private[graft] def committedSegments(spark: SparkSession, path: String,
       probeCells: Option[Seq[Int]] = None): DataFrame = {
     def seg(name: String): DataFrame = {
@@ -456,9 +338,7 @@ object AnnIndex {
     else base
   }
 
-  /** A segment exists in the BATCH layout (root `_SUCCESS` marker) —
-    * also the guard the streaming writers consult before growing a
-    * `batch_id=*` subtree under a root the batch paths own. */
+  /** A segment exists in the BATCH layout (root `_SUCCESS` marker). */
   private[graft] def committed(spark: SparkSession, path: String,
                                seg: String): Boolean = {
     val marker = new org.apache.hadoop.fs.Path(s"$path/$seg/_SUCCESS")
@@ -466,11 +346,10 @@ object AnnIndex {
     fs.exists(marker)
   }
 
-  /** A segment exists in the STREAM-PRODUCED layout: micro-batches
-    * wrote `batch_id=<id>/` subtrees (each an overwrite-idempotent
-    * per-batch write — the replay-safety device), so the commit
-    * markers live inside the batch dirs, not at the segment root. */
-  private[graft] def streamProduced(spark: SparkSession, path: String,
+  /** A segment exists in the PER-BATCH layout: [[appendDeleteBatch]]
+    * publishes `batch_id=<id>/` subtrees, so the commit markers live
+    * inside the batch dirs, not at the segment root. */
+  private[graft] def batchPartitioned(spark: SparkSession, path: String,
                                     seg: String): Boolean = {
     val root = new org.apache.hadoop.fs.Path(s"$path/$seg")
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -478,26 +357,17 @@ object AnnIndex {
       .exists(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
   }
 
-  /** Segment readable under EITHER physical layout: batch-written at
-    * the segment root (root `_SUCCESS`), or stream-written as
-    * `batch_id=*` subtrees. Delta/tombstone segments are additionally
-    * gated on [[compactionPending]]: while the base carries the
-    * [[CompactedFlag]], any such segment on disk is dead debris from
-    * a crashed swap's unfinished deletes, and reading it would
-    * double-count the folded rows. */
+  /** Segment readable under EITHER physical layout: written whole at
+    * the segment root (root `_SUCCESS`), or as `batch_id=*`
+    * subtrees. */
   private[graft] def segmentAvailable(spark: SparkSession, path: String,
                                       seg: String): Boolean =
-    (committed(spark, path, seg) || streamProduced(spark, path, seg)) &&
-      !(Set("codes_delta", "deletes")(seg) &&
-        compactionPending(spark, path))
+    committed(spark, path, seg) || batchPartitioned(spark, path, seg)
 
   /** Read a segment regardless of which layout produced it. The
-    * streamed layout surfaces `batch_id` and the bucketed batch
-    * layout `bucket` as discovered partition columns — physical
-    * bookkeeping, not segment data — so both are dropped here;
-    * `cluster` stays (as a data column in the bucketed layout, a
-    * partition column in a streamed one), so cell filters keep their
-    * pruning power either way (row-group stats vs directories). */
+    * per-batch layout surfaces `batch_id` and the bucketed layout
+    * `bucket` as discovered partition columns — physical
+    * bookkeeping, not segment data — so both are dropped here. */
   private[graft] def readSegment(spark: SparkSession, path: String,
                                  seg: String): DataFrame = {
     val df = spark.read.parquet(s"$path/$seg")
@@ -519,9 +389,8 @@ object AnnIndex {
     else codes
 
   /** Append ONE delete batch as its own `deletes/batch_id=<n>/`
-    * subtree — the same per-batch layout the streaming delete sink
-    * produces, which every reader already unions
-    * ([[streamProduced]] / [[readSegment]]). This is the scale-safe
+    * subtree, which every reader unions ([[batchPartitioned]] /
+    * [[readSegment]]). This is the scale-safe
     * tombstone write: cost is O(batch) — no driver collect of the
     * existing set, no rewrite of prior batches — and crash-atomic:
     * the batch is written to a sibling tmp dir first, then one
@@ -540,24 +409,13 @@ object AnnIndex {
     * Amortized fold cost per append is O(total-tombstones/threshold). */
   private[graft] val DeleteFoldThreshold = 32
 
-  /** Floor of the MAINTENANCE tombstone-batch id range. Stream-written
-    * delete batches carry the query's checkpointed micro-batch id —
-    * small monotone ints replayed in overwrite mode — so maintenance
-    * appends claim ids ≥ 2⁴⁰: the two writers can never collide on a
-    * `batch_id=` directory, which is what makes a maintenance delete
-    * safe on a root a stream also feeds (a resumed stream replaying
-    * id N only ever overwrites its own batch N). */
+  /** Floor of the MAINTENANCE tombstone-batch id range: appends claim
+    * ids ≥ 2⁴⁰, so a `batch_id=` directory below it (written under
+    * another writer's own ids) is never overwritten or folded. */
   private[graft] val MaintBatchBase = 1L << 40
 
   private[operators] def appendDeleteBatch(spark: SparkSession,
       path: String, batch: DataFrame): Unit = {
-    // writer rule (same as ensureDelta/ensureDeletes): finish any
-    // crashed compaction FIRST. Appending under a standing
-    // CompactedFlag would land the batch in dead debris — invisible to
-    // readers via the segmentAvailable gate and physically deleted by
-    // the next recovery: a silently lost delete. No-op when the root
-    // has no codes/ segment (the AnnTiers shape).
-    recoverCompaction(spark, path)
     val conf = spark.sessionState.newHadoopConf()
     def p(s: String) = new org.apache.hadoop.fs.Path(s"$path/$s")
     val segRoot = p("deletes")
@@ -610,13 +468,8 @@ object AnnIndex {
             s"$segRoot/batch_id=$id; the batch was not recorded and " +
             "the append can be retried")
     }
-    // maintenance ids live at MaintBatchBase and above — disjoint by
-    // construction from annDeleteStream's checkpointed micro-batch ids
-    // (small monotone ints written in OVERWRITE mode), so a stream
-    // resuming after a maintenance append can never clobber a
-    // maintenance batch and resurrect its tombstones, and maintenance
-    // deletes stay usable on a stream-fed root (no single-owner
-    // refusal needed — readers union both id ranges)
+    // maintenance ids live at MaintBatchBase and above; readers union
+    // every id range
     val next = batchIds().foldLeft(MaintBatchBase - 1)(math.max) + 1
     publish(batch, s"deletes_batch_tmp_$next", next)
     // auto-fold: union-distinct every MAINTENANCE batch into one
@@ -625,8 +478,7 @@ object AnnIndex {
     // tombstones only accumulate, so old-batches ∪ superset ≡ superset
     // and a reader (which dedups at the anti join) sees the same live
     // set whether the fold dies before, during, or after the drops.
-    // Stream-owned batches are left alone (their replay contract
-    // re-creates dropped dirs); compaction is what folds those.
+    // Batches below MaintBatchBase are left alone.
     val maintIds = batchIds().filter(_ >= MaintBatchBase)
     if (maintIds.length > DeleteFoldThreshold) {
       val folded = spark.read.parquet(segRoot.toString)
@@ -641,11 +493,10 @@ object AnnIndex {
   }
 
   /** The tombstone set as a JOINABLE unit relation: deduplicated on
-    * vec_id, because the streamed layout can legitimately carry the
-    * same id twice (a delete replayed in two micro-batches, or two
-    * clients deleting the same vector) and a duplicated tombstone in a
-    * LEFT join would fan out segment rows and corrupt every count
-    * downstream. The anti join in [[minusDeletes]] is set-semantic
+    * vec_id, because the per-batch layout can legitimately carry the
+    * same id twice (two batches deleting the same vector) and a
+    * duplicated tombstone in a LEFT join would fan out segment rows
+    * and corrupt every count downstream. The anti join in [[minusDeletes]] is set-semantic
     * already and skips the distinct's exchange. */
   private def tombstones(spark: SparkSession, path: String): DataFrame =
     readSegment(spark, path, "deletes")
@@ -675,19 +526,6 @@ object AnnIndex {
             .select(col("vec_id"), col("label").as("q_label")),
           col("query_id") === col("vec_id"))
         .select(col("query_id"), col("qv"), col("q_label"))
-    searchSegmentsFor(qs, path, labelFiltered, applyDeletes)
-  }
-
-  /** The shared ADC search plan over an ARBITRARY (query_id, qv
-    * [, q_label]) frame — the batch queries and the streaming server
-    * ([[graft.streaming.StreamingOps.annServeStream]]) both express
-    * through this one builder, so serving cannot drift from the
-    * oracle-gated search semantics. */
-  private[graft] def searchSegmentsFor(qs: DataFrame, path: String,
-                                       labelFiltered: Boolean,
-                                       applyDeletes: Boolean = true)
-      : DataFrame = {
-    val spark = qs.sparkSession
     val cents = readCents(spark, path)
     val cb = readCodebook(spark, path)
     // static partition filter: the DISTINCT probed cells of the query

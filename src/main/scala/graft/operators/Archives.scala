@@ -190,9 +190,7 @@ object Archives {
   def tarMemberRows(spark: SparkSession, dir: String)
       : Dataset[TarMemberRow] = tarMembersOf(tarMedia(spark, dir))
 
-  /** Member rows of ANY relation of tar blobs — the batch core the
-    * streaming ingest ([[graft.streaming.StreamingOps.tarIngestStream]])
-    * mirrors. */
+  /** Member rows of ANY relation of tar blobs. */
   def tarMembersOf(media: Dataset[MediaRow]): Dataset[TarMemberRow] = {
     val spark = media.sparkSession
     import spark.implicits._

@@ -69,8 +69,7 @@ object Dedup {
     shinglesOf(t(spark, dir, "documents"))
 
   /** 3-token shingle relation of an arbitrary (doc_id, text) frame —
-    * the [[docsWithShingles]] core, exposed so the streaming screen
-    * derives micro-batch shingles with EXACTLY the batch rule. */
+    * the [[docsWithShingles]] core. */
   def shinglesOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
       .where(size(col("toks")) >= 3)
@@ -400,49 +399,6 @@ object Dedup {
         "new_doc")
       .join(dsh.select(col("doc_id").as("base_doc"), col("sh").as("sh_b")),
         "base_doc")
-      .withColumn("ni", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .select(col("new_doc"), col("base_doc"),
-        round(col("ni").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("ni")), 6)
-          .as("jaccard"))
-  }
-
-  /** Precompute the curated BASE's screen artifacts once — banded
-    * signatures and distinct shingle sets — the persisted side of the
-    * production crawl-vs-base screen ([[screenAgainstBase]] and the
-    * streaming [[graft.streaming.StreamingOps.crossCorpusScreenStream]]
-    * consume them). At 100 TB these are the artifacts a real ingest
-    * keeps alongside the base corpus; every arriving snapshot pays
-    * crawl-side compute only. Caller persists both. */
-  def baseScreenArtifacts(baseDocs: DataFrame): (DataFrame, DataFrame) = {
-    val sh = shinglesOf(baseDocs)
-    (bandSignaturesFrom(sh)
-      .select(col("band").as("band_b"), col("sig").as("sig_b"),
-        col("doc_id").as("base_doc")),
-      sh.select(col("doc_id").as("base_doc"),
-        array_distinct(col("shingles")).as("sh_b")))
-  }
-
-  /** Screen an arriving crawl slice against precomputed base
-    * artifacts: crawl-side shingles + banded signatures (the same
-    * per-doc rule as the batch screen, so a doc signs identically
-    * whichever path it arrives on), candidate equi-join on
-    * (band, sig) — the crawl slice is the SMALL side, so AQE
-    * broadcasts it and the base relation streams map-side without a
-    * wide shuffle — then the exact-Jaccard verify on candidates
-    * only. */
-  def screenAgainstBase(crawlDocs: DataFrame, baseSig: DataFrame,
-                        baseSh: DataFrame): DataFrame = {
-    val sh = shinglesOf(crawlDocs)
-    val crawlSig = bandSignaturesFrom(sh)
-      .select(col("band"), col("sig"), col("doc_id").as("new_doc"))
-    val pairs = crawlSig.join(baseSig,
-        col("band") === col("band_b") && col("sig") === col("sig_b"))
-      .select(col("new_doc"), col("base_doc")).distinct()
-    pairs
-      .join(sh.select(col("doc_id").as("new_doc"),
-        array_distinct(col("shingles")).as("sh_a")), "new_doc")
-      .join(baseSh, "base_doc")
       .withColumn("ni", size(array_intersect(col("sh_a"), col("sh_b"))))
       .select(col("new_doc"), col("base_doc"),
         round(col("ni").cast("double") /

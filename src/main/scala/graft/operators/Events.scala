@@ -8,9 +8,7 @@ import graft.Tables.t
 
 /** Event-stream operators in their BATCH form (the oracle-checkable
   * side): tumbling-window aggregation, gap-based sessionization, JSON
-  * property extraction, filtered top-k. The same transforms run as
-  * Structured Streaming in [[graft.streaming.StreamingOps]] with
-  * watermarks; ScalaTest asserts streaming==batch equivalence.
+  * property extraction, filtered top-k.
   *
   * Time travels as epoch MICROSECONDS (unix_micros / epoch_us) so the
   * parquet ns-precision column compares exactly between Spark and
@@ -459,18 +457,14 @@ object Events {
         count(lit(1)).over(w).as("n_1h"))
   }
 
-  /** Per-type distinct-user cardinality, exact AND sketched — the
-    * BATCH MIRROR of [[graft.streaming.StreamingOps
-    * .runningDistinctUsers]] (whose final state equals exactly this
-    * aggregate), previously spec-gated only; the q_approx_distinct
-    * witness pattern puts it on the oracle board: estimates are
+  /** Per-type distinct-user cardinality, exact AND sketched; the
+    * q_approx_distinct witness pattern puts it on the oracle board: estimates are
     * engine-specific, so the row carries the EXACT count plus a
     * boolean asserting the HLL++ estimate landed within ±5% — the
     * driver's hash compare fails iff the sketch leaves its envelope.
     * Why the sketch matters at scale: the exact count shuffles every
     * distinct (type, user) pair; the sketch is a few KB per group
-    * forever and merges associatively — the same reason the streaming
-    * side can never be exact. */
+    * forever and merges associatively. */
   def evDistinctUsers(spark: SparkSession, dir: String): DataFrame =
     events(spark, dir)
       .groupBy(col("event_type"))

@@ -414,26 +414,7 @@ object KMeansQueries {
     u20 % MbMod == 0L
   }
 
-  /** One mini-batch blend step, shared by the batch rounds and the
-    * streaming updater ([[graft.streaming.StreamingOps
-    * .kmeansUpdateStream]]): assign `batch` (a (vec_id, v) frame) to
-    * the current centers, aggregate per-cluster (Σx, count) — ONE
-    * partial/final pair, k·d on the wire — and fold into the
-    * accumulated mass with 6dp quantization. Mutates `counts` in
-    * place, returns the blended centers; clusters the batch missed
-    * pass through untouched. */
-  def miniBatchRound(batch: DataFrame, cents: Array[Array[Double]],
-                     counts: Array[Long]): Array[Array[Double]] = {
-    val sums = KMeansOps.summarize(
-      KMeansOps.assignDyn(batch, "v", cents), "v", cents.head.length)
-      .collect()
-      .map(r => (r.getInt(0), (r.getSeq[Double](1).toArray, r.getLong(2))))
-      .toMap
-    blendRound(cents, counts, sums)
-  }
-
-  /** The mini-batch mass blend, shared by the DataFrame round (the
-    * streaming updater) and the kernel round (the batch query):
+  /** The mini-batch mass blend of one kernel round:
     * c ← round₆((c·n + Σ_B x)/(n + |B_c|)), `counts` mutated in
     * place, missed clusters pass through. */
   private[operators] def blendRound(cents: Array[Array[Double]],

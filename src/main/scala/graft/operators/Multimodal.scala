@@ -541,9 +541,7 @@ object Multimodal {
   def bmpMedia(spark: SparkSession, dir: String): Dataset[MediaRow] =
     bmpMediaOf(t(spark, dir, "documents"))
 
-  /** The BMP synthesis over ANY frame with a doc_id column (the
-    * streaming screen feeds micro-batches through the same column
-    * expression the batch corpus uses). */
+  /** The BMP synthesis over ANY frame with a doc_id column. */
   def bmpMediaOf(docs: DataFrame): Dataset[MediaRow] = {
     val spark2 = docs.sparkSession
     import spark2.implicits._
@@ -691,9 +689,8 @@ object Multimodal {
       .where(col("n_images") >= 2)
 
   /** The curated base's (geometry, hash) buckets as a PRECOMPUTED
-    * artifact — the [[graft.operators.Dedup.baseScreenArtifacts]]
-    * pattern for images: built once, the screen never re-reads the
-    * base corpus. */
+    * artifact: built once, the screen never re-reads the base
+    * corpus. */
   def imageBaseBuckets(baseDocs: DataFrame): DataFrame =
     imageHashes(bmpMediaOf(baseDocs))
       .groupBy(col("width").cast("long").as("width"),
@@ -1118,8 +1115,7 @@ object Multimodal {
   }
 
   /** The magic-dispatch decode core over ANY relation of mixed-format
-    * blobs — shared by [[mmDispatch]] and the streaming mirror
-    * ([[graft.streaming.StreamingOps.dispatchStream]]). */
+    * blobs, behind [[mmDispatch]]. */
   def dispatchDecode(media: Dataset[MediaRow]): Dataset[DispatchRow] = {
     val spark = media.sparkSession
     import spark.implicits._

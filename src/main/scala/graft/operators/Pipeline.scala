@@ -23,9 +23,8 @@ object Pipeline {
   val MaxStopRatio = 0.3
 
   /** THE quality/language gate — single definition consumed by
-    * [[pipelineFilter]], [[observedGate]] and the streaming
-    * [[graft.streaming.StreamingOps.curateDocs]], so the batch and
-    * streaming gates cannot drift: tokenize, derive n_tokens /
+    * [[pipelineFilter]] and [[observedGate]], so the two gates cannot
+    * drift: tokenize, derive n_tokens /
     * stop_ratio, keep docs with enough tokens, low stopword ratio and
     * lang = en. Entirely narrow (no shuffle). */
   def gate(docs: DataFrame): DataFrame =
@@ -631,8 +630,7 @@ object Pipeline {
   /** The deterministic robots.txt corpus over a (host) frame — media
     * hosts carry a [[RobotsBot]]-specific group, everything else only
     * the `*` group; comments, mixed-case directives and a Sitemap
-    * line exercise the parser. Shared by the batch gate and the
-    * streaming parity spec so both parse the SAME texts. */
+    * line exercise the parser. */
   def robotsFixture(hosts: DataFrame): DataFrame =
     hosts.select(col("host"),
         (col("host").startsWith("media.")).as("botGroup"),
@@ -1362,7 +1360,7 @@ object Pipeline {
   /** CLUSTERED REWRITE as a hash-checkable query — the OPTIMIZE
     * maintenance op ([[graft.sources.SnapshotTable.rewriteSorted]])
     * witnessed end to end: three append commits each spanning the full
-    * doc_id range (the streaming-lineage layout where min/max skipping
+    * doc_id range (the append-lineage layout where min/max skipping
     * prunes NOTHING), then the rewrite into 4 disjoint key-range sets.
     * The output pins (a) sets read by a narrow range query BEFORE
     * (all 3 — the degenerate layout) and AFTER (1 of 4 — the point of
@@ -1914,18 +1912,6 @@ object Pipeline {
     conv(substring(md5(concat(lit("dsir:"), col("tok"))), 1, 7), 16, 10)
       .cast("long") % DsirBuckets
 
-  /** Hashed-unigram (doc_id, bucket) relation of a (doc_id, text)
-    * frame — the DSIR feature map. */
-  private def dsirTokens(docs: DataFrame): DataFrame = docs
-    .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-    .select(col("doc_id"), dsirBucket.as("bucket"))
-
-  /** The [[DsirBuckets]]-row log-ratio artifact log(p_target/p_source)
-    * — what a production DSIR run PERSISTS per target domain; scoring
-    * (batch or streaming) only ever broadcasts this. */
-  def dsirRatio(sourceDocs: DataFrame, targetDocs: DataFrame): DataFrame =
-    dsirRatioFromTokens(dsirTokens(sourceDocs), dsirTokens(targetDocs))
-
   private def dsirRatioFromTokens(sTok: DataFrame,
                                   tTok: DataFrame): DataFrame = {
     // source buckets are the superset (target ⊆ corpus), so a LEFT
@@ -1942,12 +1928,6 @@ object Pipeline {
           log((col("c_s") + DsirAlpha) /
             (col("tot_s") + DsirAlpha * DsirBuckets))).as("lr"))
   }
-
-  /** Score any (doc_id, text) frame against a precomputed ratio
-    * artifact: one token explode + one (doc, bucket) agg + the 32-row
-    * broadcast join, then the bucket-sorted fold. */
-  def dsirScoreAgainst(batch: DataFrame, ratio: DataFrame): DataFrame =
-    dsirScoreFromTokens(dsirTokens(batch), ratio)
 
   private def dsirScoreFromTokens(tok: DataFrame,
                                   ratio: DataFrame): DataFrame =

@@ -542,8 +542,7 @@ object RelationalQueries {
     md5(concat(lit("cms:"), key.cast("string")))
 
   /** The D (d, bucket) probes for one key from its [[cmsHex]] digest —
-    * [[CmsD]] disjoint 8-hex-char (32-bit) windows of the one digest.
-    * Shared by the batch sketch and the streaming maintainer. */
+    * [[CmsD]] disjoint 8-hex-char (32-bit) windows of the one digest. */
   private[graft] def cmsBucketsFromHex(hex: Column): Column =
     array((0 until CmsD).map { d =>
       struct(lit(d).as("d"),

@@ -209,9 +209,8 @@ object TextAnalysis {
     qualityScoreTrainedOf(spark, t(spark, dir, "documents"))
 
   /** Score a (doc_id, text, lang) frame with a given weight vector —
-    * the stateless scoring projection shared by batch trained
-    * inference and the streaming scorer (narrow ops only, so it lifts
-    * to a streaming Dataset unchanged). */
+    * the stateless scoring projection of trained inference (narrow
+    * ops only). */
   private[graft] def scoreWithWeights(docs: DataFrame,
                                       w: Array[Double]): DataFrame = {
     val micros = w.indices.map(j =>
@@ -366,12 +365,9 @@ object TextAnalysis {
   }
 
   /** Stateless NB scoring of a (doc_id, text, lang) frame under a
-    * trained `(lp, stats)` model — shared by batch fit+predict and the
-    * streaming server (each micro-batch is a batch plan inside
-    * foreachBatch, so the same code serves both). The model joins are
-    * stream-safe: `lp` is keyed on the token (distributed hash join —
-    * the model is vocab-sized, never broadcast), `stats` is a 5-row
-    * broadcast. */
+    * trained `(lp, stats)` model — the predict half of fit+predict.
+    * `lp` is keyed on the token (distributed hash join — the model is
+    * vocab-sized, never broadcast), `stats` is a 5-row broadcast. */
   private[graft] def scoreWithNbModel(docs: DataFrame, lp: DataFrame,
                                       stats: DataFrame): DataFrame = {
     // SHUFFLE_HASH with the MODEL as build side, pinned by hint: left
@@ -1111,18 +1107,15 @@ object TextAnalysis {
     * whole trick. Versus [[textTfIdf]]: NO vocabulary exists anywhere
     * — no dictionary build, no vocab join, no fit step, so the
     * featurizer is a stateless narrow projection that never shuffles
-    * anything but the final (doc, bucket) aggregate and works
-    * identically on a stream. Hashes are the repo's standard
+    * anything but the final (doc, bucket) aggregate. Hashes are the repo's standard
     * domain-separated md5 windows, replayed verbatim by the oracle. */
   def textHashingVec(spark: SparkSession, dir: String): DataFrame =
     hashingVecOf(t(spark, dir, "documents"))
 
-  /** Core of [[textHashingVec]] over any (doc_id, text) frame — shared
-    * verbatim by batch and the streaming featurizer
-    * ([[graft.streaming.StreamingOps.hashingVecStream]]): the hashes
-    * are stateless per-token expressions and each document's buckets
-    * aggregate within its own row's tokens, so micro-batch boundaries
-    * cannot change any output row. */
+  /** Core of [[textHashingVec]] over any (doc_id, text) frame: the
+    * hashes are stateless per-token expressions and each document's
+    * buckets aggregate within its own row's tokens, so how the input
+    * is split cannot change any output row. */
   def hashingVecOf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))

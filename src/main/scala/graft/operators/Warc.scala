@@ -236,9 +236,7 @@ object Warc {
   final case class WarcInfo(doc_id: Long, n_members: Long,
                             total_bytes: Long, payload_sum: Long)
 
-  /** Per-file rollup of ANY relation of WARC blobs — the batch core
-    * the streaming ingest
-    * ([[graft.streaming.StreamingOps.warcIngestStream]]) mirrors. */
+  /** Per-file rollup of ANY relation of WARC blobs. */
   def warcInfoOf(media: Dataset[MediaRow]): Dataset[WarcInfo] = {
     val spark = media.sparkSession
     import spark.implicits._

@@ -2,14 +2,12 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 
-import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
+import org.apache.spark.sql.{Dataset, Row, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.{Dataset, Row, SaveMode}
-import org.apache.spark.sql.execution.streaming.{Offset => StreamingOffset, Source => StreamingSource}
-import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider, StreamSourceProvider}
+import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -46,8 +44,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * rows — the listing never touches data.
   */
 class SnapshotSource extends RelationProvider
-  with CreatableRelationProvider with DataSourceRegister
-  with StreamSourceProvider {
+  with CreatableRelationProvider with DataSourceRegister {
 
   override def shortName(): String = "graft-snapshot"
 
@@ -107,107 +104,6 @@ class SnapshotSource extends RelationProvider
     SnapshotSource.relationFor(spark, root, version,
       Option(opts.get("statsColumn")))
   }
-
-  // ----- STREAMING READ: the table's commit stream ---------------------
-  //
-  //   spark.readStream.format("graft-snapshot")
-  //     .option("startingVersion", 1)   // first version INCLUDED;
-  //                                     // omit → the full history
-  //     .load(root)
-  //
-  // Each micro-batch is exactly the rows APPENDED in a window of
-  // versions ((lastSeen, latest] — SnapshotTable.changes' semantics:
-  // an overwrite commit streams its own additions; MOR delete vectors
-  // are maintenance, not appends, and surface an EMPTY batch). The
-  // offset IS the version number — durable, replayable, and already
-  // atomic, so checkpoint recovery is exact: a restarted query re-reads
-  // precisely the uncommitted window. The incremental-pipeline entry
-  // point: downstream featurization/indexing keeps up with a 100 TB
-  // table by consuming version deltas, never re-scanning the corpus.
-
-  override def sourceSchema(sqlContext: SQLContext,
-                            schema: Option[StructType],
-                            providerName: String,
-                            parameters: Map[String, String]): (String, StructType) =
-    (shortName(), schema.getOrElse {
-      val root = parameters.getOrElse("path",
-        throw new IllegalArgumentException(
-          "graft-snapshot streaming requires a path: " +
-            "spark.readStream.format(\"graft-snapshot\").load(root)"))
-      val spark = sqlContext.sparkSession
-      val v = SnapshotTable.latestVersion(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"no versions published at $root — create the table before " +
-            "streaming its commits"))
-      SnapshotTable.read(spark, root, v).schema
-    })
-
-  override def createSource(sqlContext: SQLContext, metadataPath: String,
-                            schema: Option[StructType], providerName: String,
-                            parameters: Map[String, String]): StreamingSource = {
-    val root = parameters.getOrElse("path",
-      throw new IllegalArgumentException(
-        "graft-snapshot streaming requires a path"))
-    val starting = parameters.get("startingVersion").map(_.toInt).getOrElse(1)
-    new SnapshotCommitSource(sqlContext.sparkSession, root, starting,
-      sourceSchema(sqlContext, schema, providerName, parameters)._2)
-  }
-}
-
-/** The commit stream of one snapshot table as a Structured Streaming
-  * source. Offsets are published VERSION numbers ([[SnapshotTable]]'s
-  * atomic manifest renames), so progress tracking inherits the
-  * store's durability: no files-seen log to maintain (contrast
-  * FileStreamSource), no at-least-once tail — the version window in
-  * the checkpoint is the exact replay.
-  *
-  * Schema is pinned at stream start (the Structured Streaming
-  * contract); additively-evolved commits mid-stream are conformed to
-  * the pinned columns — a column born mid-stream becomes visible on
-  * restart, rows predating a pinned column null-fill, exactly like
-  * the batch read. */
-final class SnapshotCommitSource(spark: SparkSession, root: String,
-                                 startingVersion: Int,
-                                 override val schema: StructType)
-  extends StreamingSource {
-
-  import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedOffset}
-
-  // versions strictly BELOW this are never streamed
-  private val floor = math.max(startingVersion - 1, 0)
-
-  private def versionOf(o: StreamingOffset): Int = o match {
-    case LongOffset(v) => v.toInt
-    case so: SerializedOffset => LongOffset(so).offset.toInt
-    case other => throw new IllegalArgumentException(
-      s"unexpected offset type ${other.getClass.getName}")
-  }
-
-  override def getOffset: Option[StreamingOffset] =
-    SnapshotTable.latestVersion(spark, root)
-      .filter(_ > floor).map(v => LongOffset(v.toLong))
-
-  override def getBatch(start: Option[StreamingOffset],
-                        end: StreamingOffset): DataFrame = {
-    val from = start.map(versionOf).getOrElse(floor)
-    val to = versionOf(end)
-    val batch = SnapshotTable.changesOrEmpty(spark, root, from, to)
-      .getOrElse(SnapshotTable.read(spark, root, to).limit(0))
-    // conform to the pinned schema: pre-column rows null-fill (the
-    // batch read's additive-evolution rule), mid-stream columns wait
-    // for a restart. Re-flagged isStreaming=true (the v1 getBatch
-    // contract) — the plan stays lazy until the micro-batch runs.
-    import org.apache.spark.sql.functions.{col, lit}
-    org.apache.spark.sql.GraftSqlBridge.streamingFrame(
-      batch.select(schema.fields.toSeq.map { f =>
-        if (batch.columns.exists(_.equalsIgnoreCase(f.name))) col(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }: _*))
-  }
-
-  override def commit(end: StreamingOffset): Unit = ()
-
-  override def stop(): Unit = ()
 }
 
 object SnapshotSource {

@@ -192,25 +192,24 @@ object SnapshotTable {
     }
   }
 
-  /** EXACTLY-ONCE micro-batch commit — the streaming sink primitive
-    * ([[graft.streaming.StreamingOps.snapshotSinkStream]]): append
-    * `df` as the next version, keyed by the stream's `batchId` so an
-    * at-least-once REPLAY of the same micro-batch is a detected
-    * no-op instead of a duplicate version. The batch's identity
-    * rides in its data-dir NAME (`data/b<batchId>`), which the
-    * published manifest references — so "did this batch commit?" is
-    * answered by the same atomically-published metadata readers use,
-    * with no sidecar marker that could decouple from the commit
-    * point. Crash windows: after the data write but before the
-    * manifest rename → the dir is unreferenced debris, the replay
-    * REWRITES it (overwrite) and publishes; after the rename → the
-    * replay sees `data/b<batchId>` in the latest manifest and skips.
-    * Returns the version committed, or None for a detected replay.
-    * Contract: the streaming lineage must be the table's only
-    * APPEND writer — an interleaved `append = false` overwrite drops
-    * the manifest references replay detection reads (expire-style
-    * retention of old VERSIONS is fine; the latest manifest keeps
-    * every live batch dir). */
+  /** EXACTLY-ONCE batch commit: append `df` as the next version,
+    * keyed by the caller's `batchId` so an at-least-once REPLAY of
+    * the same batch is a detected no-op instead of a duplicate
+    * version. The batch's identity rides in its data-dir NAME
+    * (`data/b<batchId>`), which the published manifest references —
+    * so "did this batch commit?" is answered by the same
+    * atomically-published metadata readers use, with no sidecar
+    * marker that could decouple from the commit point. Crash
+    * windows: after the data write but before the manifest rename →
+    * the dir is unreferenced debris, the replay REWRITES it
+    * (overwrite) and publishes; after the rename → the replay sees
+    * `data/b<batchId>` in the latest manifest and skips. Returns the
+    * version committed, or None for a detected replay. Contract: the
+    * batch lineage must be the table's only APPEND writer — an
+    * interleaved `append = false` overwrite drops the manifest
+    * references replay detection reads (expire-style retention of
+    * old VERSIONS is fine; the latest manifest keeps every live
+    * batch dir). */
   def commitBatch(spark: SparkSession, root: String, df: DataFrame,
                   batchId: Long, statsKey: Option[String] = None)
       : Option[Int] = {
@@ -496,17 +495,7 @@ object SnapshotTable {
     * its "changes" are its own additions (the rewrite is a new
     * dataset, not a delta — same as Iceberg's replace snapshots). */
   def changes(spark: SparkSession, root: String, fromVersion: Int,
-              toVersion: Int): DataFrame =
-    changesOrEmpty(spark, root, fromVersion, toVersion).getOrElse(
-      throw new IllegalArgumentException(
-        s"no file sets added in ($fromVersion, $toVersion] at $root"))
-
-  /** [[changes]] tolerating an append-free window (delete-vector-only
-    * commits, compactions): None instead of an error — the shape the
-    * streaming commit reader needs, where an empty micro-batch is a
-    * normal event, not a bug. */
-  def changesOrEmpty(spark: SparkSession, root: String, fromVersion: Int,
-                     toVersion: Int): Option[DataFrame] = {
+              toVersion: Int): DataFrame = {
     require(fromVersion < toVersion,
       s"changes window must be ascending: ($fromVersion, $toVersion]")
     // changes() reports APPENDED rows; MOR delete vectors inside the
@@ -516,8 +505,10 @@ object SnapshotTable {
     val all = manifestEntries(spark, root, toVersion)
     val schema = all.filter(_.kind == "schema")
     val added = all.filter(e => e.addedIn > fromVersion && e.kind == "data")
-    if (added.isEmpty) None
-    else Some(unionSets(spark, root, added, schema))
+    if (added.isEmpty)
+      throw new IllegalArgumentException(
+        s"no file sets added in ($fromVersion, $toVersion] at $root")
+    unionSets(spark, root, added, schema)
   }
 
   /** A data-skipping read: the rows, plus how much of the manifest
@@ -780,8 +771,8 @@ object SnapshotTable {
     * matched rows in every OLDER set; the new set (also next) is NOT
     * older than the vector, so the replacement rows survive — the
     * strict `addedIn <` rule makes the pair atomic and ordered
-    * without any data rewrite. This is the write path a streaming
-    * CDC ingest uses against a 100 TB table: cost per batch is the
+    * without any data rewrite. This is the write path a CDC ingest
+    * uses against a 100 TB table: cost per batch is the
     * batch, never the table ([[merge]]'s COW rewrite is the
     * read-optimized alternative; [[materializeDeletes]] converts one
     * into the other). */
@@ -805,46 +796,6 @@ object SnapshotTable {
       manifestEntries(spark, root, base) :+ delEntry :+
         Entry(dataRel, next, nRows, minK, maxK, bloom))
     next
-  }
-
-  /** EXACTLY-ONCE MOR UPSERT — [[upsertMor]] under [[commitBatch]]'s
-    * replay rule, the streaming CDC sink primitive
-    * ([[graft.streaming.StreamingOps.morSinkStream]]): the batch
-    * identity rides in BOTH attempt dirs' names
-    * (`data/delb<id>` + `data/ub<id>`), so an at-least-once replay of
-    * the same micro-batch is detected from the same atomically-
-    * published manifest readers use and becomes a no-op instead of a
-    * duplicate delete/insert pair. Crash windows mirror commitBatch:
-    * data written but unpublished → the replay rewrites (overwrite)
-    * and publishes; published → skipped. Returns the committed
-    * version, or None for a detected replay. Same contract: the
-    * stream must be the table's only upsert writer, and
-    * [[materializeDeletes]] (which rewrites the batch-named dirs
-    * away) must only run at a point the stream's checkpoint already
-    * covers — the standard lakehouse maintenance/ingest fence. */
-  def upsertBatch(spark: SparkSession, root: String, updates: DataFrame,
-                  key: String, batchId: Long): Option[Int] = {
-    // bootstraps the table on the first batch (no prior version)
-    val prev = latestVersion(spark, root)
-    val prevEntries = prev.toSeq.flatMap(manifestEntries(spark, root, _))
-    val delRel = s"data/delb$batchId"
-    val dataRel = s"data/ub$batchId"
-    if (prevEntries.exists(e => e.dir == delRel || e.dir == dataRel)) None
-    else {
-      val next = prev.getOrElse(0) + 1
-      updates.select(col(key)).distinct().coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/$delRel")
-      val (dn, dMin, dMax, dBloom) = statsOf(spark, s"$root/$delRel", Some(key))
-      updates.write.mode("overwrite").parquet(s"$root/$dataRel")
-      val (nRows, minK, maxK, bloom) =
-        statsOf(spark, s"$root/$dataRel", Some(key))
-      publish(spark, root, next,
-        prevEntries :+
-          Entry(delRel, next, dn, dMin, dMax, dBloom, kind = "delete",
-            key2 = Some(key)) :+
-          Entry(dataRel, next, nRows, minK, maxK, bloom))
-      Some(next)
-    }
   }
 
   /** The keys deleted by MOR vectors in (fromVersion, toVersion] —
@@ -941,7 +892,7 @@ object SnapshotTable {
   /** COMPACT — rewrite the latest version's file sets into ONE set,
     * published as a new version (history stays readable; reclaim the
     * old sets later with [[expire]]). This is the maintenance answer
-    * to append/streaming lineages accumulating a file set per commit:
+    * to append lineages accumulating a file set per commit:
     * a manifest of thousands of sets costs a driver-side read per
     * query and defeats set-level skipping (each tiny set has a wide
     * key range). Stats are recomputed over the rewrite when
@@ -1020,7 +971,7 @@ object SnapshotTable {
     * names (Iceberg's binpack rewrite): rewrite ONLY the file sets at
     * or under `smallRows` rows into one set, carrying every larger
     * set by reference with stats and `added_in` lineage intact — the
-    * small-file problem is the tail of tiny streaming/append commits,
+    * small-file problem is the tail of tiny append commits,
     * and rewriting a 100 TB table's big healthy sets to fix it is the
     * bug. Fewer than two small sets → nothing to pack, NO new version
     * (returns the current one — a maintenance job that runs on a
@@ -1059,7 +1010,7 @@ object SnapshotTable {
     * (Delta `OPTIMIZE … ZORDER BY`, Iceberg's sort-based rewrite):
     * rewrite the latest version's live rows into `numSets` file sets
     * PARTITIONED BY DISJOINT KEY RANGES, so min/max set-skipping
-    * becomes selective again. Append/streaming lineages produce sets
+    * becomes selective again. Append lineages produce sets
     * that each span the whole key range (every commit carries a
     * cross-section of keys), which makes every range query read
     * every set — stats exist but prune nothing. After the rewrite a

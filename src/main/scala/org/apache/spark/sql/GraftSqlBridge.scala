@@ -68,15 +68,4 @@ object GraftSqlBridge {
     case cs: classic.SparkSession => cs.sessionUUID
     case other => System.identityHashCode(other).toString
   }
-
-  /** Re-flag a batch DataFrame as STREAMING (isStreaming=true) for a
-    * v1 `Source.getBatch` return — the engine asserts the flag, and
-    * `internalCreateDataFrame` is private[sql]. The plan stays lazy:
-    * `toRdd` is the physical RDD graph, executed only when the
-    * micro-batch runs. */
-  def streamingFrame(df: Dataset[_]): DataFrame = {
-    val cds = df.asInstanceOf[classic.Dataset[_]]
-    cds.sparkSession.internalCreateDataFrame(
-      cds.queryExecution.toRdd, cds.schema, isStreaming = true)
-  }
 }

@@ -161,6 +161,9 @@ class CliSpec extends SparkSessionSpec {
     val ok = Array("in", "4", "10", "out", "30", "0.001", "2")
     assert(KMeansCli.parseArgs(ok) == KMeansCli.Args("in", 4, 10, "out", 30, 0.001, 2))
     assert(KMeansCli.parseArgs(ok.updated(4, "0")).dim == 0)
+    // a negative or infinite epsilon keeps the reference's meaning
+    assert(KMeansCli.parseArgs(ok.updated(5, "-1")).eps == -1.0)
+    assert(KMeansCli.parseArgs(ok.updated(5, "Infinity")).eps.isPosInfinity)
     def failure(args: Array[String]): String =
       intercept[IllegalArgumentException](KMeansCli.parseArgs(args)).getMessage
     for ((i, v, msg) <- Seq(
@@ -170,11 +173,22 @@ class CliSpec extends SparkSessionSpec {
         (2, "0", "max_iter: must be >= 1, got 0"),
         (4, "-1", "dim: must be >= 0, got -1"),
         (5, "1e-3x", "epsilon: not a number: 1e-3x"),
+        (5, "NaN", "epsilon: not a number: NaN"),
         (6, "0", "num_reducer: must be >= 1, got 0"),
         (6, "-3", "num_reducer: must be >= 1, got -3"))) {
       assert(failure(ok.updated(i, v)) == s"$msg\n${KMeansCli.Usage}")
     }
     assert(failure(ok.take(6)) == s"expected 7 arguments, got 6\n${KMeansCli.Usage}")
+  }
+
+  test("a GRAFT_SEED that is not an integer fails like a bad argument") {
+    assert(KMeansCli.parseSeed(None) == 42L)
+    assert(KMeansCli.parseSeed(Some("7")) == 7L)
+    assert(KMeansCli.parseSeed(Some("-3")) == -3L)
+    for (v <- Seq("x", "1.5", "", " 7")) {
+      val e = intercept[IllegalArgumentException](KMeansCli.parseSeed(Some(v)))
+      assert(e.getMessage == s"GRAFT_SEED: not an integer: $v\n${KMeansCli.Usage}")
+    }
   }
 
   test("Session.get leaves an existing session's log level alone") {

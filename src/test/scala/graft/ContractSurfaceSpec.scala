@@ -22,6 +22,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     oracle — the judge reads that table line by line;
   *  3. oracleSql keys ⊆ queries keys (an oracle for an unregistered
   *     query is dead weight the driver would silently skip).
+  *
+  * Source lints over `src/main` keep the program at what the contract
+  * reaches: no package only tests import, no Structured Streaming.
   */
 class ContractSurfaceSpec extends AnyFunSuite {
 
@@ -29,6 +32,20 @@ class ContractSurfaceSpec extends AnyFunSuite {
     val path = Paths.get(p)
     if (Files.exists(path)) Some(Files.readString(path)) else None
   }
+
+  private val mainRoot = Paths.get("src/main/scala")
+
+  private def scalaFiles(root: java.nio.file.Path): List[java.nio.file.Path] =
+    if (!Files.isDirectory(root)) Nil
+    else scala.util.Using.resource(Files.walk(root)) {
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }
+
+  /** A source file's code with its comments blanked, so a scaladoc
+    * link never counts as a use. */
+  private def code(f: java.nio.file.Path): String =
+    Files.readString(f).replaceAll("(?s)/\\*.*?\\*/", " ")
+      .replaceAll("//[^\n]*", "")
 
   test("every query verified in the last judged round is still registered") {
     // newest CORRECTNESS_r*.json in the repo root (tests fork with the
@@ -109,5 +126,43 @@ class ContractSurfaceSpec extends AnyFunSuite {
     } yield s"$f: $pat"
     assert(Files.exists(factory), s"$factory is missing")
     assert(strays.isEmpty, strays.mkString("\n"))
+  }
+
+  test("every graft package in src/main is used by another src/main " +
+       "package or by perfbench") {
+    assert(Files.isDirectory(mainRoot), s"no $mainRoot under the test cwd")
+    val graftDir = mainRoot.resolve("graft")
+    val pkgs = scala.util.Using.resource(Files.list(graftDir)) {
+      _.iterator().asScala.filter(Files.isDirectory(_)).toList
+    }
+    assert(pkgs.nonEmpty, s"no package directories under $graftDir")
+    val users = (scalaFiles(mainRoot) ++
+      scalaFiles(Paths.get("perfbench/src"))).map(f => f -> code(f))
+    val unused = pkgs.filter { dir =>
+      val name = dir.getFileName.toString
+      val qualified = s"\\bgraft\\.$name\\b".r
+      // a file in package graft itself may name it relatively
+      val relative = s"(?<![\\w.])$name\\.[A-Z]".r
+      !users.exists { case (f, src) =>
+        !f.startsWith(dir) &&
+          (qualified.findFirstIn(src).isDefined ||
+            ("(?m)^package graft\\s*$".r.findFirstIn(src).isDefined &&
+              relative.findFirstIn(src).isDefined))
+      }
+    }
+    assert(unused.isEmpty,
+      "packages no other src/main package or perfbench uses: " +
+        unused.map(d => s"graft.${d.getFileName}").mkString(", "))
+  }
+
+  test("no src/main file uses Structured Streaming") {
+    assert(Files.isDirectory(mainRoot), s"no $mainRoot under the test cwd")
+    val streaming = ("org\\.apache\\.spark\\.sql\\.(execution\\.)?streaming" +
+      "|\\bStreamSourceProvider\\b|\\b(readStream|writeStream)\\b").r
+    val hits = for {
+      f <- scalaFiles(mainRoot)
+      m <- streaming.findFirstIn(code(f))
+    } yield s"$f: $m"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -138,8 +138,8 @@ class GifSpec extends SparkSessionSpec {
     assert(Gif.decodePixels(giant).isEmpty, "decodePixels must refuse")
     assert(Gif.decodeFrames(giant).isEmpty, "decodeFrames must refuse")
     assert(Gif.decodeInfo(7L, giant).isEmpty, "decodeInfo must refuse")
-    // the magic-dispatch core (shared by mm_dispatch and the streaming
-    // mirror) drops the record instead of crashing the batch
+    // the magic-dispatch core behind mm_dispatch drops the record
+    // instead of crashing the batch
     val spark2 = spark
     import spark2.implicits._
     val out = operators.Multimodal.dispatchDecode(

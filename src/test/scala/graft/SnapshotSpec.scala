@@ -580,7 +580,7 @@ class SnapshotSpec extends SparkSessionSpec {
     import org.apache.spark.sql.functions.col
     val root = tmpRoot()
     // three append commits, EACH spanning the whole key range
-    // (the streaming-lineage layout): every set overlaps every range
+    // (the append-lineage layout): every set overlaps every range
     (0 until 3).foreach { c =>
       SnapshotTable.commit(spark, root,
         (0L until 300L by 3L).map(k => (k + c, s"d${k + c}"))
@@ -695,31 +695,29 @@ class SnapshotSpec extends SparkSessionSpec {
       .forall(_._2.nonEmpty))
   }
 
-  test("upsertBatch crash windows: unpublished attempt dirs are " +
-       "rewritten by the replay; published batches no-op") {
+  test("commitBatch crash windows: a published batchId replays as a " +
+       "no-op; an unpublished data dir is rewritten by the replay") {
     val root = tmpRoot()
-    assert(SnapshotTable.upsertBatch(spark, root,
-      Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text"), "doc_id",
+    def liveIds() = SnapshotTable.readLatest(spark, root)
+      .select("doc_id").as[Long].collect().toSet
+    assert(SnapshotTable.commitBatch(spark, root,
+      Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text"),
       batchId = 0L).contains(1))
-    // crash window: batch 1 wrote BOTH attempt dirs but never
-    // published — the dirs are unreferenced debris carrying stale
-    // content; the replay must OVERWRITE them with its own rows
-    Seq(99L).toDF("doc_id").write.parquet(s"$root/data/delb1")
-    Seq((99L, "dead")).toDF("doc_id", "text")
-      .write.parquet(s"$root/data/ub1")
-    assert(SnapshotTable.upsertBatch(spark, root,
-      Seq((2L, "b2"), (3L, "c")).toDF("doc_id", "text"), "doc_id",
-      batchId = 1L).contains(2))
-    assert(SnapshotTable.readLatest(spark, root)
-      .as[(Long, String)].collect().toSet ==
-      Set((1L, "a"), (2L, "b2"), (3L, "c")),
-      "debris content must not leak into the committed batch")
-    // published: replaying batch 1 is a detected no-op
-    assert(SnapshotTable.upsertBatch(spark, root,
-      Seq((7L, "x")).toDF("doc_id", "text"), "doc_id",
-      batchId = 1L).isEmpty)
+    assert(SnapshotTable.commitBatch(spark, root,
+      Seq((3L, "c")).toDF("doc_id", "text"), batchId = 1L).contains(2))
+    // at-least-once replay: re-committing a batchId the manifest
+    // already references is a detected no-op
+    assert(SnapshotTable.commitBatch(spark, root,
+      Seq((9L, "x")).toDF("doc_id", "text"), batchId = 1L).isEmpty)
     assert(SnapshotTable.versions(spark, root) == Seq(1, 2))
-    assert(SnapshotTable.readLatest(spark, root).count() == 3)
+    assert(liveIds() == Set(1L, 2L, 3L))
+    // the other crash window: data dir written, manifest never
+    // published — the dir is unreferenced debris and the replay
+    // REWRITES it (its content, not the debris, is what commits)
+    Seq((98L, "dead")).toDF("doc_id", "text").write.parquet(s"$root/data/b2")
+    assert(SnapshotTable.commitBatch(spark, root,
+      Seq((4L, "d")).toDF("doc_id", "text"), batchId = 2L).contains(3))
+    assert(liveIds() == Set(1L, 2L, 3L, 4L))
   }
 
   test("time travel by timestamp resolves the latest version at or " +

@@ -187,56 +187,14 @@ class WarcSpec extends SparkSessionSpec {
         "</body></html>").contains("keep"))
   }
 
-  test("streaming crawl extraction equals the batch three-layer unwrap") {
-    implicit val sqlCtx = spark.sqlContext
+  test("text_html_extract recovers every document's text through the " +
+       "three-layer unwrap") {
     import spark.implicits._
-    import graft.streaming.StreamingOps
-    import graft.streaming.StreamingOps.SMedia
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-      .select("doc_id", "text").as[(Long, String)].collect()
-    val blobs = docs.map { case (id, text) =>
-      SMedia(id, Warc.encodeWarcHttp(id, text))
-    }
-    val mem = MemoryStream[SMedia]
-    val got = scala.collection.mutable.Set[(Long, String)]()
-    val q = StreamingOps.crawlExtractStream(mem.toDS()) { out =>
-      got ++= out.as[(Long, String)].collect()
-    }.start()
-    try {
-      val (a, b) = blobs.splitAt(blobs.length / 2)
-      for (chunk <- Seq(a, b)) {
-        mem.addData(chunk.toIndexedSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
-    // the extraction inverts the synthesis: streamed == plain text
-    assert(got.toSet == docs.toSet,
-      s"crawl extraction diverged: ${got.size} vs ${docs.length}")
-  }
-
-  test("streaming warc ingest equals the batch rollup across splits") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamingOps
-    import graft.streaming.StreamingOps.SMedia
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val blobs = Warc.warcMedia(spark, sf0001).collect()
-      .map(m => SMedia(m.doc_id, m.blob))
-    val mem = MemoryStream[SMedia]
-    val got = scala.collection.mutable.Set[(Long, Long, Long, Long)]()
-    val q = StreamingOps.warcIngestStream(mem.toDS()) { out =>
-      got ++= out.as[(Long, Long, Long, Long)].collect()
-    }.start()
-    try {
-      val (a, rest) = blobs.splitAt(blobs.length / 3)
-      val (b, c) = rest.splitAt(rest.length / 2)
-      for (chunk <- Seq(a, b, c)) {
-        mem.addData(chunk.toIndexedSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val batch = Warc.mmWarc(spark, sf0001)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(got.toSet == batch,
-      s"warc ingest diverged: ${got.size} streamed vs ${batch.size} batch")
+      .select("doc_id", "text").as[(Long, String)].collect().toSet
+    val got = Warc.textHtmlExtract(spark, sf0001)
+      .as[(Long, String)].collect()
+    // one row per document, each the plain text the synthesis wrapped
+    assert(got.length == docs.size && got.toSet == docs)
   }
 }

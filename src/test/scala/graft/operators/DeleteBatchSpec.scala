@@ -6,8 +6,8 @@ import graft.SparkSessionSpec
 
 /** Direct lifecycle tests for [[AnnIndex.appendDeleteBatch]] — the
   * crash-shaped states the AnnTiers round-trip can't easily reach:
-  * torn legacy migrations, crashed-compaction debris, stream-id
-  * collisions, and the auto-fold bound on batch growth. */
+  * torn legacy migrations, low-id batch collisions, and the auto-fold
+  * bound on batch growth. */
 class DeleteBatchSpec extends SparkSessionSpec {
   import spark.implicits._
 
@@ -90,29 +90,6 @@ class DeleteBatchSpec extends SparkSessionSpec {
     append(root, 8L)
     assert(!fs.listStatus(p(root, "deletes")).exists(_.isFile))
     assert(tombstoneSet(root) == Set(7L, 8L))
-  }
-
-  test("append on a root with crashed-compaction debris recovers " +
-       "first — the batch lands visible, never in dead debris") {
-    val root = freshRoot()
-    // a compaction swap that died after folding deletes into codes/
-    // but before dropping the debris: flag set, dead deletes/ on disk
-    Seq(0L).toDF("vec_id").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/codes")
-    Seq(99L).toDF("vec_id").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/deletes")
-    fs.create(p(root, s"codes/${AnnIndex.CompactedFlag}")).close()
-    assert(!AnnIndex.segmentAvailable(spark, root, "deletes"),
-      "precondition: the debris tombstones are dead to readers")
-
-    append(root, 5L)
-    assert(!AnnIndex.compactionPending(spark, root),
-      "the append must finish the crashed compaction")
-    assert(AnnIndex.segmentAvailable(spark, root, "deletes"),
-      "the new batch must be VISIBLE — landing it under a standing " +
-        "CompactedFlag would silently lose the delete")
-    assert(tombstoneSet(root) == Set(5L),
-      "debris folded by the crashed compaction must not resurrect")
   }
 
   test("maintenance ids live above the stream id range: a resumed " +
