@@ -1,1029 +1,74 @@
 package graft
 
-import java.sql.Timestamp
+import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.Events
-import graft.streaming.StreamingOps
-import graft.streaming.StreamingOps.SEvent
+import graft.StreamingSpec._
 
-/** Streaming==batch equivalence: the Structured Streaming operators must
-  * produce exactly the batch results on the same (replayed) input. */
+/** Micro-batch split invariance of the stateless batch operators: each
+  * case feeds a MemoryStream in uneven micro-batches, applies a batch
+  * operator to every micro-batch (inside foreachBatch, or directly on
+  * the streaming frame when the operator is narrow), and asserts that
+  * the union equals one batch call over the whole input. The library
+  * itself has no streaming layer; these pin that its per-row operators
+  * carry no hidden dependence on how the input is partitioned. */
 class StreamingSpec extends SparkSessionSpec {
   import spark.implicits._
 
-  private lazy val batchEvents: Seq[SEvent] =
-    Events.events(spark, sf0001)
-      .select(col("event_id"), col("ts_us"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[(Long, Long, Long, String, Double)]
-      .collect()
-      .map { case (id, tsUs, uid, et, v) =>
-        SEvent(id, new Timestamp(tsUs / 1000), tsUs, uid, et, v)
-      }.toSeq
-
-  private def maxUs = batchEvents.map(_.ts_us).max
-
-  private def sentinel(offsetUs: Long) =
-    SEvent(-1L, new Timestamp((maxUs + offsetUs) / 1000), maxUs + offsetUs,
-      -1L, "sentinel", 0.0)
-
-  test("streaming hourlyAgg equals batch evHourly once windows close") {
+  /** Feeds each chunk to a MemoryStream as one micro-batch, runs `op` on
+    * every micro-batch, and returns the union of its output rows. */
+  private def perMicroBatch[T: Encoder, R](chunks: Seq[Seq[T]])
+      (op: Dataset[T] => Dataset[R]): Seq[R] = {
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.hourlyAgg(mem.toDF())
-      .writeStream.format("memory").queryName("hourly")
-      .outputMode("append").start()
-    try {
-      mem.addData(batchEvents)
-      q.processAllAvailable()
-      mem.addData(sentinel(3L * 3600 * 1000 * 1000)) // advance watermark
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("hourly")
-      .where(col("event_type") =!= "sentinel")
-      .as[(Long, String, Long, Double)].collect().toSet
-    val batch = Events.evHourly(spark, sf0001)
-      .as[(Long, String, Long, Double)].collect().toSet
-    assert(streamed == batch)
+    val mem = MemoryStream[T]
+    val got = ArrayBuffer[R]()
+    val q = mem.toDS().writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: Dataset[T], _: Long) =>
+        got ++= op(batch).collect()
+        ()
+      }.start()
+    try chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
+    finally q.stop()
+    got.toSeq
   }
 
-  test("streaming HLL distinct users equals batch sketch, within 5% of exact") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.runningDistinctUsers(mem.toDF())
-      .writeStream.format("memory").queryName("hll_users")
-      .outputMode("complete").start()
-    try {
-      // two micro-batches: the estimate must come from MERGED sketches
-      val (a, b) = batchEvents.splitAt(batchEvents.length / 2)
-      mem.addData(a)
-      q.processAllAvailable()
-      mem.addData(b)
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("hll_users")
-      .as[(String, Long)].collect().toMap
-    val src = batchEvents.toDF()
-    val batch = StreamingOps.runningDistinctUsers(src)
-      .as[(String, Long)].collect().toMap
-    assert(streamed == batch,
-      "micro-batch-merged sketch must equal the one-shot sketch")
-    val exact = src.groupBy(col("event_type"))
-      .agg(countDistinct(col("user_id")).as("n"))
-      .as[(String, Long)].collect().toMap
-    exact.foreach { case (k, n) =>
-      assert(math.abs(streamed(k) - n).toDouble / n < 0.05,
-        s"$k: ${streamed(k)} vs exact $n")
-    }
+  /** Splits `xs` into three uneven chunks: the first `1/first` of it,
+    * then the first `1/second` of the rest, then the remainder. */
+  private def threeWay[T](xs: Seq[T], first: Int, second: Int): Seq[Seq[T]] = {
+    val (a, rest) = xs.splitAt(xs.length / first)
+    val (b, c) = rest.splitAt(rest.length / second)
+    Seq(a, b, c)
   }
 
-  test("streaming sessionize equals batch evSessionize after timeout flush") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.sessionize(mem.toDS())
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("append").start()
-    try {
-      mem.addData(batchEvents)
-      q.processAllAvailable()
-      // two extra batches: watermark advances after the batch that read
-      // the sentinel, timeouts fire in the one after
-      mem.addData(sentinel(24L * 3600 * 1000 * 1000))
-      q.processAllAvailable()
-      mem.addData(sentinel(25L * 3600 * 1000 * 1000))
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("sessions")
-      .where(col("user_id") >= 0)
-      .select("user_id", "session_id", "n_events", "start_us", "end_us",
-        "duration_us")
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
-    val batch = Events.evSessionize(spark, sf0001)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
-    assert(streamed == batch)
-  }
-
-  test("streaming dedupById drops in-batch duplicates") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.dedupById(mem.toDF())
-      .writeStream.format("memory").queryName("deduped")
-      .outputMode("append").start()
-    try {
-      val dupes = batchEvents.take(50)
-      mem.addData(batchEvents ++ dupes)
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(spark.table("deduped").count() == batchEvents.size)
-  }
-
-  test("streaming as-of join equals batch evAsof") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.asofClicks(mem.toDS())
-      .writeStream.format("memory").queryName("asof")
-      .outputMode("append").start()
-    try {
-      // two in-order batches: state must carry clicks across batches
-      val (b1, b2) = batchEvents.sortBy(e => (e.ts_us, e.event_id))
-        .splitAt(batchEvents.size / 2)
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("asof")
-      .select("user_id", "event_id", "ts_us", "last_click_us")
-      .as[(Long, Long, Long, Option[Long])].collect().toSet
-    val batch = Events.evAsof(spark, sf0001)
-      .as[(Long, Long, Long, Option[Long])].collect().toSet
-    assert(batch.nonEmpty && streamed == batch)
-  }
-
-  test("stream-stream interval join equals the batch range-join pairs") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.recentClickPairs(mem.toDF())
-      .writeStream.format("memory").queryName("clickpairs")
-      .outputMode("append").start()
-    try {
-      mem.addData(batchEvents)
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("clickpairs")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val h = StreamingOps.HourUs
-    val clicks = batchEvents.filter(_.event_type == "click")
-    val expected = (for {
-      p <- batchEvents.filter(_.event_type == "purchase")
-      c <- clicks
-      if c.user_id == p.user_id &&
-        c.ts_us >= p.ts_us - h && c.ts_us < p.ts_us
-    } yield (p.user_id, p.event_id, p.ts_us, c.ts_us)).toSet
-    assert(expected.nonEmpty && streamed == expected)
-  }
-
-  test("stream-stream LEFT OUTER interval join equals the batch left-outer pairs") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.recentClickPairsOuter(mem.toDF())
-      .writeStream.format("memory").queryName("clickpairs_outer")
-      .outputMode("append").start()
-    val h = StreamingOps.HourUs
-    // far-future click+purchase sentinels advance BOTH sides' watermarks
-    // so real unmatched purchases can be proven matchless and flush
-    def wmSentinels(offsetUs: Long): Seq[SEvent] = Seq(
-      sentinel(offsetUs).copy(event_type = "click"),
-      sentinel(offsetUs).copy(event_type = "purchase"))
-    try {
-      mem.addData(batchEvents)
-      q.processAllAvailable()
-      mem.addData(wmSentinels(4L * h))
-      q.processAllAvailable()
-      mem.addData(wmSentinels(8L * h))
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("clickpairs_outer")
-      .where(col("user_id") >= 0)
-      .as[(Long, Long, Long, Option[Long])].collect().toSet
-    val clicks = batchEvents.filter(_.event_type == "click")
-    val expected = batchEvents.filter(_.event_type == "purchase").flatMap { p =>
-      val matches = clicks.filter(c => c.user_id == p.user_id &&
-        c.ts_us >= p.ts_us - h && c.ts_us < p.ts_us)
-      if (matches.isEmpty) Seq((p.user_id, p.event_id, p.ts_us, None))
-      else matches.map(c => (p.user_id, p.event_id, p.ts_us, Some(c.ts_us)))
-    }.toSet
-    assert(expected.exists(_._4.isEmpty), "fixture must contain unmatched purchases")
-    assert(streamed == expected)
-  }
-
-  test("outer-join null row emits only after the watermark passes the horizon") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.recentClickPairsOuter(mem.toDF())
-      .writeStream.format("memory").queryName("clickpairs_outer_timing")
-      .outputMode("append").start()
-    val h = StreamingOps.HourUs
-    val t0 = 1700000000000000L
-    def ev(id: Long, us: Long, et: String) =
-      SEvent(id, new Timestamp(us / 1000), us, 1L, et, 1.0)
-    try {
-      // one clickless purchase: no output until the watermark passes
-      mem.addData(Seq(ev(10L, t0, "purchase")))
-      q.processAllAvailable()
-      assert(spark.table("clickpairs_outer_timing").count() == 0,
-        "unmatched purchase must NOT emit before the watermark passes")
-      // push both watermarks far past the purchase's join horizon; the
-      // sentinel pair shares a timestamp so the strict c_ts_us < ts_us
-      // window keeps them from matching each other
-      mem.addData(Seq(ev(-2L, t0 + 6 * h, "click"), ev(-3L, t0 + 6 * h, "purchase")))
-      q.processAllAvailable()
-      mem.addData(Seq(ev(-4L, t0 + 12 * h, "click"), ev(-5L, t0 + 12 * h, "purchase")))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("clickpairs_outer_timing")
-      .where(col("event_id") === 10L)
-      .as[(Long, Long, Long, Option[Long])].collect().toSeq
-    assert(rows == Seq((1L, 10L, t0, None)),
-      "the null-extended row must surface once the watermark passes")
-  }
-
-  test("streaming funnel conversion counts equal batch evFunnel") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.funnel(mem.toDS())
-      .writeStream.format("memory").queryName("funnel")
-      .outputMode("append").start()
-    try {
-      val (b1, b2) = batchEvents.sortBy(e => (e.ts_us, e.event_id))
-        .splitAt(batchEvents.size / 2)
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("funnel")
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_purchases"),
-        count(when(col("converted"), 1)).as("n_converted"))
-      .as[(Long, Long, Long)].collect().toSet
-    val batch = Events.evFunnel(spark, sf0001)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(batch.nonEmpty && streamed == batch)
-  }
-
-  test("streaming windowed funnel equals batch evFunnelWindowed") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.funnelWindowed(mem.toDS())
-      .writeStream.format("memory").queryName("funnel_w")
-      .outputMode("append").start()
-    try {
-      val (b1, b2) = batchEvents.sortBy(e => (e.ts_us, e.event_id))
-        .splitAt(batchEvents.size / 2)
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("funnel_w")
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_purchases"),
-        count(when(col("converted"), 1)).as("n_converted_1d"))
-      .as[(Long, Long, Long)].collect().toSet
-    val batch = Events.evFunnelWindowed(spark, sf0001)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(batch.nonEmpty && streamed == batch)
-    // the bound must BIND on this data: strictly fewer conversions
-    // than the unbounded funnel
-    val unb = Events.evFunnel(spark, sf0001)
-      .agg(sum(col("n_converted"))).as[Long].collect()(0)
-    val bnd = streamed.toSeq.map(_._3).sum
-    assert(bnd < unb, s"bound did not bind: $bnd vs $unb")
-  }
-
-  // ---- late-data semantics: watermark behavior asserted by OBSERVATION
-  // (an event older than the advanced watermark must be dropped, not
-  // merged), not just by construction ----
-
-  private val lateT0 = 1600000000L * 1000000L // epoch µs
-  private def lateEv(id: Long, us: Long, uid: Long = 1L,
-                     et: String = "click") =
-    SEvent(id, new Timestamp(us / 1000), us, uid, et, 1.0)
-  private val HourUs = 3600L * 1000000L
-
-  test("hourlyAgg drops an event older than the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.hourlyAgg(mem.toDF())
-      .writeStream.format("memory").queryName("late_hourly")
-      .outputMode("append").start()
-    try {
-      mem.addData(lateEv(1, lateT0))
-      q.processAllAvailable()
-      mem.addData(lateEv(2, lateT0 + 5 * HourUs)) // watermark → t0+4h
-      q.processAllAvailable()
-      // t0's window has closed and emitted; this event lands inside it
-      // but BELOW the watermark — it must be discarded entirely
-      mem.addData(lateEv(3, lateT0 + 1000))
-      q.processAllAvailable()
-      mem.addData(lateEv(4, lateT0 + 7 * HourUs)) // flush anything pending
-      q.processAllAvailable()
-    } finally q.stop()
-    val t0Hour = lateT0 - lateT0 % HourUs
-    val rows = spark.table("late_hourly")
-      .where(col("hour_us") === t0Hour)
-      .as[(Long, String, Long, Double)].collect()
-    assert(rows.length == 1, s"expected one closed window row, got ${rows.toSeq}")
-    assert(rows.head._3 == 1L, s"late event was merged: ${rows.head}")
-  }
-
-  test("dedupById drops late arrivals (dup and new) below the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.dedupById(mem.toDF())
-      .writeStream.format("memory").queryName("late_dedup")
-      .outputMode("append").start()
-    try {
-      mem.addData(lateEv(1, lateT0))
-      q.processAllAvailable()
-      mem.addData(lateEv(2, lateT0 + 5 * HourUs)) // watermark → t0+4h
-      q.processAllAvailable()
-      // both below the watermark now: a replay of id 1 (its dedup state
-      // may already be expired) and a NEVER-seen id 3 — both must be
-      // dropped, not emitted
-      mem.addData(lateEv(1, lateT0), lateEv(3, lateT0 + 2000))
-      q.processAllAvailable()
-    } finally q.stop()
-    val ids = spark.table("late_dedup")
-      .select("event_id").as[Long].collect().toSet
-    assert(ids == Set(1L, 2L), s"late rows leaked: $ids")
-  }
-
-  test("sessionize emits by TIMEOUT and a late event cannot reopen it") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.sessionize(mem.toDS())
-      .writeStream.format("memory").queryName("late_sess")
-      .outputMode("append").start()
-    val u = 42L
-    def userRows() = spark.table("late_sess")
-      .where(col("user_id") === u)
-      .select("n_events", "start_us", "end_us")
-      .as[(Long, Long, Long)].collect().toSeq
-    try {
-      mem.addData(lateEv(1, lateT0, u), lateEv(2, lateT0 + 10 * 60 * 1000000L, u))
-      q.processAllAvailable()
-      assert(userRows().isEmpty, "session emitted before timeout")
-      // another user's events advance the watermark past end + gap; the
-      // user-42 session must flush purely by event-time TIMEOUT
-      mem.addData(lateEv(3, lateT0 + 5 * HourUs, 7L))
-      q.processAllAvailable()
-      mem.addData(lateEv(4, lateT0 + 6 * HourUs, 7L))
-      q.processAllAvailable()
-      assert(userRows() == Seq((2L, lateT0, lateT0 + 10 * 60 * 1000000L)),
-        s"timeout emission wrong: ${userRows()}")
-      // a late user-42 event inside the closed session (below watermark)
-      // must be dropped — no reopened or duplicate session
-      mem.addData(lateEv(5, lateT0 + 20 * 60 * 1000000L, u))
-      q.processAllAvailable()
-      mem.addData(lateEv(6, lateT0 + 8 * HourUs, 7L))
-      q.processAllAvailable()
-      mem.addData(lateEv(7, lateT0 + 9 * HourUs, 7L))
-      q.processAllAvailable()
-      assert(userRows() == Seq((2L, lateT0, lateT0 + 10 * 60 * 1000000L)),
-        s"late event reopened the session: ${userRows()}")
-    } finally q.stop()
-  }
-
-  test("StreamingKMeans converges to blob centers over micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val rnd = new scala.util.Random(21)
-    val blobs = Seq(Array(0.0, 0.0), Array(40.0, 0.0), Array(0.0, 40.0))
-    def batch(n: Int): Seq[Seq[Double]] = (0 until n).map { i =>
-      val c = blobs(i % 3)
-      Seq(c(0) + rnd.nextGaussian(), c(1) + rnd.nextGaussian())
-    }
-    // init near (but not at) the blob centers: streaming k-means refines
-    val init = Array(Array(3.0, 3.0), Array(35.0, 5.0), Array(5.0, 35.0))
-    val skm = new graft.streaming.StreamingKMeans(3, decay = 0.9, init)
-    val mem = MemoryStream[Seq[Double]]
-    val q = skm.fit(mem.toDF().withColumnRenamed("value", "v"), "v")
-    try {
-      (0 until 5).foreach { _ =>
-        mem.addData(batch(300))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val st = skm.current
-    assert(st.batches == 5L)
-    blobs.foreach { b =>
-      val best = st.centroids.map(c =>
-        math.hypot(c(0) - b(0), c(1) - b(1))).min
-      assert(best < 0.5,
-        s"blob ${b.toSeq} unmatched: ${st.centroids.map(_.toSeq).toSeq}")
-    }
-    assert(st.weights.forall(_ > 0))
-  }
-
-  test("streaming runningTopKPerUser converges to the batch per-user top-k") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.expressions.Window
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.runningTopKPerUser(mem.toDS(), 3)
-      .writeStream.format("memory").queryName("topkstream")
-      .outputMode("update").start()
-    try {
-      // two chunks so the bounded heap must merge state across batches
-      val (a, b) = batchEvents.splitAt(batchEvents.size / 2)
-      mem.addData(a)
-      q.processAllAvailable()
-      mem.addData(b)
-      q.processAllAvailable()
-    } finally q.stop()
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("value").desc, col("event_id"))
-    // every final top-k element was emitted in the batch it entered
-    // state, and any emitted-then-evicted row ranks below all final
-    // survivors — so top-k over distinct emissions = the final state
-    val streamed = spark.table("topkstream").distinct()
-      .withColumn("rn", row_number().over(w)).where(col("rn") <= 3)
-      .select(col("user_id"), col("event_id"), col("value"))
-      .as[(Long, Long, Double)].collect().toSet
-    val batch = Events.events(spark, sf0001)
-      .withColumn("rn", row_number().over(w)).where(col("rn") <= 3)
-      .select(col("user_id"), col("event_id"), col("value"))
-      .as[(Long, Long, Double)].collect().toSet
-    assert(streamed == batch && streamed.nonEmpty)
-  }
-
-  test("streaming curateDocs equals the batch gate set and drops re-ingested dups") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingOps.SDoc
-    val docs = graft.Tables.t(spark, sf0001, "documents")
+  private def docsQ: DataFrame =
+    spark.read.parquet(s"$sf0001/documents.parquet")
       .select(col("doc_id"), col("text"), col("lang"))
-      .as[(Long, String, String)].collect()
-    val t0 = 1700000000000L
-    val sdocs = docs.map { case (id, tx, lg) =>
-      SDoc(new Timestamp(t0 + id), id, tx, lg) }.toSeq
-    val mem = MemoryStream[SDoc]
-    val q = StreamingOps.curateDocs(mem.toDS())
-      .writeStream.format("memory").queryName("curated")
-      .outputMode("append").start()
-    try {
-      mem.addData(sdocs)
-      q.processAllAvailable()
-      // re-ingest copies of the first 5 docs under NEW ids, still
-      // inside the watermark — the content-hash state must drop them
-      mem.addData(sdocs.take(5).map(d =>
-        d.copy(doc_id = d.doc_id + 1000000, ts = new Timestamp(t0 + 999))))
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("curated")
-      .as[(Long, Int)].collect().map(_._1).toSet
-    // batch expectation: the corpus has no duplicate texts, so the
-    // batch gate+dedup survivor set is exactly the gated set
-    val batch = graft.Tables.t(spark, sf0001, "documents")
-      .withColumn("toks", split(col("text"), " "))
-      .withColumn("n_tokens", size(col("toks")))
-      .where(col("n_tokens") >= graft.operators.Pipeline.MinTokens &&
-        size(filter(col("toks"), x =>
-          x.isInCollection(graft.operators.TextAnalysis.Stopwords)))
-          .cast("double") / col("n_tokens")
-          <= graft.operators.Pipeline.MaxStopRatio &&
-        col("lang") === "en")
-      .select(col("doc_id")).as[Long].collect().toSet
-    assert(streamed == batch && streamed.nonEmpty,
-      s"streamed ${streamed.size} vs batch ${batch.size}")
-    assert(!streamed.exists(_ >= 1000000L), "re-ingested dup leaked through")
-  }
 
-  test("hot key: one user carrying 50% of events keeps state O(users) " +
-       "and stateful results exact") {
-    // the streaming twin of the batch q_skew_join gate: a crafted
-    // stream where user 7 owns 1000 of 2000 events (50%) and twenty
-    // cold users own 50 each. A stateful op whose state grew with
-    // EVENTS instead of KEYS would hold ~2000 state rows here; the
-    // assertion pins it at O(distinct users).
-    implicit val sqlCtx = spark.sqlContext
-    val base = 1_000_000_000_000_000L
-    def ev(uid: Long, i: Int) = {
-      val us = base + i * 60_000_000L // 60 s apart: inside the session gap
-      SEvent(uid * 10000 + i, new Timestamp(us / 1000), us, uid, "click", 1.0)
-    }
-    val hot = (0 until 1000).map(ev(7L, _))
-    val cold = for (u <- 100L until 120L; i <- 0 until 50) yield ev(u, i)
-    val all = (hot ++ cold).sortBy(_.ts_us)
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.sessionize(mem.toDS())
-      .writeStream.format("memory").queryName("hotkey_sessions")
-      .outputMode("append").start()
-    try {
-      // three ts-ordered micro-batches so the hot user's state carries
-      // across batches, then two sentinels to flush by timeout
-      all.grouped((all.size + 2) / 3).foreach { chunk =>
-        mem.addData(chunk); q.processAllAvailable()
-      }
-      mem.addData(sentinel(48L * 3600 * 1000 * 1000)); q.processAllAvailable()
-      mem.addData(sentinel(49L * 3600 * 1000 * 1000)); q.processAllAvailable()
-      // state never scales with the hot key's event count: ≤ one row
-      // per distinct user (21 + the sentinel user), not ~2000
-      val maxState = q.recentProgress
-        .flatMap(p => Option(p.stateOperators).toSeq.flatten)
-        .map(_.numRowsTotal).max
-      assert(maxState <= 25,
-        s"state rows $maxState must stay O(users) under a 50% hot key")
-    } finally q.stop()
-    val sessions = spark.table("hotkey_sessions")
-      .where(col("user_id") >= 0)
-      .select("user_id", "n_events", "duration_us")
-      .as[(Long, Long, Long)].collect().toSet
-    // every user closes exactly ONE session with all its events —
-    // the hot key's 1000 events landed in one state row, intact
-    val expect = Set((7L, 1000L, 999L * 60_000_000L)) ++
-      (100L until 120L).map(u => (u, 50L, 49L * 60_000_000L))
-    assert(sessions == expect)
-    // the running-counts op under the same skew: exact totals
-    val mem2 = MemoryStream[SEvent]
-    val q2 = StreamingOps.runningUserCounts(mem2.toDS())
-      .toDF("user_id", "n")
-      .writeStream.format("memory").queryName("hotkey_counts")
-      .outputMode("update").start()
-    try {
-      all.grouped((all.size + 2) / 3).foreach { chunk =>
-        mem2.addData(chunk); q2.processAllAvailable()
-      }
-      val maxState2 = q2.recentProgress
-        .flatMap(p => Option(p.stateOperators).toSeq.flatten)
-        .map(_.numRowsTotal).max
-      assert(maxState2 <= 21,
-        s"counts state rows $maxState2 must stay O(users)")
-    } finally q2.stop()
-    val counts = spark.table("hotkey_counts")
-      .groupBy("user_id").agg(max("n").as("n"))
-      .as[(Long, Long)].collect().toSet
-    assert(counts == Set((7L, 1000L)) ++
-      (100L until 120L).map(u => (u, 50L)))
-  }
-
-  test("runningUserCounts final state equals batch per-user counts") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.runningUserCounts(mem.toDS())
-      .toDF("user_id", "n")
-      .writeStream.format("memory").queryName("usercounts")
-      .outputMode("update").start()
-    try {
-      mem.addData(batchEvents)
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("usercounts")
-      .groupBy("user_id").agg(max("n").as("n"))
-      .as[(Long, Long)].collect().toSet
-    val batch = Events.events(spark, sf0001)
-      .groupBy("user_id").count().as[(Long, Long)].collect().toSet
-    assert(streamed == batch)
-  }
-
-  test("cmsCellsStream final cells equal the batch count-min sketch") {
-    implicit val sqlCtx = spark.sqlContext
-    val keys = spark.read.parquet(s"$sf0001/lineitem.parquet")
-      .select(col("l_suppkey").cast("long")).as[Long].collect()
-    val mem = MemoryStream[Long]
-    val q = StreamingOps.cmsCellsStream(mem.toDS())
-      .toDF("d", "bucket", "n")
-      .writeStream.format("memory").queryName("cmscells")
-      .outputMode("update").start()
-    try {
-      val (a, b) = keys.splitAt(keys.length / 2)
-      mem.addData(a.toSeq); q.processAllAvailable()
-      mem.addData(b.toSeq); q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("cmscells")
-      .groupBy("d", "bucket").agg(max("n").as("n"))
-      .as[(Int, Long, Long)].collect().toSet
-    val batch = keys.toSeq.toDF("key")
-      .select(explode(operators.RelationalQueries.cmsBuckets(col("key")))
-        .as("h"))
-      .groupBy(col("h.d").as("d"), col("h.bucket").as("bucket"))
-      .agg(count(lit(1)).as("n"))
-      .as[(Int, Long, Long)].collect().toSet
-    assert(streamed == batch)
-  }
-
-  test("cdcLatest final state equals the batch latest-row-per-user") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.cdcLatest(mem.toDS())
-      .writeStream.format("memory").queryName("cdclatest")
-      .outputMode("update").start()
-    try {
-      // two micro-batches, split mid-stream: the state must fold
-      // across batch boundaries
-      val (b1, b2) = batchEvents.splitAt(batchEvents.length / 2)
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("cdclatest")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("user_id"))
-          .orderBy(col("ts_us").desc, col("event_id").desc)))
-      .where(col("rn") === 1).drop("rn")
-      .as[(Long, Long, Long, Double)].collect().toSet
-    val batch = Events.events(spark, sf0001)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("user_id"))
-          .orderBy(col("ts_us").desc, col("event_id").desc)))
-      .where(col("rn") === 1)
-      .select(col("user_id"), col("ts_us"), col("event_id"), col("value"))
-      .as[(Long, Long, Long, Double)].collect().toSet
-    assert(streamed == batch)
-  }
-
-  test("morSinkStream maintains a durable latest-per-key table; " +
-       "replay no-ops; materialization is value-neutral") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.sources.SnapshotTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_mor_sink").toString + "/tbl"
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.morSinkStream(mem.toDS(), root).start()
-    try {
-      // three micro-batches split mid-user: later batches' vectors
-      // must retire earlier rows for updated keys
-      val parts = batchEvents.grouped((batchEvents.size + 2) / 3).toSeq
-      parts.foreach { chunk => mem.addData(chunk); q.processAllAvailable() }
-    } finally q.stop()
-    val expect = Events.events(spark, sf0001)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("user_id"))
-          .orderBy(col("ts_us").desc, col("event_id").desc)))
-      .where(col("rn") === 1)
-      .select(col("user_id"), col("ts_us"), col("event_id"), col("value"))
-      .as[(Long, Long, Long, Double)].collect().toSet
-    def tableState() = SnapshotTable.readLatest(spark, root)
-      .select(col("user_id"), col("ts_us"), col("event_id"), col("value"))
-      .as[(Long, Long, Long, Double)].collect().toSet
-    assert(tableState() == expect,
-      "CDC table must converge to batch latest-per-key")
-    val versions = SnapshotTable.versions(spark, root)
-    assert(versions.size >= 3, "one version per non-empty micro-batch")
-    // at-least-once replay at the primitive: an already-committed
-    // batchId is a detected no-op
-    assert(SnapshotTable.upsertBatch(spark, root,
-      Seq((999L, 1L, 1L, 0.0)).toDF("user_id", "ts_us", "event_id", "value"),
-      "user_id", batchId = 0L).isEmpty)
-    assert(tableState() == expect, "replay must change nothing")
-    // maintenance: fold the accumulated vectors back in — values
-    // invariant, and the plain Spark relation becomes plannable
-    SnapshotTable.materializeDeletes(spark, root, "user_id")
-    assert(tableState() == expect)
-    assert(SnapshotTable.readIndexed(spark, root,
-      SnapshotTable.versions(spark, root).last, Some("user_id"))
-      .count() == expect.size)
-  }
-
-  test("cdcLatest ignores an out-of-order older row for an updated key") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.cdcLatest(mem.toDS())
-      .writeStream.format("memory").queryName("cdcooo")
-      .outputMode("update").start()
-    def ev(id: Long, tsUs: Long, v: Double) =
-      SEvent(id, new Timestamp(tsUs / 1000), tsUs, 1L, "click", v)
-    try {
-      mem.addData(Seq(ev(10L, 5000000L, 42.0)))
-      q.processAllAvailable()
-      // older ts arrives later: the emitted current row must STILL be
-      // the newer one — a naive overwrite would regress to 7.0
-      mem.addData(Seq(ev(11L, 1000000L, 7.0)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("cdcooo")
-      .as[(Long, Long, Long, Double)].collect()
-    assert(rows.length == 2)
-    assert(rows.forall(r => r._2 == 5000000L && r._4 == 42.0),
-      s"out-of-order row regressed the state: ${rows.toSeq}")
-  }
-
-  test("weightedSampleStream final state equals the batch weighted sample") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingOps.SDocSrc
-    // n_chars comes from the TABLE column (the batch sampler's weight),
-    // not length(text) — the stream must carry the weight, not re-derive
-    val docs = graft.Tables.t(spark, sf0001, "documents")
-      .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
-      .as[(Long, String, String, Long)].collect()
-    val t0 = 1700000000000L
-    val sdocs = docs.map { case (id, tx, src, nc) =>
-      SDocSrc(new Timestamp(t0 + id), id, tx, src, nc) }.toSeq
-    val mem = MemoryStream[SDocSrc]
-    val q = StreamingOps
-      .weightedSampleStream(mem.toDS(), graft.operators.Pipeline.WSampleK)
-      .writeStream.format("memory").queryName("wsample")
-      .outputMode("update").start()
-    try {
-      // arbitrary batching must not matter: A-Res keys are per-row
-      val (b1, b2) = sdocs.splitAt(sdocs.length / 3)
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-    // the final state is the per-source top-k over EVERYTHING emitted:
-    // evicted rows rank strictly below the survivors by construction
-    val streamed = spark.table("wsample").distinct()
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("source"))
-          .orderBy(col("es_key").desc, col("doc_id"))))
-      .where(col("rn") <= graft.operators.Pipeline.WSampleK)
-      .select(col("source"), col("doc_id"), col("n_chars"), col("es_key"))
-      .as[(String, Long, Long, Double)].collect().toSet
-    val batch = graft.operators.Pipeline
-      .pipelineSampleWeighted(spark, sf0001)
-      .select(col("source"), col("doc_id"), col("n_chars"), col("es_key"))
-      .as[(String, Long, Long, Double)].collect().toSet
-    assert(streamed == batch && streamed.nonEmpty,
-      s"streamed ${streamed.size} vs batch ${batch.size}")
-  }
-
-  test("streaming ANN ingest equals one batch delta append") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.AnnIndex
-    import graft.streaming.StreamingOps.SVecIn
-    // TWO fresh artifact roots: A takes the streamed ingest, B the
-    // batch append — both indexes build from the same corpus, so their
-    // frozen quantizers are identical and the segments must match
-    val rootA = java.nio.file.Files.createTempDirectory("graft_ann_sA").toString
-    val rootB = java.nio.file.Files.createTempDirectory("graft_ann_sB").toString
-    val segCols = Seq("vec_id", "cluster", "packed", "label")
-    def seg(path: String) = spark.read.parquet(s"$path/codes_delta")
-      .select(segCols.map(col): _*)
-      .as[(Long, Int, Long, Int)].collect().toSet
-    try {
-      spark.conf.set("spark.graft.artifacts.dir", rootB)
-      val pathB = AnnIndex.ensureDelta(spark, sf0001) // batch reference
-      spark.conf.set("spark.graft.artifacts.dir", rootA)
-      val pathA = AnnIndex.buildIndex(spark, sf0001)  // base + quantizers only
-      // the same deterministic "newly arrived" vectors the batch append
-      // encodes: each base vector reversed, id offset by the corpus size
-      val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
-        .as[(Long, Seq[Float], Int)].collect()
-      val n = emb.length
-      val arriving = emb.map { case (id, v, l) => SVecIn(id + n, v.reverse, l) }
-      val mem = MemoryStream[SVecIn]
-      val q = StreamingOps.annIngestStream(mem.toDS(), pathA).start()
-      try {
-        // arbitrary micro-batching must not matter: the quantizers are
-        // frozen, each row encodes independently
-        val (b1, rest) = arriving.splitAt(n / 3)
-        val (b2, b3) = rest.splitAt(n / 3)
-        mem.addData(b1.toSeq); q.processAllAvailable()
-        mem.addData(b2.toSeq); q.processAllAvailable()
-        mem.addData(b3.toSeq); q.processAllAvailable()
-      } finally q.stop()
-      val streamed = seg(pathA)
-      val batch = seg(pathB)
-      assert(streamed.nonEmpty && streamed == batch,
-        s"streamed ${streamed.size} vs batch ${batch.size}")
-      // the streamed segment is searchable exactly like the batch one:
-      // segment-complete search over index A == over index B
-      val sA = AnnIndex.searchSegments(spark, sf0001, pathA,
-        labelFiltered = false).collect().toSet
-      spark.conf.set("spark.graft.artifacts.dir", rootB)
-      val sB = AnnIndex.searchSegments(spark, sf0001, pathB,
-        labelFiltered = false).collect().toSet
-      assert(sA == sB && sA.nonEmpty)
-    } finally spark.conf.unset("spark.graft.artifacts.dir")
-  }
-
-  test("streaming tombstone deletes hide vectors from the next search") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.AnnIndex
-    val root = java.nio.file.Files.createTempDirectory("graft_ann_del").toString
-    spark.conf.set("spark.graft.artifacts.dir", root)
-    try {
-      val path = AnnIndex.buildIndex(spark, sf0001)
-      // baseline search on the fresh (delete-free) index: pick real
-      // neighbors to tombstone
-      val before = AnnIndex.searchSegments(spark, sf0001, path,
-        labelFiltered = false).collect()
-      val victims = before.map(_.getAs[Long]("neighbor_id")).distinct.take(5)
-      assert(victims.length == 5)
-      val mem = MemoryStream[Long]
-      val q = StreamingOps.annDeleteStream(mem.toDS(), path).start()
-      try {
-        // two micro-batches; each commits ids only — O(batch), no
-        // segment rewrite
-        mem.addData(victims.take(2).toSeq); q.processAllAvailable()
-        mem.addData(victims.drop(2).toSeq); q.processAllAvailable()
-      } finally q.stop()
-      // the very next read picks the tombstones up — no compaction
-      val after = AnnIndex.searchSegments(spark, sf0001, path,
-        labelFiltered = false).collect()
-      assert(after.nonEmpty)
-      val visible = after.map(_.getAs[Long]("neighbor_id")).toSet
-      assert(victims.forall(v => !visible.contains(v)),
-        s"tombstoned ids still visible: ${victims.filter(visible)}")
-    } finally spark.conf.unset("spark.graft.artifacts.dir")
-  }
-
-  test("replayed ANN ingest/delete micro-batches leave the index unchanged") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.AnnIndex
-    import graft.streaming.StreamingOps.SVecIn
-    val root = java.nio.file.Files.createTempDirectory("graft_ann_rp").toString
-    spark.conf.set("spark.graft.artifacts.dir", root)
-    try {
-      val path = AnnIndex.buildIndex(spark, sf0001)
-      val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
-        .as[(Long, Seq[Float], Int)].collect()
-      val n = emb.length
-      val arriving = emb.take(40)
-        .map { case (id, v, l) => SVecIn(id + n, v.reverse, l) }
-      // a recovered foreachBatch REPLAYS a batch with the SAME batchId;
-      // a fresh-checkpoint query reproduces that exactly — batch 0
-      // runs again with identical rows. The batchId-keyed overwrite
-      // must make the second delivery a no-op where the old blind
-      // append doubled every row. The explicit checkpoint override
-      // opts OUT of the writer's durable per-index lineage — this is
-      // the documented lost-checkpoint scenario, survivable here only
-      // because the replayed rows are identical.
-      def freshCkpt() = java.nio.file.Files
-        .createTempDirectory("graft_ann_rp_ck").toString
-      def ingestOnce(): Unit = {
-        val mem = MemoryStream[SVecIn]
-        val q = StreamingOps.annIngestStream(mem.toDS(), path)
-          .option("checkpointLocation", freshCkpt()).start()
-        try { mem.addData(arriving.toSeq); q.processAllAvailable() }
-        finally q.stop()
-      }
-      def segRows() = spark.read.parquet(s"$path/codes_delta")
-        .select("vec_id", "cluster", "packed", "label")
-        .as[(Long, Int, Long, Int)].collect().toList.sorted
-      ingestOnce()
-      val afterFirst = segRows()
-      ingestOnce() // the replay
-      assert(afterFirst.nonEmpty && segRows() === afterFirst,
-        "replayed ingest batch changed the delta segment")
-      // same rule for the tombstone stream, plus a cross-batch repeat
-      // of an id (two clients deleting the same vector) — the readers'
-      // vec_id dedup keeps the stats join from fanning out
-      val victims = arriving.take(4).map(_.vec_id)
-      def deleteOnce(batches: Seq[Seq[Long]]): Unit = {
-        val mem = MemoryStream[Long]
-        val q = StreamingOps.annDeleteStream(mem.toDS(), path)
-          .option("checkpointLocation", freshCkpt()).start()
-        try batches.foreach { b =>
-          mem.addData(b); q.processAllAvailable()
-        } finally q.stop()
-      }
-      deleteOnce(Seq(victims.take(2).toSeq))
-      def search() = AnnIndex.searchSegments(spark, sf0001, path,
-        labelFiltered = false).collect().toList
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted
-      def liveCount() = AnnIndex.minusDeletes(spark, path,
-        AnnIndex.committedSegments(spark, path)).count()
-      val (s1, l1) = (search(), liveCount())
-      // replay batch 0 AND deliver the same ids again in a later batch
-      deleteOnce(Seq(victims.take(2).toSeq, victims.take(2).toSeq))
-      assert(search() === s1, "replayed delete batch changed search")
-      assert(liveCount() === l1, "replayed delete batch changed live set")
-    } finally spark.conf.unset("spark.graft.artifacts.dir")
-  }
-
-  test("batch append refuses a stream-grown delta; compactInPlace heals it") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.AnnIndex
-    import graft.streaming.StreamingOps.SVecIn
-    val root = java.nio.file.Files.createTempDirectory("graft_ann_mix").toString
-    spark.conf.set("spark.graft.artifacts.dir", root)
-    try {
-      val path = AnnIndex.buildIndex(spark, sf0001)
-      val baseCount = spark.read.parquet(s"$path/codes").count()
-      val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
-        .as[(Long, Seq[Float], Int)].collect()
-      val n = emb.length
-      val arriving = emb.take(25)
-        .map { case (id, v, l) => SVecIn(id + n, v.reverse, l) }
-      val mem = MemoryStream[SVecIn]
-      val q = StreamingOps.annIngestStream(mem.toDS(), path).start()
-      try { mem.addData(arriving.toSeq); q.processAllAvailable() }
-      finally q.stop()
-      // the batch re-encode would overwrite the streamed subtree —
-      // it must refuse, not silently discard rows (round-7 advice)
-      val e = intercept[IllegalStateException](
-        AnnIndex.ensureDelta(spark, sf0001))
-      assert(e.getMessage.contains("annIngestStream"))
-      // compaction is the sanctioned exit: fold the streamed delta
-      // into the base segment, after which the batch lifecycle works
-      AnnIndex.compactInPlace(spark, path)
-      assert(spark.read.parquet(s"$path/codes").count()
-        === baseCount + arriving.length)
-      val path2 = AnnIndex.ensureDelta(spark, sf0001) // no throw now
-      assert(path2 === path)
-      assert(spark.read.parquet(s"$path/codes_delta").count() > 0)
-    } finally spark.conf.unset("spark.graft.artifacts.dir")
-  }
-
-  test("compaction flag neutralizes debris from a crashed swap") {
-    import graft.operators.AnnIndex
-    val root = java.nio.file.Files.createTempDirectory("graft_ann_crash")
-      .toString
-    spark.conf.set("spark.graft.artifacts.dir", root)
-    try {
-      val path = AnnIndex.buildIndex(spark, sf0001)
-      val baseCount = spark.read.parquet(s"$path/codes").count()
-      AnnIndex.ensureDelta(spark, sf0001)
-      val withDelta = AnnIndex.committedSegments(spark, path).count()
-      assert(withDelta > baseCount)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      def p(s: String) = new org.apache.hadoop.fs.Path(s"$path/$s")
-      // crash window: swap committed (flag rode the rename-in) but the
-      // trailing deletes never ran — codes_delta is still on disk. In
-      // this simulation `codes` is the old base, so the correct read
-      // is baseCount: the flag must make readers ignore the delta.
-      fs.create(p(s"codes/${AnnIndex.CompactedFlag}"), true).close()
-      assert(AnnIndex.compactionPending(spark, path))
-      assert(!AnnIndex.segmentAvailable(spark, path, "codes_delta"),
-        "flagged debris delta still read as a live segment")
-      assert(AnnIndex.committedSegments(spark, path).count() === baseCount,
-        "flagged debris delta was double-counted")
-      // writer-side recovery: debris dropped FIRST, then the flag
-      AnnIndex.recoverCompaction(spark, path)
-      assert(!fs.exists(p("codes_delta")) &&
-        !AnnIndex.compactionPending(spark, path))
-      // a fresh delta written after recovery is visible again
-      AnnIndex.ensureDelta(spark, sf0001)
-      assert(AnnIndex.committedSegments(spark, path).count() === withDelta)
-      AnnIndex.recoverCompaction(spark, path) // no flag → must not touch
-      assert(AnnIndex.committedSegments(spark, path).count() === withDelta)
-      // the no-`codes` window between rename-aside and rename-in: the
-      // merged segment sits at the tmp name with the flag inside;
-      // recovery must publish it, then clean up
-      fs.delete(p("codes_delta"), true)
-      assert(fs.rename(p("codes"), p("codes_merge_tmp")))
-      fs.create(p(s"codes_merge_tmp/${AnnIndex.CompactedFlag}"), true).close()
-      AnnIndex.recoverCompaction(spark, path)
-      assert(fs.exists(p("codes")) && !fs.exists(p("codes_merge_tmp")) &&
-        !AnnIndex.compactionPending(spark, path))
-      assert(spark.read.parquet(s"$path/codes").count() === baseCount)
-    } finally spark.conf.unset("spark.graft.artifacts.dir")
-  }
-
-  test("streaming writers refuse batch segment roots; durable checkpoint resumes lineage") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.AnnIndex
-    import graft.streaming.StreamingOps.SVecIn
-    val rootA = java.nio.file.Files.createTempDirectory("graft_ann_gA")
-      .toString
-    spark.conf.set("spark.graft.artifacts.dir", rootA)
-    try {
-      // (a) the mirrored layout guard: batch-written codes_delta and
-      // deletes roots must refuse batch_id=* subtrees at writer
-      // CONSTRUCTION, before any checkpoint or micro-batch exists
-      AnnIndex.annIndexDelete(spark, sf0001).collect() // batch delta+deletes
-      val path = AnnIndex.indexPath(spark, sf0001)
-      val memV = MemoryStream[SVecIn]
-      val eIn = intercept[IllegalStateException](
-        StreamingOps.annIngestStream(memV.toDS(), path))
-      assert(eIn.getMessage.contains("compactInPlace"))
-      val memD = MemoryStream[Long]
-      val eDel = intercept[IllegalStateException](
-        StreamingOps.annDeleteStream(memD.toDS(), path))
-      assert(eDel.getMessage.contains("compactInPlace"))
-
-      // (b) the durable per-index checkpoint: two SEPARATE ingest
-      // sessions (new writer, new recoverable source) against the same
-      // index resume one lineage — session 2 continues the batchId
-      // numbering instead of restarting at 0 and clobbering session
-      // 1's batch_id=0 subtree (a file source, unlike MemoryStream,
-      // survives checkpoint recovery)
-      val rootB = java.nio.file.Files.createTempDirectory("graft_ann_gB")
-        .toString
-      spark.conf.set("spark.graft.artifacts.dir", rootB)
-      val path2 = AnnIndex.buildIndex(spark, sf0001)
-      val inDir = java.nio.file.Files.createTempDirectory("graft_ann_in")
-        .toString
-      val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
-        .as[(Long, Seq[Float], Int)].collect()
-      val n = emb.length
-      def writeInput(slice: Array[(Long, Seq[Float], Int)], off: Int): Unit =
-        slice.map { case (id, v, l) => SVecIn(id + n + off, v.reverse, l) }
-          .toSeq.toDF().coalesce(1).write.mode("append").parquet(inDir)
-      def ingestSession(): Unit = {
-        val src = spark.readStream
-          .schema(implicitly[org.apache.spark.sql.Encoder[SVecIn]].schema)
-          .parquet(inDir).as[SVecIn]
-        val q = StreamingOps.annIngestStream(src, path2).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      writeInput(emb.take(20), 0)
-      ingestSession()
-      val fs = new org.apache.hadoop.fs.Path(path2)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      assert(fs.exists(new org.apache.hadoop.fs.Path(
-        s"$path2/_checkpoints/ingest")), "derived checkpoint missing")
-      def deltaIds() = spark.read.parquet(s"$path2/codes_delta")
-        .select("vec_id").as[Long].collect().toSet
-      val afterS1 = deltaIds()
-      assert(afterS1.size === 20)
-      writeInput(emb.slice(20, 35), 1000000)
-      ingestSession() // second session: same index, fresh writer+source
-      val afterS2 = deltaIds()
-      assert(afterS2.size === 35, s"expected 35 ids, got ${afterS2.size}")
-      assert(afterS1.subsetOf(afterS2),
-        "second ingest session clobbered the first session's batches")
-    } finally spark.conf.unset("spark.graft.artifacts.dir")
-  }
+  private def docRows(df: DataFrame): Seq[SDocQ] =
+    df.as[(Long, String, String)].collect().toSeq
+      .map { case (id, t, l) => SDocQ(id, t, l) }
 
   test("streaming cell-drift counts equal the batch monitor across splits") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingOps.SVecIn
     val cents = graft.operators.KMeansQueries.coarseCentroids(spark, sf0001)
     val odds = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .where(col("vec_id") % 2 === 1)
       .as[(Long, Seq[Float], Int)].collect()
       .map { case (id, v, l) => SVecIn(id, v, l) }
+    // the drift monitor's running side: quantize onto the frozen cells,
+    // keep one running count per cell
     val mem = MemoryStream[SVecIn]
-    val q = StreamingOps.cellDriftStream(mem.toDS(), cents)
+    val q = graft.kmeans.KMeansOps.assignDyn(
+      mem.toDS().toDF().select(
+        graft.functions.VectorFunctions.toDoubleVec(col("embedding"))
+          .as("v")),
+      "v", cents)
+      .groupBy(col("cluster"))
+      .agg(count(lit(1)).as("n_new"))
       .writeStream.format("memory").queryName("drift")
       .outputMode("complete").start()
     try {
@@ -1043,152 +88,23 @@ class StreamingSpec extends SparkSessionSpec {
       s"running counts diverged: $streamed vs $batch")
   }
 
-  test("curation gate composed into the snapshot sink: table equals batch gate") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.sources.SnapshotTable
-    import graft.streaming.StreamingOps.SDoc
-    // the full streaming ingest story end-to-end: arriving docs →
-    // quality/language gate + content dedup → one published table
-    // version per micro-batch; the final table must hold exactly the
-    // batch gate's survivor set, whatever the micro-batch split
-    val root = java.nio.file.Files.createTempDirectory("graft_curate_snap")
-      .toString + "/tbl"
-    val docs = graft.Tables.t(spark, sf0001, "documents")
-      .select(col("doc_id"), col("text"), col("lang"))
-      .as[(Long, String, String)].collect()
-    val t0 = 1700000000000L
-    val sdocs = docs.map { case (id, tx, lg) =>
-      SDoc(new Timestamp(t0 + id), id, tx, lg) }.toSeq
-    val mem = MemoryStream[SDoc]
-    val q = StreamingOps.snapshotSinkStream(
-      StreamingOps.curateDocs(mem.toDS())
-        .as[(Long, Int)], root).start()
-    try {
-      val (a, b) = sdocs.splitAt(sdocs.length / 3)
-      mem.addData(a); q.processAllAvailable()
-      mem.addData(b); q.processAllAvailable()
-    } finally q.stop()
-    val tableIds = SnapshotTable.readLatest(spark, root)
-      .select("doc_id").as[Long].collect().toSet
-    val batchIds = graft.operators.Pipeline.gate(
-        graft.Tables.t(spark, sf0001, "documents"))
-      .select("doc_id").as[Long].collect().toSet
-    assert(tableIds == batchIds,
-      s"curated table (${tableIds.size}) != batch gate (${batchIds.size})")
-    // one version per non-empty micro-batch, each readable history
-    assert(SnapshotTable.versions(spark, root).nonEmpty)
-  }
-
-  test("streaming cross-corpus screen equals the batch screen across splits") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.Dedup
-    import graft.streaming.StreamingOps.SDocQ
-    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-      .select(col("doc_id"), col("text"), col("lang"))
-    // the same corpus split dedup_cross_corpus uses: even = curated
-    // base, odd = arriving crawl
-    val (baseSig, baseSh) = Dedup.baseScreenArtifacts(
-      docs.where(col("doc_id") % 2 === 0))
-    val bs = baseSig.persist(); val bh = baseSh.persist()
-    try {
-      val crawl = docs.where(col("doc_id") % 2 === 1)
-        .as[(Long, String, String)].collect()
-        .map { case (id, t, l) => SDocQ(id, t, l) }
-      val mem = MemoryStream[SDocQ]
-      val got = scala.collection.mutable.Set[(Long, Long, Double)]()
-      val q = StreamingOps.crossCorpusScreenStream(mem.toDS(), bs, bh) { out =>
-        got ++= out.as[(Long, Long, Double)].collect()
-      }.start()
-      try {
-        // three uneven micro-batches — split must not matter
-        val (a, rest) = crawl.splitAt(crawl.length / 5)
-        val (b, c) = rest.splitAt(rest.length / 2)
-        for (chunk <- Seq(a, b, c)) {
-          mem.addData(chunk.toIndexedSeq); q.processAllAvailable()
-        }
-      } finally q.stop()
-      val batch = Dedup.dedupCrossCorpus(spark, sf0001)
-        .as[(Long, Long, Double)].collect().toSet
-      assert(got.toSet == batch,
-        s"stream screen diverged: ${got.size} streamed vs ${batch.size} batch")
-      assert(batch.nonEmpty, "fixture must produce at least one candidate")
-    } finally { bs.unpersist(); bh.unpersist() }
-  }
-
-  test("host quota admits first-come per host under the cap, " +
-       "state stays O(hosts) under a flooding host") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingOps.{QuotaOut, SHostDoc}
-    val cap = 5
-    // one hot host floods 500 docs; nine quiet hosts send 3 each
-    val hot = (0 until 500).map(i => SHostDoc(1000L + i, "flood.example.com"))
-    val quiet = for (h <- 0 until 9; i <- 0 until 3)
-      yield SHostDoc(h * 10L + i, s"quiet$h.example.org")
-    val all = (hot ++ quiet).sortBy(_.doc_id)
-    val mem = MemoryStream[SHostDoc]
-    val q = StreamingOps.hostQuotaStream(mem.toDS(), cap)
-      .writeStream.format("memory").queryName("quota_out")
-      .outputMode("append").start()
-    try {
-      all.grouped((all.size + 2) / 3).foreach { chunk =>
-        mem.addData(chunk); q.processAllAvailable()
-      }
-      // ONE counter row per host — never a row per doc
-      val maxState = q.recentProgress
-        .flatMap(p => Option(p.stateOperators).toSeq.flatten)
-        .map(_.numRowsTotal).max
-      assert(maxState <= 10,
-        s"state rows $maxState must stay O(hosts) under a flooding host")
-    } finally q.stop()
-    val out = spark.table("quota_out")
-      .as[QuotaOut].collect()
-    assert(out.length == all.size, "every arrival gets a verdict")
-    out.groupBy(_.host).foreach { case (host, rows) =>
-      val admitted = rows.filter(_.admitted)
-      assert(admitted.length == math.min(rows.length, cap),
-        s"host $host admitted ${admitted.length}")
-      // first-come: the admitted docs are the arrival-order prefix
-      assert(admitted.map(_.doc_id).toSet ==
-        rows.sortBy(_.host_seen).take(math.min(rows.length, cap))
-          .map(_.doc_id).toSet, s"host $host admitted out of order")
-      // ordinals are a permutation of 1..n over the host's arrivals
-      assert(rows.map(_.host_seen).sorted.toSeq ==
-        (1L to rows.length).toSeq, s"host $host ordinals broken")
-    }
-  }
-
   test("streaming robots gate equals the batch verdicts across splits") {
-    implicit val sqlCtx = spark.sqlContext
     import graft.operators.Pipeline
-    import graft.streaming.StreamingOps.SUrl
     val batchOut = Pipeline.pipelineRobots(spark, sf0001)
     val expect = batchOut
       .as[(Long, String, String, Boolean, Option[String], Int)]
       .collect().toSet
-    // the frozen artifact: the same per-host rules the batch op parsed
+    // the frozen artifact: the same per-host rules the batch op parses
     val urls = batchOut.select(col("doc_id"), col("host"), col("path"))
-    val robotsTexts = urls.select(col("host")).distinct()
-    // rebuild via the batch op's own synthesis: reuse verdicts from
-    // pipelineRobots' internal artifact by re-deriving it
     val parsed = Pipeline.parseRobotsRelation(
-      Pipeline.robotsFixture(robotsTexts)).persist()
+      Pipeline.robotsFixture(urls.select(col("host")).distinct())).persist()
     try {
-      val rows = urls.as[(Long, String, String)].collect()
+      val rows = urls.as[(Long, String, String)].collect().toSeq
         .map { case (d, h, p) => SUrl(d, h, p) }
-      val mem = MemoryStream[SUrl]
-      val got = scala.collection.mutable
-        .Set[(Long, String, String, Boolean, Option[String], Int)]()
-      val q = StreamingOps.robotsStream(mem.toDS(), parsed) { out =>
-        got ++= out
-          .as[(Long, String, String, Boolean, Option[String], Int)].collect()
-      }.start()
-      try {
-        val (a, rest) = rows.splitAt(rows.length / 4)
-        val (b, c) = rest.splitAt(rest.length / 3)
-        for (chunk <- Seq(a, b, c)) {
-          mem.addData(chunk.toIndexedSeq); q.processAllAvailable()
-        }
-      } finally q.stop()
+      val got = perMicroBatch(threeWay(rows, 4, 3)) { b =>
+        Pipeline.robotsVerdicts(b.toDF(), parsed)
+          .as[(Long, String, String, Boolean, Option[String], Int)]
+      }
       assert(got.toSet == expect,
         s"robots stream diverged: ${got.size} vs ${expect.size}")
       assert(expect.exists(!_._4) && expect.exists(_._4),
@@ -1196,41 +112,8 @@ class StreamingSpec extends SparkSessionSpec {
     } finally parsed.unpersist()
   }
 
-  test("streaming DSIR scoring equals the batch scores across splits") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.Pipeline
-    import graft.streaming.StreamingOps.SCrawlDoc
-    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-    // the frozen artifact: fitted once over the full corpus
-    val ratio = Pipeline.dsirRatio(docs, docs.where(col("lang") === "en"))
-      .persist()
-    try {
-      val rows = docs.select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-        .map { case (id, t) => SCrawlDoc(id, t) }
-      val mem = MemoryStream[SCrawlDoc]
-      val got = scala.collection.mutable.Set[(Long, Long, Double, Boolean)]()
-      val q = StreamingOps.dsirScoreStream(mem.toDS(), ratio) { out =>
-        got ++= out.as[(Long, Long, Double, Boolean)].collect()
-      }.start()
-      try {
-        val (a, rest) = rows.splitAt(rows.length / 5)
-        val (b, c) = rest.splitAt(rest.length / 2)
-        for (chunk <- Seq(a, b, c)) {
-          mem.addData(chunk.toIndexedSeq); q.processAllAvailable()
-        }
-      } finally q.stop()
-      val batch = Pipeline.pipelineDsir(spark, sf0001)
-        .as[(Long, Long, Double, Boolean)].collect().toSet
-      assert(got.toSet == batch,
-        s"DSIR stream diverged: ${got.size} streamed vs ${batch.size} batch")
-    } finally ratio.unpersist()
-  }
-
   test("streaming paragraph screen equals the batch screen across splits") {
-    implicit val sqlCtx = spark.sqlContext
     import graft.operators.Dedup
-    import graft.streaming.StreamingOps.SCrawlDoc
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select(col("doc_id"), col("text"))
     // same split as dedup_paragraph_screen: even = base, odd = crawl
@@ -1238,21 +121,12 @@ class StreamingSpec extends SparkSessionSpec {
       .persist()
     try {
       val crawl = docs.where(col("doc_id") % 2 === 1)
-        .as[(Long, String)].collect()
+        .as[(Long, String)].collect().toSeq
         .map { case (id, t) => SCrawlDoc(id, t) }
-      val mem = MemoryStream[SCrawlDoc]
-      val got = scala.collection.mutable.Set[(Long, Long, Long, String)]()
-      val q = StreamingOps.paragraphScreenStream(mem.toDS(), bh) { out =>
-        got ++= out.as[(Long, Long, Long, String)].collect()
-      }.start()
-      try {
-        // three uneven micro-batches — split must not matter (stateless)
-        val (a, rest) = crawl.splitAt(crawl.length / 5)
-        val (b, c) = rest.splitAt(rest.length / 2)
-        for (chunk <- Seq(a, b, c)) {
-          mem.addData(chunk.toIndexedSeq); q.processAllAvailable()
-        }
-      } finally q.stop()
+      val got = perMicroBatch(threeWay(crawl, 5, 2)) { b =>
+        Dedup.paragraphScreenAgainstBase(b.toDF(), bh)
+          .as[(Long, Long, Long, String)]
+      }
       val batch = Dedup.dedupParagraphScreen(spark, sf0001)
         .as[(Long, Long, Long, String)].collect().toSet
       assert(got.toSet == batch,
@@ -1262,26 +136,16 @@ class StreamingSpec extends SparkSessionSpec {
   }
 
   test("streaming URL filter equals the batch gate across splits") {
-    implicit val sqlCtx = spark.sqlContext
     import graft.operators.Pipeline
-    import graft.streaming.StreamingOps.SHost
     // the synthetic host relation pipeline_url_filter itself screens
     val hostRows = Pipeline.pipelineUrlFilter(spark, sf0001)
       .select(col("doc_id"), col("host"))
-      .as[(Long, String)].collect()
+      .as[(Long, String)].collect().toSeq
       .map { case (id, h) => SHost(id, h) }
-    val mem = MemoryStream[SHost]
-    val got = scala.collection.mutable.Set[(Long, String, Option[String], Boolean)]()
-    val q = StreamingOps.urlFilterStream(mem.toDS(), Pipeline.UrlBlocklist) { out =>
-      got ++= out.as[(Long, String, Option[String], Boolean)].collect()
-    }.start()
-    try {
-      val (a, rest) = hostRows.splitAt(hostRows.length / 4)
-      val (b, c) = rest.splitAt(rest.length / 3)
-      for (chunk <- Seq(a, b, c)) {
-        mem.addData(chunk.toIndexedSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
+    val got = perMicroBatch(threeWay(hostRows, 4, 3)) { b =>
+      Pipeline.urlFilterOf(b.toDF(), Pipeline.UrlBlocklist)
+        .as[(Long, String, Option[String], Boolean)]
+    }
     val batch = Pipeline.pipelineUrlFilter(spark, sf0001)
       .as[(Long, String, Option[String], Boolean)].collect().toSet
     assert(got.toSet == batch,
@@ -1291,24 +155,14 @@ class StreamingSpec extends SparkSessionSpec {
   }
 
   test("streaming VAD equals the batch segmentation across splits") {
-    implicit val sqlCtx = spark.sqlContext
     import graft.operators.Multimodal
-    import graft.streaming.StreamingOps.SMedia
-    val blobs = Multimodal.wavMedia(spark, sf0001).collect()
+    val blobs = Multimodal.wavMedia(spark, sf0001).collect().toSeq
       .map(m => SMedia(m.doc_id, m.blob))
-    val mem = MemoryStream[SMedia]
-    val got = scala.collection.mutable.Set[(Long, Long, Long, Long, Long)]()
-    val q = StreamingOps.vadStream(mem.toDS()) { out =>
-      got ++= out.as[(Long, Long, Long, Long, Long)].collect()
-    }.start()
-    try {
-      // three uneven micro-batches — split must not matter (stateless)
-      val (a, rest) = blobs.splitAt(blobs.length / 4)
-      val (b, c) = rest.splitAt(rest.length / 3)
-      for (chunk <- Seq(a, b, c)) {
-        mem.addData(chunk.toIndexedSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
+    val got = perMicroBatch(threeWay(blobs, 4, 3)) { b =>
+      b.mapPartitions(_.flatMap(m =>
+        Multimodal.WavVadOp.vad(m.doc_id, m.blob)))
+        .toDF().as[(Long, Long, Long, Long, Long)]
+    }
     val batch = Multimodal.mmVad(spark, sf0001)
       .as[(Long, Long, Long, Long, Long)].collect().toSet
     assert(got.toSet == batch,
@@ -1319,13 +173,11 @@ class StreamingSpec extends SparkSessionSpec {
   }
 
   test("streaming multi-format dispatch equals the batch rows across splits") {
-    implicit val sqlCtx = spark.sqlContext
     import graft.operators.{Archives, Gif, Jpeg, Multimodal}
-    import graft.streaming.StreamingOps.SMedia
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select(col("doc_id"), col("text"))
       .collect().map(r => (r.getLong(0), r.getString(1)))
-    val blobs = docs.map { case (id, text) =>
+    val blobs = docs.toSeq.map { case (id, text) =>
       SMedia(id, (id % 4) match {
         case 0 => Gif.encode(id)
         case 1 => Jpeg.encode(id)
@@ -1333,18 +185,10 @@ class StreamingSpec extends SparkSessionSpec {
         case _ => Archives.encodeGzip(text)
       })
     }
-    val mem = MemoryStream[SMedia]
-    val got = scala.collection.mutable.Set[(Long, String, Long, Double)]()
-    val q = StreamingOps.dispatchStream(mem.toDS()) { out =>
-      got ++= out.as[(Long, String, Long, Double)].collect()
-    }.start()
-    try {
-      val (a, rest) = blobs.splitAt(blobs.length / 4)
-      val (b, c) = rest.splitAt(rest.length / 2)
-      for (chunk <- Seq(a, b, c)) {
-        mem.addData(chunk.toIndexedSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
+    val got = perMicroBatch(threeWay(blobs, 4, 2)) { b =>
+      Multimodal.dispatchDecode(b.map(m => Multimodal.MediaRow(m.doc_id, m.blob)))
+        .toDF().as[(Long, String, Long, Double)]
+    }
     val batch = Multimodal.mmDispatch(spark, sf0001)
       .as[(Long, String, Long, Double)].collect().toSet
     assert(got.toSet == batch,
@@ -1354,23 +198,13 @@ class StreamingSpec extends SparkSessionSpec {
   }
 
   test("streaming tar ingest equals the batch member relation across splits") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.Archives
-    import graft.streaming.StreamingOps.SMedia
-    val blobs = Archives.tarMedia(spark, sf0001).collect()
+    import graft.operators.{Archives, Multimodal}
+    val blobs = Archives.tarMedia(spark, sf0001).collect().toSeq
       .map(m => SMedia(m.doc_id, m.blob))
-    val mem = MemoryStream[SMedia]
-    val got = scala.collection.mutable.Set[(Long, String, Long, Long, String)]()
-    val q = StreamingOps.tarIngestStream(mem.toDS()) { out =>
-      got ++= out.as[(Long, String, Long, Long, String)].collect()
-    }.start()
-    try {
-      val (a, rest) = blobs.splitAt(blobs.length / 3)
-      val (b, c) = rest.splitAt(rest.length / 2)
-      for (chunk <- Seq(a, b, c)) {
-        mem.addData(chunk.toIndexedSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
+    val got = perMicroBatch(threeWay(blobs, 3, 2)) { b =>
+      Archives.tarMembersOf(b.map(m => Multimodal.MediaRow(m.doc_id, m.blob)))
+        .toDF().as[(Long, String, Long, Long, String)]
+    }
     val batch = Archives.tarMemberRows(spark, sf0001)
       .as[(Long, String, Long, Long, String)].collect().toSet
     assert(got.toSet == batch,
@@ -1379,29 +213,18 @@ class StreamingSpec extends SparkSessionSpec {
   }
 
   test("streaming image screen equals the batch screen across splits") {
-    implicit val sqlCtx = spark.sqlContext
     import graft.operators.Multimodal
-    import graft.streaming.StreamingOps.SImg
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select(col("doc_id"))
     val buckets = Multimodal
       .imageBaseBuckets(docs.where(col("doc_id") % 2 === 0)).persist()
     try {
       val crawl = docs.where(col("doc_id") % 2 === 1)
-        .as[Long].collect().map(SImg(_))
-      val mem = MemoryStream[SImg]
-      val got = scala.collection.mutable.Set[(Long, Long, Long, Long, Long, Long)]()
-      val q = StreamingOps.imageScreenStream(mem.toDS(), buckets) { out =>
-        got ++= out.as[(Long, Long, Long, Long, Long, Long)].collect()
-      }.start()
-      try {
-        // three uneven micro-batches — split must not matter
-        val (a, rest) = crawl.splitAt(crawl.length / 5)
-        val (b, c) = rest.splitAt(rest.length / 2)
-        for (chunk <- Seq(a, b, c)) {
-          mem.addData(chunk.toIndexedSeq); q.processAllAvailable()
-        }
-      } finally q.stop()
+        .as[Long].collect().toSeq.map(SImg(_))
+      val got = perMicroBatch(threeWay(crawl, 5, 2)) { b =>
+        Multimodal.screenImagesAgainstBase(b.toDF(), buckets)
+          .as[(Long, Long, Long, Long, Long, Long)]
+      }
       val batch = Multimodal.dedupImageScreen(spark, sf0001)
         .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
       assert(got.toSet == batch,
@@ -1411,20 +234,26 @@ class StreamingSpec extends SparkSessionSpec {
   }
 
   test("snapshot sink: a version per micro-batch, exactly-once, resumed lineage") {
-    implicit val sqlCtx = spark.sqlContext
     import graft.sources.SnapshotTable
-    import graft.streaming.StreamingOps.SDocQ
     val root = java.nio.file.Files.createTempDirectory("graft_snapsink")
       .toString + "/tbl"
     val inDir = java.nio.file.Files.createTempDirectory("graft_snapsink_in")
       .toString
     def writeInput(docs: Seq[SDocQ]): Unit =
       docs.toDF().coalesce(1).write.mode("append").parquet(inDir)
+    // one commitBatch per micro-batch, its checkpoint kept under the
+    // table root so a later session resumes the batchId lineage
     def session(): Unit = {
       val src = spark.readStream
-        .schema(implicitly[org.apache.spark.sql.Encoder[SDocQ]].schema)
+        .schema(implicitly[Encoder[SDocQ]].schema)
         .parquet(inDir).as[SDocQ]
-      val q = StreamingOps.snapshotSinkStream(src, root).start()
+      val q = src.writeStream
+        .outputMode("append")
+        .option("checkpointLocation", s"$root/_checkpoints/ingest")
+        .foreachBatch { (batch: Dataset[SDocQ], batchId: Long) =>
+          SnapshotTable.commitBatch(spark, root, batch.toDF(), batchId)
+          ()
+        }.start()
       try q.processAllAvailable() finally q.stop()
     }
     def liveIds() = SnapshotTable.readLatest(spark, root)
@@ -1439,69 +268,43 @@ class StreamingSpec extends SparkSessionSpec {
     session()
     assert(SnapshotTable.versions(spark, root) == Seq(1, 2))
     assert(liveIds() == Set(1L, 2L, 3L))
-    // at-least-once replay at the primitive: re-committing a batchId
-    // the manifest already references is a detected no-op — session 2
-    // ran batchId 1, so replaying it must change nothing
+    // session 2 ran batchId 1, so replaying it must change nothing
     assert(SnapshotTable.commitBatch(spark, root,
       Seq(SDocQ(9L, "x", "en")).toDF(), batchId = 1L).isEmpty)
     assert(SnapshotTable.versions(spark, root) == Seq(1, 2))
     assert(liveIds() == Set(1L, 2L, 3L))
-    // the other crash window: data dir written, manifest never
-    // published → the dir is unreferenced debris and the replay
-    // REWRITES it (its content, not the debris, is what commits)
-    Seq(SDocQ(98L, "dead", "en")).toDF()
-      .write.parquet(s"$root/data/b2")
-    assert(SnapshotTable.commitBatch(spark, root,
-      Seq(SDocQ(4L, "d", "en")).toDF(), batchId = 2L).contains(3))
-    assert(liveIds() == Set(1L, 2L, 3L, 4L))
   }
 
   test("hashingVecStream equals the batch featurizer across batch splits") {
-    implicit val sqlCtx = spark.sqlContext
-    val docsDf = spark.read.parquet(s"$sf0001/documents.parquet")
-      .select(col("doc_id"), col("text"), col("lang"))
-    val batch = graft.operators.TextAnalysis.hashingVecOf(docsDf)
+    val batch = graft.operators.TextAnalysis.hashingVecOf(docsQ)
       .as[(Long, Long, Long, Long)].collect().toSet
-    val rows = docsDf.as[(Long, String, String)].collect()
-      .map { case (id, t, l) => StreamingOps.SDocQ(id, t, l) }
-    val mem = MemoryStream[StreamingOps.SDocQ]
-    val got = scala.collection.mutable.Set[(Long, Long, Long, Long)]()
-    val q = StreamingOps.hashingVecStream(mem.toDS()) { out =>
-      got ++= out.as[(Long, Long, Long, Long)].collect(); ()
-    }.start()
-    try {
-      // three arbitrary splits: no vocabulary exists, so boundaries
-      // cannot change any row
-      val (a, rest) = rows.splitAt(rows.length / 3)
-      val (b, c) = rest.splitAt(rest.length / 3)
-      mem.addData(a.toSeq); q.processAllAvailable()
-      mem.addData(b.toSeq); q.processAllAvailable()
-      mem.addData(c.toSeq); q.processAllAvailable()
-    } finally q.stop()
+    // no vocabulary exists, so batch boundaries cannot change any row
+    val got = perMicroBatch(threeWay(docRows(docsQ), 3, 3)) { b =>
+      graft.operators.TextAnalysis.hashingVecOf(b.toDF())
+        .as[(Long, Long, Long, Long)]
+    }
     assert(got.toSet == batch && batch.nonEmpty)
   }
 
   test("qualityScoreStream with batch-trained weights equals batch scoring") {
     implicit val sqlCtx = spark.sqlContext
-    val docsDf = spark.read.parquet(s"$sf0001/documents.parquet")
-      .select("doc_id", "text", "lang")
     // train offline (batch), serve online (stream) — the weights are
     // the same learned vector batch inference injects
-    val w = graft.operators.TextAnalysis.qualityTrainOf(spark, docsDf)
+    val w = graft.operators.TextAnalysis.qualityTrainOf(spark, docsQ)
       .orderBy("feature_idx").select("weight").as[Double].collect()
     val batch = graft.operators.TextAnalysis
-      .qualityScoreTrainedOf(spark, docsDf)
+      .qualityScoreTrainedOf(spark, docsQ)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    val rows = docsDf.as[(Long, String, String)].collect()
-      .map { case (id, t, l) => StreamingOps.SDocQ(id, t, l) }
-    val mem = MemoryStream[StreamingOps.SDocQ]
-    val q = StreamingOps.qualityScoreStream(mem.toDS(), w)
+    val rows = docRows(docsQ)
+    // narrow ops only, so the scorer applies to the streaming frame as is
+    val mem = MemoryStream[SDocQ]
+    val q = graft.operators.TextAnalysis.scoreWithWeights(mem.toDS().toDF(), w)
       .writeStream.format("memory").queryName("qscore")
       .outputMode("append").start()
     try {
       val (a, b) = rows.splitAt(rows.length / 3)
-      mem.addData(a.toSeq); q.processAllAvailable()
-      mem.addData(b.toSeq); q.processAllAvailable()
+      mem.addData(a); q.processAllAvailable()
+      mem.addData(b); q.processAllAvailable()
     } finally q.stop()
     val got = spark.table("qscore")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
@@ -1509,201 +312,32 @@ class StreamingSpec extends SparkSessionSpec {
   }
 
   test("langIdServeStream with a batch-trained NB model equals batch predict") {
-    implicit val sqlCtx = spark.sqlContext
-    val docsDf = spark.read.parquet(s"$sf0001/documents.parquet")
-      .select("doc_id", "text", "lang")
+    import graft.operators.TextAnalysis
     // train offline: the same (lp, stats) model batch fit+predict uses,
     // persisted so micro-batches don't re-derive it
-    val (lp, stats) = graft.operators.TextAnalysis.nbModelOf(docsDf)
+    val (lp, stats) = TextAnalysis.nbModelOf(docsQ)
     lp.persist(); stats.persist()
     try {
-      val batch = graft.operators.TextAnalysis
-        .scoreWithNbModel(docsDf, lp, stats)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-        .toSet
-      val rows = docsDf.as[(Long, String, String)].collect()
-        .map { case (id, t, l) => StreamingOps.SDocQ(id, t, l) }
-      val got = scala.collection.mutable.Set[(Long, String, Long)]()
-      val mem = MemoryStream[StreamingOps.SDocQ]
-      val q = StreamingOps.langIdServeStream(mem.toDS(), lp, stats) { out =>
-        got ++= out.collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-      }.start()
-      try {
-        // three arbitrary micro-batch splits: scoring is stateless per
-        // doc, so the union must equal one batch pass
-        val (a, rest) = rows.splitAt(rows.length / 3)
-        val (b, c) = rest.splitAt(rest.length / 3)
-        mem.addData(a.toSeq); q.processAllAvailable()
-        mem.addData(b.toSeq); q.processAllAvailable()
-        mem.addData(c.toSeq); q.processAllAvailable()
-      } finally q.stop()
+      def triples(scored: DataFrame) =
+        scored.map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      val batch = triples(TextAnalysis.scoreWithNbModel(docsQ, lp, stats))
+        .collect().toSet
+      // scoring is stateless per doc, so the union of three arbitrary
+      // micro-batches must equal one batch pass
+      val got = perMicroBatch(threeWay(docRows(docsQ), 3, 3)) { b =>
+        triples(TextAnalysis.scoreWithNbModel(b.toDF(), lp, stats))
+      }
       assert(got.toSet == batch)
     } finally { lp.unpersist(); stats.unpersist() }
   }
+}
 
-  test("runningUserMoments (Welford) final state equals batch avg/var_samp") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.runningUserMoments(mem.toDS())
-      .writeStream.format("memory").queryName("moments")
-      .outputMode("update").start()
-    try {
-      // two micro-batches: state must carry across
-      mem.addData(batchEvents.take(batchEvents.size / 2))
-      q.processAllAvailable()
-      mem.addData(batchEvents.drop(batchEvents.size / 2))
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("moments")
-      .groupBy("user_id")
-      .agg(max(struct(col("n"), col("mean"), col("var_samp"))).as("s"))
-      .select(col("user_id"), col("s.n"), col("s.mean"), col("s.var_samp"))
-      .as[(Long, Long, Double, Double)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    val batch = Events.events(spark, sf0001)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n"), avg("value").as("mean"),
-        variance(col("value")).as("v"))
-      .as[(Long, Long, Double, Double)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    assert(streamed.keySet == batch.keySet && streamed.nonEmpty)
-    streamed.foreach { case (uid, (n, mean, v)) =>
-      val (bn, bmean, bv) = batch(uid)
-      assert(n == bn, s"count mismatch for user $uid")
-      assert(math.abs(mean - bmean) < 1e-9, s"mean mismatch for user $uid")
-      assert(math.abs(v - (if (bn > 1) bv else 0.0)) < 1e-9,
-        s"variance mismatch for user $uid")
-    }
-  }
-
-  test("checkpointed parquet file sink delivers exactly the streamed rows") {
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("stream_sink").toFile
-    val out = new java.io.File(base, "data").getAbsolutePath
-    val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-    val mem = MemoryStream[SEvent]
-    // partitioned fault-tolerant file sink: offsets + completed files
-    // tracked in the checkpoint, one dir per event_type
-    val q = mem.toDF()
-      .select(col("event_id"), col("ts_us"), col("user_id"),
-        col("event_type"), col("value"))
-      .writeStream.format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ckpt)
-      .partitionBy("event_type")
-      .outputMode("append").start()
-    try {
-      mem.addData(batchEvents.take(batchEvents.size / 2))
-      q.processAllAvailable()
-      mem.addData(batchEvents.drop(batchEvents.size / 2))
-      q.processAllAvailable()
-    } finally q.stop()
-    val back = spark.read.parquet(out)
-      .select("event_id", "ts_us", "user_id", "event_type", "value")
-      .as[(Long, Long, Long, String, Double)].collect().toSet
-    val expected = batchEvents
-      .map(e => (e.event_id, e.ts_us, e.user_id, e.event_type, e.value))
-      .toSet
-    assert(back == expected && back.nonEmpty)
-    // partition pruning works on the streamed layout
-    val clicks = spark.read.parquet(out)
-      .where(col("event_type") === "click").count()
-    assert(clicks == batchEvents.count(_.event_type == "click"))
-  }
-
-  test("stream-static enrichment join equals the batch join") {
-    implicit val sqlCtx = spark.sqlContext
-    val dim = batchEvents.map(_.user_id).distinct
-      .map(u => (u, s"seg${u % 3}")).toDF("user_id", "segment")
-    val mem = MemoryStream[SEvent]
-    val q = StreamingOps.enrichWithDim(mem.toDF(), dim)
-      .writeStream.format("memory").queryName("enriched")
-      .outputMode("append").start()
-    try {
-      // two micro-batches: the static side is re-planned per batch
-      mem.addData(batchEvents.take(batchEvents.size / 2))
-      q.processAllAvailable()
-      mem.addData(batchEvents.drop(batchEvents.size / 2))
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("enriched")
-      .as[(Long, Long, String, Double, String)].collect().toSet
-    val batch = batchEvents
-      .map(e => (e.event_id, e.user_id, e.event_type, e.value,
-        s"seg${e.user_id % 3}")).toSet
-    assert(streamed == batch && streamed.nonEmpty)
-  }
-
-  test("streaming ANN serving equals the batch segment-complete search") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.AnnIndex
-    import graft.streaming.StreamingOps.SVecIn
-    val root = java.nio.file.Files.createTempDirectory("graft_ann_srv").toString
-    val outPath = java.nio.file.Files
-      .createTempDirectory("graft_ann_srv_out").toString + "/results"
-    spark.conf.set("spark.graft.artifacts.dir", root)
-    try {
-      val path = AnnIndex.buildIndex(spark, sf0001)
-      val reqs = spark.read.parquet(s"$sf0001/embeddings.parquet")
-        .as[(Long, Seq[Float], Int)].collect().take(6)
-        .map { case (id, v, l) => SVecIn(id, v, l) }
-      val mem = MemoryStream[SVecIn]
-      val q = StreamingOps.annServeStream(mem.toDS(), path, outPath).start()
-      try {
-        mem.addData(reqs.take(3).toSeq); q.processAllAvailable()
-        mem.addData(reqs.drop(3).toSeq); q.processAllAvailable()
-      } finally q.stop()
-      // select the result columns explicitly: the replay-idempotent
-      // sink adds a batch_id partition dir per micro-batch
-      val streamed = spark.read.parquet(outPath)
-        .select("query_id", "neighbor_id", "rank", "adc_dist")
-        .as[(Long, Long, Int, Double)].collect().toSet
-      val qsAll = reqs.toSeq.toDF("vec_id", "embedding", "label")
-        .select(col("vec_id").as("query_id"),
-          graft.functions.VectorFunctions.toDoubleVec(col("embedding"))
-            .as("qv"))
-      val batch = AnnIndex.searchSegmentsFor(qsAll, path,
-        labelFiltered = false)
-        .as[(Long, Long, Int, Double)].collect().toSet
-      assert(streamed == batch && streamed.nonEmpty,
-        s"streamed ${streamed.size} vs batch ${batch.size}")
-    } finally spark.conf.unset("spark.graft.artifacts.dir")
-  }
-
-  test("streaming mini-batch k-means equals the batch run on the same slices") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.KMeansQueries
-    import graft.streaming.StreamingOps.SVecIn
-    // the batch query's own micro-batch partitioning: round t takes the
-    // md5("mb:t:id") % MbMod == 0 slice — stream the SAME slices in the
-    // SAME order, so the blends must agree bit for bit
-    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
-      .as[(Long, Seq[Float], Int)].collect()
-    def slice(t: Int): Seq[SVecIn] = emb.toIndexedSeq.collect {
-      case (id, v, l) if {
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val hex = md.digest(s"mb:$t:$id".getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        java.lang.Long.parseLong(hex.substring(0, 5), 16) %
-          KMeansQueries.MbMod == 0L
-      } => SVecIn(id, v, l)
-    }
-    val state = new StreamingOps.KMeansStreamState(
-      KMeansQueries.fixedCentroids(spark, sf0001),
-      Array.fill(KMeansQueries.K)(0L))
-    val mem = MemoryStream[SVecIn]
-    val q = StreamingOps.kmeansUpdateStream(mem.toDS(), state).start()
-    try {
-      (1 to KMeansQueries.MbRounds).foreach { t =>
-        mem.addData(slice(t)); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val batch = KMeansQueries.kmeansMiniBatch(spark, sf0001)
-      .as[(Int, Int, Double, Long)].collect()
-    val streamed = state.cents.zipWithIndex.flatMap { case (c, i) =>
-      c.zipWithIndex.map { case (x, j) => (i, j + 1, x, state.counts(i)) }
-    }
-    assert(batch.toSet == streamed.toSet && batch.nonEmpty)
-  }
+object StreamingSpec {
+  final case class SVecIn(vec_id: Long, embedding: Seq[Float], label: Int)
+  final case class SDocQ(doc_id: Long, text: String, lang: String)
+  final case class SCrawlDoc(doc_id: Long, text: String)
+  final case class SHost(doc_id: Long, host: String)
+  final case class SUrl(doc_id: Long, host: String, path: String)
+  final case class SImg(doc_id: Long)
+  final case class SMedia(doc_id: Long, blob: Array[Byte])
 }

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+
 import graft.operators.{Archives, Warc}
+import graft.operators.Multimodal.MediaRow
 
 /** The WARC reader: grammar round-trips, the warcinfo/non-response
   * skip rule, and the refusal posture (None on any malformation —
@@ -196,5 +200,63 @@ class WarcSpec extends SparkSessionSpec {
       .as[(Long, String)].collect()
     // one row per document, each the plain text the synthesis wrapped
     assert(got.length == docs.size && got.toSet == docs)
+  }
+
+  /** Feeds each chunk to a MemoryStream as one micro-batch, runs `op` on
+    * every micro-batch, and returns the union of its output rows. */
+  private def perMicroBatch[R](chunks: Seq[Seq[MediaRow]])
+      (op: Dataset[MediaRow] => Dataset[R]): Seq[R] = {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val mem = MemoryStream[MediaRow]
+    val got = scala.collection.mutable.ArrayBuffer[R]()
+    val q = mem.toDS().writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: Dataset[MediaRow], _: Long) =>
+        got ++= op(batch).collect()
+        ()
+      }.start()
+    try chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
+    finally q.stop()
+    got.toSeq
+  }
+
+  test("streaming crawl extraction equals the batch three-layer unwrap") {
+    import spark.implicits._
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      .select("doc_id", "text").as[(Long, String)].collect()
+    val blobs = docs.toSeq.map { case (id, text) =>
+      MediaRow(id, Warc.encodeWarcHttp(id, text))
+    }
+    // each micro-batch pays one pass through the batch kernels:
+    // WARC walk, HTTP parse, HTML strip
+    val got = perMicroBatch(Seq(blobs.take(blobs.length / 2),
+        blobs.drop(blobs.length / 2))) { b =>
+      b.mapPartitions(_.flatMap { m =>
+        for {
+          rs <- Warc.decodeWarcPayloads(m.blob).toSeq
+          (_, payload) <- rs
+          http <- Warc.parseHttp(payload)
+          text <- Warc.htmlToText(new String(http.body, "UTF-8"))
+        } yield (m.doc_id, text)
+      })
+    }
+    // the extraction inverts the synthesis: streamed == plain text
+    assert(got.toSet == docs.toSet,
+      s"crawl extraction diverged: ${got.size} vs ${docs.length}")
+  }
+
+  test("streaming warc ingest equals the batch rollup across splits") {
+    import spark.implicits._
+    val blobs = Warc.warcMedia(spark, sf0001).collect().toSeq
+    val (a, rest) = blobs.splitAt(blobs.length / 3)
+    val (b, c) = rest.splitAt(rest.length / 2)
+    val got = perMicroBatch(Seq(a, b, c)) { batch =>
+      Warc.warcInfoOf(batch).toDF().as[(Long, Long, Long, Long)]
+    }
+    val batch = Warc.mmWarc(spark, sf0001)
+      .as[(Long, Long, Long, Long)].collect().toSet
+    assert(got.toSet == batch,
+      s"warc ingest diverged: ${got.size} streamed vs ${batch.size} batch")
   }
 }
