@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
   *
   * Replaces the declarative composition
   * `slice(array_sort(zip_with(distances, sequence, struct)), 1, n)`
-  * that [[graft.operators.Similarity.probeCellsCol]] used: the
+  * that the IVF probe routing used: the
   * higher-order functions in that form are not codegen'd — every row
   * allocated k structs and ran an interpreted comparator sort of all k
   * cells just to keep the first n ≤ 4. With the cell count scaling as

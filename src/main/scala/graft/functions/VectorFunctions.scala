@@ -15,14 +15,9 @@ import org.apache.spark.sql.functions._
 object VectorFunctions {
 
   /** Σᵢ aᵢ·bᵢ — dot product of two equal-length array<double> columns.
-    * Lowered to the native fused loop (graft.expressions.DotProduct);
-    * [[dotBuiltin]] keeps the pure-built-in form, bitwise-equivalent. */
+    * Lowered to the native fused loop (graft.expressions.DotProduct). */
   def dot(a: Column, b: Column): Column =
     graft.expressions.DotProduct(a, b)
-
-  /** Built-in composition of [[dot]] (same accumulation order). */
-  def dotBuiltin(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   /** Σᵢ (aᵢ−bᵢ)² — squared Euclidean distance (monotone in distance, so
     * argmin over it equals argmin over the distance itself; avoids sqrt
@@ -39,10 +34,6 @@ object VectorFunctions {
   /** ‖a‖₂ */
   def l2Norm(a: Column): Column =
     sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x * x))
-
-  /** cos(a,b) = a·b / (‖a‖‖b‖) */
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (l2Norm(a) * l2Norm(b))
 
   /** a / s for scalar column s (the reference's Point.scale). */
   def vecScale(a: Column, s: Column): Column = transform(a, x => x / s)

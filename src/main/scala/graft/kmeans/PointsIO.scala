@@ -7,15 +7,13 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** I/O parity with the reference's text formats (FIXTURES.md §A).
   *
   * Input: one point per line, `<x1, x2, …, xd>` — parser semantics of
   * `KMeans.parsePoint` (/root/reference/kmeans/.../KMeans.java:261-274):
   * strip angle brackets, split on comma+whitespace, parse as double.
-  * [[readPoints]] parses through the DSv2 `points` source;
-  * [[readPointsText]] is the same parse in built-in string expressions.
+  * [[readPoints]] parses through the DSv2 `points` source.
   *
   * Output: `clusterId TAB <c1, c2, …>` — the reference's reducer output
   * (KMeans.java:90,150), written on the driver as one part file
@@ -32,15 +30,6 @@ object PointsIO {
     * NumberFormatException behavior (KMeans.java:269). */
   def readPoints(spark: SparkSession, path: String): DataFrame =
     spark.read.format("points").load(path)
-
-  /** The pre-DSv2 built-in-expression parse of the same format (kept:
-    * it is the pattern for ad-hoc text formats without a connector). */
-  def readPointsText(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
-      .where(length(trim(col("value"))) > 0)
-      .select(
-        split(regexp_replace(col("value"), "[<>]", ""), ",\\s*")
-          .cast("array<double>").as("point"))
 
   /** Write centroids as the reference's `id\t<coords>` text lines, id =
     * array index, into `path` as ONE file `part-00000`, on the driver
@@ -89,15 +78,4 @@ object PointsIO {
       throw new IOException(s"centroid write: rename failed in $dir")
     fs.create(new Path(dir, "_SUCCESS"), true).close()
   }
-
-  /** Read centroids written by [[writeCentroids]] (or by the reference's
-    * reducer) back into (cluster, centroid) rows — full-width id parse,
-    * no k≤10 limit. */
-  def readCentroids(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
-      .where(length(trim(col("value"))) > 0)
-      .select(
-        split(col("value"), "\t").getItem(0).cast("int").as("cluster"),
-        split(regexp_replace(split(col("value"), "\t").getItem(1), "[<>]", ""),
-          ",\\s*").cast("array<double>").as("centroid"))
 }

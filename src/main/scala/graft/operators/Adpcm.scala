@@ -42,10 +42,6 @@ object Adpcm {
   // synthesis closed forms (replayed verbatim by the oracle)
   def nibblesOf(docId: Long, nChars: Long): Int =
     ((nChars % 40) + 8).toInt
-  def nibbleOf(docId: Long, t: Int): Int =
-    ((docId * 5 + t * 3L) % 16).toInt
-  def predInitOf(docId: Long): Int = ((docId * 37) % 4001).toInt - 2000
-  def idxInitOf(docId: Long): Int = (docId % 89).toInt
 
   /** One decode step: (pred, idx, nibble) → (pred', idx'). */
   private[graft] def step(pred: Int, idx: Int, n: Int): (Int, Int) = {
@@ -62,8 +58,7 @@ object Adpcm {
 
   /** Per-block closed forms for the MULTI-block corpus: each block
     * carries its own header state (the format's seek/parallel-decode
-    * feature) and its own nibble stream. Block 0 of a 1-block blob
-    * reduces to the [[predInitOf]]/[[idxInitOf]]/[[nibbleOf]] forms. */
+    * feature) and its own nibble stream. */
   def blocksOf(docId: Long): Int = (1 + docId % 3).toInt
   def predInitOfBlock(docId: Long, b: Int): Int =
     (((docId * 37) + b * 101L) % 4001).toInt - 2000

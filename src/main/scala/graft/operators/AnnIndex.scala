@@ -236,10 +236,6 @@ object AnnIndex {
     * physically. */
   private def ensureDeletes(spark: SparkSession, dir: String): String = {
     val path = ensureDeltaOnce(spark, dir)
-    // gate on EITHER layout: a per-batch tombstone set
-    // ([[appendDeleteBatch]]) is already a valid deletes segment and
-    // is kept as-is — the overwrite would silently resurrect its
-    // deletes (it has no root _SUCCESS marker)
     if (!segmentAvailable(spark, path, "deletes"))
       committedSegments(spark, path)
         .where(col("vec_id") % DeleteMod === DeleteRes)
@@ -310,8 +306,8 @@ object AnnIndex {
     * the base alone. Same union the compaction folds.
     *
     * `probeCells` pushes a cell filter into EACH segment scan before
-    * layout columns are normalized away: bucket-dir pruning first
-    * (the batch layout's `bucket = cell % CellBuckets` hive dirs —
+    * the layout column is dropped: bucket-dir pruning first
+    * (the `bucket = cell % CellBuckets` hive dirs —
     * whole directories skipped before any IO), then the cell equality
     * itself, which parquet row-group min/max stats resolve inside the
     * surviving files because every file is sorted by cell
@@ -328,8 +324,8 @@ object AnnIndex {
           else raw
         bucketPruned.where(col("cluster").isin(cs.map(Int.box): _*))
       }
-      filtered.drop(
-        Seq("batch_id", "bucket").filter(filtered.columns.contains(_)): _*)
+      if (filtered.columns.contains("bucket")) filtered.drop("bucket")
+      else filtered
     }
     val base = seg("codes")
     if (segmentAvailable(spark, path, "codes_delta"))
@@ -338,40 +334,21 @@ object AnnIndex {
     else base
   }
 
-  /** A segment exists in the BATCH layout (root `_SUCCESS` marker). */
-  private[graft] def committed(spark: SparkSession, path: String,
-                               seg: String): Boolean = {
+  /** A segment is committed: its root `_SUCCESS` marker exists. */
+  private[graft] def segmentAvailable(spark: SparkSession, path: String,
+                                      seg: String): Boolean = {
     val marker = new org.apache.hadoop.fs.Path(s"$path/$seg/_SUCCESS")
     val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
     fs.exists(marker)
   }
 
-  /** A segment exists in the PER-BATCH layout: [[appendDeleteBatch]]
-    * publishes `batch_id=<id>/` subtrees, so the commit markers live
-    * inside the batch dirs, not at the segment root. */
-  private[graft] def batchPartitioned(spark: SparkSession, path: String,
-                                    seg: String): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(s"$path/$seg")
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(root) && fs.listStatus(root)
-      .exists(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-  }
-
-  /** Segment readable under EITHER physical layout: written whole at
-    * the segment root (root `_SUCCESS`), or as `batch_id=*`
-    * subtrees. */
-  private[graft] def segmentAvailable(spark: SparkSession, path: String,
-                                      seg: String): Boolean =
-    committed(spark, path, seg) || batchPartitioned(spark, path, seg)
-
-  /** Read a segment regardless of which layout produced it. The
-    * per-batch layout surfaces `batch_id` and the bucketed layout
-    * `bucket` as discovered partition columns — physical
-    * bookkeeping, not segment data — so both are dropped here. */
+  /** Read a segment. The bucketed layout surfaces `bucket` as a
+    * discovered partition column — physical bookkeeping, not segment
+    * data — so it is dropped here. */
   private[graft] def readSegment(spark: SparkSession, path: String,
                                  seg: String): DataFrame = {
     val df = spark.read.parquet(s"$path/$seg")
-    df.drop(Seq("batch_id", "bucket").filter(df.columns.contains(_)): _*)
+    if (df.columns.contains("bucket")) df.drop("bucket") else df
   }
 
   /** Apply the committed tombstone set (when one exists) to a code
@@ -381,123 +358,18 @@ object AnnIndex {
     * other direction. Anti join on the id; the tombstone side is a
     * thin (vec_id) relation AQE broadcasts while it is small and
     * shuffles once it is not — both correct at 100 TB. */
-  private[graft] def minusDeletes(spark: SparkSession, path: String,
-                                  codes: DataFrame): DataFrame =
+  private def minusDeletes(spark: SparkSession, path: String,
+                           codes: DataFrame): DataFrame =
     if (segmentAvailable(spark, path, "deletes"))
       codes.join(readSegment(spark, path, "deletes").select(col("vec_id")),
         Seq("vec_id"), "left_anti")
     else codes
 
-  /** Append ONE delete batch as its own `deletes/batch_id=<n>/`
-    * subtree, which every reader unions ([[batchPartitioned]] /
-    * [[readSegment]]). This is the scale-safe
-    * tombstone write: cost is O(batch) — no driver collect of the
-    * existing set, no rewrite of prior batches — and crash-atomic:
-    * the batch is written to a sibling tmp dir first, then one
-    * atomic rename publishes it (a crash before the rename leaves
-    * only an ignored `deletes_batch_tmp_*` sibling; prior batches
-    * and their commit markers are never touched, so tombstones can
-    * never silently resurrect the way a torn full-set overwrite
-    * could). A legacy single-segment `deletes/` (root-level part
-    * files) is migrated once into `batch_id=<MaintBatchBase>` by
-    * metadata-only renames before the first append. Single-writer
-    * maintenance flow, like every segment writer here. */
-  /** Batch count above which [[appendDeleteBatch]] folds the tombstone
-    * set into one superset batch: bounds both the per-append
-    * listStatus cost and the reader's union fan-in between
-    * compactions at ~O(threshold) whatever the retraction churn.
-    * Amortized fold cost per append is O(total-tombstones/threshold). */
-  private[graft] val DeleteFoldThreshold = 32
-
-  /** Floor of the MAINTENANCE tombstone-batch id range: appends claim
-    * ids ≥ 2⁴⁰, so a `batch_id=` directory below it (written under
-    * another writer's own ids) is never overwritten or folded. */
-  private[graft] val MaintBatchBase = 1L << 40
-
-  private[operators] def appendDeleteBatch(spark: SparkSession,
-      path: String, batch: DataFrame): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"$path/$s")
-    val segRoot = p("deletes")
-    val fs = segRoot.getFileSystem(conf)
-    // one-time legacy migration: root-level part files →
-    // batch_id=<MaintBatchBase>. Keyed on the presence of loose DATA
-    // files — NOT on committed(): a crash mid-migration may already
-    // have moved _SUCCESS into the batch dir (listStatus order), so a
-    // marker-keyed retry would skip the remaining files and leave a
-    // mixed-depth layout that breaks partition discovery for every
-    // subsequent read of deletes/, permanently. Data files move FIRST
-    // and _SUCCESS LAST, so any interrupted migration is completed by
-    // the next append — never half-abandoned.
-    val legacyDst =
-      new org.apache.hadoop.fs.Path(segRoot, s"batch_id=$MaintBatchBase")
-    if (fs.exists(segRoot)) {
-      val loose = fs.listStatus(segRoot).filter(_.isFile)
-      val (markers, data) = loose.partition(_.getPath.getName.startsWith("_"))
-      val moves =
-        if (data.nonEmpty) data ++ markers
-        // only _SUCCESS left loose next to the dir it belongs in: the
-        // tail of a torn migration — finish it
-        else if (markers.nonEmpty && fs.exists(legacyDst)) markers
-        else Array.empty[org.apache.hadoop.fs.FileStatus]
-      if (moves.nonEmpty) fs.mkdirs(legacyDst)
-      moves.foreach { st =>
-        if (!fs.rename(st.getPath,
-            new org.apache.hadoop.fs.Path(legacyDst, st.getPath.getName)))
-          throw new java.io.IOException(
-            s"tombstone layout migration failed: cannot move " +
-              s"${st.getPath} into $legacyDst")
-      }
-    }
-    def batchIds(): Seq[Long] =
-      if (!fs.exists(segRoot)) Seq.empty
-      else fs.listStatus(segRoot).iterator
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("batch_id=") =>
-          n.stripPrefix("batch_id=").toLong }
-        .toSeq
-    def publish(df: DataFrame, tmpName: String, id: Long): Unit = {
-      val tmp = p(tmpName)
-      df.select(col("vec_id")).coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      fs.mkdirs(segRoot)
-      if (!fs.rename(tmp,
-          new org.apache.hadoop.fs.Path(segRoot, s"batch_id=$id")))
-        throw new java.io.IOException(
-          s"tombstone batch publish failed: rename $tmp -> " +
-            s"$segRoot/batch_id=$id; the batch was not recorded and " +
-            "the append can be retried")
-    }
-    // maintenance ids live at MaintBatchBase and above; readers union
-    // every id range
-    val next = batchIds().foldLeft(MaintBatchBase - 1)(math.max) + 1
-    publish(batch, s"deletes_batch_tmp_$next", next)
-    // auto-fold: union-distinct every MAINTENANCE batch into one
-    // superset batch published under a fresh id, then drop the
-    // now-redundant ones. Monotone-safe at every crash point —
-    // tombstones only accumulate, so old-batches ∪ superset ≡ superset
-    // and a reader (which dedups at the anti join) sees the same live
-    // set whether the fold dies before, during, or after the drops.
-    // Batches below MaintBatchBase are left alone.
-    val maintIds = batchIds().filter(_ >= MaintBatchBase)
-    if (maintIds.length > DeleteFoldThreshold) {
-      val folded = spark.read.parquet(segRoot.toString)
-        .where(col("batch_id") >= MaintBatchBase)
-        .select(col("vec_id")).distinct()
-      val foldId = maintIds.max + 1
-      publish(folded, s"deletes_fold_tmp_$foldId", foldId)
-      maintIds.foreach(i =>
-        fs.delete(new org.apache.hadoop.fs.Path(segRoot, s"batch_id=$i"),
-          true))
-    }
-  }
-
   /** The tombstone set as a JOINABLE unit relation: deduplicated on
-    * vec_id, because the per-batch layout can legitimately carry the
-    * same id twice (two batches deleting the same vector) and a
-    * duplicated tombstone in a LEFT join would fan out segment rows
-    * and corrupt every count downstream. The anti join in [[minusDeletes]] is set-semantic
-    * already and skips the distinct's exchange. */
+    * vec_id, because a duplicated tombstone in a LEFT join would fan
+    * out segment rows and corrupt every count downstream. The anti
+    * join in [[minusDeletes]] is set-semantic already and skips the
+    * distinct's exchange. */
   private def tombstones(spark: SparkSession, path: String): DataFrame =
     readSegment(spark, path, "deletes")
       .select(col("vec_id")).distinct()

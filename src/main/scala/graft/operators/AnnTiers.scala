@@ -6,17 +6,8 @@ import org.apache.spark.sql.functions._
 /** ONE index root for the non-IVF-PQ quantization tiers — BQ codes,
   * SQ8 codes, their trained params, and the kNN navigation graph —
   * governed by the SAME segment model as [[AnnIndex]] (build-once
-  * `_SUCCESS`-gated segments, a thin `deletes/` tombstone segment
-  * every reader subtracts, physical reclamation at compaction). The
-  * point of unification: a vector deleted ONCE here disappears from
-  * EVERY tier's results — before this, the BQ/SQ8/graph artifacts
-  * were loose per-kind parquets with no delete story, so a corpus
-  * retraction would have had to hunt down three disjoint artifacts
-  * (AnnTiersSpec pins the one-delete-hides-everywhere contract).
-  *
-  * Registered queries never create tombstones (the synthetic corpus
-  * retracts nothing), so their oracles are untouched; the delete API
-  * exists for the retraction workflow and the spec.
+  * `_SUCCESS`-gated segments): every tier artifact is written once
+  * per (corpus, size) under one root whose path self-invalidates.
   *
   * Segment layout under `anntiers_<dir>_n<count>`:
   *  - `codes_bq/` — (vec_id, lo, hi): 8 B/vector sign codes
@@ -27,13 +18,10 @@ import org.apache.spark.sql.functions._
   *  - `params_ivfpqr_cents/`, `params_ivfpqr_cb/`, `codes_ivfpqr/` —
   *    the residual IVF-PQ's Lloyd-trained quantizers + 4 B/vector
   *    residual codes
-  *  - `deletes/` — thin (vec_id) tombstones, one `batch_id=<n>/`
-  *    subtree per delete call (append-only); ABSENT until a delete
   *
   * Scale posture: identical to [[AnnIndex]] — the code tables are the
   * big artifacts, written once per (corpus, size) and served from
-  * disk; the tombstone side of the reader's anti join is thin and
-  * AQE-broadcast while small. */
+  * disk. */
 object AnnTiers {
 
   /** The shared tier-index root — keyed by data dir AND corpus row
@@ -105,69 +93,4 @@ object AnnTiers {
   private[operators] def paramSegment(spark: SparkSession, dir: String,
       seg: String)(train: => DataFrame): DataFrame =
     ensureSegment(spark, dir, seg, 1)(train).limit(1)
-
-  /** Subtract the shared tombstone set from any tier relation keyed
-    * on vec_id — [[AnnIndex.minusDeletes]] against this root. Readers
-    * of EVERY tier route through here, which is what makes one
-    * delete hide a vector everywhere. */
-  private[operators] def minusDeletes(spark: SparkSession, dir: String,
-                                      rel: DataFrame): DataFrame =
-    AnnIndex.minusDeletes(spark, root(spark, dir), rel)
-
-  /** Record tombstones for `ids` — deletion writes ids, never touches
-    * a code segment (the Lucene .liv shape [[AnnIndex]] documents).
-    * Each call appends its OWN `batch_id=<n>` delete segment
-    * ([[AnnIndex.appendDeleteBatch]]): cost is O(batch) — prior
-    * tombstones are never read, collected, or rewritten, so a 100 TB
-    * index under heavy retraction churn pays per-batch, not
-    * O(total-deletes-ever), and a crash mid-write can only lose the
-    * in-flight batch, never the committed ones. Readers union the
-    * batches ([[minusDeletes]] dedups at the anti join); compaction
-    * folds them away. */
-  def deleteVectors(spark: SparkSession, dir: String,
-                    ids: Seq[Long]): Unit = {
-    val spark2 = spark
-    import spark2.implicits._
-    AnnIndex.appendDeleteBatch(spark, root(spark, dir),
-      ids.toDF("vec_id"))
-  }
-
-  /** Physical reclamation: rewrite every code/graph segment without
-    * its tombstoned rows (graph edges die when EITHER endpoint is
-    * dead), then drop the tombstone segment — the compaction phase of
-    * the same lifecycle [[AnnIndex.annIndexCompact]] runs for the
-    * IVF-PQ codes. Pure re-layout of already-encoded rows; quantizer
-    * params are untouched (frozen by definition). */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val path = root(spark, dir)
-    if (!AnnIndex.segmentAvailable(spark, path, "deletes")) return
-    val dead = AnnIndex.readSegment(spark, path, "deletes")
-      .select(col("vec_id")).distinct()
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def rewrite(seg: String, filter: DataFrame => DataFrame): Unit =
-      if (AnnIndex.segmentAvailable(spark, path, seg)) {
-        val live = filter(AnnIndex.readSegment(spark, path, seg))
-          .localCheckpoint(true)
-        live.write.mode("overwrite").parquet(s"$path/$seg")
-      }
-    rewrite("codes_bq", _.join(dead, Seq("vec_id"), "left_anti"))
-    rewrite("codes_sq8", _.join(dead, Seq("vec_id"), "left_anti"))
-    rewrite("codes_ivfpqr", _.join(dead, Seq("vec_id"), "left_anti"))
-    rewrite("graph", df => df
-      .join(dead.select(col("vec_id").as("query_id")),
-        Seq("query_id"), "left_anti")
-      .join(dead.select(col("vec_id").as("neighbor_id")),
-        Seq("neighbor_id"), "left_anti"))
-    // the seed-cells segment is cell-keyed and BUCKETED — its rewrite
-    // must keep that layout or probe-pruned reads lose their dirs
-    if (AnnIndex.segmentAvailable(spark, path, "cells")) {
-      val live = AnnIndex.readSegment(spark, path, "cells")
-        .join(dead, Seq("vec_id"), "left_anti")
-        .localCheckpoint(true)
-      graft.sources.ParquetSink.writeCellBucketed(live, s"$path/cells",
-        sortCols = Seq("vec_id"))
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/deletes"), true)
-  }
 }

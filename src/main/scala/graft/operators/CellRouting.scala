@@ -49,15 +49,6 @@ object CellRouting {
     if (cents.length <= CellTree.Branch) NearestCentroid(vec, cents)
     else element_at(ProbeCellsTree(vec, CellTree.build(cents), 1), 1)
 
-  /** Driver-side twin of [[probe]] — the [[AnnIndex]] cell-PRUNING
-    * list must be computed by the same router as the in-plan probe
-    * join, or a tree-probed cell could be pruned out of the segment
-    * scan entirely. */
-  def probeDriver(cents: Array[Array[Double]], v: Array[Double],
-                  n: Int): Seq[Int] =
-    if (cents.length <= CellTree.Branch) Similarity.probeCells(cents, v, n)
-    else CellTree.build(cents).routeArray(v, n).toIndexedSeq
-
   /** [[graft.kmeans.KMeansOps.assignDyn]]-shaped assignment: the input
     * frame plus a routed `cluster` column — drop-in at every coarse
     * call site. */

@@ -695,7 +695,7 @@ object Dedup {
     //     pair-dedup exchange or the verify joins.
     val alpha = expr(s"(($PrefTauNum * (na + nb)) + " +
       s"${PrefTauNum + PrefTauDen} - 1) DIV ${PrefTauNum + PrefTauDen}")
-    // instrumented (Dataset.observe, the observedGate device): the two
+    // instrumented (Dataset.observe): the two
     // candidate-stream counts that decide whether the filters hold at
     // the next decade — shared-prefix-token pairs surviving the LENGTH
     // filter, and those surviving the POSITIONAL bound. BenchLadder

@@ -256,9 +256,10 @@ object KMeansQueries {
     * sequential passes each picking ONE center, run [[KmparRounds]]
     * passes that each sample ~[[KmparL]] centers INDEPENDENTLY with
     * probability min(1, l·d²(x,C)/φ), then weight the oversampled
-    * candidate set by how many points each candidate owns (a driver-side
-    * recluster of the tiny weighted set finishes the job —
-    * [[reclusterWeighted]]). Every round is one scan: distances to the
+    * candidate set by how many points each candidate owns (Bahmani's
+    * step 7, reclustering that small weighted set down to k, is left
+    * to the caller: the query's product is the candidate set itself,
+    * which the oracle pins). Every round is one scan: distances to the
     * broadcast candidate set (plan literals, the O5 pattern), a 1-row φ
     * aggregate joined back broadcast, and an O(l) collect of sampled
     * rows — driver state is O(l·rounds·d), never data-sized.
@@ -434,61 +435,6 @@ object KMeansQueries {
     for (i <- cents.indices)
       counts(i) += sums.get(i).map(_._2).getOrElse(0L)
     next
-  }
-
-  /** Bahmani step 7: recluster the weighted candidate set down to k on
-    * the driver — the set is O(l·rounds) whatever the corpus size, so
-    * this is k-means++-style seeding (greedy farthest-weighted pick)
-    * plus weighted Lloyd on a handful of rows. Deterministic: seeding
-    * scans candidates in order, Lloyd ties break to the lowest index.
-    * Spec-gated ([[graft.KMeansSpec]]); the distributed product — the
-    * candidate set itself — is what the oracle pins. */
-  def reclusterWeighted(cands: Seq[(Array[Double], Long)], k: Int,
-                        maxIter: Int = 20): Array[Array[Double]] = {
-    require(cands.nonEmpty && cands.exists(_._2 > 0))
-    val d = cands.head._1.length
-    def sq(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < d) { val t = a(i) - b(i); s += t * t; i += 1 }
-      s
-    }
-    // greedy weighted farthest-point seeding (deterministic k-means++)
-    val centers = scala.collection.mutable.ArrayBuffer(
-      cands.maxBy(_._2)._1.clone())
-    while (centers.size < math.min(k, cands.size)) {
-      val next = cands.maxBy { case (v, w) =>
-        w.toDouble * centers.map(sq(v, _)).min
-      }
-      centers += next._1.clone()
-    }
-    // weighted Lloyd
-    var it = 0
-    var moved = true
-    while (moved && it < maxIter) {
-      val sums = Array.fill(centers.size)(Array.ofDim[Double](d))
-      val ws = Array.ofDim[Long](centers.size)
-      cands.foreach { case (v, w) =>
-        var best = 0; var bd = sq(v, centers(0))
-        var j = 1
-        while (j < centers.size) {
-          val dj = sq(v, centers(j))
-          if (dj < bd) { bd = dj; best = j }
-          j += 1
-        }
-        ws(best) += w
-        var i = 0
-        while (i < d) { sums(best)(i) += v(i) * w; i += 1 }
-      }
-      moved = false
-      for (j <- centers.indices if ws(j) > 0) {
-        val nc = sums(j).map(_ / ws(j))
-        if (!java.util.Arrays.equals(nc, centers(j))) {
-          moved = true; centers(j) = nc
-        }
-      }
-      it += 1
-    }
-    centers.map(_.clone()).toArray
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -23,8 +23,7 @@ object Pipeline {
   val MaxStopRatio = 0.3
 
   /** THE quality/language gate — single definition consumed by
-    * [[pipelineFilter]] and [[observedGate]], so the two gates cannot
-    * drift: tokenize, derive n_tokens /
+    * [[pipelineFilter]]: tokenize, derive n_tokens /
     * stop_ratio, keep docs with enough tokens, low stopword ratio and
     * lang = en. Entirely narrow (no shuffle). */
   def gate(docs: DataFrame): DataFrame =
@@ -55,24 +54,6 @@ object Pipeline {
         (sum(col("n_tokens")).cast("double") / count(lit(1)))
           .as("avg_tokens"))
   }
-
-  /** Pipeline OBSERVABILITY via `Dataset.observe`: the ingest/gate/
-    * output row counts every production curation run reports, collected
-    * as accumulator-backed metrics DURING the one real pass — a
-    * separate count() per stage would re-run the scan per metric (at
-    * 100 TB, three extra full jobs). The metrics surface on THIS
-    * dataset's QueryExecution.observedMetrics once one of its own
-    * actions runs (collect/write — NOT count(), which plans a separate
-    * execution); production code reads them via a
-    * QueryExecutionListener. OperatorsSpec asserts they equal
-    * independently-computed counts. Returns the observed gated frame
-    * (same rows as the pipelineFilter gate). */
-  def observedGate(docs: DataFrame): DataFrame =
-    gate(docs
-        .observe("ingest", count(lit(1)).as("n_ingested"),
-          sum(col("n_chars")).as("chars_ingested")))
-      .observe("gated", count(lit(1)).as("n_survivors"),
-        sum(col("n_chars")).as("chars_survived"))
 
   /** Benchmark decontamination — the overlap check every training
     * pipeline runs before export: corpus documents sharing any 3-gram

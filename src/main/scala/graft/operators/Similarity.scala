@@ -86,49 +86,8 @@ object Similarity {
     rankTopK(scored)
   }
 
-  /** Nearest `n` cell ids for one vector — driver-side reference
-    * implementation (same argmin + lowest-index tie-break as the
-    * distributed path; OperatorsSpec asserts agreement). */
-  def probeCells(cents: Array[Array[Double]], v: Array[Double],
-                 n: Int): Seq[Int] =
-    cents.iterator.zipWithIndex.map { case (c, i) =>
-      val d = c.iterator.zip(v.iterator)
-        .map { case (x, y) => (x - y) * (x - y) }.sum
-      (d, i)
-    }.toSeq.sortBy(identity).take(n).map(_._2)
-
-  /** The `n` nearest cell ids as a COLUMN (distance asc, cid asc — the
-    * strict-< tie-break), lowered to the native codegen
-    * [[graft.expressions.ProbeCells]] expression: one fused O(k·d)
-    * primitive loop per row plus an O(k·n) insertion-select, instead
-    * of the declarative form's interpreted k-struct sort — which, with
-    * k scaling as ⌈n/256⌉, was the measured super-linear term of the
-    * corpus-side KNN-graph routing (dedup_embed_cluster, BENCH_LADDER
-    * r13). Bitwise-identical output ([[probeCellsColDeclarative]]
-    * equivalence is spec-pinned), so oracle replay is unchanged at
-    * every scale. Runs on the query rows distributively — no driver
-    * collect. */
-  def probeCellsCol(vec: Column, cents: Array[Array[Double]],
-                    n: Int): Column =
-    graft.expressions.ProbeCells(vec, cents, n)
-
-  /** The declarative composition [[probeCellsCol]] replaced (per-cell
-    * distances zip with indices, struct-sort, slice n) — kept as the
-    * built-ins-only reference the native expression is asserted
-    * bitwise-equal to (OperatorsSpec), the same contract pairing as
-    * assignDyn/NearestCentroid. */
-  private[graft] def probeCellsColDeclarative(
-      vec: Column, cents: Array[Array[Double]], n: Int): Column = {
-    val ds = KMeansOps.distancesDyn(vec, cents)
-    transform(
-      slice(array_sort(zip_with(ds,
-        sequence(lit(0), lit(cents.length - 1)),
-        (d, i) => struct(d.as("d"), i.as("cid")))), 1, n),
-      s => s.getField("cid"))
-  }
-
   /** IVF-pruned cosine top-k: probe the NProbe nearest k-means cells.
-    * Routing is in-plan ([[probeCellsCol]] on the query DF) and the
+    * Routing is in-plan ([[CellRouting.probe]] on the query DF) and the
     * probe list EXPLODES to (query, cell) rows joined on
     * `cell = cluster` — an equi key, so the corpus side hash-joins (or
     * broadcasts, as here, while the query batch is small) instead of
@@ -405,18 +364,13 @@ object Similarity {
     }
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("node"))
-    // tombstoned vectors stay NAVIGABLE (the FreshDiskANN rule —
-    // dropping them from routing would disconnect the graph until
-    // compaction) but must never be RETURNED: subtract the shared
-    // tier tombstones before ranking (gapless ranks), and — the
-    // Vamana membership rule — only vectors PRESENT in the graph
-    // segment (≥1 outgoing edge) are returnable, so a compacted-away
-    // vector cannot resurrect through the raw-corpus seed path once
-    // its tombstone has been reclaimed
-    val live = AnnTiers.minusDeletes(spark, dir,
-        frontier.where(col("node") =!= col("query_id"))
-          .withColumnRenamed("node", "vec_id"))
-      .withColumnRenamed("vec_id", "node")
+    // the Vamana membership rule: only vectors PRESENT in the graph
+    // segment (≥1 outgoing edge) are returnable. The seed reads the
+    // `cells` segment and the hops score the raw corpus, and neither
+    // is the graph artifact, so without the semi-join the result set
+    // would follow those inputs rather than the index being searched.
+    // Applied before ranking, so ranks stay gapless.
+    val live = frontier.where(col("node") =!= col("query_id"))
       .join(edges.select(col("node")).distinct(), Seq("node"), "left_semi")
     val out = live
       .withColumn("rank", row_number().over(w))
@@ -678,7 +632,7 @@ object Similarity {
   /** IVF-PQ — the canonical billion-scale ANN layout (coarse inverted
     * lists + product-quantized residual-free codes): corpus rows carry
     * (coarse cell, 8 PQ codes); a query probes its NProbe nearest
-    * cells ([[probeCellsCol]], in-plan) and ADC-scores ONLY rows in
+    * cells ([[CellRouting.probe]], in-plan) and ADC-scores ONLY rows in
     * probed cells, from codes + broadcast lookup tables. At 100 TB the
     * scan touches ~NProbe/k of the corpus and reads 4 packed bytes per
     * touched vector — the multiplicative composition of the IVF prune
@@ -757,7 +711,7 @@ object Similarity {
     * carries [[PqM]]·[[PqKsub]] rows regardless of corpus size. Means
     * 6dp-rounded, empty codes keep their previous sub-centroid (same
     * contract as [[trainedCoarseCentroids]]). */
-  private def trainResidualCodebook(assigned: DataFrame,
+  private[operators] def trainResidualCodebook(assigned: DataFrame,
       seed: Array[Array[Array[Double]]]): Array[Array[Array[Double]]] = {
     var cb = seed
     for (_ <- 1 to PqTrainRounds) {
@@ -782,40 +736,6 @@ object Similarity {
     cb
   }
 
-  /** Training diagnostic (the FAISS `index.train()` stats idiom):
-    * corpus-average residual reconstruction error under the seed
-    * codebook vs the Lloyd-trained one. The k-means objective is
-    * monotone under exact arithmetic, so trained < seed is the
-    * direct witness that [[trainResidualCodebook]] optimizes what it
-    * claims — spec-pinned, because the top-k-sampled |adc − true|
-    * metric is selection-biased (ranking by ADC favors
-    * underestimates) and CANNOT certify training. */
-  private[graft] def residualTrainingGain(spark: SparkSession,
-      dir: String): (Double, Double) = {
-    val spark2 = spark
-    import spark2.implicits._
-    val cents = trainedCoarseCentroids(spark, dir)
-    val centDf = broadcast(cents.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("c_cl", "cent"))
-    val assigned = CellRouting.assign(emb(spark, dir), "v", cents)
-      .join(centDf, col("cluster") === col("c_cl"))
-      .withColumn("r", zip_with(col("v"), col("cent"), (a, b) => a - b))
-      .drop("c_cl", "cent")
-    val ck = cents.length
-    val seedRs = assigned
-      .where(col("vec_id") >= ck && col("vec_id") < ck + PqKsub)
-      .select(col("vec_id"), col("r")).collect()
-      .sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
-    val seed = Array.tabulate(PqM)(m =>
-      seedRs.map(_.slice(m * PqSubDim, (m + 1) * PqSubDim)))
-    def distortion(cb: Array[Array[Array[Double]]]): Double =
-      withBlockDists(assigned, "r", cb, "ds_")
-        .select(sqrt((0 until PqM).map(m => array_min(col(s"ds_$m")))
-          .reduce(_ + _)).as("e"))
-        .agg(avg(col("e"))).collect()(0).getDouble(0)
-    (distortion(seed), distortion(trainResidualCodebook(assigned, seed)))
-  }
-
   /** RESIDUAL IVF-PQ — the production (FAISS `IVFPQ`) refinement of
     * [[annIvfPq]]: codes quantize the RESIDUAL v − centroid(cell(v))
     * instead of the raw vector. Residuals concentrate near zero once
@@ -835,7 +755,7 @@ object Similarity {
     * replays the ENTIRE training as chained CTEs and lands on
     * bit-identical quantizers. Training runs ONCE per corpus: the
     * trained centroids, sub-codebooks and the encoded code table are
-    * [[AnnTiers]] segments (tombstone-governed like every tier), so
+    * [[AnnTiers]] segments, so
     * a warm search reads them back instead of re-paying the ~7
     * corpus passes of the build. Same ADC join shape as [[annIvfPq]];
     * the geometry (residual) AND the quantizers (trained) changed,
@@ -910,14 +830,14 @@ object Similarity {
     val cb = ivfpqrCodebook(spark, dir, cents)
     val centDf = broadcast(cents.zipWithIndex
       .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("c_cl", "cent"))
-    val encoded = AnnTiers.minusDeletes(spark, dir,
+    val encoded =
       AnnTiers.ensureSegment(spark, dir, "codes_ivfpqr", 0) {
         withBlockDists(ivfpqrAssigned(spark, dir, cents), "r", cb, "ds_")
           .select(col("vec_id") +: col("cluster") +:
             (0 until PqM).map(m =>
               (array_position(col(s"ds_$m"), array_min(col(s"ds_$m"))) - 1)
                 .cast("int").as(s"code_$m")): _*)
-      })
+      }
     val probedQ = queriesDf(spark, dir)
       .select(col("query_id"), col("qv"))
       .withColumn("probe_cell",
@@ -947,9 +867,7 @@ object Similarity {
   // PERSISTED QUANTIZER PARAMS + CODE SEGMENTS now live in the
   // unified tier index ([[AnnTiers]]): params trained once as 1-row
   // segments (a quantizer is part of the index, never re-derived per
-  // run), codes persisted at their compressed width, and EVERY tier
-  // reader subtracting the shared tombstone segment — so a vector
-  // deleted once disappears from BQ, SQ8 and graph results alike.
+  // run) and codes persisted at their compressed width.
 
   /** Scalar-quantized corpus — (vec_id, codes: array<int>) plus the
     * 1-row (mn, step) params broadcast into the plan. Quantization is
@@ -969,16 +887,14 @@ object Similarity {
     }
     // the encoded corpus is itself a persisted index segment (the
     // [[AnnTiers]] unification): built once at 64 B/vector, read from
-    // disk ever after, tombstones subtracted like every tier reader
-    val codes = AnnTiers.ensureSegment(spark, dir, "codes_sq8", 0) {
+    // disk ever after
+    AnnTiers.ensureSegment(spark, dir, "codes_sq8", 0) {
       emb(spark, dir).crossJoin(broadcast(params))
         .select(col("vec_id"),
           transform(col("v"), x =>
             least(lit(Sq8Levels.toLong),
               floor((x - col("mn")) / col("step"))).cast("int")).as("codes"))
-    }
-    AnnTiers.minusDeletes(spark, dir, codes)
-      .crossJoin(broadcast(params.select(col("mn"), col("step"))))
+    }.crossJoin(broadcast(params.select(col("mn"), col("step"))))
       .select(col("vec_id"), col("mn"), col("step"), col("codes"))
   }
 
@@ -1043,7 +959,7 @@ object Similarity {
     // vectors are NOT carried alongside the codes any more — the
     // refine tier joins them back by candidate id, so the Hamming
     // scan truly reads 8 bytes/vector from disk
-    val codes = AnnTiers.ensureSegment(spark, dir, "codes_bq", 0) {
+    AnnTiers.ensureSegment(spark, dir, "codes_bq", 0) {
       val e = emb(spark, dir)
       val thr = AnnTiers.paramSegment(spark, dir, "params_bq") {
         e.agg(array((0 until 64).map(i => avg(col("v")(i))): _*).as("thr"))
@@ -1066,7 +982,6 @@ object Similarity {
       e.crossJoin(broadcast(thr))
         .select(col("vec_id"), packWord(0).as("lo"), packWord(32).as("hi"))
     }
-    AnnTiers.minusDeletes(spark, dir, codes)
   }
 
   private def hammingCol: Column =

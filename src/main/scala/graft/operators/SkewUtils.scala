@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation utilities for hot join keys at scale.
@@ -28,11 +28,4 @@ object SkewUtils {
       explode(sequence(lit(0), lit(salt - 1))))
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
-
-  /** Top-n heavy-hitter keys with their frequencies — the cheap
-    * diagnostic pass that decides whether salting is warranted. */
-  def keySkewProfile(df: DataFrame, key: Column, topN: Int = 10): DataFrame =
-    df.groupBy(key.as("key")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("key"))
-      .limit(topN)
 }

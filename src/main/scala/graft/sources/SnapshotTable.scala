@@ -104,7 +104,7 @@ object SnapshotTable {
     * deterministic for a given key set (fixed sketch seed), so
     * manifest bytes — and every skipping decision — replay across
     * runs. */
-  private def statsOf(spark: SparkSession, path: String,
+  private[sources] def statsOf(spark: SparkSession, path: String,
                       statsKey: Option[String])
       : (Long, Option[Long], Option[Long], Option[Array[Byte]]) = {
     val df = spark.read.parquet(path)
@@ -153,7 +153,7 @@ object SnapshotTable {
 
   /** Write + atomically publish the manifest for version `next` —
     * the shared commit point of [[commitAs]] and [[commitBatch]]. */
-  private def publish(spark: SparkSession, root: String, next: Int,
+  private[sources] def publish(spark: SparkSession, root: String, next: Int,
                       entries: Seq[Entry]): Unit = {
     val spark2 = spark
     import spark2.implicits._
@@ -499,7 +499,7 @@ object SnapshotTable {
     require(fromVersion < toVersion,
       s"changes window must be ascending: ($fromVersion, $toVersion]")
     // changes() reports APPENDED rows; MOR delete vectors inside the
-    // window are visible via [[deletedKeys]], not as phantom appends.
+    // window are not reported as phantom appends.
     // Appended rows normalize through the manifest's schema actions
     // like every read, so a consumer sees the resolved schema.
     val all = manifestEntries(spark, root, toVersion)
@@ -796,18 +796,6 @@ object SnapshotTable {
       manifestEntries(spark, root, base) :+ delEntry :+
         Entry(dataRel, next, nRows, minK, maxK, bloom))
     next
-  }
-
-  /** The keys deleted by MOR vectors in (fromVersion, toVersion] —
-    * the delete side of the CDC feed ([[changes]] carries the append
-    * side). */
-  def deletedKeys(spark: SparkSession, root: String, fromVersion: Int,
-                  toVersion: Int): DataFrame = {
-    val dels = manifestEntries(spark, root, toVersion)
-      .filter(e => e.kind == "delete" && e.addedIn > fromVersion)
-    require(dels.nonEmpty,
-      s"no delete vectors in ($fromVersion, $toVersion] at $root")
-    unionSets(spark, root, dels)
   }
 
   /** MATERIALIZE MERGE-ON-READ DELETES — the maintenance op that
@@ -1196,7 +1184,7 @@ object SnapshotTable {
     * wrote their attempt-unique data dir but never published). Every
     * dir any published manifest lists survives by construction —
     * but an IN-FLIGHT commit (data dir written, manifest rename not
-    * yet landed, e.g. [[commitRetry]] mid-publish) is
+    * yet landed) is
     * indistinguishable from crash debris, so vacuum with the default
     * `olderThanMs = 0` requires the same ingest fence as
     * [[materializeDeletes]]: no concurrent writers. To schedule
@@ -1260,14 +1248,14 @@ object SnapshotTable {
     next
   }
 
-  /** The merge's scope-and-rewrite step, shared by the pinned-base
-    * [[mergeAs]] and the validating-retry [[mergeRetryAs]]: resolve
+  /** The merge's scope-and-rewrite step of the pinned-base
+    * [[mergeAs]]: resolve
     * the base manifest, scope to intersecting sets, write the
     * rewritten set ONCE (unique dir), stat it on the merge key.
     * Returns (base entries, touched dirs, update key envelope —
     * None when un-scopable, new entry with a provisional
     * `addedIn`). */
-  private def mergeWrite(spark: SparkSession, root: String,
+  private[sources] def mergeWrite(spark: SparkSession, root: String,
                          updates: DataFrame, key: String, baseV: Int)
       : (Seq[Entry], Set[String], Option[(Long, Long)], Entry) = {
     val entries = manifestEntries(spark, root, baseV)
@@ -1306,132 +1294,5 @@ object SnapshotTable {
       statsOf(spark, s"$root/$dataRel", Some(key))
     (entries, touched.map(_.dir).toSet, env,
       Entry(dataRel, baseV + 1, nRows, minK, maxK, bloom))
-  }
-
-  /** OPTIMISTIC APPEND WITH BOUNDED RETRY — the Iceberg fast-append
-    * model: appends COMMUTE with every concurrent commit, so losing
-    * the version-id race never invalidates the work — the data set
-    * is written ONCE to its attempt-unique dir, and only the
-    * manifest publish retries against the new latest (which now
-    * carries the concurrent writer's sets). Two writers appending
-    * disjoint batches both succeed, in whichever order the renames
-    * land. Exhausting `maxRetries` (a pathologically hot table)
-    * surfaces the last conflict. */
-  def commitRetry(spark: SparkSession, root: String, df: DataFrame,
-                  statsKey: Option[String] = None,
-                  maxRetries: Int = 5): Int =
-    commitRetryAs(spark, root, df, latestVersion(spark, root), statsKey,
-      maxRetries)
-
-  private[graft] def commitRetryAs(spark: SparkSession, root: String,
-                                   df: DataFrame, base: Option[Int],
-                                   statsKey: Option[String],
-                                   maxRetries: Int): Int = {
-    val first = base.getOrElse(0) + 1
-    val dataRel =
-      s"data/a$first-${java.util.UUID.randomUUID().toString.take(8)}"
-    df.write.parquet(s"$root/$dataRel")
-    val (nRows, minK, maxK, bloom) = statsOf(spark, s"$root/$dataRel", statsKey)
-    var cur = base
-    var attempt = 0
-    while (true) {
-      val next = cur.getOrElse(0) + 1
-      val carried = cur.toSeq.flatMap(manifestEntries(spark, root, _))
-      try {
-        publish(spark, root, next,
-          carried :+ Entry(dataRel, next, nRows, minK, maxK, bloom))
-        return next
-      } catch {
-        case e: IllegalStateException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-          cur = latestVersion(spark, root) // re-resolve and re-carry
-      }
-    }
-    -1 // unreachable
-  }
-
-  /** MERGE WITH CONFLICT VALIDATION — the Iceberg optimistic model
-    * for the non-commuting commit: on losing the version-id race the
-    * merge does NOT blindly retry (a concurrent writer may have
-    * changed rows this merge already rewrote — the lost-update
-    * anomaly). Instead it validates against the new latest manifest:
-    * (a) every file set this merge read and rewrote must still be
-    * referenced — a concurrent compact/overwrite/overlapping-merge
-    * that replaced one means the rewrite is stale; and (b) no
-    * concurrently-ADDED set's key range may intersect the update
-    * envelope — such rows would dodge the replace and duplicate
-    * keys. DISJOINT concurrent work (appends or merges over other
-    * key ranges) passes validation and the merge republishes against
-    * the new latest — its rewrite untouched, written once — so both
-    * writers succeed. Failing validation surfaces the conflict for a
-    * full re-merge from the new latest. */
-  def mergeRetry(spark: SparkSession, root: String, updates: DataFrame,
-                 key: String, maxRetries: Int = 5): Int =
-    mergeRetryAs(spark, root, updates, key, latestVersion(spark, root),
-      maxRetries)
-
-  private[graft] def mergeRetryAs(spark: SparkSession, root: String,
-                                  updates: DataFrame, key: String,
-                                  base: Option[Int], maxRetries: Int): Int = {
-    val baseV = base.getOrElse(
-      throw new IllegalStateException(s"no versions at $root"))
-    val (baseEntries, touchedDirs, env, entry) =
-      mergeWrite(spark, root, updates, key, baseV)
-    var entries = baseEntries
-    var cur = baseV
-    var attempt = 0
-    while (true) {
-      val next = cur + 1
-      try {
-        publish(spark, root, next,
-          entries.filterNot(e => touchedDirs.contains(e.dir))
-            :+ entry.copy(addedIn = next))
-        return next
-      } catch {
-        case e: IllegalStateException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-          val newCur = latestVersion(spark, root).getOrElse(cur)
-          val newEntries = manifestEntries(spark, root, newCur)
-          val newDirs = newEntries.map(_.dir).toSet
-          if (!touchedDirs.subsetOf(newDirs))
-            throw new IllegalStateException(
-              s"commit conflict: a concurrent writer replaced file sets " +
-                s"this merge rewrote at $root; re-merge from the latest " +
-                "version and retry")
-          val added = newEntries.filterNot(n =>
-            entries.exists(_.dir == n.dir))
-          // A concurrently-added MOR delete vector ALWAYS conflicts,
-          // whatever its key range: the vector's keys can sit inside a
-          // TOUCHED set's wider range while being disjoint from the
-          // update envelope, and republishing this merge's raw-read
-          // rewrite with addedIn=next (newer than the vector) would
-          // resurrect the concurrently-deleted rows — the same
-          // lost-delete anomaly mergeWrite's live-vector require
-          // refuses at base.
-          if (added.exists(_.kind == "delete"))
-            throw new IllegalStateException(
-              s"commit conflict: a concurrent commit added a merge-on-read " +
-                s"delete vector at $root; materialize deletes and re-merge " +
-                "from the latest version")
-          val addedConflicts = env match {
-            case None => added.nonEmpty // un-scopable: any add conflicts
-            case Some((uMin, uMax)) => added.exists(a =>
-              (a.minKey, a.maxKey) match {
-                case (Some(lo), Some(hi)) => hi >= uMin && lo <= uMax
-                case _ => true // unknown stats: cannot prove disjoint
-              })
-          }
-          if (addedConflicts)
-            throw new IllegalStateException(
-              s"commit conflict: a concurrent commit added rows inside " +
-                s"this merge's key range at $root; re-merge from the " +
-                "latest version and retry")
-          entries = newEntries
-          cur = newCur
-      }
-    }
-    -1 // unreachable
   }
 }

@@ -30,11 +30,11 @@ class AdpcmSpec extends SparkSessionSpec {
       val nc = 17L + id % 50
       val info = Adpcm.decode(id, Adpcm.encode(id, nc)).get
       val nNib = Adpcm.nibblesOf(id, nc)
-      var pred = Adpcm.predInitOf(id)
-      var idx = Adpcm.idxInitOf(id)
+      var pred = Adpcm.predInitOfBlock(id, 0)
+      var idx = Adpcm.idxInitOfBlock(id, 0)
       var sum = pred.toLong
       for (t <- 1 to nNib) {
-        val (p2, i2) = Adpcm.step(pred, idx, Adpcm.nibbleOf(id, t))
+        val (p2, i2) = Adpcm.step(pred, idx, Adpcm.nibbleOfBlock(id, 0, t))
         pred = p2; idx = i2; sum += pred
       }
       assert(info.n_samples == nNib + 1L, s"doc $id")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.expressions.{CellTree, ProbeCells, ProbeCellsTree}
-import graft.operators.CellRouting
+import graft.operators.{CellRouting, OperatorReferences}
 
 /** Contract of the beam-tree cell router that replaces the flat
   * O(k·d) routing scan for n-scaled coarse-cell sets (the
@@ -86,7 +86,7 @@ class CellTreeSpec extends SparkSessionSpec {
         assert(p.head == c, s"vec $id: probe head != assign at k=$k")
       }
       val viaDriver = emb.as[(Long, Seq[Double])].collect().map {
-        case (id, v) => id -> CellRouting.probeDriver(cents, v.toArray, 2)
+        case (id, v) => id -> OperatorReferences.probeDriver(cents, v.toArray, 2)
       }.toMap
       assert(viaCol.map(r => r._1 -> r._2).toMap == viaDriver, s"k=$k")
     }

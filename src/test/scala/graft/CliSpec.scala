@@ -6,7 +6,7 @@ import java.nio.file.Files
 
 import org.apache.spark.scheduler.SparkListenerJobStart
 
-import graft.kmeans.{KMeansCli, KMeansRunner, PointsIO}
+import graft.kmeans.{KMeansCli, KMeansRunner, PointsIO, PointsText}
 
 /** End-to-end drive of the reference CLI contract: text points in,
   * per-iteration output dir of `id\t<coords>` lines out, reference
@@ -77,7 +77,7 @@ class CliSpec extends SparkSessionSpec {
     assert(outDirs.length == 1, outDirs.map(_.getName).toSeq)
     val names = outDirs.head.list().toSet
     assert(names.filter(!_.startsWith(".")) == Set("part-00000", "_SUCCESS"), names)
-    val centroids = PointsIO.readCentroids(spark,
+    val centroids = PointsText.readCentroids(spark,
       outDirs.head.getAbsolutePath)
       .orderBy(col("cluster"))
       .as[(Int, Seq[Double])].collect()

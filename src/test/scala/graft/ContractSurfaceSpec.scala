@@ -24,7 +24,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *     query is dead weight the driver would silently skip).
   *
   * Source lints over `src/main` keep the program at what the contract
-  * reaches: no package only tests import, no Structured Streaming.
+  * reaches: no package only tests import, no def only tests call, no
+  * Structured Streaming.
   */
 class ContractSurfaceSpec extends AnyFunSuite {
 
@@ -44,8 +45,53 @@ class ContractSurfaceSpec extends AnyFunSuite {
   /** A source file's code with its comments blanked, so a scaladoc
     * link never counts as a use. */
   private def code(f: java.nio.file.Path): String =
-    Files.readString(f).replaceAll("(?s)/\\*.*?\\*/", " ")
-      .replaceAll("//[^\n]*", "")
+    stripComments(Files.readString(f))
+
+  /** `src` with its comments blanked. String and character literals
+    * are kept whole, so a `//` or a block-comment opener inside one
+    * (a URL, say) starts no comment. Block comments nest, as in
+    * Scala. */
+  private def stripComments(src: String): String = {
+    val out = new java.lang.StringBuilder(src.length)
+    var i = 0
+    def at(s: String) = src.startsWith(s, i)
+    def keep(end: Int): Unit = {
+      val j = math.min(end, src.length)
+      out.append(src, i, j); i = j
+    }
+    while (i < src.length) {
+      if (at("\"\"\"")) {
+        val close = src.indexOf("\"\"\"", i + 3)
+        var j = if (close < 0) src.length else close + 3
+        while (j < src.length && src(j) == '"') j += 1
+        keep(j)
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < src.length && src(j) != '"' && src(j) != '\n')
+          j += (if (src(j) == '\\') 2 else 1)
+        keep(j + 1)
+      } else if (src(i) == '\'' && i + 2 < src.length &&
+                 (src(i + 1) == '\\' || src(i + 2) == '\'')) {
+        val close =
+          if (src(i + 1) == '\\') src.indexOf('\'', i + 3) else i + 2
+        keep(if (close < 0) src.length else close + 1)
+      } else if (at("//")) {
+        val eol = src.indexOf('\n', i)
+        i = if (eol < 0) src.length else eol
+      } else if (at("/*")) {
+        var depth = 0
+        do {
+          if (at("/*")) { depth += 1; i += 2 }
+          else if (at("*/")) { depth -= 1; i += 2 }
+          else i += 1
+        } while (depth > 0 && i < src.length)
+        out.append(' ')
+      } else {
+        out.append(src(i)); i += 1
+      }
+    }
+    out.toString
+  }
 
   test("every query verified in the last judged round is still registered") {
     // newest CORRECTNESS_r*.json in the repo root (tests fork with the
@@ -164,5 +210,55 @@ class ContractSurfaceSpec extends AnyFunSuite {
       m <- streaming.findFirstIn(code(f))
     } yield s"$f: $m"
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("comment stripping keeps string literals whole") {
+    // Warc.encodeWarcHttp: the URL's `//` once blanked the rest of the
+    // line, hiding the htmlPage call after it
+    val warcLine = """      Seq((s"http://synth.graft/doc$docId", """ +
+      "httpResponse(htmlPage(text)))))"
+    assert(stripComments(warcLine) == warcLine)
+    assert(code(mainRoot.resolve("graft/operators/Warc.scala"))
+      .contains(warcLine))
+    // comments still go, nested blocks included, and a quote or a
+    // comment opener in a character literal opens nothing
+    assert(stripComments("a // b \"c\"\nd") == "a \nd")
+    assert(stripComments("a /* b /* c */ d */ e") == "a   e")
+    assert(stripComments("x('\"', '/', '\\'') // y") == "x('\"', '/', '\\'') ")
+    assert(stripComments("\"\"\"a // b\"\"\" // c") == "\"\"\"a // b\"\"\" ")
+  }
+
+  test("every def in src/main is used by src/main or perfbench") {
+    // Matches by NAME over the comment-stripped sources: a def counts
+    // as used when its name occurs anywhere beyond the def sites of
+    // that name. So a name shared by two defs hides an unused one
+    // whenever the other is used (AnnTiers.compact went unflagged
+    // beside SnapshotTable.compact), and a name that only occurs in a
+    // string literal counts as used. `override` defs are reached
+    // through their supertype; `main` is an entry point; AnnIndex's
+    // ThreadFactory.newThread implements an interface without the
+    // keyword.
+    assert(Files.isDirectory(mainRoot), s"no $mainRoot under the test cwd")
+    val mainFiles = scalaFiles(mainRoot).map(f => f -> code(f))
+    val corpus = (mainFiles.map(_._2) ++
+      scalaFiles(Paths.get("perfbench/src")).map(code)).mkString("\n")
+    val uses = """\b[A-Za-z_]\w*""".r.findAllIn(corpus).toSeq
+      .groupMapReduce(identity)(_ => 1)(_ + _)
+    val sites = """\bdef\s+([A-Za-z_]\w*)""".r.findAllMatchIn(corpus)
+      .toSeq.groupMapReduce(_.group(1))(_ => 1)(_ + _)
+    def allowed(f: java.nio.file.Path, name: String) = name == "main" ||
+      name == "newThread" && f.endsWith("graft/operators/AnnIndex.scala")
+    val defLine = """(?m)^(.*?)\bdef\s+([A-Za-z_]\w*)""".r
+    val unused = for {
+      (f, src) <- mainFiles
+      m <- defLine.findAllMatchIn(src)
+      name = m.group(2)
+      if !m.group(1).contains("override")
+      if !allowed(f, name)
+      if uses(name) <= sites(name)
+    } yield s"$f: $name"
+    assert(unused.isEmpty,
+      "defs nothing in src/main or perfbench/src calls (move a test " +
+        "reference into src/test, delete the rest):\n" + unused.mkString("\n"))
   }
 }

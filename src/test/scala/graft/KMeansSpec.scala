@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.kmeans.{KMeansOps, KMeansRunner, PointsIO}
+import graft.kmeans.{KMeansOps, KMeansRunner, PointsIO, PointsText}
 
 /** Reference-semantics unit tests for the k-means kernel (SURVEY.md §5):
   * strict-< argmin tie-break, mean finalization, empty-cluster re-init,
@@ -312,22 +312,6 @@ class KMeansSpec extends SparkSessionSpec {
     assert(out.length > operators.KMeansQueries.K && out.length < 250)
   }
 
-  test("reclusterWeighted recovers two well-separated weighted blobs") {
-    // two tight blobs; weights make the heavy points dominate the means
-    val cands = Seq(
-      (Array(0.0, 0.0), 10L), (Array(0.2, 0.0), 10L),
-      (Array(10.0, 10.0), 5L), (Array(10.2, 10.0), 15L),
-      (Array(0.1, 0.1), 0L)) // zero-weight candidate must not drag a mean
-    val cs = operators.KMeansQueries.reclusterWeighted(cands, k = 2)
-      .map(_.toSeq).sortBy(_.head)
-    assert(cs.length == 2)
-    // blob 1 weighted mean = (0.1, 0.0); blob 2 = (10.15, 10.0)
-    assert(cs(0).zip(Seq(0.1, 0.0)).forall { case (a, b) =>
-      math.abs(a - b) < 1e-9 })
-    assert(cs(1).zip(Seq(10.15, 10.0)).forall { case (a, b) =>
-      math.abs(a - b) < 1e-9 })
-  }
-
   test("kmeansMiniBatch is layout-independent and 6dp-quantized") {
     val a = operators.KMeansQueries.kmeansMiniBatch(spark, sf0001)
       .as[(Int, Int, Double, Long)].collect().sortBy(r => (r._1, r._2))
@@ -391,7 +375,7 @@ class KMeansSpec extends SparkSessionSpec {
     val data = Seq((0, Seq(0.41410840, 1.48714702)),
       (1, Seq(4.0019444906464745, 4.546128116278345)))
     PointsIO.writeCentroids(spark, data.map(_._2.toArray), s"$tmp/cents")
-    val back = PointsIO.readCentroids(spark, s"$tmp/cents")
+    val back = PointsText.readCentroids(spark, s"$tmp/cents")
       .orderBy("cluster").as[(Int, Seq[Double])].collect().toSeq
     assert(back == data)
     // and the bare points format parses the documented example

@@ -151,7 +151,7 @@ class PlansSpec extends SparkSessionSpec {
   }
 
   private def bucketedBody(): Unit = {
-    val join = graft.operators.RelationalQueries
+    val join = graft.operators.OperatorReferences
       .bucketedJoinPlan(spark, sf0001)
     join.collect() // force execution so AQE finalizes the plan
     val plan = join.queryExecution.executedPlan

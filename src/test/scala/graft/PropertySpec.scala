@@ -650,7 +650,7 @@ class PropertySpec extends SparkSessionSpec {
   }
 
   test("snapshot table tracks a sequential model under random op sequences") {
-    import graft.sources.SnapshotTable
+    import graft.sources.{RetryingWriters, SnapshotTable}
     // model-based testing: every op applies to the real table AND a
     // pure in-memory model (live versions -> row bags); after each op
     // the version list and the latest version's multiset must agree,
@@ -702,8 +702,9 @@ class PropertySpec extends SparkSessionSpec {
           case App(rows, keyed, retry) =>
             val sk = if (keyed) Some("doc_id") else None
             val v = if (retry)
-              SnapshotTable.commitRetry(spark, root,
-                rows.toDF("doc_id", "text"), sk)
+              RetryingWriters.commitRetryAs(spark, root,
+                rows.toDF("doc_id", "text"),
+                SnapshotTable.latestVersion(spark, root), sk, maxRetries = 5)
             else SnapshotTable.commit(spark, root,
               rows.toDF("doc_id", "text"), statsKey = sk)
             model :+= ((v, lastRows ++ rows, lastMor))
@@ -720,8 +721,9 @@ class PropertySpec extends SparkSessionSpec {
             }
           case Mrg(rows, retry) =>
             val v = if (retry)
-              SnapshotTable.mergeRetry(spark, root,
-                rows.toDF("doc_id", "text"), "doc_id")
+              RetryingWriters.mergeRetryAs(spark, root,
+                rows.toDF("doc_id", "text"), "doc_id",
+                SnapshotTable.latestVersion(spark, root), maxRetries = 5)
             else SnapshotTable.merge(spark, root,
               rows.toDF("doc_id", "text"), "doc_id")
             val keys = rows.map(_._1).toSet

@@ -1,6 +1,6 @@
 package graft
 
-import graft.kmeans.PointsIO
+import graft.kmeans.{PointsIO, PointsText}
 
 /** The DSv2 points source must agree byte-for-byte with the built-in
   * expression parse of the reference format, across any byte-range
@@ -31,7 +31,7 @@ class SourcesSpec extends SparkSessionSpec {
 
   test("DSv2 source == expression parse on the same file") {
     val viaSource = sortedVecs(spark.read.format("points").load(path))
-    val viaExpr = sortedVecs(PointsIO.readPointsText(spark, path))
+    val viaExpr = sortedVecs(PointsText.readPointsText(spark, path))
     assert(viaSource.size == 500)
     assert(viaSource == viaExpr)
   }
@@ -40,11 +40,11 @@ class SourcesSpec extends SparkSessionSpec {
     val df = spark.read.format("points")
       .option("splitSizeBytes", "64").load(path)
     assert(df.rdd.getNumPartitions > 1, "expected multiple range splits")
-    assert(sortedVecs(df) == sortedVecs(PointsIO.readPointsText(spark, path)))
+    assert(sortedVecs(df) == sortedVecs(PointsText.readPointsText(spark, path)))
   }
 
   test("split plan follows spark.sql.files.*; splitSizeBytes still overrides it") {
-    val expected = sortedVecs(PointsIO.readPointsText(spark, path))
+    val expected = sortedVecs(PointsText.readPointsText(spark, path))
     // one open cost (4 MiB) outweighs the 20 KB file: a single range
     assert(spark.read.format("points").load(path).rdd.getNumPartitions == 1)
     val key = "spark.sql.files.openCostInBytes"
