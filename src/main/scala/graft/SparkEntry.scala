@@ -11,8 +11,10 @@ import graft.operators._
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
-    * One full Lloyd round (assign → partial/final agg → mean) — the
-    * reference's entire per-iteration pipeline as a single Spark job. */
+    * One full Lloyd round (assign → per-cluster sum/count → mean) — the
+    * reference's entire per-iteration pipeline, run by the engine's
+    * Lloyd kernel as one job over the corpus; the means come back as a
+    * local frame. */
   def entry(spark: SparkSession): DataFrame =
     KMeansQueries.kmUpdate(spark, "/root/testdata/sf0.001")
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *
   * Semantics mirror the reference's `Point` math
   * (`/root/reference/kmeans/src/main/java/it/unipi/hadoop/Point.java`):
-  * `distance` = Point.java:47-55, scalar divide = Point.java:73-76.
+  * `sqDist` is Point.distance (Point.java:47-55) before its square root.
   */
 object VectorFunctions {
 
@@ -28,29 +28,11 @@ object VectorFunctions {
       lit(0.0),
       (acc, x) => acc + x)
 
-  /** √(Σᵢ (aᵢ−bᵢ)²) — the reference's Point.distance (Point.java:47-55). */
-  def l2Dist(a: Column, b: Column): Column = sqrt(sqDist(a, b))
-
   /** ‖a‖₂ */
   def l2Norm(a: Column): Column =
     sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x * x))
 
-  /** a / s for scalar column s (the reference's Point.scale). */
-  def vecScale(a: Column, s: Column): Column = transform(a, x => x / s)
-
   /** Cast an array<float> (parquet `list<float>`) to array<double>; the
     * reference computes in double throughout (Point.java:12). */
   def toDoubleVec(c: Column): Column = c.cast("array<double>")
-
-  /** Squared distance from a vector column to a *literal* centroid,
-    * unrolled at plan-build time: Σ (vᵢ − cᵢ)² as a flat sum expression.
-    * For small d this codegens to straight-line arithmetic with zero
-    * array allocation — the hot path of k-means assignment. */
-  def sqDistToLiteral(v: Column, centroid: Array[Double]): Column = {
-    val terms = centroid.iterator.zipWithIndex.map { case (c, i) =>
-      val d = element_at(v, i + 1) - lit(c)
-      d * d
-    }
-    terms.reduce(_ + _)
-  }
 }

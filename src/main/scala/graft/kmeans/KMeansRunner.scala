@@ -9,6 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, UnsafeArr
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 
+import graft.expressions.RoundHalfUp
+
 /** Result of a full k-means run. `iterations` is the reference driver's
   * final `iter` value: on convergence the reference breaks BEFORE the
   * increment (KMeans.java:176-183), so a run converging on round N
@@ -73,14 +75,13 @@ object KMeansRunner {
   /** `dim` > 0 declares the vector width: every vector must have it,
     * checked by the seed draw, before round 1. */
   def run(points: DataFrame, vecCol: String, k: Int, maxIter: Int,
-          eps: Double, seed: Long,
-          cache: Boolean = true, dim: Int = 0): KMeansResult = {
+          eps: Double, seed: Long, dim: Int = 0): KMeansResult = {
     // maxIter = 1 is legal and runs ZERO rounds, like the reference's
     // `while (1 < 1)` (KMeans.java:130): result = the seeded sample.
     require(k > 0 && maxIter >= 1)
     runLoop(points, vecCol, k, maxIter, eps, seed,
       (kernel, s, timed) => draw(kernel, k, s, dim, finite = true, timed),
-      identity, cache)
+      identity)
   }
 
   /** ORACLE-REPLAYABLE variant of [[run]]: identical loop semantics,
@@ -88,27 +89,19 @@ object KMeansRunner {
     * INTEGER id column instead of xxhash64 of the vector — the same
     * seeded, layout-independent selection, now computable by any SQL
     * engine — and (b) each round's new centroids are quantized to
-    * `roundDp` decimals (Spark `round` semantics: HALF_UP over the
-    * shortest decimal representation) BEFORE the shift test, so both
+    * 6 decimals ([[graft.expressions.RoundHalfUp.round]], Spark `round`
+    * semantics) BEFORE the shift test, so both
     * engines enter every round from bit-identical centroids and
     * float-summation-order divergence cannot compound across rounds.
     * This is what lets a DuckDB recursive CTE replay the whole seeded
     * Lloyd recursion value-exactly (the kmeans_full oracle). */
   def runReplayable(points: DataFrame, vecCol: String, idCol: String,
-                    k: Int, maxIter: Int, eps: Double, seed: Long,
-                    roundDp: Int = 6,
-                    cache: Boolean = true): KMeansResult = {
+                    k: Int, maxIter: Int, eps: Double, seed: Long): KMeansResult = {
     require(k > 0 && maxIter >= 1)
     runLoop(points, vecCol, k, maxIter, eps, seed,
       (_, s, _) => Sample(idHashSampleCentroids(points, vecCol, idCol, k, s), None),
-      _.map(_.map(roundHalfUp(_, roundDp))), cache)
+      _.map(_.map(RoundHalfUp.round(_, 6))))
   }
-
-  /** Spark-`round`-compatible decimal rounding (BigDecimal over the
-    * shortest decimal representation, HALF_UP). */
-  def roundHalfUp(x: Double, dp: Int): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(dp, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** Seeded k-sample keyed on a multiplicative hash of an integer id:
     * `(id · 2654435761 + seed · 40503) mod (2³¹−1)`, ties on id — the
@@ -217,12 +210,10 @@ object KMeansRunner {
     * job with a task per partition, timed, whose tasks estimate a round.
     * Re-init draws are not timed. [[runReplayable]] samples through a
     * DataFrame, so its round 1 runs as one job and decides for the rest
-    * from its own tasks' time. With `cache` off every round is one job:
-    * a loop job over an unpersisted kernel would re-read the input every
-    * round, in one task. Both placements step through the same
+    * from its own tasks' time. Both placements step through the same
     * [[LloydRule]], so the result is the same bits either way.
     * A loop job returns at an empty cluster, and the re-draw (a job
-    * over the kernel) runs here. `cache` persists the kernel's blocks,
+    * over the kernel) runs here. The kernel persists its blocks,
     * one object of primitive vectors per partition (replacing the
     * former DataFrame persist: caching both would hold the corpus
     * twice). The kernel is built before the first sample, which [[run]]
@@ -234,18 +225,17 @@ object KMeansRunner {
   private def runLoop(pts: DataFrame, vecCol: String, k: Int, maxIter: Int,
                       eps: Double, seed: Long,
                       sample: (LloydKernel, Long, Boolean) => Sample,
-                      post: Array[Array[Double]] => Array[Array[Double]],
-                      cache: Boolean)
+                      post: Array[Array[Double]] => Array[Array[Double]])
       : KMeansResult = {
-    val kernel = new LloydKernel(pts, vecCol, cache)
+    val kernel = new LloydKernel(pts, vecCol)
     try {
-      val first = sample(kernel, seed, cache && forceLoop.value.isEmpty)
+      val first = sample(kernel, seed, forceLoop.value.isEmpty)
       require(first.centroids.nonEmpty,
         "k-means input is empty: no points to sample initial centroids from")
       val rule = LloydRule(k, maxIter, eps, post)
       var s = LloydState(first.centroids)
       var reinits = 0
-      var loop = forceLoop.value.orElse(if (cache) first.loopPays else Some(false))
+      var loop = forceLoop.value.orElse(first.loopPays)
       while (s.iter < maxIter && !s.converged) {
         s = loop match {
           case Some(true) => kernel.loopJob(s, rule)

@@ -12,18 +12,23 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.sources.PointsTable
 
-/** Reusable physical kernel for ITERATIVE Lloyd loops.
+/** The engine's one Lloyd round, for every iterative Lloyd loop: the
+  * paper's job ([[KMeansRunner]]), `kmeans_full`, `kmeans_bisecting`,
+  * `kmeans_minibatch`, `km_update`/`km_shift` and the residual IVF
+  * coarse training.
   *
-  * Motivation (optimization guide §1.2 step 1 — fix the job shape):
-  * [[KMeansOps.lloydRound]] is a DataFrame, so a driver loop that calls
-  * it per round pays the full Catalyst stack (analysis → optimization →
-  * physical planning → AQE stage orchestration) for every round, on a
-  * plan whose SHAPE never changes — only the centroid literals do.
-  * Profiled at the bench's 100k grid point (32 cores, steal ≤1%) the
-  * DataFrame loop's steady state was 0.165 s/iter of which the k-row
-  * aggregate itself is single-digit ms: the floor was planning + the
-  * AQE two-job choreography, not data. Same story for kmeans_full at
-  * sf0.1 (~170 ms/round on 2000 cached rows).
+  * Motivation (optimization guide §1.2 step 1 — fix the job shape): a
+  * Lloyd round as a DataFrame (assign → per-cluster sum/count hash
+  * aggregate → mean, as the test-side `LloydOracle` still runs it) makes a
+  * driver loop that calls it per round pay the full Catalyst stack
+  * (analysis → optimization → physical planning → AQE stage
+  * orchestration) for every round, on a plan whose SHAPE never changes
+  * — only the centroid literals do. Profiled at the bench's 100k grid
+  * point (32 cores, steal ≤1%) the DataFrame loop's steady state was
+  * 0.165 s/iter of which the k-row aggregate itself is single-digit ms:
+  * the floor was planning + the AQE two-job choreography, not data.
+  * Same story for kmeans_full at sf0.1 (~170 ms/round on 2000 cached
+  * rows).
   *
   * The kernel builds its input ONCE, as an RDD of [[VecBlock]]s — one
   * object per partition holding the partition's primitive `double[]`
@@ -49,15 +54,16 @@ import graft.sources.PointsTable
   * them so) — a deterministic merge where the exchange's was
   * arrival-ordered.
   *
-  * Value contract: identical to `lloydRound(...).collect()` —
-  * assignment is the [[graft.expressions.NearestCentroid]] loop
-  * verbatim (strict `<`, ties to the lowest index, bound by both
-  * lengths), means are sum/count in double arithmetic, empty clusters
-  * yield no entry. Float caveat: the final merge's summation ORDER is
-  * partition-index instead of the shuffle's nondeterministic fetch
-  * order — both are absorbed by the 6dp quantization every iterative
-  * consumer applies before a value is observed (the kmeans_full oracle
-  * contract), and KMeansSpec pins kernel == DataFrame on the test
+  * Value contract: a DataFrame round's collected rows, which the
+  * specs compute with the test-side `LloydOracle` — assignment is the
+  * [[graft.expressions.NearestCentroid]] loop verbatim (strict `<`,
+  * ties to the lowest index, bound by both lengths), means are
+  * sum/count in double arithmetic, empty clusters yield no entry.
+  * Float caveat: the final merge's summation ORDER is partition-index
+  * instead of the shuffle's nondeterministic fetch order — both are
+  * absorbed by the 6dp quantization every consumer but the paper's job
+  * applies before a value is observed (the kmeans_full oracle
+  * contract), and KMeansSpec pins kernel == oracle on the test
   * corpora.
   *
   * With `idCol` set the kernel also carries each row's integer id, so
@@ -73,9 +79,9 @@ import graft.sources.PointsTable
   * compute of a round over 10k points, so a small input's rounds cost
   * the job, not the data; the loop job pays that cost once per run. The
   * runner picks the placement from its seed draw, whose tasks time
-  * [[LloydKernel.roundFn]] over a prefix of their rows; with
-  * `cache = false` it keeps one job per round, since a loop job would
-  * re-read the input every round in one task.
+  * [[LloydKernel.roundFn]] over a prefix of their rows. The runner's
+  * kernel is always cached; the other callers build theirs with
+  * `cache = false` and call [[round]], one job per round.
   */
 final class LloydKernel(points: DataFrame, vecCol: String,
                         cache: Boolean = true,
@@ -87,7 +93,9 @@ final class LloydKernel(points: DataFrame, vecCol: String,
     * with zero re-extraction cost. With cache=false each round re-reads
     * the input into blocks — still zero Catalyst work per round (the
     * RDD is fixed); the right mode when the source is already a
-    * persisted relation. */
+    * persisted relation, or is read once per round anyway (the fixed
+    * round counts of `km_update` and the IVF coarse training: corpus
+    * passes = rounds). */
   private[kmeans] val vectors: RDD[VecBlock] = {
     val blocks = LloydKernel.pointsFile(points, vecCol, idCol)
       .getOrElse(LloydKernel.viaPlan(points, vecCol, idCol))
@@ -100,7 +108,7 @@ final class LloydKernel(points: DataFrame, vecCol: String,
   private lazy val allInOne = new OneTaskRDD(vectors)
 
   /** One Lloyd round: (cluster, mean, count) for every NON-EMPTY
-    * cluster, same values as `KMeansOps.lloydRound(...).collect()`. */
+    * cluster, in cluster order. */
   def round(centroids: Array[Array[Double]])
       : Array[(Int, Array[Double], Long)] =
     roundRaw(centroids).map { case (i, sums, n) =>
@@ -109,7 +117,7 @@ final class LloydKernel(points: DataFrame, vecCol: String,
 
   /** One assignment + per-cluster (vector sum, count) pass over the
     * rows whose id passes `member` — the raw ClusteringFeature
-    * aggregate (what [[KMeansOps.summarize]] returns), for consumers
+    * aggregate (ClusteringFeature.java:7-9), for consumers
     * that blend rather than average (mini-batch). `member` must be
     * deterministic (it runs inside tasks and on retries). */
   def roundRaw(centroids: Array[Array[Double]],

@@ -6,11 +6,12 @@ import org.apache.spark.sql.functions._
 import graft.Caches.TrackedDataset
 import graft.Tables
 import graft.functions.VectorFunctions._
-import graft.kmeans.{KMeansOps, KMeansRunner}
+import graft.expressions.RoundHalfUp
+import graft.kmeans.{KMeansOps, KMeansRunner, LloydKernel}
 
 /** t2-facing queries for the k-means core: each decomposed operator from
-  * SURVEY.md §2 (O3-O5 assignment, O6-O8 summarize, O9 mean, O12 shift)
-  * as a deterministic DataFrame query over `embeddings.parquet`, with a
+  * SURVEY.md §2 (O3-O5 assignment, O6-O8 per-cluster sum/count, O9 mean,
+  * O12 shift) as a deterministic query over `embeddings.parquet`, with a
   * matching DuckDB oracle.
   *
   * Determinism: the oracle cannot replay a seeded random init, so these
@@ -96,34 +97,40 @@ object KMeansQueries {
     KMeansOps.assignDyn(points(spark, dir), "v", fixedCentroids(spark, dir))
       .groupBy(col("cluster")).agg(count(lit(1)).as("n"))
 
-  /** One full Lloyd round (assign → sum/count → mean): the flagship.
-    * Output as (cluster, dim, value, n) scalar rows — posexplode of the
-    * centroid vector — because the driver's checker sorts rows with
-    * pandas and cannot hash array-typed cells. Values rounded so Spark's
-    * and DuckDB's float-summation orders agree (SURVEY.md §7.4). */
-  def kmUpdate(spark: SparkSession, dir: String): DataFrame =
-    KMeansOps.lloydRound(points(spark, dir), "v", fixedCentroids(spark, dir))
-      .select(col("cluster"), col("n"),
-        posexplode(col("centroid")).as(Seq("pos", "v")))
-      .select(col("cluster"),
-        (col("pos") + 1).cast("int").as("dim"),
-        round(col("v"), 6).as("value"),
-        col("n"))
-
-  /** O12: Σ‖Δcᵢ‖ between the fixed centroids and the one-round update —
-    * exercised as a broadcast join of the k-row centroid table against
-    * the k-row aggregate. */
-  def kmShift(spark: SparkSession, dir: String): DataFrame = {
+  /** One Lloyd round from the fixed centroids, on the engine's kernel
+    * ([[LloydKernel.round]], uncached: one corpus pass): (cluster,
+    * mean, count) for every non-empty cluster. */
+  private def fixedRound(spark: SparkSession, dir: String)
+      : (Array[Array[Double]], Array[(Int, Array[Double], Long)]) = {
     val cents = fixedCentroids(spark, dir)
+    (cents, new LloydKernel(points(spark, dir), "v", cache = false).round(cents))
+  }
+
+  /** One full Lloyd round (assign → sum/count → mean): the flagship.
+    * Output as (cluster, dim, value, n) scalar rows, one per centroid
+    * coordinate, because the driver's checker sorts rows with pandas and
+    * cannot hash array-typed cells. Values rounded half-up to 6dp so
+    * Spark's and DuckDB's float-summation orders agree (SURVEY.md §7.4);
+    * an empty cluster has no rows. */
+  def kmUpdate(spark: SparkSession, dir: String): DataFrame = {
     val spark2 = spark
     import spark2.implicits._
-    val oldDf = cents.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cluster", "old_centroid")
-    val updated = KMeansOps.lloydRound(points(spark, dir), "v", cents)
-    updated.join(broadcast(oldDf), "cluster")
-      .agg(round(sum(l2Dist(col("centroid"), col("old_centroid"))), 6)
-        .as("total_shift"))
+    fixedRound(spark, dir)._2.toSeq.flatMap { case (i, m, n) =>
+      m.indices.map(j => (i, j + 1, RoundHalfUp.round(m(j), 6), n))
+    }.toDF("cluster", "dim", "value", "n")
+  }
+
+  /** O12: Σ‖Δcᵢ‖ between the fixed centroids and the one-round update,
+    * driver-side ([[KMeansOps.shift]]) over the non-empty clusters
+    * only (the oracle's inner join drops an empty one), rounded
+    * half-up to 6dp. */
+  def kmShift(spark: SparkSession, dir: String): DataFrame = {
+    val spark2 = spark
+    import spark2.implicits._
+    val (cents, upd) = fixedRound(spark, dir)
+    Seq(RoundHalfUp.round(
+      KMeansOps.shift(upd.map(r => cents(r._1)), upd.map(_._2)), 6))
+      .toDF("total_shift")
   }
 
   /** K-means cost (inertia): Σ over points of min squared distance —
@@ -197,15 +204,15 @@ object KMeansQueries {
         .persist(StorageLevel.MEMORY_AND_DISK)
       var cents = sub.orderBy(hashOrd, col("vec_id").asc).limit(2)
         .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
-      // r19: the split's 2-means rounds run on the planning-free
+      // the split's 2-means rounds run on the planning-free
       // LloydKernel (cache=false: `sub` is already persisted, so each
       // round re-reads the in-memory relation through the one fixed
       // physical plan). Means 6dp-round via the Spark-round-compatible
-      // roundHalfUp — same values as the former in-plan round(x, 6).
-      val kern = new graft.kmeans.LloydKernel(sub, "v", cache = false)
+      // RoundHalfUp.round — same values as an in-plan round(x, 6).
+      val kern = new LloydKernel(sub, "v", cache = false)
       for (_ <- 1 to BisectRounds) {
         val upd = kern.round(cents).map { case (i, m, _) =>
-          i -> m.map(graft.kmeans.KMeansRunner.roundHalfUp(_, 6))
+          i -> m.map(RoundHalfUp.round(_, 6))
         }.toMap
         // an empty child keeps its previous centroid (deterministic,
         // mirrored by the oracle's coalesce)
@@ -385,7 +392,7 @@ object KMeansQueries {
     // driver-loop floor, see LloydKernel). The per-round batch draw
     // runs task-side through [[mbMember]], bit-identical to the
     // previous in-plan md5 expression; the blend is unchanged.
-    val kernel = new graft.kmeans.LloydKernel(pts, "v",
+    val kernel = new LloydKernel(pts, "v",
       idCol = Some("vec_id"))
     try {
       for (t <- 1 to MbRounds) {
@@ -426,8 +433,7 @@ object KMeansQueries {
         case Some((s, m)) =>
           val n = counts(i)
           c.zipWithIndex.map { case (x, j) =>
-            graft.kmeans.KMeansRunner.roundHalfUp(
-              (x * n + s(j)) / (n + m), 6)
+            RoundHalfUp.round((x * n + s(j)) / (n + m), 6)
           }
         case None => c
       }

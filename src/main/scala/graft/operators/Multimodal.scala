@@ -1124,12 +1124,12 @@ object Multimodal {
       if (b.length > 6 && new String(b, 0, 4, "US-ASCII") == "GIF8")
         Gif.decodeInfo(id, b).map(g =>
           DispatchRow(id, "gif", g.n_pixels,
-            graft.kmeans.KMeansRunner.roundHalfUp(g.mean_px, 6)))
+            graft.expressions.RoundHalfUp.round(g.mean_px, 6)))
       else if (b.length > 2 && (b(0) & 0xff) == 0xff &&
                (b(1) & 0xff) == 0xd8)
         Jpeg.decodeInfo(id, b).map(j =>
           DispatchRow(id, "jpeg", j.n_blocks,
-            graft.kmeans.KMeansRunner.roundHalfUp(j.mean_px, 6)))
+            graft.expressions.RoundHalfUp.round(j.mean_px, 6)))
       else if (b.length > 2 && (b(0) & 0xff) == 0x1f &&
                (b(1) & 0xff) == 0x8b)
         Archives.decodeGzip(id, b).map(g =>

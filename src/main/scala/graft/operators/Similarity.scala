@@ -8,7 +8,8 @@ import org.apache.spark.storage.StorageLevel
 import graft.Caches.TrackedDataset
 import graft.Tables.t
 import graft.functions.VectorFunctions._
-import graft.kmeans.KMeansOps
+import graft.expressions.RoundHalfUp
+import graft.kmeans.{KMeansOps, LloydKernel}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table —
   * five paths, from exact baseline to the billion-scale layout:
@@ -55,7 +56,7 @@ object Similarity {
         col("nrm").as("qnrm"))
 
   private def cosineScore: Column =
-    graft.expressions.RoundHalfUp(
+    RoundHalfUp(
       dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")), 6)
 
   /** Per-query top-k + rank. The cut runs through the native
@@ -678,25 +679,25 @@ object Similarity {
   val CoarseTrainRounds = 2
   val PqTrainRounds = 2
 
-  /** Coarse quantizer TRAINED with the engine's own Lloyd kernel:
-    * [[CoarseTrainRounds]] rounds of assign→mean from the
-    * deterministic first-k seed, each round's means 6dp-rounded
-    * driver-side (the kmeans_full parity rule — both engines re-round,
-    * so float summation order can never drift the replay); an empty
-    * cell keeps its previous centroid (no re-init — an index build
-    * wants determinism, not the clustering-quality policy of
-    * [[graft.kmeans.KMeansRunner]]). k·d doubles on the driver per
-    * round, corpus passes = rounds. */
+  /** Coarse quantizer TRAINED with the engine's own Lloyd kernel
+    * ([[LloydKernel.round]]): [[CoarseTrainRounds]] rounds of
+    * assign→mean from the deterministic first-k seed, each round's
+    * means 6dp-rounded driver-side (the kmeans_full parity rule — both
+    * engines re-round, so float summation order can never drift the
+    * replay); an empty cell keeps its previous centroid (no re-init —
+    * an index build wants determinism, not the clustering-quality
+    * policy of [[graft.kmeans.KMeansRunner]]). k·d doubles on the
+    * driver per round; the kernel is uncached, so corpus passes =
+    * rounds. */
   private[operators] def trainedCoarseCentroids(
       spark: SparkSession, dir: String): Array[Array[Double]] = {
     var cents = KMeansQueries.coarseCentroids(spark, dir)
-    val pts = emb(spark, dir).select(col("vec_id"), col("v"))
+    val kern = new LloydKernel(emb(spark, dir), "v", cache = false)
     for (_ <- 1 to CoarseTrainRounds) {
       val next = cents.map(_.clone())
-      KMeansOps.lloydRound(pts, "v", cents)
-        .select(col("cluster"), col("centroid")).collect()
-        .foreach(r => next(r.getInt(0)) =
-          r.getSeq[Double](1).toArray.map(r6))
+      kern.round(cents).foreach { case (i, m, _) =>
+        next(i) = m.map(RoundHalfUp.round(_, 6))
+      }
       cents = next
     }
     cents
@@ -730,7 +731,7 @@ object Similarity {
           .as("c"))
         .collect()
         .foreach(r => next(r.getInt(0))(r.getInt(1)) =
-          r.getSeq[Double](2).toArray.map(r6))
+          r.getSeq[Double](2).toArray.map(RoundHalfUp.round(_, 6)))
       cb = next
     }
     cb
@@ -747,7 +748,7 @@ object Similarity {
     * — still queries·NProbe·M tiny arrays riding the broadcast.
     * Both quantizers are TRAINED with the engine's own Lloyd kernel
     * (the FAISS `train()` step): the coarse cells run
-    * [[CoarseTrainRounds]] rounds of [[KMeansOps.lloydRound]] from
+    * [[CoarseTrainRounds]] rounds of [[LloydKernel.round]] from
     * the first-k seed, and the sub-codebooks run [[PqTrainRounds]]
     * rounds of per-block k-means over the residual slices from the
     * first-[[PqKsub]]-residual seed — every round's means 6dp-rounded
@@ -1363,17 +1364,12 @@ object Similarity {
   final case class MmrPick(query_id: Long, mmr_rank: Int, cand_id: Long,
                            score: Double)
 
-  /** Spark-round-compatible 6dp rounding (BigDecimal over the shortest
-    * decimal representation, HALF_UP) — the greedy loop's sims must
-    * round exactly like the `round(x, 6)` both engines apply. */
-  private def r6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
   /** Pure greedy MMR over one query's candidate list: pick the highest
     * relevance first, then repeatedly the candidate maximizing
     * λ·rel − (1−λ)·max-sim-to-selected, every sim and every combined
-    * score rounded to 6dp BEFORE comparison and ties broken on
+    * score rounded to 6dp BEFORE comparison (Spark-round-compatible
+    * [[RoundHalfUp.round]], exactly like the `round(x, 6)` both engines
+    * apply) and ties broken on
     * cand_id — bit-reproducible against the DuckDB recursive-CTE
     * oracle. O(k·C·d) per query over C = [[TopK]] candidates. */
   def mmrSelect(query: Long, cands: Seq[MmrCand]): Seq[MmrPick] = {
@@ -1390,10 +1386,10 @@ object Similarity {
     val out = scala.collection.mutable.ArrayBuffer[MmrPick]()
     while (selected.length < MmrK && pool.nonEmpty) {
       val (best, score) =
-        if (selected.isEmpty) (pool.head, r6(pool.head.rel))
+        if (selected.isEmpty) (pool.head, RoundHalfUp.round(pool.head.rel, 6))
         else pool.map { c =>
-          val maxSim = selected.map(s => r6(cos(c.v, s.v))).max
-          (c, r6(MmrLambda * c.rel - (1 - MmrLambda) * maxSim))
+          val maxSim = selected.map(s => RoundHalfUp.round(cos(c.v, s.v), 6)).max
+          (c, RoundHalfUp.round(MmrLambda * c.rel - (1 - MmrLambda) * maxSim, 6))
         }.minBy { case (c, s) => (-s, c.cand_id) }
       out += MmrPick(query, selected.length + 1, best.cand_id, score)
       selected += best
@@ -1475,10 +1471,6 @@ object Similarity {
     * two regardless of the count. */
   val PcaIters = 60
 
-  private def r9(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
-
   /** Quantized power iteration on a [[PcaDim]]² matrix: [[PcaIters]]
     * rounds of multiply-normalize with the iterate 6dp-quantized each
     * round (the engine's cross-engine determinism contract — both
@@ -1487,21 +1479,21 @@ object Similarity {
     * positive, ties → smallest index) and paired with its 6dp
     * Rayleigh quotient. */
   private def powerIter(m: Array[Array[Double]]): (Array[Double], Double) = {
-    var w = Array.fill(PcaDim)(r6(1.0 / math.sqrt(PcaDim.toDouble)))
+    var w = Array.fill(PcaDim)(RoundHalfUp.round(1.0 / math.sqrt(PcaDim.toDouble), 6))
     for (_ <- 1 to PcaIters) {
       val u = Array.tabulate(PcaDim) { i =>
         var s = 0.0; var j = 0
         while (j < PcaDim) { s += m(i)(j) * w(j); j += 1 }; s
       }
       val nn = math.sqrt(u.map(x => x * x).sum)
-      w = u.map(x => r6(x / nn))
+      w = u.map(x => RoundHalfUp.round(x / nn, 6))
     }
     val pivot = w.indices.maxBy(i => (math.abs(w(i)), -i))
     val ws = if (w(pivot) < 0) w.map(-_) else w
     var lam = 0.0
     for (i <- 0 until PcaDim; j <- 0 until PcaDim)
       lam += ws(i) * m(i)(j) * ws(j)
-    (ws, r6(lam))
+    (ws, RoundHalfUp.round(lam, 6))
   }
 
   /** PCA / EMBEDDING WHITENING — the linear-algebra prep op a corpus
@@ -1550,7 +1542,7 @@ object Similarity {
     cRows.foreach(r => c1(r.getInt(0)) = r.getSeq[Double](1).toArray)
     val (w1, lam1) = powerIter(c1)
     val c2 = Array.tabulate(PcaDim, PcaDim)((i, j) =>
-      r9(c1(i)(j) - lam1 * w1(i) * w1(j)))
+      RoundHalfUp.round(c1(i)(j) - lam1 * w1(i) * w1(j), 9))
     val (w2, lam2) = powerIter(c2)
     def proj(w: Array[Double]) = round(
       aggregate(zip_with(col("x"), array(w.map(lit): _*), (a, b) => a * b),

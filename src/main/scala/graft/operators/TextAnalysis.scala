@@ -177,7 +177,7 @@ object TextAnalysis {
         val row = feats.agg(count(lit(1)).cast("double").as("n"),
           gradCols: _*).collect()(0)
         val n = row.getDouble(0)
-        w = Array.tabulate(d)(j => graft.kmeans.KMeansRunner.roundHalfUp(
+        w = Array.tabulate(d)(j => graft.expressions.RoundHalfUp.round(
           w(j) + TrainLr * (row.getLong(j + 1).toDouble / 1e6) / n, 6))
       }
       w

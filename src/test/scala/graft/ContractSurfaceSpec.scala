@@ -228,37 +228,98 @@ class ContractSurfaceSpec extends AnyFunSuite {
     assert(stripComments("\"\"\"a // b\"\"\" // c") == "\"\"\"a // b\"\"\" ")
   }
 
-  test("every def in src/main is used by src/main or perfbench") {
-    // Matches by NAME over the comment-stripped sources: a def counts
-    // as used when its name occurs anywhere beyond the def sites of
-    // that name. So a name shared by two defs hides an unused one
-    // whenever the other is used (AnnTiers.compact went unflagged
-    // beside SnapshotTable.compact), and a name that only occurs in a
-    // string literal counts as used. `override` defs are reached
-    // through their supertype; `main` is an entry point; AnnIndex's
-    // ThreadFactory.newThread implements an interface without the
-    // keyword.
-    assert(Files.isDirectory(mainRoot), s"no $mainRoot under the test cwd")
-    val mainFiles = scalaFiles(mainRoot).map(f => f -> code(f))
-    val corpus = (mainFiles.map(_._2) ++
-      scalaFiles(Paths.get("perfbench/src")).map(code)).mkString("\n")
-    val uses = """\b[A-Za-z_]\w*""".r.findAllIn(corpus).toSeq
-      .groupMapReduce(identity)(_ => 1)(_ + _)
-    val sites = """\bdef\s+([A-Za-z_]\w*)""".r.findAllMatchIn(corpus)
-      .toSeq.groupMapReduce(_.group(1))(_ => 1)(_ + _)
-    def allowed(f: java.nio.file.Path, name: String) = name == "main" ||
-      name == "newThread" && f.endsWith("graft/operators/AnnIndex.scala")
+  /** The `(file, def name)` pairs of `files` (comment-stripped sources)
+    * whose def nothing in `files` uses.
+    *
+    * Matches by NAME: a def counts as used when its name occurs
+    * anywhere beyond the def sites of that name, so a name that only
+    * occurs in a string literal counts as used. A name that two or more
+    * files define is held to more: a direct member of a top-level
+    * `object` (a def at two-space indent below an `object` declared at
+    * column 0) with such a name counts as used only where the use names
+    * its owner — `Owner.name` anywhere, an unqualified use in a file
+    * that imports `Owner._` or `Owner.name`, or an unqualified use in
+    * its own file beyond its def sites. So `KMeansOps.assign` no longer
+    * hides behind `CellRouting.assign`. Still missed: members of
+    * classes and nested objects with a shared name, and a chain of
+    * defs reached only from a flagged def (each link is "used" by the
+    * one before it). `override` defs are reached through their
+    * supertype; `main` is an entry point and `apply` is called through
+    * its owner's name; AnnIndex's ThreadFactory.newThread implements an
+    * interface without the keyword. */
+  private def unusedDefs(files: Seq[(java.nio.file.Path, String)],
+                         checked: java.nio.file.Path => Boolean)
+      : Seq[(java.nio.file.Path, String)] = {
+    val corpus = files.map(_._2).mkString("\n")
+    val ident = """\b[A-Za-z_]\w*""".r
+    val defName = """\bdef\s+([A-Za-z_]\w*)""".r
+    val uses = ident.findAllIn(corpus).toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
+    val sites = defName.findAllMatchIn(corpus).toSeq
+      .groupMapReduce(_.group(1))(_ => 1)(_ + _)
+    val definingFiles = files.flatMap { case (f, src) =>
+      defName.findAllMatchIn(src).map(_.group(1) -> f)
+    }.distinct.groupMapReduce(_._1)(_ => 1)(_ + _)
+    def allowed(f: java.nio.file.Path, name: String) =
+      name == "main" || name == "apply" ||
+        name == "newThread" && f.endsWith("graft/operators/AnnIndex.scala")
+    val topLevel = """(?m)^(?:[\w\[\]]+[ \t]+)*(object|class|trait)[ \t]+(\w+)""".r
     val defLine = """(?m)^(.*?)\bdef\s+([A-Za-z_]\w*)""".r
-    val unused = for {
-      (f, src) <- mainFiles
-      m <- defLine.findAllMatchIn(src)
+    def count(re: scala.util.matching.Regex, src: String) = re.findAllIn(src).size
+    /** A member of top-level object `owner` in `home`, used as above. */
+    def ownerUses(owner: String, name: String, home: java.nio.file.Path) = {
+      val qualified = s"\\b$owner\\.$name\\b".r
+      val imported = (s"\\bimport\\s+[\\w.]*\\b$owner\\." +
+        s"(?:_|$name\\b|\\{[^}]*\\b$name\\b[^}]*\\})").r
+      val bare = s"(?<![\\w.])$name\\b".r
+      val defSite = s"\\bdef\\s+$name\\b".r
+      files.exists { case (f, src) =>
+        qualified.findFirstIn(src).isDefined ||
+          (f == home || imported.findFirstIn(src).isDefined) &&
+            count(bare, src) > count(defSite, src)
+      }
+    }
+    for {
+      (f, src) <- files if checked(f)
+      owners = topLevel.findAllMatchIn(src).toSeq
+      m <- defLine.findAllMatchIn(src).toSeq
       name = m.group(2)
       if !m.group(1).contains("override")
       if !allowed(f, name)
-      if uses(name) <= sites(name)
-    } yield s"$f: $name"
+      owner = owners.takeWhile(_.start < m.start).lastOption
+        .filter(o => o.group(1) == "object" && m.group(1).matches("  (?:\\S.*)?"))
+        .map(_.group(2))
+      if (owner match {
+        case Some(o) if definingFiles(name) >= 2 => !ownerUses(o, name, f)
+        case _ => uses(name) <= sites(name)
+      })
+    } yield f -> name
+  }
+
+  test("every def in src/main is used by src/main or perfbench") {
+    assert(Files.isDirectory(mainRoot), s"no $mainRoot under the test cwd")
+    val files = (scalaFiles(mainRoot) ++ scalaFiles(Paths.get("perfbench/src")))
+      .map(f => f -> code(f))
+    val unused = unusedDefs(files, _.startsWith(mainRoot))
     assert(unused.isEmpty,
       "defs nothing in src/main or perfbench/src calls (move a test " +
-        "reference into src/test, delete the rest):\n" + unused.mkString("\n"))
+        "reference into src/test, delete the rest):\n" +
+        unused.map { case (f, n) => s"$f: $n" }.mkString("\n"))
+  }
+
+  test("the unused-def lint sees through a name another object defines") {
+    def lint(user: String) = unusedDefs(Seq(
+      Paths.get("A.scala") ->
+        "object A {\n  private[x] def go(x: Int): Int = x\n  def unused = 1\n}\n",
+      Paths.get("B.scala") ->
+        "object B {\n  def go(x: Int): Int = x\n}\nclass C { val y = B.go(1) }\n",
+      Paths.get("D.scala") -> user),
+      _ => true).map(_._2).sorted
+    // B.go's use once hid the unused A.go
+    assert(lint("") == Seq("go", "unused"))
+    assert(lint("class D { val y = A.go(2) }") == Seq("unused"))
+    assert(lint("import A._\nclass D { val y = go(2) }") == Seq("unused"))
+    assert(lint("import p.A.{go, unused}\nclass D { val y = go(2) + unused }") == Nil)
+    // an import that is not used, or a use through another owner, is no use
+    assert(lint("import A._\nclass D { val y = B.go(2) }") == Seq("go", "unused"))
   }
 }

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.kmeans.{KMeansOps, KMeansRunner, PointsIO, PointsText}
+import graft.expressions.RoundHalfUp
+import graft.kmeans.{KMeansOps, KMeansRunner, LloydKernel, LloydOracle, PointsIO, PointsText}
 
 /** Reference-semantics unit tests for the k-means kernel (SURVEY.md §5):
   * strict-< argmin tie-break, mean finalization, empty-cluster re-init,
@@ -15,14 +16,14 @@ class KMeansSpec extends SparkSessionSpec {
   test("argmin ties go to the lowest centroid index (Point.java:65 strict <)") {
     // point equidistant from both centroids
     val cents = Array(Array(0.0, 0.0), Array(2.0, 0.0))
-    val out = KMeansOps.assign(df(Seq(Seq(1.0, 0.0))), "v", cents)
+    val out = LloydOracle.assign(df(Seq(Seq(1.0, 0.0))), "v", cents)
       .select("cluster").as[Int].collect()
     assert(out.toSeq == Seq(0))
   }
 
   test("assign picks the true nearest centroid") {
     val cents = Array(Array(0.0, 0.0), Array(10.0, 10.0))
-    val out = KMeansOps.assign(
+    val out = LloydOracle.assign(
       df(Seq(Seq(1.0, 1.0), Seq(9.0, 9.0), Seq(4.9, 4.9), Seq(5.1, 5.1))),
       "v", cents).select("cluster").as[Int].collect().toSeq
     assert(out == Seq(0, 1, 0, 1))
@@ -32,11 +33,11 @@ class KMeansSpec extends SparkSessionSpec {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val cents = graft.operators.KMeansQueries.fixedCentroids(spark, sf0001)
-    val a = KMeansOps.assign(emb, "v", cents)
+    val a = LloydOracle.assign(emb, "v", cents)
       .select("vec_id", "cluster").as[(Long, Int)].collect().toMap
     val b = KMeansOps.assignDyn(emb, "v", cents)
       .select("vec_id", "cluster").as[(Long, Int)].collect().toMap
-    val c = KMeansOps.assignNative(emb, "v", cents)
+    val c = LloydOracle.assignNative(emb, "v", cents)
       .select("vec_id", "cluster").as[(Long, Int)].collect().toMap
     assert(a == b)
     assert(a == c)
@@ -44,7 +45,7 @@ class KMeansSpec extends SparkSessionSpec {
 
   test("NearestCentroid native expression keeps the strict-< tie-break") {
     val cents = Array(Array(0.0, 0.0), Array(2.0, 0.0))
-    val out = KMeansOps.assignNative(df(Seq(Seq(1.0, 0.0))), "v", cents)
+    val out = LloydOracle.assignNative(df(Seq(Seq(1.0, 0.0))), "v", cents)
       .select("cluster").as[Int].collect()
     assert(out.toSeq == Seq(0))
     // and interpreted (non-codegen) eval agrees
@@ -57,7 +58,7 @@ class KMeansSpec extends SparkSessionSpec {
 
   test("lloydRound computes per-cluster means and counts") {
     val cents = Array(Array(0.0), Array(10.0))
-    val rows = KMeansOps.lloydRound(
+    val rows = LloydOracle.lloydRound(
       df(Seq(Seq(1.0), Seq(3.0), Seq(9.0), Seq(11.0), Seq(13.0))), "v", cents)
       .orderBy("cluster")
       .select("cluster", "centroid", "n")
@@ -67,25 +68,25 @@ class KMeansSpec extends SparkSessionSpec {
 
   test("empty cluster yields no row (no MAX_VALUE sentinel)") {
     val cents = Array(Array(0.0), Array(1000.0))
-    val rows = KMeansOps.lloydRound(df(Seq(Seq(1.0), Seq(2.0))), "v", cents)
+    val rows = LloydOracle.lloydRound(df(Seq(Seq(1.0), Seq(2.0))), "v", cents)
       .select("cluster").as[Int].collect().toSeq
     assert(rows == Seq(0))
   }
 
   test("LloydKernel round == lloydRound on real data (assignment, means, counts)") {
-    // the r19 planning-free kernel must return the exact values of the
-    // DataFrame round: same strict-< assignment, same sum/count means,
+    // the planning-free kernel must return the exact values of the
+    // DataFrame oracle: same strict-< assignment, same sum/count means,
     // same absent-empty-cluster contract. Real embeddings (d=8, k=8)
     // exercise multi-partition partial merging.
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .select(col("embedding").cast("array<double>").as("v"))
       .repartition(5)
     val cents = graft.operators.KMeansQueries.fixedCentroids(spark, sf0001)
-    val viaDf = KMeansOps.lloydRound(emb, "v", cents)
+    val viaDf = LloydOracle.lloydRound(emb, "v", cents)
       .select("cluster", "centroid", "n")
       .as[(Int, Seq[Double], Long)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
-    val kernel = new graft.kmeans.LloydKernel(emb, "v", cache = false)
+    val kernel = new LloydKernel(emb, "v", cache = false)
     val viaKernel = kernel.round(cents)
       .map(r => r._1 -> ((r._2.toSeq, r._3))).toMap
     assert(viaKernel.keySet == viaDf.keySet)
@@ -100,10 +101,38 @@ class KMeansSpec extends SparkSessionSpec {
     val centsPlus = cents :+ Array.fill(cents.head.length)(1e9)
     assert(!kernel.round(centsPlus).exists(_._1 == cents.length))
     // strict-< tie-break parity on an equidistant point
-    val tie = new graft.kmeans.LloydKernel(
+    val tie = new LloydKernel(
       df(Seq(Seq(1.0, 0.0))), "v", cache = false)
     val tieRows = tie.round(Array(Array(0.0, 0.0), Array(2.0, 0.0)))
     assert(tieRows.map(_._1).toSeq == Seq(0))
+  }
+
+  test("km_update and km_shift equal the DataFrame oracle round, 6dp half-up") {
+    import graft.operators.KMeansQueries
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .select(col("embedding").cast("array<double>").as("v"))
+    val cents = KMeansQueries.fixedCentroids(spark, sf0001)
+    val update = KMeansQueries.kmUpdate(spark, sf0001)
+      .as[(Int, Int, Double, Long)].collect().sorted.toSeq
+    val shift = KMeansQueries.kmShift(spark, sf0001).as[Double].collect().toSeq
+    val old = cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("cluster", "old_centroid")
+    for (input <- Seq(emb, emb.repartition(5))) {
+      val oracle = LloydOracle.lloydRound(input, "v", cents)
+      val expected = oracle.select("cluster", "centroid", "n")
+        .as[(Int, Seq[Double], Long)].collect()
+        .flatMap { case (c, m, n) =>
+          m.zipWithIndex.map { case (x, j) => (c, j + 1, RoundHalfUp.round(x, 6), n) }
+        }.sorted.toSeq
+      assert(expected.nonEmpty)
+      assert(update == expected)
+      // the shift over the non-empty clusters, as the oracle's inner join
+      val expectedShift = oracle.join(broadcast(old), "cluster")
+        .agg(sum(sqrt(graft.functions.VectorFunctions.sqDist(
+          col("centroid"), col("old_centroid")))).as("s"))
+        .as[Double].collect().map(RoundHalfUp.round(_, 6)).toSeq
+      assert(shift == expectedShift)
+    }
   }
 
   test("a run extracts each point once: its seed draw fills the kernel's cache") {
@@ -234,34 +263,30 @@ class KMeansSpec extends SparkSessionSpec {
     assert(res.centroids.length == 2) // the seeded sample, untouched
   }
 
-  test("summarizeTyped agrees with per-dimension summarize") {
-    val rnd = new scala.util.Random(11)
-    val pts = (0 until 200).map(_ => Seq.fill(5)(rnd.nextDouble() * 10))
-    val cents = Array(Array.fill(5)(2.0), Array.fill(5)(8.0))
-    val assigned = KMeansOps.assignNative(pts.toDF("v"), "v", cents)
-    def norm(df: org.apache.spark.sql.DataFrame) =
-      df.select("cluster", "vec_sum", "n")
-        .as[(Int, Seq[Double], Long)].collect()
-        .map { case (c, s, n) => (c, s.map(x => math.rint(x * 1e9) / 1e9), n) }
-        .sortBy(_._1).toSeq
-    assert(norm(KMeansOps.summarizeTyped(assigned, "v")) ==
-      norm(KMeansOps.summarize(assigned, "v", 5)))
-  }
-
-  test("lloydRound works above MaxUnrolledDim (typed aggregation path)") {
-    val d = KMeansOps.MaxUnrolledDim + 16
+  test("LloydKernel round == lloydRound at d = 144") {
+    val d = 144
     val rnd = new scala.util.Random(13)
     val pts = (0 until 100).map(i =>
-      Seq.tabulate(d)(_ => rnd.nextGaussian() + (i % 2) * 20.0))
+      Seq.tabulate(d)(_ => rnd.nextGaussian() + (i % 2) * 20.0)).toDF("v")
+      .repartition(3)
     val cents = Array(Array.fill(d)(0.0), Array.fill(d)(20.0))
-    val rows = KMeansOps.lloydRound(pts.toDF("v"), "v", cents)
-      .select("cluster", "n").as[(Int, Long)].collect().toMap
-    assert(rows == Map(0 -> 50L, 1 -> 50L))
+    val viaDf = LloydOracle.lloydRound(pts, "v", cents)
+      .select("cluster", "centroid", "n")
+      .as[(Int, Seq[Double], Long)].collect().sortBy(_._1).toSeq
+    val viaKernel = new LloydKernel(pts, "v", cache = false).round(cents)
+      .map { case (c, m, n) => (c, m.toSeq, n) }.toSeq
+    assert(viaKernel.map(r => (r._1, r._3)) == Seq((0, 50L), (1, 50L)))
+    assert(viaKernel.map(r => (r._1, r._3)) == viaDf.map(r => (r._1, r._3)))
+    viaDf.zip(viaKernel).foreach { case ((c, a, _), (_, b, _)) =>
+      a.zip(b).zipWithIndex.foreach { case ((x, y), j) =>
+        assert(math.abs(x - y) < 1e-12, s"cluster $c dim $j: df $x vs kernel $y")
+      }
+    }
   }
 
   test("d=1 and k=1 degenerate shapes work (FIXTURES.md A.3 edges)") {
     // single dimension
-    val r1 = KMeansOps.lloydRound(df(Seq(Seq(1.0), Seq(3.0))), "v",
+    val r1 = LloydOracle.lloydRound(df(Seq(Seq(1.0), Seq(3.0))), "v",
       Array(Array(0.0)))
       .select("centroid").as[Seq[Double]].head()
     assert(r1 == Seq(2.0))
@@ -296,7 +321,7 @@ class KMeansSpec extends SparkSessionSpec {
       "partition layout must not change the replayable run")
     // every component sits exactly on the 6dp grid
     a.centroids.flatten.foreach { x =>
-      assert(KMeansRunner.roundHalfUp(x, 6) == x)
+      assert(RoundHalfUp.round(x, 6) == x)
     }
   }
 
@@ -318,7 +343,7 @@ class KMeansSpec extends SparkSessionSpec {
     assert(a.length == operators.KMeansQueries.K * operators.KMeansQueries.DIM)
     // every center component sits on the 6dp grid (the parity rule)
     a.foreach { case (_, _, v, _) =>
-      assert(KMeansRunner.roundHalfUp(v, 6) == v)
+      assert(RoundHalfUp.round(v, 6) == v)
     }
     // batches draw ~n/MbMod points per round; accumulated mass reflects
     // all rounds and every cluster saw data on this corpus
@@ -342,7 +367,7 @@ class KMeansSpec extends SparkSessionSpec {
     assert(byCluster.values.forall(_.head._4 > 0), "no empty final cluster")
     // centroid components sit on the 6dp grid (the parity rule)
     rows.foreach { case (_, _, v, _) =>
-      assert(KMeansRunner.roundHalfUp(v, 6) == v)
+      assert(RoundHalfUp.round(v, 6) == v)
     }
     // deterministic: a second run reproduces the result bit-for-bit
     val again = KMeansQueries.kmeansBisecting(spark, sf0001)

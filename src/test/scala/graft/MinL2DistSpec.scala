@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.expressions.MinL2Dist
-import graft.functions.VectorFunctions.l2Dist
+import graft.functions.VectorFunctions.sqDist
 
 /** Pins [[graft.expressions.MinL2Dist]] to the declarative lowering it
   * replaced in kmeansParInit: `array_min(transform(candsLit, c =>
@@ -12,6 +13,9 @@ import graft.functions.VectorFunctions.l2Dist
   * close. */
 class MinL2DistSpec extends SparkSessionSpec {
   import spark.implicits._
+
+  /** √(Σᵢ (aᵢ−bᵢ)²) — the reference's Point.distance (Point.java:47-55). */
+  private def l2Dist(a: Column, b: Column): Column = sqrt(sqDist(a, b))
 
   private def randVecs(n: Int, d: Int, seed: Long): Seq[Seq[Double]] = {
     val r = new scala.util.Random(seed)

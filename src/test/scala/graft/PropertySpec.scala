@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.kmeans.KMeansOps
+import graft.kmeans.{LloydKernel, LloydOracle}
 
 /** Property tests (SURVEY.md §5), driven by seeded ScalaCheck
   * generators: shuffle/partitioning invariance of the Lloyd round (the
@@ -22,13 +22,18 @@ class PropertySpec extends SparkSessionSpec {
     (0 until n).flatMap(i =>
       gen.apply(Gen.Parameters.default, Seed(42L + i)))
 
-  private def roundOn(pts: Seq[List[Double]], parts: Int) = {
+  /** One Lloyd round on `parts` partitions, means at 9dp: through the
+    * DataFrame oracle, or (`kernel`) through [[LloydKernel.round]]. */
+  private def roundOn(pts: Seq[List[Double]], parts: Int, kernel: Boolean) = {
     val cents = Array(Array(-10.0, -10.0), Array(0.0, 0.0), Array(10.0, 10.0))
-    KMeansOps.lloydRound(
-      pts.map(_.toSeq).toDF("v").repartition(parts), "v", cents)
-      .select("cluster", "centroid", "n")
-      .as[(Int, Seq[Double], Long)].collect()
-      .map { case (c, v, n) => (c, v.map(x => math.rint(x * 1e9) / 1e9), n) }
+    val input = pts.map(_.toSeq).toDF("v").repartition(parts)
+    val rows =
+      if (kernel) new LloydKernel(input, "v", cache = false).round(cents)
+        .map { case (c, v, n) => (c, v.toSeq, n) }
+      else LloydOracle.lloydRound(input, "v", cents)
+        .select("cluster", "centroid", "n")
+        .as[(Int, Seq[Double], Long)].collect()
+    rows.map { case (c, v, n) => (c, v.map(x => math.rint(x * 1e9) / 1e9), n) }
       .sortBy(_._1).toSeq
   }
 
@@ -197,9 +202,13 @@ class PropertySpec extends SparkSessionSpec {
 
   test("lloydRound is invariant to row order and partition count") {
     samples(setGen, 8).foreach { pts =>
-      val a = roundOn(pts, 1)
-      val b = roundOn(new scala.util.Random(1).shuffle(pts), 7)
-      assert(a == b, s"order/partition dependence on $pts")
+      val byEngine = Seq(false, true).map { kernel =>
+        val a = roundOn(pts, 1, kernel)
+        val b = roundOn(new scala.util.Random(1).shuffle(pts), 7, kernel)
+        assert(a == b, s"order/partition dependence on $pts (kernel=$kernel)")
+        a
+      }
+      assert(byEngine(0) == byEngine(1), s"kernel differs from the oracle on $pts")
     }
   }
 
@@ -209,7 +218,7 @@ class PropertySpec extends SparkSessionSpec {
       val (l, r) = pts.splitAt(pts.size / 2)
       def sizes(xs: Seq[List[Double]]): Map[Int, Long] =
         if (xs.isEmpty) Map.empty
-        else KMeansOps.assign(xs.map(_.toSeq).toDF("v"), "v", cents)
+        else LloydOracle.assign(xs.map(_.toSeq).toDF("v"), "v", cents)
           .groupBy("cluster").count()
           .as[(Int, Long)].collect().toMap
       val whole = sizes(pts)
@@ -559,8 +568,8 @@ class PropertySpec extends SparkSessionSpec {
     val cases = samples(Gen.zip(pointGen, Gen.chooseNum(1, 1000)), 20)
     cases.foreach { case (p, n) =>
       val out = Seq(p.toSeq).toDF("v")
-        .select(graft.functions.VectorFunctions.vecScale(
-          graft.functions.VectorFunctions.vecScale(col("v"), lit(n.toDouble)),
+        .select(LloydOracle.vecScale(
+          LloydOracle.vecScale(col("v"), lit(n.toDouble)),
           lit(1.0 / n)).as("v"))
         .as[Seq[Double]].head()
       out.zip(p).foreach { case (a, b) => assert(math.abs(a - b) < 1e-9) }

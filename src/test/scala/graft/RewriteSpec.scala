@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.expressions.{GraftExtensions, NearestCentroid, RewriteNearestCentroid}
-import graft.kmeans.KMeansOps
+import graft.kmeans.{KMeansOps, LloydOracle}
 
 /** The optimizer rewrite must lower the declarative argmin shape to the
   * native NearestCentroid expression without changing results. */
@@ -31,7 +31,7 @@ class RewriteSpec extends SparkSessionSpec {
       // results identical to the native form
       val viaRule = df.select("vec_id", "cluster")
         .as[(Long, Int)].collect().toMap
-      val native = KMeansOps.assignNative(emb, "v", realCents)
+      val native = LloydOracle.assignNative(emb, "v", realCents)
         .select("vec_id", "cluster").as[(Long, Int)].collect().toMap
       assert(viaRule == native)
     } finally {

@@ -96,29 +96,18 @@ class LloydLoopSpec extends SparkSessionSpec {
     input.getPath
   }
 
-  /** The call sites of the jobs a 3-round run on [[smallFile]] starts. */
-  private def threeRoundSites(cache: Boolean): Seq[String] = {
+  test("a 3-round run on a one-file input runs the draw and one loop job") {
     var res: KMeansResult = null
     val sites = sparkEvents {
       case e: SparkListenerJobStart => e.stageInfos.maxBy(_.stageId).name
     } {
       res = KMeansRunner.run(PointsIO.readPoints(spark, smallFile), "point",
-        k = 3, maxIter = 4, eps = 0.0, seed = 42L, cache = cache)
+        k = 3, maxIter = 4, eps = 0.0, seed = 42L)
     }
     assert(res.errorLog.size == 3 && res.reinitCount == 0, res)
     assert(sites.head.contains("KMeansRunner.scala"), sites)
     assert(sites.tail.forall(_.contains("LloydKernel.scala")), sites)
-    sites
-  }
-
-  test("a 3-round run on a one-file input runs the draw and one loop job") {
-    val sites = threeRoundSites(cache = true)
     assert(sites.size == 2, sites)
-  }
-
-  test("with cache = false a 3-round run on a one-file input runs one job per round") {
-    val sites = threeRoundSites(cache = false)
-    assert(sites.size == 4, sites)
   }
 
   test("rounds move into one task only when round 1's tasks computed for less than its wall time") {
