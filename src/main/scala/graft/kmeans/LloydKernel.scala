@@ -80,8 +80,10 @@ import graft.sources.PointsTable
   * the job, not the data; the loop job pays that cost once per run. The
   * runner picks the placement from its seed draw, whose tasks time
   * [[LloydKernel.roundFn]] over a prefix of their rows. The runner's
-  * kernel is always cached; the other callers build theirs with
-  * `cache = false` and call [[round]], one job per round.
+  * kernel is always cached, and so is `kmeans_minibatch`'s, which calls
+  * [[roundRaw]]; `km_update`, `km_shift`, the IVF coarse training and
+  * `kmeans_bisecting` build theirs with `cache = false` and call
+  * [[round]], one job per round.
   */
 final class LloydKernel(points: DataFrame, vecCol: String,
                         cache: Boolean = true,
